@@ -729,13 +729,12 @@ def _sanitized_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_a6_extraction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 per-conversation rollup of the real extraction pipeline output
-    (segment counts, content counts, boilerplate ratio), driven through
-    the RELATIONAL extraction variant over sanitized single-paragraph
-    turns — extraction is byte-identity there, so the rollup carries a
-    full value oracle (r3 verdict #3; was rows-only)."""
-    from docling_translate_spark.operators.extract import extract_turns
+    (segment counts, content counts, boilerplate ratio) over sanitized
+    single-paragraph turns — extraction is byte-identity there, so the
+    rollup carries a full value oracle (r3 verdict #3; was rows-only)."""
+    from docling_translate_spark.operators.extract import extract_turns_fused
 
-    out = extract_turns(_sanitized_turns(spark, sf_dir))
+    out = extract_turns_fused(_sanitized_turns(spark, sf_dir))
     return out.groupBy("conv_id").agg(
         F.count("*").alias("n_turns"),
         F.sum("n_spans").alias("n_spans"),
@@ -2699,7 +2698,7 @@ def q_statfmt_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_toggles_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 enrichment-toggle matrix as ONE gate slot — four full
+    """S6 enrichment-toggle matrix as ONE gate slot — three full
     extraction runs over sanitized single-paragraph turns (byte-identity
     there, the extract_turns discipline), each under a different
     ``ExtractConfig``, unioned with a branch tag so every toggle's
@@ -2715,38 +2714,26 @@ def q_toggles_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``sent``: ``sentence_split=True`` on single-sentence bodies —
       the sentence pipeline (tokenize → per-sentence map → ' ' rejoin)
       must reproduce the input byte-for-byte, value-checking that the
-      split/rejoin path corrupts nothing;
-    - ``gmark``: the marker engine under ``dedup_scope='global'``,
-      driven through the RELATIONAL ``extract_turns`` variant (the
-      fused kernel is batch-scope by design, so only the relational
-      plan carries the corpus-wide distinct + sha2-keyed broadcast
-      join-back) — it must emit exactly the same rows as the in-batch
-      variant (dedup scope is an optimization choice, never a
-      semantics choice)."""
+      split/rejoin path corrupts nothing."""
     from docling_translate_spark.operators.extract import (
         ExtractConfig,
-        extract_turns,
         extract_turns_fused,
     )
 
     turns = _sanitized_turns(spark, sf_dir)
     branches = {
-        "marker": (extract_turns_fused, ExtractConfig(engine="marker")),
-        "trunc": (extract_turns_fused, ExtractConfig(engine="truncate512")),
-        "sent": (extract_turns_fused, ExtractConfig(sentence_split=True)),
-        "gmark": (
-            extract_turns,
-            ExtractConfig(engine="marker", dedup_scope="global"),
-        ),
+        "marker": ExtractConfig(engine="marker"),
+        "trunc": ExtractConfig(engine="truncate512"),
+        "sent": ExtractConfig(sentence_split=True),
     }
     outs = [
-        fn(turns, cfg).select(
+        extract_turns_fused(turns, cfg).select(
             F.lit(name).alias("branch"),
             "conv_id",
             "turn_idx",
             F.col("extracted_text").alias("out"),
         )
-        for name, (fn, cfg) in branches.items()
+        for name, cfg in branches.items()
     ]
     res = outs[0]
     for o in outs[1:]:
@@ -4285,9 +4272,6 @@ w AS MATERIALIZED (
             FROM ex
             UNION ALL
             SELECT 'sent', conv_id, turn_idx, san FROM ex
-            UNION ALL
-            SELECT 'gmark', conv_id, turn_idx, '<<' || san || '>>'
-            FROM ex
         """,
         "statfmt_battery": rf"""
             WITH ex AS (

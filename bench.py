@@ -63,8 +63,8 @@ def _extract(spark, path: str):
         extract_turns_fused,
     )
 
-    # fused zero-shuffle plan — the production-scale physical plan
-    # (see extract.py scale notes; byte-equal to the relational plan).
+    # fused zero-shuffle plan — the one extraction plan (see extract.py
+    # scale notes; byte-equal to the pure-Python twin in golden.py).
     return extract_turns_fused(spark.read.parquet(path), ExtractConfig())
 
 

@@ -12,15 +12,17 @@ re-expressed Spark-first over transcript tables:
   ``src/html_generator.py:20-45``),
 * sentence tokenization, exact dedup of unique texts
   (reference ``src/core.py:453-455``), a deterministic batched map
-  (the "translate" stage, reference ``src/translation/base.py``), and a
-  broadcast equi-join back by text (reference ``src/core.py:486``,
-  ``src/html_generator.py:565-567``),
+  (the "translate" stage, reference ``src/translation/base.py``), and an
+  exact-text lookup back with identity fallback (reference
+  ``src/core.py:486``, ``src/html_generator.py:565-567``),
 * per-turn reassembly in stable ``(conv_id, turn_idx)`` reading order
   (reference ``src/core.py:422``).
 
-All per-row logic runs in vectorized pandas/Arrow UDFs — never per-row
-Python — and every stage is a plain DataFrame transformation so Catalyst
-handles pushdown, pruning, and AQE handles skew at cluster scale.
+The whole per-turn chain runs as ONE extraction plan,
+``operators.extract.extract_turns_fused``: a single ``mapInPandas`` pass
+over Arrow batches (one vectorized Python crossing, no shuffle), so
+Catalyst still prunes columns and pushes filters into the scan beneath
+it. ``golden.extract_turn`` is its pure-Python twin.
 """
 
 __version__ = "0.1.0"
@@ -28,6 +30,5 @@ __version__ = "0.1.0"
 from docling_translate_spark.schema import (  # noqa: F401
     TRANSCRIPT_SCHEMA,
     SPAN_SCHEMA,
-    SEGMENT_ROW_SCHEMA,
     EXTRACTED_SCHEMA,
 )

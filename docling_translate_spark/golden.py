@@ -5,10 +5,12 @@ a time the way the reference walks one document at a time
 (``src/core.py:324-536``). Tests assert the Spark pipeline equals this
 byte-for-byte under ``(conv_id, turn_idx)`` ordering.
 
-The classification here reuses the *pure* predicates
-(:mod:`docling_translate_spark.classify`), while the Spark pipeline uses
-independent JVM column expressions — so the test cross-checks two separate
-implementations of the same rules.
+The fused Spark kernel and this twin share the pure kernels (segmenters,
+the :mod:`docling_translate_spark.classify` predicates, the sentence
+splitter, the map engines); the twin re-derives everything around them
+independently — one turn at a time, one map call per text, no batch
+dedup or lookup, no Arrow — so the tests pin the kernel's batching,
+dedup, join-back and reassembly.
 """
 
 from __future__ import annotations
@@ -41,8 +43,17 @@ def extract_turn(
     tool: Optional[str],
     engine: str = "identity",
     sentence_split: bool = False,
+    caption: Optional[str] = None,
+    cells: Optional[List[Optional[List[Optional[str]]]]] = None,
+    headers: Optional[List[Optional[str]]] = None,
 ) -> Dict:
-    """Expected pipeline output for one turn."""
+    """Expected pipeline output for one turn.
+
+    ``caption``/``cells``/``headers`` are the optional §2.8 span sources:
+    each non-blank one appends a span ``(-1, -1, type, True, -1)`` after
+    the body spans and is mapped WHOLE — no sentence split, no
+    formula/boilerplate pass (src/core.py:429-448)."""
+    from docling_translate_spark.operators.segment import aux_span_texts
     from docling_translate_spark.sentences import split_sentences
 
     fn = create_engine(engine)
@@ -69,6 +80,9 @@ def extract_turn(
                     )
                 else:
                     content.append(fn(pd.Series([seg_text])).iloc[0])
+    for seg_type, aux_text in aux_span_texts(caption, cells, headers):
+        spans.append((-1, -1, seg_type, True, -1))
+        content.append(fn(pd.Series([aux_text])).iloc[0])
     return {
         "extracted_text": CONTENT_JOINER.join(content),
         "spans": spans,

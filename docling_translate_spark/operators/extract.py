@@ -1,44 +1,37 @@
 """End-to-end per-turn main-content extraction pipeline.
 
 Mirrors the reference's query lifecycle (reference ``src/core.py:324-536``)
-re-planned for Spark:
+re-planned for Spark as ONE ``mapInPandas`` pass per Arrow batch:
 
-1. segment turns into spans            (mapInPandas, narrow)
-2. classify formula / boilerplate      (column exprs, codegen)
+1. segment turns into spans            (``segmenters.segment_text``)
+2. classify formula / boilerplate      (the pure predicates in
+                                        ``docling_translate_spark.classify``)
 3. dedup unique content texts          (the reference's
                                         ``list(set(all_sentences))``,
                                         ``src/core.py:453-455`` — scoped
-                                        per Arrow batch by default, or
-                                        globally via ``distinct``)
-4. apply the deterministic map engine  (Arrow-batched pandas UDF — the
-                                        "translate" stage,
+                                        per Arrow batch)
+4. apply the deterministic map engine  (one vectorized call per batch —
+                                        the "translate" stage,
                                         ``src/translation/base.py:38-97``)
 5. join results back by exact text with identity fallback
    (``src/core.py:486``, ``src/html_generator.py:565-567``, ``:692``) —
-   an in-batch dict probe in 'batch' scope, a broadcast/shuffle equi-join
-   in 'global' scope
-6. reassemble per turn in span order   (groupBy + array_sort, no window);
-   sentinel spans keep empty/binary turns alive, preserving per-turn
-   parity with the input
+   an in-batch dict probe
+6. reassemble per turn in span order   (spans of a turn are born
+                                        colocated, so nothing moves);
+   empty/binary turns keep one output row with no spans, preserving
+   per-turn parity with the input
 
 Scale notes (100 TB / 10^12 turns):
 
-* Steps 1-2 are shuffle-free; parallelism = scan partitions. Callers on
-  skewed sources should ``repartitionByRange(conv_id, turn_idx)`` first —
-  range on the *pair* splits a million-turn conversation across tasks, so
-  no salting is needed for the map side (``plans/session.py`` enables AQE
-  + skew-join for the shuffles below).
-* In the default 'batch' dedup scope, steps 3-5 are shuffle-FREE: the
-  whole pipeline has exactly one exchange (the step-6 groupBy). Measured
-  locally this scales near-linearly with cores, while the 'global'
-  shuffle join-back anti-scaled — at cluster scale the batch plan also
-  avoids shuffling the full span table twice.
-* 'global' scope exists for expensive maps over high-duplicate corpora
-  (the reference's original motivation): distinct benefits from map-side
-  partial aggregation; the join-back broadcasts when the unique set fits,
-  else AQE plans a skew-split shuffle join.
-* Step 6 groups on ``(conv_id, turn_idx)`` — fine-grained keys, so a hot
-  conversation is NOT a hot key here.
+* The physical plan is a single narrow stage: no exchange, so
+  parallelism = scan partitions. Callers on skewed sources should
+  ``repartitionByRange(conv_id, turn_idx)`` first — range on the *pair*
+  splits a million-turn conversation across tasks, so no salting is
+  needed.
+* Every map engine is deterministic and pure, so the dedup scope only
+  decides how often the map runs, never the output bytes.
+* ``ordered=True`` adds the one range exchange of a global
+  ``(conv_id, turn_idx)`` sort.
 """
 
 from __future__ import annotations
@@ -48,12 +41,9 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql import DataFrame
 
 from docling_translate_spark.extract_map import create_engine
-from docling_translate_spark.operators.classify import classify_segments
-from docling_translate_spark.operators.segment import segment_turns
 from docling_translate_spark.schema import EXTRACTED_SCHEMA
 
 # Separator used when stitching per-turn content spans back together.
@@ -63,257 +53,29 @@ CONTENT_JOINER = "\n\n"
 @dataclass(frozen=True)
 class ExtractConfig:
     engine: str = "identity"
-    # 'batch'  — dedup unique texts INSIDE each Arrow batch and apply the
-    #            map there (zero extra shuffles; matches the reference's
-    #            per-document dedup scope, core.py:453-455). The scale
-    #            default: measured to scale ~linearly with cores, while a
-    #            global shuffle join-back anti-scales on this pipeline.
-    # 'global' — distinct across the whole table + join-back (maximum
-    #            dedup; right when the map is very expensive and the
-    #            duplicate rate is high). broadcast_map picks the join
-    #            strategy for this mode.
-    dedup_scope: str = "batch"
-    broadcast_map: bool = True  # 'global' mode: broadcast the deduped map
     ordered: bool = False       # global (conv_id, turn_idx) sort of output
     # sentence-level map units: tokenize each content segment into
     # sentences, dedup/map per sentence, rejoin with ' ' — the reference's
-    # html path (core.py:428, html_generator.py:562-572). On the fused
-    # plan this stays in-batch; on the relational plan it's a posexplode +
-    # two-level aggregation. The ' ' rejoin normalizes intra-segment
-    # newlines exactly like the reference's " ".join(sentences).
+    # html path (core.py:428, html_generator.py:562-572). The ' ' rejoin
+    # normalizes intra-segment newlines exactly like the reference's
+    # " ".join(sentences).
     sentence_split: bool = False
-
-
-def mapped_unique_texts(content: DataFrame, engine: str) -> DataFrame:
-    """Steps 3-4: distinct content texts + the batched map engine."""
-    fn = create_engine(engine)
-
-    @F.pandas_udf(StringType())
-    def _apply(texts: pd.Series) -> pd.Series:
-        return fn(texts).astype("string")
-
-    return content.select("text").distinct().withColumn("mapped", _apply("text"))
-
-
-def _batch_dedup_udf(engine: str):
-    """Series→Series map with in-batch dedup: each distinct text maps once
-    per Arrow batch, then fans back out — the reference's per-document
-    unique-sentence dedup (core.py:453-455), batch-scoped."""
-    fn = create_engine(engine)
-
-    @F.pandas_udf(StringType())
-    def _apply(texts: pd.Series) -> pd.Series:
-        uniq = pd.Series(texts.dropna().unique())
-        if len(uniq) == 0:
-            return texts.astype("string")
-        mapped = fn(uniq).astype("string")
-        lookup = dict(zip(uniq, mapped))
-        return texts.map(lookup).astype("string")
-
-    return _apply
-
-
-# span-invariant grouping columns (deterministic per (turn, span))
-_SPAN_KEY = [
-    "conv_id",
-    "turn_idx",
-    "span_idx",
-    "start_pos",
-    "end_pos",
-    "segment_type",
-    "translatable",
-    "line_number",
-    "is_content",
-]
-
-
-def _sentence_mapped_segments(segments: DataFrame, cfg: ExtractConfig) -> DataFrame:
-    """Sentence-level map path for the relational plan: posexplode content
-    spans into sentences, map each sentence, re-join per span with ' '
-    (the reference html path: core.py:428, html_generator.py:571-572)."""
-    from pyspark.sql.types import ArrayType
-
-    from docling_translate_spark.sentences import split_sentences
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _sents(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: split_sentences(t) if t is not None else [])
-
-    from docling_translate_spark.operators.segment import AUX_SEGMENT_TYPES
-
-    # caption/cell/header spans are pooled WHOLE (src/core.py:429-448) —
-    # only body spans get the sentence tokenizer
-    is_aux = F.col("segment_type").isin(*AUX_SEGMENT_TYPES)
-    seg = segments.withColumn(
-        "sents",
-        F.when(F.col("is_content") & is_aux, F.array(F.col("text"))).when(
-            F.col("is_content"), _sents("text")
-        ),
-    )
-    exploded = seg.select(
-        *_SPAN_KEY, F.posexplode_outer("sents").alias("sent_pos", "sentence")
-    )
-
-    if cfg.dedup_scope == "global":
-        fn_udf = _batch_dedup_udf(cfg.engine)
-        unique = (
-            exploded.filter(F.col("sentence").isNotNull())
-            .select(F.col("sentence").alias("_stext"))
-            .distinct()
-            .select(
-                F.sha2("_stext", 256).alias("_sk"),
-                fn_udf("_stext").alias("mapped"),
-            )
-        )
-        map_side = F.broadcast(unique) if cfg.broadcast_map else unique
-        mapped_rows = exploded.withColumn("_sk", F.sha2("sentence", 256)).join(
-            map_side, on="_sk", how="left"
-        )
-    else:
-        mapped_rows = exploded.withColumn(
-            "mapped",
-            F.when(F.col("sentence").isNotNull(), _batch_dedup_udf(cfg.engine)("sentence")),
-        )
-
-    sent_out = F.when(
-        F.col("sentence").isNotNull(), F.coalesce("mapped", "sentence")
-    )
-    return mapped_rows.groupBy(*_SPAN_KEY).agg(
-        F.when(
-            F.max(F.col("is_content").cast("int")) == 1,
-            F.array_join(
-                F.filter(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(F.col("sent_pos"), sent_out.alias("s"))
-                            )
-                        ),
-                        lambda x: x["s"],
-                    ),
-                    lambda s: s.isNotNull(),
-                ),
-                " ",
-            ),
-        ).alias("content_text")
-    )
-
-
-def extract_turns(transcripts: DataFrame, config: ExtractConfig | None = None) -> DataFrame:
-    """Run the full extraction pipeline; returns EXTRACTED_SCHEMA rows."""
-    cfg = config or ExtractConfig()
-
-    segments = classify_segments(segment_turns(transcripts))
-
-    if cfg.sentence_split:
-        joined = _sentence_mapped_segments(segments, cfg)
-        content_out = F.col("content_text")
-    elif cfg.dedup_scope == "global":
-        # join on sha2(text): the map side never shuffles full payloads
-        # and join-key hashing/compares work on fixed 64-char keys rather
-        # than arbitrary-length segment text
-        unique = mapped_unique_texts(segments.filter("is_content"), cfg.engine)
-        map_side = unique.select(
-            F.sha2("text", 256).alias("_tk"), "mapped"
-        )
-        map_side = F.broadcast(map_side) if cfg.broadcast_map else map_side
-        joined = segments.withColumn("_tk", F.sha2("text", 256)).join(
-            map_side, on="_tk", how="left"
-        )
-    else:
-        joined = segments.withColumn(
-            "mapped",
-            F.when(F.col("is_content"), _batch_dedup_udf(cfg.engine)("text")),
-        )
-
-    if not cfg.sentence_split:
-        # Content spans contribute coalesce(mapped, text) — the reference's
-        # identity fallback (html_generator.py:692); others contribute null.
-        content_out = F.when(
-            F.col("is_content"), F.coalesce(F.col("mapped"), F.col("text"))
-        )
-
-    # Sentinel spans (span_idx = -1, emitted for empty/binary turns by the
-    # segmenter) keep those turns alive through this single groupBy — no
-    # second input scan or restore-join is needed.
-    real = F.filter(F.col("sorted_spans"), lambda s: s["span_idx"] >= 0)
-    out = (
-        joined.groupBy("conv_id", "turn_idx")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("span_idx"),
-                        F.col("start_pos"),
-                        F.col("end_pos"),
-                        F.col("segment_type"),
-                        F.col("translatable"),
-                        F.col("line_number"),
-                        content_out.alias("content_text"),
-                    )
-                )
-            ).alias("sorted_spans")
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.array_join(
-                F.filter(
-                    F.transform(real, lambda s: s["content_text"]),
-                    lambda t: t.isNotNull(),
-                ),
-                CONTENT_JOINER,
-            ).alias("extracted_text"),
-            F.transform(
-                real,
-                lambda s: F.struct(
-                    s["start_pos"].alias("start_pos"),
-                    s["end_pos"].alias("end_pos"),
-                    s["segment_type"].alias("segment_type"),
-                    s["translatable"].alias("translatable"),
-                    s["line_number"].alias("line_number"),
-                ),
-            ).alias("spans"),
-            F.size(real).alias("n_spans"),
-            F.when(F.size(real) == 0, F.lit(0.0))
-            .otherwise(
-                F.size(
-                    F.filter(
-                        real,
-                        lambda s: s["segment_type"] == F.lit("boilerplate"),
-                    )
-                ).cast("double")
-                / F.size(real).cast("double")
-            )
-            .alias("boilerplate_ratio"),
-        )
-    )
-
-    if cfg.ordered:
-        out = out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
-    return out
 
 
 def extract_turns_fused(
     transcripts: DataFrame, config: ExtractConfig | None = None
 ) -> DataFrame:
     """ZERO-shuffle extraction: the whole per-turn pipeline fused into one
-    ``mapInPandas`` pass.
+    ``mapInPandas`` pass; returns EXTRACTED_SCHEMA rows.
 
     Spans of a turn are born colocated inside the segmentation batch, so
-    the relational plan's reassembly groupBy shuffles data that never
-    needed to move. This fused operator segments, classifies, dedups
-    (batch scope, the reference's per-document scope, core.py:453-455),
-    maps, and reassembles each turn inside the Arrow batch — the physical
-    plan is a single narrow stage, which is also what makes it legal under
-    Structured Streaming (no stateful ops). Same output contract as
-    :func:`extract_turns`; byte-equality of both paths is pinned in tests.
-
-    Use this for throughput; use ``extract_turns`` when you want the
-    stages visible to Catalyst (e.g. to hang extra relational logic off
-    the exploded span table).
+    this operator segments, classifies, dedups (batch scope, the
+    reference's per-document scope, core.py:453-455), maps, and
+    reassembles each turn inside the Arrow batch — the physical plan is a
+    single narrow stage, which is also what makes it legal under
+    Structured Streaming (no stateful ops). Byte-equality with the
+    pure-Python twin (:func:`docling_translate_spark.golden.extract_turn`)
+    is pinned in tests.
     """
     cfg = config or ExtractConfig()
     fn = create_engine(cfg.engine)

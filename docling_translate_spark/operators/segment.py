@@ -1,33 +1,14 @@
-"""Segmentation operator: transcript turns → exploded span rows.
+"""Span sources beyond the body text: caption, table cells and headers.
 
-The reference walks one document at a time and runs regex ``finditer``
-loops per file (``src/text_parser.py:117-160``). Here the same kernels run
-over Arrow batches of thousands of turns inside ``mapInPandas`` — one
-Python-worker crossing for the whole segmentation stage, no per-row UDF
-calls, no shuffle (narrow transformation).
-
-Payloads containing NUL bytes are treated as binary and produce no spans
-(reference ``src/text_parser.py:533-550``); empty/whitespace payloads
-likewise (reference ``src/core.py:426``).
+The body text is segmented inside the fused extraction kernel
+(:func:`docling_translate_spark.operators.extract.extract_turns_fused`),
+which runs the same regex kernels the reference runs per file
+(``src/text_parser.py:117-160``) over whole Arrow batches. The auxiliary
+sources collected here are never re-segmented and never re-classified —
+the reference pools them whole (``src/core.py:429-448``).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-
-from docling_translate_spark.classify import has_nul_byte
-from docling_translate_spark.schema import SEGMENT_ROW_SCHEMA
-from docling_translate_spark.segmenters import segment_text
-
-_OUT_COLS = [f.name for f in SEGMENT_ROW_SCHEMA.fields]
-
-# span sources beyond the body text: never re-segmented, never
-# re-classified — the reference pools them whole (src/core.py:429-448)
-AUX_SEGMENT_TYPES = ("caption", "table_cell", "table_header")
 
 
 def aux_span_texts(caption, cells, headers) -> list[tuple[str, str]]:
@@ -50,71 +31,3 @@ def aux_span_texts(caption, cells, headers) -> list[tuple[str, str]]:
             if h is not None and str(h).strip():
                 out.append(("table_header", str(h)))
     return out
-
-
-def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols = {k: [] for k in _OUT_COLS}
-        n = len(pdf)
-        texts = pdf["text"]
-        tools = pdf["tool"] if "tool" in pdf else pd.Series([None] * n)
-        caps = pdf["caption"] if "caption" in pdf else pd.Series([None] * n)
-        cells = pdf["cells"] if "cells" in pdf else pd.Series([None] * n)
-        heads = pdf["headers"] if "headers" in pdf else pd.Series([None] * n)
-        for cid, tix, text, tool, cap, cel, hdr in zip(
-            pdf["conv_id"], pdf["turn_idx"], texts, tools, caps, cells, heads
-        ):
-            i = 0
-            if text is not None and str(text).strip() and not has_nul_byte(str(text)):
-                for seg in segment_text(str(text), tool or None):
-                    cols["conv_id"].append(cid)
-                    cols["turn_idx"].append(tix)
-                    cols["span_idx"].append(i)
-                    cols["text"].append(seg[0])
-                    cols["start_pos"].append(seg[1])
-                    cols["end_pos"].append(seg[2])
-                    cols["translatable"].append(seg[3])
-                    cols["segment_type"].append(seg[4])
-                    cols["line_number"].append(seg[5])
-                    i += 1
-            # §2.8 UNION ALL: caption / table-cell / header span sources
-            # (no char offsets in the body text → positions are -1)
-            for st, aux_text in aux_span_texts(cap, cel, hdr):
-                cols["conv_id"].append(cid)
-                cols["turn_idx"].append(tix)
-                cols["span_idx"].append(i)
-                cols["text"].append(aux_text)
-                cols["start_pos"].append(-1)
-                cols["end_pos"].append(-1)
-                cols["translatable"].append(True)
-                cols["segment_type"].append(st)
-                cols["line_number"].append(-1)
-                i += 1
-            if i == 0:
-                # sentinel row (span_idx = -1): keeps the turn alive through
-                # the groupBy reassembly without a second scan + join to
-                # restore empty/binary turns
-                cols["conv_id"].append(cid)
-                cols["turn_idx"].append(tix)
-                cols["span_idx"].append(-1)
-                cols["text"].append(None)
-                cols["start_pos"].append(0)
-                cols["end_pos"].append(0)
-                cols["translatable"].append(False)
-                cols["segment_type"].append("empty")
-                cols["line_number"].append(0)
-        yield pd.DataFrame(cols, columns=_OUT_COLS)
-
-
-def segment_turns(transcripts: DataFrame) -> DataFrame:
-    """Segment every turn; returns one row per span (SEGMENT_ROW_SCHEMA).
-
-    Narrow (no shuffle): each input partition maps independently, so
-    parallelism equals the scan's partitioning — tune upstream with
-    ``repartitionByRange('conv_id', 'turn_idx')`` when the source is
-    skewed or under-partitioned.
-    """
-    # Column pruning: only ship what the kernel needs across Arrow.
-    want = ["conv_id", "turn_idx", "text", "tool", "caption", "cells", "headers"]
-    slim = transcripts.select(*[c for c in want if c in transcripts.columns])
-    return slim.mapInPandas(_segment_batches, SEGMENT_ROW_SCHEMA)

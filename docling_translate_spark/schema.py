@@ -59,16 +59,6 @@ SPAN_FIELDS = [
 ]
 SPAN_SCHEMA = StructType(SPAN_FIELDS)
 
-# Exploded segment row: one row per span per turn (post-segmentation).
-SEGMENT_ROW_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("span_idx", IntegerType(), False),
-        *SPAN_FIELDS,
-    ]
-)
-
 # Final per-turn output.
 EXTRACTED_SCHEMA = StructType(
     [

@@ -2,8 +2,8 @@
 
 These are plain ``str -> list[tuple]`` functions so they can be (a) unit
 tested directly against hand-written fixtures and (b) executed vectorized
-inside an Arrow-batched ``mapInPandas`` operator
-(:mod:`docling_translate_spark.operators.segment`).
+inside the Arrow-batched ``mapInPandas`` extraction kernel
+(:func:`docling_translate_spark.operators.extract.extract_turns_fused`).
 
 Semantics are pinned to the reference implementation's observable behavior
 (reference ``src/text_parser.py``, studied — not copied):

@@ -10,7 +10,9 @@ snapshot log; in-sandbox the same semantics are emulated with parquet:
   into **commit units**;
 * per unit: extraction output is written with *dynamic partition
   overwrite* (so re-processing a unit replaces, never duplicates), THEN
-  the lineage row is appended to the checkpoint table;
+  the lineage row is appended to the checkpoint table. Its counts are
+  observed on the write job itself (``DataFrame.observe``), so each unit
+  runs the extraction exactly once;
 * on restart, units present in the checkpoint are skipped. A unit that
   crashed between data-write and checkpoint-append is simply re-overwritten
   — write-then-commit ordering makes the pipeline idempotent, exactly the
@@ -25,9 +27,20 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
-from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
+from docling_translate_spark.operators.extract import (
+    ExtractConfig,
+    extract_turns_fused,
+)
+from docling_translate_spark.schema import LINEAGE_SCHEMA
+
+# lineage columns known when the unit's write finishes; committed_ts is
+# stamped as the row is appended
+_LINEAGE_COLS = StructType(
+    [f for f in LINEAGE_SCHEMA.fields if f.name != "committed_ts"]
+)
 
 
 class SimulatedFailure(RuntimeError):
@@ -83,29 +96,34 @@ def run_extraction(
     for i, u in enumerate(todo):
         if fail_after_units is not None and i >= fail_after_units:
             raise SimulatedFailure(f"simulated crash before unit {u}")
-        out = extract_turns(tagged.filter(F.col("unit") == u), config).withColumn(
-            "unit", F.lit(u)
-        )
-        # 1) data write (replaces any torn previous attempt of this unit)
-        out.write.partitionBy("unit").mode("overwrite").parquet(out_dir)
-        # 2) lineage/metrics commit — unit becomes durable only here
-        metrics = out.agg(
+        # the lineage counts ride the data write itself: one extraction
+        # per unit, no second pass over its output
+        obs = Observation()
+        out = extract_turns_fused(tagged.filter(F.col("unit") == u), config)
+        out = out.withColumn("unit", F.lit(u)).observe(
+            obs,
             F.min("conv_id").alias("conv_id_min"),
             F.max("conv_id").alias("conv_id_max"),
             F.count("*").alias("turns_processed"),
             F.sum("n_spans").cast("long").alias("spans_emitted"),
             F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(u).cast("int").alias("partition_id"),
-            "conv_id_min",
-            "conv_id_max",
-            F.coalesce("turns_processed", F.lit(0)).alias("turns_processed"),
-            F.coalesce("spans_emitted", F.lit(0)).alias("spans_emitted"),
-            "boilerplate_ratio",
-            F.current_timestamp().alias("committed_ts"),
         )
-        metrics.write.mode("append").parquet(ckpt_dir)
+        # 1) data write (replaces any torn previous attempt of this unit)
+        out.write.partitionBy("unit").mode("overwrite").parquet(out_dir)
+        # 2) lineage/metrics commit — unit becomes durable only here
+        m = obs.get
+        row = (
+            run_id,
+            u,
+            m["conv_id_min"],
+            m["conv_id_max"],
+            m["turns_processed"],
+            m["spans_emitted"] or 0,  # sum over an empty unit is null
+            m["boilerplate_ratio"],
+        )
+        spark.createDataFrame([row], _LINEAGE_COLS).withColumn(
+            "committed_ts", F.current_timestamp()
+        ).write.mode("append").parquet(ckpt_dir)
         processed.add(u)
     return processed
 

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from docling_translate_spark.operators.extract import extract_turns
+from docling_translate_spark.operators.extract import extract_turns_fused
 from docling_translate_spark.operators.metrics import conversation_rollup, stat_records
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 from docling_translate_spark.sources.checkpoint import (
@@ -26,39 +26,77 @@ def transcripts(spark):
     return spark.createDataFrame(gen_rows(30, 5), TRANSCRIPT_SCHEMA).cache()
 
 
-def test_resume_after_crash(spark, transcripts):
+@pytest.mark.parametrize("n_parts", [1, 5])
+@pytest.mark.parametrize("n_units", [3, 7])
+def test_resume_after_crash(spark, transcripts, n_units, n_parts):
+    """Crash after two units, resume, and the output must not depend on
+    the unit count or on the input's partitioning."""
     tmp = tempfile.mkdtemp(prefix="dts-ckpt-")
     out_dir, ckpt_dir = f"{tmp}/out", f"{tmp}/ckpt"
+    src = transcripts.repartition(n_parts)
 
     with pytest.raises(SimulatedFailure):
         run_extraction(
-            spark, transcripts, out_dir, ckpt_dir, run_id="r1",
-            n_units=4, fail_after_units=2,
+            spark, src, out_dir, ckpt_dir, run_id="r1",
+            n_units=n_units, fail_after_units=2,
         )
     assert committed_units(spark, ckpt_dir, "r1") == {0, 1}
 
     # resume: only the remaining units run
     done = run_extraction(
-        spark, transcripts, out_dir, ckpt_dir, run_id="r1", n_units=4
+        spark, src, out_dir, ckpt_dir, run_id="r1", n_units=n_units
     )
-    assert done == {2, 3}
-    assert committed_units(spark, ckpt_dir, "r1") == {0, 1, 2, 3}
+    assert done == set(range(2, n_units))
+    assert committed_units(spark, ckpt_dir, "r1") == set(range(n_units))
 
     out = read_output(spark, out_dir)
     # idempotency: no duplicate turns
     n = out.count()
     assert out.select("conv_id", "turn_idx").distinct().count() == n
-    # parity with a direct uncheckpointed run
-    direct = extract_turns(transcripts)
+    # parity with a direct uncheckpointed run, in both directions
+    direct = extract_turns_fused(transcripts)
     assert n == direct.count()
-    diff = out.drop("unit").exceptAll(direct).count()
-    assert diff == 0
+    assert out.drop("unit").exceptAll(direct).count() == 0
+    assert direct.exceptAll(out.drop("unit")).count() == 0
 
     # lineage rows: one per unit with sane metrics
     lin = read_lineage(spark, ckpt_dir).collect()
-    assert len(lin) == 4
+    assert len(lin) == n_units
     assert sum(r["turns_processed"] for r in lin) == n
     assert all(r["run_id"] == "r1" for r in lin)
+
+
+def test_lineage_observed_from_write(spark):
+    """More units than conversations: every unit commits, empty ones with
+    zero counts, and each unit's observed counts equal its written rows."""
+    small = spark.createDataFrame(gen_rows(3, 3), TRANSCRIPT_SCHEMA)
+    n_units = 8
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt-obs-")
+    out_dir, ckpt_dir = f"{tmp}/out", f"{tmp}/ckpt"
+    done = run_extraction(spark, small, out_dir, ckpt_dir, "r1", n_units=n_units)
+    assert done == set(range(n_units))
+
+    out = read_output(spark, out_dir)
+    lin = {r["partition_id"]: r for r in read_lineage(spark, ckpt_dir).collect()}
+    assert set(lin) == set(range(n_units))
+    empty = 0
+    for u, r in lin.items():
+        rows = out.filter(F.col("unit") == u)
+        assert r["turns_processed"] == rows.count(), u
+        if r["turns_processed"] == 0:
+            empty += 1
+            assert r["spans_emitted"] == 0, u
+            assert r["conv_id_min"] is None and r["conv_id_max"] is None, u
+            continue
+        exp = rows.agg(
+            F.min("conv_id").alias("lo"),
+            F.max("conv_id").alias("hi"),
+            F.sum("n_spans").alias("spans"),
+        ).first()
+        assert (r["conv_id_min"], r["conv_id_max"]) == (exp["lo"], exp["hi"]), u
+        assert r["spans_emitted"] == exp["spans"], u
+    # at most 3 conversations land in 8 units
+    assert empty >= n_units - 3
 
 
 def test_rerun_noop(spark, transcripts):
@@ -71,7 +109,7 @@ def test_rerun_noop(spark, transcripts):
 
 
 def test_conversation_rollup_salted(spark, transcripts):
-    ext = extract_turns(transcripts).cache()
+    ext = extract_turns_fused(transcripts).cache()
     rolled = {r["conv_id"]: r for r in conversation_rollup(ext).collect()}
     plain = {
         r["conv_id"]: r
@@ -90,7 +128,7 @@ def test_conversation_rollup_salted(spark, transcripts):
 
 
 def test_stat_records(spark, transcripts):
-    ext = extract_turns(transcripts)
+    ext = extract_turns_fused(transcripts)
     stats = {r["metric"]: r["count"] for r in stat_records(ext).collect()}
     assert stats["turns_processed"] == transcripts.count()
     assert stats["spans_emitted"] > 0

@@ -7,7 +7,10 @@ import math
 import pytest
 
 from docling_translate_spark.golden import extract_turn
-from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
+from docling_translate_spark.operators.extract import (
+    ExtractConfig,
+    extract_turns_fused,
+)
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 from docling_translate_spark.synth import gen_rows, transcripts_df
 
@@ -41,12 +44,12 @@ def _assert_matches(result_rows, golden, engine_name):
 
 
 def test_extract_matches_golden_identity(spark, small_transcripts):
+    """Default (unordered) fused output is byte-identical to the golden
+    oracle: every turn exactly once."""
     rows = small_transcripts.collect()
     golden = _golden_map(rows)
-    out = extract_turns(small_transcripts, ExtractConfig(ordered=True)).collect()
-    # ordered output: stable (conv_id, turn_idx) ascending
-    keys = [(r["conv_id"], r["turn_idx"]) for r in out]
-    assert keys == sorted(keys)
+    out = extract_turns_fused(small_transcripts, ExtractConfig()).collect()
+    assert {(r["conv_id"], r["turn_idx"]) for r in out} == set(golden)
     _assert_matches(out, golden, "identity")
 
 
@@ -55,38 +58,17 @@ def test_extract_matches_golden_marker(spark, small_transcripts):
     span must surface exactly once, wrapped, in reading order."""
     rows = small_transcripts.collect()
     golden = _golden_map(rows, engine="marker")
-    out = extract_turns(
-        small_transcripts, ExtractConfig(engine="marker", ordered=True)
+    out = extract_turns_fused(
+        small_transcripts, ExtractConfig(engine="marker")
     ).collect()
+    assert {(r["conv_id"], r["turn_idx"]) for r in out} == set(golden)
     _assert_matches(out, golden, "marker")
 
 
-def test_global_dedup_same_result(spark, small_transcripts):
-    """'global' dedup scope (distinct + broadcast join-back) must match."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows)
-    out = extract_turns(
-        small_transcripts, ExtractConfig(dedup_scope="global", ordered=True)
-    ).collect()
-    _assert_matches(out, golden, "identity-global")
-
-
-def test_global_shuffle_join_same_result(spark, small_transcripts):
-    """'global' scope with shuffle join-back must match too."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(dedup_scope="global", broadcast_map=False, ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "identity-global-shuffle")
-
-
 def test_fused_matches_relational(spark, small_transcripts):
-    """The zero-shuffle fused plan must be byte-identical to the
-    relational plan (and hence to the golden oracle)."""
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
+    """``ordered`` fused output equals the unordered output put through a
+    relational ``orderBy(conv_id, turn_idx)``, row for row, and both are
+    byte-identical to the golden oracle."""
     rows = small_transcripts.collect()
     golden = _golden_map(rows)
     out = extract_turns_fused(
@@ -95,16 +77,26 @@ def test_fused_matches_relational(spark, small_transcripts):
     keys = [(r["conv_id"], r["turn_idx"]) for r in out]
     assert keys == sorted(keys)
     _assert_matches(out, golden, "fused")
+    sorted_rel = (
+        extract_turns_fused(small_transcripts, ExtractConfig())
+        .orderBy("conv_id", "turn_idx")
+        .collect()
+    )
+    assert [r.asDict(recursive=True) for r in sorted_rel] == [
+        r.asDict(recursive=True) for r in out
+    ]
 
 
 def test_fused_marker_engine(spark, small_transcripts):
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
+    """Marker engine under ``ordered``: stable (conv_id, turn_idx)
+    ascending and byte-identical to the golden oracle."""
     rows = small_transcripts.collect()
     golden = _golden_map(rows, engine="marker")
     out = extract_turns_fused(
         small_transcripts, ExtractConfig(engine="marker", ordered=True)
     ).collect()
+    keys = [(r["conv_id"], r["turn_idx"]) for r in out]
+    assert keys == sorted(keys)
     _assert_matches(out, golden, "fused-marker")
 
 
@@ -112,8 +104,6 @@ def test_fused_sentence_split(spark, small_transcripts):
     """Sentence-level map units: tokenize → dedup → map → ' ' rejoin,
     the reference's html path (core.py:428). Marker engine makes each
     sentence boundary visible."""
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
     rows = small_transcripts.collect()
     golden = _golden_map(rows, engine="marker", sentence_split=True)
     out = extract_turns_fused(
@@ -121,28 +111,6 @@ def test_fused_sentence_split(spark, small_transcripts):
         ExtractConfig(engine="marker", sentence_split=True, ordered=True),
     ).collect()
     _assert_matches(out, golden, "fused-sentences")
-
-
-def test_relational_sentence_split(spark, small_transcripts):
-    """Relational plan's posexplode + two-level aggregation sentence path
-    must match the golden oracle (and hence the fused plan)."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows, engine="marker", sentence_split=True)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(engine="marker", sentence_split=True, ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "relational-sentences")
-
-
-def test_relational_sentence_split_global(spark, small_transcripts):
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows, sentence_split=True)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(sentence_split=True, dedup_scope="global", ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "relational-sentences-global")
 
 
 def test_distributed_generator_matches_local(spark):
@@ -163,7 +131,7 @@ def test_empty_and_binary_turns_survive(spark):
         ("c1", 3, "user", "Real content here.", "", None),
     ]
     df = spark.createDataFrame(data, TRANSCRIPT_SCHEMA)
-    out = {r["turn_idx"]: r for r in extract_turns(df).collect()}
+    out = {r["turn_idx"]: r for r in extract_turns_fused(df).collect()}
     assert len(out) == 4
     for i in (0, 1, 2):
         assert out[i]["extracted_text"] == ""

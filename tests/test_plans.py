@@ -10,12 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from docling_translate_spark.operators.extract import (
-    ExtractConfig,
-    extract_turns,
-    extract_turns_fused,
-)
-from docling_translate_spark.operators.segment import segment_turns
+from docling_translate_spark.operators.extract import extract_turns_fused
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 from docling_translate_spark.synth import gen_rows
 
@@ -37,10 +32,10 @@ def transcript_path(spark):
 
 
 def test_segmentation_prunes_columns(spark, transcript_path):
-    """The scan under segmentation must read only the 4 needed columns —
-    role/ts never cross Arrow."""
+    """The scan under the fused extraction must read only the 4 needed
+    columns — role/ts never cross Arrow."""
     df = spark.read.parquet(transcript_path)
-    plan = _plan(segment_turns(df))
+    plan = _plan(extract_turns_fused(df))
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema, plan
     line = read_schema[0]
@@ -65,15 +60,6 @@ def test_fused_plan_has_zero_shuffles(spark, transcript_path):
     df = spark.read.parquet(transcript_path)
     plan = _plan(extract_turns_fused(df))
     assert "Exchange" not in plan, plan
-
-
-def test_relational_plan_has_single_shuffle(spark, transcript_path):
-    """Default (batch dedup scope): only the per-turn groupBy exchanges."""
-    df = spark.read.parquet(transcript_path)
-    plan = _plan(extract_turns(df), "simple")
-    # AQE may stage exchanges; count distinct Exchange operators
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, plan
 
 
 def test_hash_sample_is_shuffle_free(spark, transcript_path):
@@ -190,18 +176,6 @@ def test_lsh_rescore_is_distributed_jvm(spark):
         if "Window" in blk.split("\n")[0]:
             assert "_v#" not in blk, blk
 
-
-def test_classifier_stays_jvm_side(spark, transcript_path):
-    """Classification must be JVM expressions (RLIKE in a Project), never
-    row-at-a-time Python eval."""
-    from docling_translate_spark.operators.classify import classify_segments
-
-    df = spark.read.parquet(transcript_path)
-    plan = _plan(classify_segments(segment_turns(df)), "simple")
-    assert "RLIKE" in plan  # regexes evaluate in the JVM
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python UDFs
-    # exactly one Python crossing: the segmentation mapInPandas
-    assert plan.count("MapInPandas") == 1
 
 def test_minhash_band_join_exchange_is_slim(spark, transcript_path):
     """The (band, bh) candidate self-join must shuffle slim

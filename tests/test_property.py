@@ -4,6 +4,7 @@ parser (the strongest invariant this engine claims), and structural
 invariants must hold."""
 
 import importlib.util
+import os
 import sys
 
 import pytest
@@ -20,20 +21,29 @@ from docling_translate_spark.segmenters import (
 from docling_translate_spark.sentences import split_sentences
 
 REF_PATH = "/root/reference/src/text_parser.py"
-spec = importlib.util.spec_from_file_location("ref_text_parser_prop", REF_PATH)
-_ref = importlib.util.module_from_spec(spec)
-sys.modules["ref_text_parser_prop"] = _ref
-spec.loader.exec_module(_ref)
-_REF_PARSER = _ref.TextFileParser()
-
-_REF_FN = {
-    "markdown": _REF_PARSER._parse_markdown,
-    "python": _REF_PARSER._parse_python,
-    "c_style": _REF_PARSER._parse_c_style,
-    "shell": _REF_PARSER._parse_shell,
-    "config": _REF_PARSER._parse_config,
-    "plaintext": _REF_PARSER._parse_plaintext,
+_REF_FAMILIES = {
+    "markdown": "_parse_markdown",
+    "python": "_parse_python",
+    "c_style": "_parse_c_style",
+    "shell": "_parse_shell",
+    "config": "_parse_config",
+    "plaintext": "_parse_plaintext",
 }
+
+
+@pytest.fixture(scope="module")
+def ref_parser():
+    """The reference's own parser, loaded lazily: without the reference
+    checkout only the reference-parity property skips."""
+    if not os.path.isfile(REF_PATH):
+        ref_root = os.path.dirname(os.path.dirname(REF_PATH))
+        pytest.skip(f"reference checkout absent: {ref_root}")
+    spec = importlib.util.spec_from_file_location("ref_text_parser_prop", REF_PATH)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules["ref_text_parser_prop"] = mod
+    spec.loader.exec_module(mod)
+    return mod.TextFileParser()
+
 
 # text alphabet biased toward structure characters that trigger the
 # segmenter regexes
@@ -46,11 +56,11 @@ _TEXT = st.lists(_ALPHA, max_size=60).map("".join)
 @pytest.mark.parametrize("family", sorted(SEGMENTERS))
 @settings(max_examples=150, deadline=None)
 @given(text=_TEXT)
-def test_segmenter_matches_reference_on_arbitrary_text(family, text):
+def test_segmenter_matches_reference_on_arbitrary_text(ref_parser, family, text):
     mine = SEGMENTERS[family](text)
     ref = [
         (s.text, s.start_pos, s.end_pos, s.translatable, s.segment_type, s.line_number)
-        for s in _REF_FN[family](text)
+        for s in getattr(ref_parser, _REF_FAMILIES[family])(text)
     ]
     assert mine == ref
 
@@ -85,54 +95,6 @@ def test_sentences_invariants(text):
         cursor = idx + len(s)
 
 
-# --- end-to-end extraction equivalence on adversarial payloads ---
-
-_PAYLOAD = st.lists(_ALPHA, max_size=80).map("".join)
-_TOOL = st.sampled_from([None, "python", "cpp", "bash", "json", "markdown"])
-
-
-@settings(max_examples=12, deadline=None)
-@given(payloads=st.lists(st.tuples(_PAYLOAD, _TOOL), min_size=1, max_size=6))
-def test_extraction_plans_agree_on_arbitrary_payloads(spark, payloads):
-    """For ARBITRARY structured payloads: the zero-shuffle fused plan,
-    the relational plan, and the pure-Python golden oracle must agree
-    byte-for-byte — the strongest end-to-end invariant of the engine."""
-    from docling_translate_spark.golden import extract_turn
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns,
-        extract_turns_fused,
-    )
-    from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
-
-    rows = [
-        ("conv-h", i, "user", text, tool, None)
-        for i, (text, tool) in enumerate(payloads)
-    ]
-    df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
-    cfg = ExtractConfig()
-
-    def keyed(out):
-        return {
-            (r["conv_id"], r["turn_idx"]): (
-                r["extracted_text"],
-                [tuple(s) for s in r["spans"]],
-                r["n_spans"],
-                round(r["boilerplate_ratio"], 12),
-            )
-            for r in out.collect()
-        }
-
-    fused = keyed(extract_turns_fused(df, cfg))
-    rel = keyed(extract_turns(df, cfg))
-    assert fused == rel
-    for i, (text, tool) in enumerate(payloads):
-        exp = extract_turn(text, tool)
-        got = fused[("conv-h", i)]
-        assert got[0] == exp["extracted_text"], (i, text)
-        assert got[1] == exp["spans"], (i, text)
-
-
 # --- §2.8 aux span sources: arbitrary captions/cells/headers ---
 
 _CELL = st.one_of(
@@ -144,6 +106,55 @@ _CELLS = st.one_of(
     st.lists(st.one_of(st.none(), st.lists(_CELL, max_size=4)), max_size=4),
 )
 _HEADERS = st.one_of(st.none(), st.lists(_CELL, max_size=4))
+
+
+# --- end-to-end extraction equivalence on adversarial payloads ---
+
+_PAYLOAD = st.lists(_ALPHA, max_size=80).map("".join)
+_TOOL = st.sampled_from([None, "python", "cpp", "bash", "json", "markdown"])
+_TURN = st.tuples(_PAYLOAD, _TOOL, _CELL, _CELLS, _HEADERS)
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    turns=st.lists(_TURN, min_size=1, max_size=6),
+    engine=st.sampled_from(["identity", "marker"]),
+    sentence_split=st.booleans(),
+)
+def test_extraction_plans_agree_on_arbitrary_payloads(
+    spark, turns, engine, sentence_split
+):
+    """For ARBITRARY structured payloads and aux span sources: the
+    zero-shuffle fused plan and the pure-Python golden oracle must agree
+    byte-for-byte — the strongest end-to-end invariant of the engine."""
+    from docling_translate_spark.golden import extract_turn
+    from docling_translate_spark.operators.extract import (
+        ExtractConfig,
+        extract_turns_fused,
+    )
+    from docling_translate_spark.schema import RICH_TRANSCRIPT_SCHEMA
+
+    rows = [
+        ("conv-h", i, "user", text, tool, None, cap, cel, hdr)
+        for i, (text, tool, cap, cel, hdr) in enumerate(turns)
+    ]
+    df = spark.createDataFrame(rows, RICH_TRANSCRIPT_SCHEMA)
+    cfg = ExtractConfig(engine=engine, sentence_split=sentence_split)
+    fused = {
+        (r["conv_id"], r["turn_idx"]): r
+        for r in extract_turns_fused(df, cfg).collect()
+    }
+    assert len(fused) == len(turns)
+    for i, (text, tool, cap, cel, hdr) in enumerate(turns):
+        exp = extract_turn(
+            text, tool, engine=engine, sentence_split=sentence_split,
+            caption=cap, cells=cel, headers=hdr,
+        )
+        got = fused[("conv-h", i)]
+        assert got["extracted_text"] == exp["extracted_text"], (i, text)
+        assert [tuple(s) for s in got["spans"]] == exp["spans"], (i, text)
+        assert got["n_spans"] == exp["n_spans"], (i, text)
+        assert got["boilerplate_ratio"] == exp["boilerplate_ratio"], (i, text)
 
 
 @settings(max_examples=300, deadline=None)

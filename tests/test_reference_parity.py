@@ -12,6 +12,7 @@ but reimplementation-vs-reference-code on the same inputs.
 """
 
 import importlib.util
+import os
 import sys
 
 import pytest
@@ -27,10 +28,17 @@ from docling_translate_spark.segmenters import (
 from docling_translate_spark.synth import gen_rows
 
 REF_PATH = "/root/reference/src/text_parser.py"
+REF_SRC = os.path.dirname(REF_PATH)
+
+
+def _require_reference():
+    if not os.path.isfile(REF_PATH):
+        pytest.skip(f"reference checkout absent: {os.path.dirname(REF_SRC)}")
 
 
 @pytest.fixture(scope="module")
 def ref_parser():
+    _require_reference()
     spec = importlib.util.spec_from_file_location("ref_text_parser", REF_PATH)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["ref_text_parser"] = mod
@@ -73,7 +81,9 @@ def ref_formula_fns():
     stdlib-only function defs via AST and exec them in isolation."""
     import ast
 
-    src = open("/root/reference/src/html_generator.py").read()
+    _require_reference()
+    with open(os.path.join(REF_SRC, "html_generator.py")) as f:
+        src = f.read()
     tree = ast.parse(src)
     wanted = {
         n.name: n

@@ -1,17 +1,17 @@
 """§2.8 UNION ALL span sources: caption + table-cell + header spans
 (ref src/core.py:429-448). Collection order parity vs the reference's
-pandas flatten, fused/relational byte-equality, classify exemption, and
+pandas flatten, fused/golden byte-equality, classify exemption, and
 plain-schema degradation."""
 
 import pandas as pd
 import pytest
 
+from docling_translate_spark.golden import extract_turn
 from docling_translate_spark.operators.extract import (
     ExtractConfig,
-    extract_turns,
     extract_turns_fused,
 )
-from docling_translate_spark.operators.segment import aux_span_texts, segment_turns
+from docling_translate_spark.operators.segment import aux_span_texts
 from docling_translate_spark.schema import RICH_TRANSCRIPT_SCHEMA
 
 ROWS = [
@@ -53,25 +53,27 @@ def test_aux_order_matches_reference_flatten():
 
 
 def test_segment_rows_carry_aux_spans(spark, rich):
-    segs = segment_turns(rich).collect()
-    by_turn = {}
-    for r in segs:
-        by_turn.setdefault((r["conv_id"], r["turn_idx"]), []).append(r)
-    t0 = sorted(by_turn[("c1", 0)], key=lambda r: r["span_idx"])
-    kinds = [r["segment_type"] for r in t0]
+    """Aux spans follow the body spans in the reference's collection
+    order, with offsets -1 and ``translatable`` True."""
+    out = {(r["conv_id"], r["turn_idx"]): r for r in
+           extract_turns_fused(rich).collect()}
+    t0 = out[("c1", 0)]["spans"]
+    kinds = [s["segment_type"] for s in t0]
     assert kinds[-6:] == ["caption", "table_cell", "table_cell", "table_cell",
                           "table_header", "table_header"]
-    texts = [r["text"] for r in t0[-6:]]
-    assert texts == ["Figure 1: a caption", "a1", "b1", "a2", "colA", "colB"]
-    aux = t0[-1]
-    assert aux["start_pos"] == -1 and aux["end_pos"] == -1
-    assert aux["translatable"] is True
-    # caption-only turn: no sentinel, just the caption span
-    t1 = by_turn[("c1", 1)]
+    for aux in t0[-6:]:
+        assert aux["start_pos"] == -1 and aux["end_pos"] == -1
+        assert aux["line_number"] == -1
+        assert aux["translatable"] is True
+    assert out[("c1", 0)]["extracted_text"].split("\n\n")[-6:] == [
+        "Figure 1: a caption", "a1", "b1", "a2", "colA", "colB"]
+    # caption-only turn: just the caption span
+    t1 = out[("c1", 1)]["spans"]
     assert len(t1) == 1 and t1[0]["segment_type"] == "caption"
+    assert out[("c1", 1)]["extracted_text"] == "just a caption"
     # blank caption dropped, cell + header survive
-    t3 = sorted(by_turn[("c2", 0)], key=lambda r: r["span_idx"])
-    assert [r["segment_type"] for r in t3] == ["table_cell", "table_header"]
+    t3 = out[("c2", 0)]["spans"]
+    assert [s["segment_type"] for s in t3] == ["table_cell", "table_header"]
 
 
 def test_aux_exempt_from_classification(spark):
@@ -90,15 +92,23 @@ def test_aux_exempt_from_classification(spark):
 
 @pytest.mark.parametrize("cfg", [
     ExtractConfig(),
-    ExtractConfig(dedup_scope="global"),
     ExtractConfig(sentence_split=True),
     ExtractConfig(engine="marker"),
-])
-def test_fused_equals_relational_with_aux(spark, rich, cfg):
-    key = lambda r: (r["conv_id"], r["turn_idx"])  # noqa: E731
-    a = sorted(extract_turns_fused(rich, cfg).collect(), key=key)
-    b = sorted(extract_turns(rich, cfg).collect(), key=key)
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
+], ids=["default", "sentence_split", "marker"])
+def test_fused_equals_golden_with_aux(spark, rich, cfg):
+    out = {(r["conv_id"], r["turn_idx"]): r for r in
+           extract_turns_fused(rich, cfg).collect()}
+    assert len(out) == len(ROWS)
+    for cid, tix, _, text, tool, _, cap, cel, hdr in ROWS:
+        exp = extract_turn(
+            text, tool, engine=cfg.engine, sentence_split=cfg.sentence_split,
+            caption=cap, cells=cel, headers=hdr,
+        )
+        got = out[(cid, tix)]
+        assert got["extracted_text"] == exp["extracted_text"], (cid, tix)
+        assert [tuple(s) for s in got["spans"]] == exp["spans"], (cid, tix)
+        assert got["n_spans"] == exp["n_spans"], (cid, tix)
+        assert got["boilerplate_ratio"] == exp["boilerplate_ratio"], (cid, tix)
 
 
 def test_plain_schema_unchanged(spark, rich):

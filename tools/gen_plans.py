@@ -11,11 +11,7 @@ sys.path.insert(0, "/root/repo")
 
 
 def main() -> None:
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns,
-        extract_turns_fused,
-    )
+    from docling_translate_spark.operators.extract import extract_turns_fused
     from docling_translate_spark.plans.session import build_session
     from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
     from docling_translate_spark.synth import gen_rows
@@ -35,7 +31,6 @@ def main() -> None:
         return buf.getvalue().strip()
 
     fused = plan(extract_turns_fused(df))
-    rel = plan(extract_turns(df))
 
     from docling_translate_spark.operators.sampling import hash_sample
     from docling_translate_spark.operators.similarity import brute_force_topk_blocked
@@ -273,7 +268,7 @@ Captured with `.explain("formatted")` over a parquet transcript table
 `tests/test_plans.py` (column pruning, pushdown, shuffle counts, no
 row-at-a-time Python).
 
-## Fused plan (`extract_turns_fused`) — the production plan
+## Extraction plan (`extract_turns_fused`)
 
 One narrow stage: scan → project (4 columns only) → one `MapInPandas`.
 Zero exchanges; parallelism = scan partitions; runs unchanged under
@@ -281,16 +276,6 @@ Structured Streaming.
 
 ```
 {fused}
-```
-
-## Relational plan (`extract_turns`, batch dedup scope)
-
-Segmentation `MapInPandas` → JVM classification (RLIKE/forall in a
-Project) → Arrow-batched map UDF → ONE exchange (the per-turn groupBy)
-→ object-hash aggregate reassembly.
-
-```
-{rel}
 ```
 
 ## Blocked exact kNN (`brute_force_topk_blocked`)
@@ -748,11 +733,7 @@ sort) with the rank window above the already-cut 50 rows.
 
 Notes:
 - `ReadSchema` shows only conv_id/turn_idx/text/tool — role/ts pruned.
-- A filter above either plan pushes to `PushedFilters` in the scan.
-- With `dedup_scope='global'` the plan gains a distinct exchange and a
-  broadcast (or AQE shuffle) join keyed on sha2(text); the sentence
-  distinct plans as partial HashAggregate → Exchange → final (map-side
-  pre-dedup — the two-level dedup at scale).
+- A filter above the extraction plan pushes to `PushedFilters` in the scan.
 """
     with open("/root/repo/PLANS.md", "w") as f:
         f.write(md)
