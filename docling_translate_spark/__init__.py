@@ -19,7 +19,7 @@ re-expressed Spark-first over transcript tables:
   (reference ``src/core.py:422``).
 
 The whole per-turn chain runs as ONE extraction plan,
-``operators.extract.extract_turns_fused``: a single ``mapInPandas`` pass
+``operators.extract.extract_turns_fused``: a single ``mapInArrow`` pass
 over Arrow batches (one vectorized Python crossing, no shuffle), so
 Catalyst still prunes columns and pushes filters into the scan beneath
 it. ``golden.extract_turn`` is its pure-Python twin.

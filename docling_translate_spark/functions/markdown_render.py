@@ -86,8 +86,11 @@ def _inline(text: str) -> str:
     )
     out = re.sub(r"\*\*([^*]+)\*\*", r"<strong>\1</strong>", out)
     out = re.sub(r"\*([^*]+)\*", r"<em>\1</em>", out)
-    for idx, frag in enumerate(stash):
-        out = out.replace(f"\x02{idx}\x03", frag)
+    # a fragment can carry an earlier placeholder (a code span inside a
+    # link URL), so restore until none is left
+    n = 1
+    while n:
+        out, n = re.subn(r"\x02(\d+)\x03", lambda m: stash[int(m.group(1))], out)
     return out
 
 

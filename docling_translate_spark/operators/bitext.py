@@ -149,6 +149,9 @@ def bitext_mine(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    if nprobe < 1:
+        # nprobe=0 would leave every probe list empty ⇒ zero pairs
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     if centroid_ints is None:
         rows = ivf_train_rows(src, id_col, vec_col, max_train)
         centroid_ints = ivf_centroid_ints(rows, n_cells, seed=seed, grid=grid)

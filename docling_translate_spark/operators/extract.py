@@ -1,7 +1,7 @@
 """End-to-end per-turn main-content extraction pipeline.
 
 Mirrors the reference's query lifecycle (reference ``src/core.py:324-536``)
-re-planned for Spark as ONE ``mapInPandas`` pass per Arrow batch:
+re-planned for Spark as ONE ``mapInArrow`` pass per Arrow batch:
 
 1. segment turns into spans            (``segmenters.segment_text``)
 2. classify formula / boilerplate      (the pure predicates in
@@ -66,21 +66,28 @@ def extract_turns_fused(
     transcripts: DataFrame, config: ExtractConfig | None = None
 ) -> DataFrame:
     """ZERO-shuffle extraction: the whole per-turn pipeline fused into one
-    ``mapInPandas`` pass; returns EXTRACTED_SCHEMA rows.
+    ``mapInArrow`` pass; returns EXTRACTED_SCHEMA rows.
 
     Spans of a turn are born colocated inside the segmentation batch, so
     this operator segments, classifies, dedups (batch scope, the
     reference's per-document scope, core.py:453-455), maps, and
     reassembles each turn inside the Arrow batch — the physical plan is a
     single narrow stage, which is also what makes it legal under
-    Structured Streaming (no stateful ops). Byte-equality with the
-    pure-Python twin (:func:`docling_translate_spark.golden.extract_turn`)
-    is pinned in tests.
+    Structured Streaming (no stateful ops). ``conv_id``/``turn_idx`` pass
+    through as the input Arrow arrays, and ``spans`` is assembled once
+    per batch from flat columns, so no pandas frame and no per-span dict
+    is built. Byte-equality with the pure-Python twin
+    (:func:`docling_translate_spark.golden.extract_turn`) is pinned in
+    tests.
     """
     cfg = config or ExtractConfig()
     fn = create_engine(cfg.engine)
 
     # late imports keep the closure light for pickling to workers
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from docling_translate_spark.classify import (
         has_nul_byte,
         is_boilerplate_segment,
@@ -91,38 +98,43 @@ def extract_turns_fused(
     from docling_translate_spark.sentences import split_sentences
 
     sentence_split = cfg.sentence_split
+    out_schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    spans_type = out_schema.field("spans").type
+    span_fields = list(spans_type.value_type)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            conv_ids, turn_idxs, span_lists, content_lists = [], [], [], []
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            n = rb.num_rows
+            names = rb.schema.names
+
+            def col(name: str) -> list:
+                return rb.column(name).to_pylist() if name in names else [None] * n
+
+            # flat span columns + list offsets: one Arrow build per batch
+            starts, ends, seg_types, trans, lines = [], [], [], [], []
+            offsets = [0]
+            n_spans, ratios, content_lists = [], [], []
             uniq: dict[str, None] = {}
-            n = len(pdf)
-            tools = pdf["tool"] if "tool" in pdf else pd.Series([None] * n)
-            caps = pdf["caption"] if "caption" in pdf else pd.Series([None] * n)
-            cells = pdf["cells"] if "cells" in pdf else pd.Series([None] * n)
-            heads = pdf["headers"] if "headers" in pdf else pd.Series([None] * n)
-            for cid, tix, text, tool, cap, cel, hdr in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], tools, caps, cells, heads
+            for text, tool, cap, cel, hdr in zip(
+                col("text"), col("tool"), col("caption"), col("cells"), col("headers")
             ):
-                spans, contents = [], []
-                payload = str(text) if text is not None else None
-                if payload is not None and payload.strip() and not has_nul_byte(payload):
+                contents = []
+                n_boiler = 0
+                if text is not None and text.strip() and not has_nul_byte(text):
                     for seg_text, start, end, tr, st, line in segment_text(
-                        payload, tool or None
+                        text, tool or None
                     ):
                         if tr and is_formula(seg_text):
                             st, tr = "formula", False
                         elif tr and is_boilerplate_segment(seg_text):
                             st, tr = "boilerplate", False
-                        spans.append(
-                            {
-                                "start_pos": start,
-                                "end_pos": end,
-                                "segment_type": st,
-                                "translatable": tr,
-                                "line_number": line,
-                            }
-                        )
+                        if st == "boilerplate":
+                            n_boiler += 1
+                        starts.append(start)
+                        ends.append(end)
+                        seg_types.append(st)
+                        trans.append(tr)
+                        lines.append(line)
                         if tr and seg_text.strip():
                             if sentence_split:
                                 # sentence-level map units (core.py:428)
@@ -137,65 +149,64 @@ def extract_turns_fused(
                 # headers, pooled WHOLE — no sentence split, no
                 # formula/boilerplate pass (src/core.py:429-448)
                 for st, aux_text in aux_span_texts(cap, cel, hdr):
-                    spans.append(
-                        {
-                            "start_pos": -1,
-                            "end_pos": -1,
-                            "segment_type": st,
-                            "translatable": True,
-                            "line_number": -1,
-                        }
-                    )
+                    starts.append(-1)
+                    ends.append(-1)
+                    seg_types.append(st)
+                    trans.append(True)
+                    lines.append(-1)
                     contents.append([aux_text] if sentence_split else aux_text)
                     uniq[aux_text] = None
-                conv_ids.append(cid)
-                turn_idxs.append(tix)
-                span_lists.append(spans)
+                ns = len(starts) - offsets[-1]
+                offsets.append(len(starts))
+                n_spans.append(ns)
+                ratios.append(n_boiler / ns if ns else 0.0)
                 content_lists.append(contents)
 
             # batch-scoped dedup + one vectorized map call (the reference's
             # unique-sentence translate pass, core.py:453-486)
-            keys = pd.Series(list(uniq.keys()), dtype="object")
+            keys = pd.Series(list(uniq), dtype="object")
             mapped = fn(keys) if len(keys) else keys
             lookup = dict(zip(keys, mapped))
 
-            n_spans = [len(s) for s in span_lists]
-            yield pd.DataFrame(
-                {
-                    "conv_id": conv_ids,
-                    "turn_idx": turn_idxs,
-                    "extracted_text": [
-                        (
-                            CONTENT_JOINER.join(
-                                " ".join(lookup.get(s, s) for s in sents)
-                                for sents in cl
-                            )
-                            if sentence_split
-                            else CONTENT_JOINER.join(lookup.get(c, c) for c in cl)
-                        )
-                        for cl in content_lists
-                    ],
-                    "spans": span_lists,
-                    "n_spans": n_spans,
-                    "boilerplate_ratio": [
-                        (
-                            sum(
-                                1
-                                for s in sl
-                                if s["segment_type"] == "boilerplate"
-                            )
-                            / ns
-                            if ns
-                            else 0.0
-                        )
-                        for sl, ns in zip(span_lists, n_spans)
-                    ],
-                }
+            if sentence_split:
+                extracted = [
+                    CONTENT_JOINER.join(
+                        " ".join(lookup.get(s, s) for s in sents) for sents in cl
+                    )
+                    for cl in content_lists
+                ]
+            else:
+                extracted = [
+                    CONTENT_JOINER.join(lookup.get(c, c) for c in cl)
+                    for cl in content_lists
+                ]
+            span_values = pa.StructArray.from_arrays(
+                [
+                    pa.array(starts, pa.int32()),
+                    pa.array(ends, pa.int32()),
+                    pa.array(seg_types, pa.string()),
+                    pa.array(trans, pa.bool_()),
+                    pa.array(lines, pa.int32()),
+                ],
+                fields=span_fields,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("conv_id"),
+                    rb.column("turn_idx"),
+                    pa.array(extracted, pa.string()),
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets, pa.int32()), span_values, type=spans_type
+                    ),
+                    pa.array(n_spans, pa.int32()),
+                    pa.array(ratios, pa.float64()),
+                ],
+                schema=out_schema,
             )
 
     want = ["conv_id", "turn_idx", "text", "tool", "caption", "cells", "headers"]
     slim = transcripts.select(*[c for c in want if c in transcripts.columns])
-    out = slim.mapInPandas(gen, EXTRACTED_SCHEMA)
+    out = slim.mapInArrow(gen, EXTRACTED_SCHEMA)
     if cfg.ordered:
         out = out.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
             "conv_id", "turn_idx"

@@ -548,6 +548,10 @@ def lsh_ann_topk(
             for members in pdf["_members"]:
                 if len(members) < 2:
                     continue
+                # collect_list order depends on partitioning; a fixed
+                # member order fixes the GEMM's per-cell ulp noise, which
+                # decides cosine ties (identical vectors) below
+                members = sorted(members, key=lambda m: m["sid"])
                 ids = np.asarray([m["sid"] for m in members], dtype=np.int64)
                 mat = np.stack(
                     [np.asarray(m["_v"], dtype=np.float64) for m in members]

@@ -2,7 +2,7 @@
 
 These are plain ``str -> list[tuple]`` functions so they can be (a) unit
 tested directly against hand-written fixtures and (b) executed vectorized
-inside the Arrow-batched ``mapInPandas`` extraction kernel
+inside the Arrow-batched ``mapInArrow`` extraction kernel
 (:func:`docling_translate_spark.operators.extract.extract_turns_fused`).
 
 Semantics are pinned to the reference implementation's observable behavior

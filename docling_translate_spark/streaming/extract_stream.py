@@ -48,7 +48,7 @@ def read_transcript_stream(
 
 
 def stream_extract(stream: DataFrame, config: ExtractConfig | None = None) -> DataFrame:
-    """Per-turn extraction on a stream — stateless mapInPandas, so any
+    """Per-turn extraction on a stream — stateless mapInArrow, so any
     output mode works and no watermark is required."""
     return extract_turns_fused(stream, config)
 

@@ -25,6 +25,14 @@ def test_k_validation(spark):
         bitext_mine(df, df, k=0, centroid_ints=[[IVF_GRID, 0]])
 
 
+def test_nprobe_validation(spark):
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="nprobe must be"):
+        bitext_mine(df, df, nprobe=0, centroid_ints=[[IVF_GRID, 0]])
+
+
 def test_micro_obvious_pairs(spark):
     """Two 'languages', each with a +x-ish and a +y-ish sentence: the
     aligned directions must pair up, mutually."""

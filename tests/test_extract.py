@@ -11,7 +11,10 @@ from docling_translate_spark.operators.extract import (
     ExtractConfig,
     extract_turns_fused,
 )
-from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
+from docling_translate_spark.schema import (
+    RICH_TRANSCRIPT_SCHEMA,
+    TRANSCRIPT_SCHEMA,
+)
 from docling_translate_spark.synth import gen_rows, transcripts_df
 
 
@@ -138,3 +141,70 @@ def test_empty_and_binary_turns_survive(spark):
         assert out[i]["n_spans"] == 0
         assert out[i]["spans"] == []
     assert out[3]["extracted_text"] == "Real content here."
+
+
+# null, blank and NUL-byte bodies whose aux sources are absent or blank:
+# every one must come out as a row with no spans
+_BLANK_BODIES = [None, "", "   \n ", "\t", "bin\x00ary", "\x00"]
+_BLANK_AUX = [(None, None, None), ("  ", [[None, " "]], [None, ""])]
+
+
+def _rich_rows():
+    """gen_rows turns with caption/cells/headers (nulls inside and out)
+    plus a separate conversation of blank turns, as RICH_TRANSCRIPT rows."""
+    rows = []
+    for i, (cid, tix, role, text, tool, ts) in enumerate(gen_rows(20, 5)):
+        cap = (None, "Figure %d: chart" % i, " ")[i % 3]
+        cells = (None, [["a%d" % i, None], None, ["", "b"]], [[None]])[i % 3]
+        heads = ([None, "h%d" % i], None, ["col"])[i % 3]
+        rows.append((cid, tix, role, text, tool, ts, cap, cells, heads))
+    for i in range(14):
+        cap, cells, heads = _BLANK_AUX[i % 2]
+        body = _BLANK_BODIES[i % len(_BLANK_BODIES)]
+        rows.append(("blank", i, "user", body, None, None, cap, cells, heads))
+    return rows
+
+
+def test_fused_invariant_to_batch_size_and_partitioning(spark):
+    """The fused output is the same bytes at 7-row Arrow batches over five
+    partitions (one holding only blank turns, so whole batches carry no
+    span and no map key) and at the default batch size over one
+    partition, and both equal golden.extract_turn turn by turn."""
+    rows = _rich_rows()
+    df = spark.createDataFrame(rows, RICH_TRANSCRIPT_SCHEMA)
+    blank = df["conv_id"] == "blank"
+    cfg = ExtractConfig(engine="marker")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        spread = df.filter(~blank).repartition(4).unionByName(
+            df.filter(blank).repartition(1)
+        )
+        assert spread.rdd.getNumPartitions() == 5
+        small = extract_turns_fused(spread, cfg).cache()
+        small_rows = small.collect()
+    finally:
+        spark.conf.set(conf, prev)
+    one = extract_turns_fused(df.repartition(1), cfg).cache()
+    one_rows = one.collect()
+    assert small.exceptAll(one).count() == 0
+    assert one.exceptAll(small).count() == 0
+
+    golden = {
+        (cid, tix): extract_turn(
+            text, tool, engine=cfg.engine, caption=cap, cells=cel, headers=hdr
+        )
+        for cid, tix, _, text, tool, _, cap, cel, hdr in rows
+    }
+    for out in (small_rows, one_rows):
+        assert len(out) == len(rows)
+        _assert_matches(out, golden, "batch-size")
+        for r in out:
+            exp = golden[(r["conv_id"], r["turn_idx"])]
+            assert r["boilerplate_ratio"] == exp["boilerplate_ratio"], r
+            if r["conv_id"] == "blank":
+                assert r["spans"] == [] and r["n_spans"] == 0, r
+                assert r["boilerplate_ratio"] == 0.0, r
+    small.unpersist()
+    one.unpersist()

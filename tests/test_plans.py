@@ -62,6 +62,16 @@ def test_fused_plan_has_zero_shuffles(spark, transcript_path):
     assert "Exchange" not in plan, plan
 
 
+def test_fused_plan_is_one_arrow_crossing(spark, transcript_path):
+    """The whole extraction is one Arrow-native Python crossing: no
+    pandas conversion and no exchange."""
+    df = spark.read.parquet(transcript_path)
+    plan = _plan(extract_turns_fused(df), "simple")
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
 def test_hash_sample_is_shuffle_free(spark, transcript_path):
     """Deterministic sampling must stay a pushed-through filter — no
     exchange, no sort, no Python."""

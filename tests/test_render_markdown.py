@@ -112,6 +112,13 @@ def test_href_quote_escaped_and_stash_collision_proof():
     assert render_markdown("\x020\x03 `c`") == "<p>0 <code>c</code></p>"
 
 
+def test_code_span_inside_link_url_fully_restored():
+    # the code span's placeholder sits inside the stashed href fragment
+    out = render_markdown("[a](`u`)")
+    assert "\x02" not in out and "\x03" not in out, repr(out)
+    assert "<code>u</code>" in out
+
+
 def test_inline_link_and_code_stash():
     assert render_markdown("see [docs](http://x/y) now") == (
         '<p>see <a href="http://x/y">docs</a> now</p>'

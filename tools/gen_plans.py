@@ -270,7 +270,7 @@ row-at-a-time Python).
 
 ## Extraction plan (`extract_turns_fused`)
 
-One narrow stage: scan → project (4 columns only) → one `MapInPandas`.
+One narrow stage: scan → project (4 columns only) → one `MapInArrow`.
 Zero exchanges; parallelism = scan partitions; runs unchanged under
 Structured Streaming.
 
