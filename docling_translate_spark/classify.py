@@ -111,16 +111,6 @@ def formula_col(text: Column) -> Column:
     return text.isNotNull() & F.regexp_like(text, F.lit(FORMULA_REGEX))
 
 
-def nul_sniff_col(text: Column) -> Column:
-    """Column predicate mirroring :func:`has_nul_byte` (whole payload)."""
-    return F.contains(text, F.lit("\x00"))
-
-
-def nonempty_col(text: Column) -> Column:
-    """The P1 non-empty filter (ref core.py:426): trim(text) != ''."""
-    return text.isNotNull() & (F.trim(text) != F.lit(""))
-
-
 # --- S4: encoding-fallback analog ---
 #
 # The reference reads files with a utf-8 → cp949 → utf-8-errors='ignore'

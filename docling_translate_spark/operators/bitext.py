@@ -138,10 +138,11 @@ def bitext_mine(
     neighbors, its best target under the margin score, with the
     mutual-best flag.
 
-    Columns: ``src_id``, ``tgt_id`` (BIGINT), ``margin6`` (DOUBLE, the
-    ratio-margin rounded to 6 decimals), ``mutual`` (BOOLEAN — the
-    pair is also the target's best source, the paper's bidirectional
-    intersection).
+    Columns: ``src_id``, ``tgt_id`` (BIGINT), ``margin_e6`` (BIGINT,
+    ``floor(margin * 1e6)`` of the ratio-margin — a floor, not a
+    rounding, so every SQL engine emits the same integer), ``mutual``
+    (BOOLEAN — the pair is also the target's best source, the paper's
+    bidirectional intersection).
 
     Train the codebook on src ∪ tgt (pass ``centroid_ints`` built from
     the union — the gate query does) or let it default to the source
@@ -225,7 +226,7 @@ def bitext_mine(
         .select(
             "src_id",
             "tgt_id",
-            F.round(F.col("_margin"), 6).alias("margin6"),
+            F.floor(F.col("_margin") * 1e6).cast("long").alias("margin_e6"),
             F.coalesce(F.col("_mut"), F.lit(False)).alias("mutual"),
         )
     )

@@ -209,50 +209,6 @@ SEGMENTERS = {
     "plaintext": segment_plaintext,
 }
 
-# Extension → family routing, for payloads that carry a filename hint
-# (ref src/text_parser.py:60-111).
-EXTENSION_MAP = {
-    "md": "markdown",
-    "markdown": "markdown",
-    "rst": "plaintext",
-    "py": "python",
-    "pyw": "python",
-    "js": "c_style",
-    "jsx": "c_style",
-    "ts": "c_style",
-    "tsx": "c_style",
-    "mjs": "c_style",
-    "cjs": "c_style",
-    "c": "c_style",
-    "h": "c_style",
-    "cpp": "c_style",
-    "hpp": "c_style",
-    "cc": "c_style",
-    "cxx": "c_style",
-    "cs": "c_style",
-    "java": "c_style",
-    "kt": "c_style",
-    "kts": "c_style",
-    "go": "c_style",
-    "rs": "c_style",
-    "swift": "c_style",
-    "sh": "shell",
-    "bash": "shell",
-    "zsh": "shell",
-    "fish": "shell",
-    "json": "config",
-    "yaml": "config",
-    "yml": "config",
-    "toml": "config",
-    "xml": "config",
-    "txt": "plaintext",
-    "text": "plaintext",
-    "log": "plaintext",
-    "cfg": "plaintext",
-    "ini": "plaintext",
-    "env": "plaintext",
-}
-
 # Transcript turns carry no filename, so we sniff the payload. The tool
 # column (when it names a known language/tool) wins; otherwise content
 # heuristics pick the family. Deterministic by construction.

@@ -95,7 +95,9 @@ def _session_fn(gap_ms: int):
 
 def sessionize(stream, gap_seconds: int = 300):
     """Close a conversation after ``gap_seconds`` of inactivity and emit
-    its summary row (stateful; update output mode)."""
+    its summary row (stateful; update output mode). The processing-time
+    timeout keeps scheduling batches, so a query over it does not finish
+    under ``Trigger.AvailableNow``; stop it instead."""
     return (
         stream.select("conv_id", "text", "ts")
         .groupBy("conv_id")

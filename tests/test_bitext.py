@@ -6,6 +6,7 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql.types import LongType
 
 from docling_translate_spark.operators.bitext import bitext_mine
 from docling_translate_spark.operators.similarity import (
@@ -53,7 +54,7 @@ def test_micro_obvious_pairs(spark):
     }
     assert out[0]["tgt_id"] == 100 and out[0]["mutual"]
     assert out[1]["tgt_id"] == 101 and out[1]["mutual"]
-    assert out[0]["margin6"] > 1.0  # aligned pair beats the background
+    assert out[0]["margin_e6"] > 1_000_000  # aligned pair beats the background
 
 
 def _twin(a_ids, a_vecs, b_ids, b_vecs, cents, k, nprobe):
@@ -128,7 +129,7 @@ def _twin(a_ids, a_vecs, b_ids, b_vecs, cents, k, nprobe):
     rows = {}
     for sid, (tid, mgn) in best_f.items():
         mutual = best_b.get(tid, (None,))[0] == sid
-        rows[sid] = (tid, round(mgn, 6), mutual)
+        rows[sid] = (tid, math.floor(mgn * 1e6), mutual)
     return rows
 
 
@@ -140,11 +141,11 @@ def test_python_twin_on_sf0001(spark):
     cents = ivf_centroid_ints(rows, 16)
     src = emb.filter(F.col("label") < 5)
     tgt = emb.filter(F.col("label") >= 5)
+    mined = bitext_mine(src, tgt, k=4, nprobe=4, centroid_ints=cents)
+    assert isinstance(mined.schema["margin_e6"].dataType, LongType)
     out = {
-        r["src_id"]: (r["tgt_id"], r["margin6"], r["mutual"])
-        for r in bitext_mine(
-            src, tgt, k=4, nprobe=4, centroid_ints=cents
-        ).collect()
+        r["src_id"]: (r["tgt_id"], r["margin_e6"], r["mutual"])
+        for r in mined.collect()
     }
 
     def mats(df):
@@ -157,13 +158,10 @@ def test_python_twin_on_sf0001(spark):
     a_ids, a_vecs = mats(src)
     b_ids, b_vecs = mats(tgt)
     expect = _twin(a_ids, a_vecs, b_ids, b_vecs, cents, k=4, nprobe=4)
-    # ids/flags exact; margins via approx — Spark F.round (HALF_UP) and
-    # Python round (half-even) can differ on an exact 7th-decimal tie,
-    # the repo's established round-6 comparison discipline (bigram_lm)
+    # ids, flags and floored micro-margins all exact: the margins are
+    # bit-identical doubles and floor has no tie rule to disagree on
     assert set(out) == set(expect)
-    for sid, (tid, mgn, mut) in expect.items():
-        g_tid, g_mgn, g_mut = out[sid]
-        assert (g_tid, g_mut) == (tid, mut), sid
-        assert g_mgn == pytest.approx(mgn, abs=1e-6), sid
+    for sid, row in expect.items():
+        assert out[sid] == row, sid
     assert len(out) > 0
     assert any(m for _, _, m in out.values())  # some mutual pairs exist

@@ -4,6 +4,7 @@ batch, maintains state without emitting until timeout)."""
 
 import datetime
 import tempfile
+import time
 
 import pandas as pd
 import pytest
@@ -146,9 +147,13 @@ def test_batch_twin_equality(spark):
 
 
 def test_streaming_smoke(spark):
-    """The stateful query must start and process a batch end-to-end."""
+    """The stateful query must consume every input row and emit nothing
+    while all sessions are still open. ``sessionize`` never finishes
+    under ``availableNow`` (the processing-time timeout keeps scheduling
+    batches), so the test waits on query progress and stops the query."""
     tmp = tempfile.mkdtemp(prefix="dts-sess-")
-    df = spark.createDataFrame(gen_rows(6, 4), TRANSCRIPT_SCHEMA)
+    rows_in = gen_rows(6, 4)
+    df = spark.createDataFrame(rows_in, TRANSCRIPT_SCHEMA)
     df.coalesce(2).write.mode("overwrite").parquet(tmp + "/in")
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
@@ -160,12 +165,24 @@ def test_streaming_smoke(spark):
         .writeStream.format("memory")
         .queryName("sessions")
         .outputMode("update")
-        .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    # no timeouts can fire inside one availableNow run — the assertion is
-    # that the stateful operator executed without error and emitted only
-    # open-session placeholders
-    rows = spark.sql("select * from sessions").collect()
+    consumed = {}  # batchId -> numInputRows; recentProgress is a window
+    try:
+        deadline = time.monotonic() + 60
+        while sum(consumed.values()) < len(rows_in):
+            if time.monotonic() > deadline:
+                break
+            time.sleep(0.25)
+            consumed.update(
+                (p["batchId"], p["numInputRows"]) for p in q.recentProgress
+            )
+        # no session can time out within the 1-hour gap, so the stateful
+        # operator must have emitted nothing
+        rows = spark.sql("select * from sessions").collect()
+        exc = q.exception()
+    finally:
+        q.stop()
+    assert sum(consumed.values()) == len(rows_in) == 32
     assert rows == []
+    assert exc is None
