@@ -1,7 +1,9 @@
 .PHONY: test oracle bench plans smoke
 
+# tier-1: the ROADMAP command (every test runs; Spark sized to the host)
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python tools/check_oracle.py

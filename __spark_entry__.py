@@ -673,19 +673,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ann_topk_small(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-5, small-corpus BLAS fast path (collect +
-    broadcast — documented envelope: corpus must fit worker memory).
-    Same DuckDB oracle as ann_topk: the two plans must agree on every
-    neighbor."""
-    from docling_translate_spark.operators.similarity import brute_force_topk_blas
-
-    emb = _emb(spark, sf_dir)
-    return brute_force_topk_blas(emb, emb, k=5).select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
 def q_embed_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT embedding-cosine near-dup pairs via the blocked all-pairs
     GEMM (float64 on both sides so the threshold compare is stable
@@ -2461,7 +2448,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scalar_battery": q_scalar_battery,
         "a1_distinct_dedup": q_a1_distinct_dedup,
         "winnow_pairs": q_winnow_pairs,
-        "ann_topk_small": q_ann_topk_small,
         "s8_embed_media": q_s8_embed_media,
         "rolling_fingerprint": q_rolling_fingerprint,
         "fingerprint": q_fingerprint,
@@ -4388,16 +4374,6 @@ w AS MATERIALIZED (
             FROM documents d LEFT JOIN scored s USING (doc_id)
         """,
         "ann_topk": """
-            SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY a.vec_id
-                       ORDER BY list_cosine_similarity(a.embedding, b.embedding) DESC,
-                                b.vec_id
-                   ) AS rank
-            FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-            QUALIFY rank <= 5
-        """,
-        "ann_topk_small": """
             SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
                    row_number() OVER (
                        PARTITION BY a.vec_id

@@ -51,10 +51,9 @@ The join itself is a plain equi-join on ``cell`` (AQE splits hot
 cells), both sides carry only (id, 64×8B quantized vector, two
 BIGINTs), and nothing ever collects: the pair stream is filtered to
 dropped-ids by one semi-shaped distinct. The literal-centroid
-projection is sized for moderate nlist (≤ a few hundred cells — codegen
-grows with cells × dim); at web-scale nlist, assignment runs through
-``ivf_topk``'s Arrow-batched kernel instead and the prune join is
-unchanged.
+projection is sized for moderate nlist: at most a few hundred cells,
+since codegen grows with cells × dim. A web-scale nlist is outside this
+operator's envelope.
 
 Reference scope note: the reference repo (docling-translate) has no
 embedding operators at all — this is an engine addition for the

@@ -1,18 +1,22 @@
 """Similarity search over an embedding column (``array<float>``).
 
-Two paths, as a training-data pipeline needs at 100 TB:
+One implementation per kNN contract:
 
-* brute-force cosine top-k — the exactness baseline: block-wise
-  broadcast of the query set against the corpus, dot products via
-  ``F.zip_with``/``F.aggregate`` (JVM-side, codegen) — no Python in the
-  hot loop;
-* LSH-bucketed ANN — random-hyperplane signatures (numpy, Arrow batches)
-  so candidate generation is a bucket equi-join; brute-force rescoring
-  only inside buckets. This is the scale path: signature build is narrow,
-  the join keys are small ints, and AQE splits hot buckets.
+* exact cosine top-k — :func:`brute_force_topk` (JVM-side
+  ``F.zip_with``/``F.aggregate`` dots against a broadcast query set,
+  the exactness baseline) and :func:`brute_force_topk_blocked` (both
+  sides packed into matrix blocks, one GEMM per block pair — the scale
+  path, no broadcast, no driver collect);
+* LSH-bucketed ANN — integer random-hyperplane signatures, one GEMM per
+  bucket, exact cosines inside buckets;
+* IVF ANN — :func:`ivf_topk_exact`, integer-grid cell assignment that
+  any SQL engine replays, plus IVF-PQ and int8 inner-product top-k.
 
-Embedding-cosine near-duplicate detection reuses the ANN machinery with a
-similarity threshold instead of top-k.
+Every top-k ranks each query's candidates by the same rule: score
+descending, ties on neighbor id, self excluded, first k kept — once per
+GEMM cell in numpy (:func:`_cell_topk`) and once per query in Spark
+(:func:`_rank_topk`). Embedding-cosine near-duplicate detection reuses
+the same machinery with a similarity threshold instead of top-k.
 """
 
 from __future__ import annotations
@@ -59,6 +63,101 @@ def _cosine(a, b) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _rank_topk(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """The per-query merge every Spark-side top-k ends in: ``score``
+    descending, ties on ``neighbor_id``, the first ``k`` rows kept as
+    ``(query_id, neighbor_id, <score>, rank)`` with an int ``rank``.
+    Self-matches must already be gone from ``scored``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _matrix(vecs, dtype) -> np.ndarray:
+    return np.stack([np.asarray(v, dtype=dtype) for v in vecs])
+
+
+def _unit_rows(vecs) -> np.ndarray:
+    mat = _matrix(vecs, np.float64)
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+def _cosines(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Score matrix of two unit-row matrices. ``einsum`` folds every
+    cell's dot product in one fixed order whatever the matrix shapes,
+    so identical vectors score bit-identically in any GEMM cell. A BLAS
+    ``a @ b.T`` blocks by shape, and the last-ulp difference it leaves
+    between copies of one vector outranks the neighbor-id tie-break.
+
+    The price is GEMM speed: einsum is not cache-blocked, and on one
+    core it scores a 2048×2048×64 cell about 1.1-2x and a
+    1250×12500×128 cell about 2-3x slower than BLAS."""
+    return np.einsum("id,jd->ij", a, b)
+
+
+# score-matrix elements ranked per step of :func:`_cell_topk`: its
+# temporaries stay a few MB beside the cell whatever the cell's shape
+_RANK_CHUNK = 1 << 18
+
+
+def _cell_topk(
+    qids: np.ndarray, cids: np.ndarray, scores: np.ndarray, k: int
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Top-``k`` rows of one GEMM cell (``scores[i, j]`` scores query
+    ``qids[i]`` against candidate ``cids[j]``) under the
+    :func:`_rank_topk` rule, as ``(query ids, neighbor ids, scores)``
+    triples over chunks of the cell's rows.
+
+    A row's k best non-self candidates all score at least its
+    (k+1)-th best score, so a linear ``np.partition`` cuts each row to
+    those candidates and every tie at the cut; only they are sorted."""
+    kth = min(k, scores.shape[1] - 1)
+    step = max(1, _RANK_CHUNK // scores.shape[1])
+    for lo in range(0, len(qids), step):
+        q, s = qids[lo : lo + step], scores[lo : lo + step]
+        cut = -np.partition(-s, kth, axis=1)[:, kth]
+        # `~(s < cut)` also keeps NaN scores and NaN cuts: they sort last
+        r, c = np.nonzero(~(s < cut[:, None]))
+        sc, nbr = s[r, c], cids[c]
+        order = np.lexsort((nbr, -sc, r))
+        r, nbr, sc = r[order], nbr[order], sc[order]
+        keep = nbr != q[r]
+        taken = np.cumsum(keep)
+        before = np.concatenate(([0], taken))[np.searchsorted(r, r)]
+        sel = keep & (taken - before <= k)
+        yield q[r[sel]], nbr[sel], sc[sel]
+
+
+def _topk_frame(cells, k: int, score: str, dtype) -> pd.DataFrame:
+    """``(query_id, neighbor_id, <score>)`` frame of the
+    :func:`_cell_topk` rows of every ``(qids, cids, scores)`` cell,
+    typed (int64 ids, ``dtype`` scores) even when there are none.
+    ``cells`` must be a generator, so each cell's score matrix is
+    ranked and dropped before the next one is scored."""
+    parts = [p for q, c, s in cells for p in _cell_topk(q, c, s, k)]
+    q, n, s = (
+        (np.concatenate(col) for col in zip(*parts))
+        if parts
+        else (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, dtype))
+    )
+    return pd.DataFrame({"query_id": q, "neighbor_id": n, score: s.astype(dtype)})
+
+
+def _topk_schema(score: str, score_type) -> StructType:
+    return StructType(
+        [
+            StructField("query_id", LongType(), False),
+            StructField("neighbor_id", LongType(), False),
+            StructField(score, score_type, False),
+        ]
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -79,77 +178,7 @@ def brute_force_topk(
         "neighbor_id",
         _cosine(F.col("qvec"), F.col("cvec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def brute_force_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k, BLAS path: the corpus matrix is broadcast to
-    every worker and each Arrow batch of queries does ONE matmul + argsort.
-
-    Same results as :func:`brute_force_topk` (ties break on neighbor id)
-    but orders of magnitude faster — the per-pair JVM higher-order
-    functions become a single numpy GEMM per batch. Scale envelope: the
-    corpus must fit per-worker memory (e.g. 10^7 × 128-dim float32 ≈ 5 GB);
-    beyond that, block the corpus and merge per-block top-k, or switch to
-    :func:`lsh_ann_topk`.
-    """
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    b_ids, b_mat = sc.broadcast(ids), sc.broadcast(mat)
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-            StructField("rank", IntegerType(), False),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, cmat = b_ids.value, b_mat.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            qn = q / np.linalg.norm(q, axis=1, keepdims=True)
-            sims = qn @ cmat.T  # (batch, corpus)
-            qids = pdf[id_col].astype("int64").to_numpy()
-            out = {"query_id": [], "neighbor_id": [], "cosine": [], "rank": []}
-            for i, qid in enumerate(qids):
-                row = sims[i]
-                # exclude self, order by (-cosine, neighbor_id)
-                cand = np.lexsort((cids, -row))
-                taken = 0
-                for j in cand:
-                    if cids[j] == qid:
-                        continue
-                    taken += 1
-                    out["query_id"].append(int(qid))
-                    out["neighbor_id"].append(int(cids[j]))
-                    out["cosine"].append(float(row[j]))
-                    out["rank"].append(taken)
-                    if taken >= k:
-                        break
-            yield pd.DataFrame(out)
-
-    return queries.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    return _rank_topk(scored, k, "cosine")
 
 
 def _pack_blocks(
@@ -162,8 +191,8 @@ def _pack_blocks(
     vecs: str,
 ) -> DataFrame:
     """Pack vectors into ``n_blocks`` matrix rows: one row per block
-    carrying (ids, vectors) arrays. Vectors never touch the driver —
-    this is what removes :func:`brute_force_topk_blas`'s broadcast bound.
+    carrying (ids, vectors) arrays. Vectors never touch the driver and
+    no side is broadcast, so no worker must hold the whole corpus.
     One hash-shuffle; block size = |df|/n_blocks rows, sized so a
     block's matrix fits a task's memory (e.g. 10^6 × 128-dim float64
     ≈ 1 GB per block at any corpus size, just raise n_blocks).
@@ -188,10 +217,45 @@ def _pack_blocks(
     )
 
 
-def _unpack_matrix(row) -> tuple[np.ndarray, np.ndarray]:
-    ids = np.asarray(row[0], dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in row[1]])
-    return ids, mat / np.linalg.norm(mat, axis=1, keepdims=True)
+def _blocked_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_blocks: int,
+    id_col: str,
+    vec_col: str,
+    score: str,
+    score_type,
+    cell_scores,
+) -> DataFrame:
+    """Pack both sides (:func:`_pack_blocks`), score each (query-group,
+    corpus-block) cell with ``cell_scores(qvecs, cvecs)`` (one GEMM),
+    keep its :func:`_cell_topk` rows, then merge per query — a bounded
+    window over at most ``n_blocks * k`` candidates."""
+    cpacked = _pack_blocks(corpus, n_blocks, id_col, vec_col, "cb", "cids", "cvecs")
+    qpacked = _pack_blocks(queries, n_blocks, id_col, vec_col, "qb", "qids", "qvecs")
+    dtype = np.int64 if isinstance(score_type, LongType) else np.float64
+
+    def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            # cells must stream: a list would hold every cell's score
+            # matrix at once, not one
+            cells = (
+                (
+                    np.asarray(qids, dtype=np.int64),
+                    np.asarray(cids, dtype=np.int64),
+                    cell_scores(qvecs, cvecs),
+                )
+                for qids, qvecs, cids, cvecs in zip(
+                    pdf["qids"], pdf["qvecs"], pdf["cids"], pdf["cvecs"]
+                )
+            )
+            yield _topk_frame(cells, k, score, dtype)
+
+    scored = qpacked.crossJoin(cpacked).mapInPandas(
+        block_topk, _topk_schema(score, score_type)
+    )
+    return _rank_topk(scored, k, score)
 
 
 def brute_force_topk_blocked(
@@ -202,73 +266,23 @@ def brute_force_topk_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k for corpora too big to broadcast: block-pack the
-    corpus (executor-side), cross-join queries × blocks, one GEMM per
-    (query-batch, block), then a window merge of per-block top-k.
+    """Exact cosine top-k for corpora too big to broadcast: block-pack
+    both sides (executor-side), cross-join query groups × corpus blocks,
+    one GEMM per cell, then a window merge of per-cell top-k.
 
-    Same results as :func:`brute_force_topk_blas` (ties break on neighbor
-    id) with no driver collect / broadcast. Both sides are packed (query
-    groups × corpus blocks), so data movement is (|Q| + |C|) × n_blocks
-    vectors into the n_blocks² GEMM cells plus |Q| × n_blocks × k
-    candidate rows into the merge — each side replicated n_blocks times,
-    never per-row. This is the exact-kNN recipe that survives a
-    10^9-vector corpus on a 1000-executor cluster.
+    Same neighbors and ranks as :func:`brute_force_topk` (ties break on
+    neighbor id, at any ``n_blocks`` and partitioning — see
+    :func:`_cosines`) with no driver collect / broadcast. Data movement
+    is (|Q| + |C|) × n_blocks vectors into the n_blocks² GEMM cells plus
+    |Q| × n_blocks × k candidate rows into the merge — each side
+    replicated n_blocks times, never per-row. This is the exact-kNN
+    recipe that survives a 10^9-vector corpus on a 1000-executor
+    cluster. A task holds one cell's score matrix at a time; the
+    tie-exact score (:func:`_cosines`) costs GEMM speed.
     """
-    cpacked = _pack_blocks(corpus, n_blocks, id_col, vec_col, "cb", "cids", "cvecs")
-    qpacked = _pack_blocks(queries, n_blocks, id_col, vec_col, "qb", "qids", "qvecs")
-    joined = qpacked.crossJoin(cpacked)
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
-
-    def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {"query_id": [], "neighbor_id": [], "cosine": []}
-            # each row is one (query-group, corpus-block) cell: one GEMM
-            for _, row in pdf.iterrows():
-                qids, qmat = _unpack_matrix((row["qids"], row["qvecs"]))
-                cids, cmat = _unpack_matrix((row["cids"], row["cvecs"]))
-                sims = qmat @ cmat.T  # (group-queries, block-rows)
-                for i, qid in enumerate(qids):
-                    srow = sims[i]
-                    cand = np.lexsort((cids, -srow))
-                    taken = 0
-                    for j in cand:
-                        if cids[j] == qid:
-                            continue
-                        taken += 1
-                        out["query_id"].append(int(qid))
-                        out["neighbor_id"].append(int(cids[j]))
-                        out["cosine"].append(float(srow[j]))
-                        if taken >= k:
-                            break
-            yield (
-                pd.DataFrame(out)
-                if out["query_id"]
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.array([], dtype="int64"),
-                        "neighbor_id": pd.array([], dtype="int64"),
-                        "cosine": pd.array([], dtype="float64"),
-                    }
-                )
-            )
-
-    scored = joined.mapInPandas(block_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _blocked_topk(
+        corpus, queries, k, n_blocks, id_col, vec_col, "cosine", DoubleType(),
+        lambda qvecs, cvecs: _cosines(_unit_rows(qvecs), _unit_rows(cvecs)),
     )
 
 
@@ -309,9 +323,9 @@ def cosine_pairs_exact(
                 continue
             out = {"id_a": [], "id_b": [], "cosine": []}
             for _, row in pdf.iterrows():
-                aids, amat = _unpack_matrix((row["aids"], row["avecs"]))
-                cids, cmat = _unpack_matrix((row["bids"], row["bvecs"]))
-                sims = amat @ cmat.T
+                aids = np.asarray(row["aids"], dtype=np.int64)
+                cids = np.asarray(row["bids"], dtype=np.int64)
+                sims = _cosines(_unit_rows(row["avecs"]), _unit_rows(row["bvecs"]))
                 if row["ab"] == row["bb"]:
                     # diagonal cell: both sides are the same block — the
                     # strict triangle picks each unordered pair once
@@ -430,8 +444,7 @@ def _rescore_pairs(
     Fully JVM-side: two vector-attach equi-joins (plain shuffle joins —
     AQE splits hot keys), one codegen cosine per pair, and a per-query
     window top-k. Data moved is exactly one vector copy per candidate
-    pair — the same volume the old broadcast path shipped per executor
-    for the WHOLE corpus. Measured faster than an Arrow gather +
+    pair, never the whole corpus per executor. Measured faster than an Arrow gather +
     per-query GEMM (the per-candidate struct unpacking in Python costs
     more than the JVM fold saves) with zero Python in the path.
     """
@@ -454,14 +467,7 @@ def _rescore_pairs(
             _dot(F.col("_qvec"), F.col("_nvec")) / (F.col("_qn") * F.col("_nn")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k, "cosine")
 
 
 def lsh_ann_topk(
@@ -497,7 +503,9 @@ def lsh_ann_topk(
     bucket, cross-shard pairs are lost in that table only — the other
     ``n_tables - 1`` tables still catch them, which is the same recall
     argument LSH already rests on. The split is content-keyed (md5 of
-    the id), so results are reproducible at any cluster size.
+    the id), so results are reproducible at any cluster size. Buckets
+    are scored one at a time, with the tie-exact but slower-than-BLAS
+    :func:`_cosines`.
     """
     # cached: sizes + the pack both read it, and the signature kernel
     # must run once (see dedup.py's module-level caching note)
@@ -534,70 +542,31 @@ def lsh_ann_topk(
         .agg(F.collect_list(F.struct("sid", "_v")).alias("_members"))
     )
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
+    def bucket_cells(buckets):
+        # a generator, like _blocked_topk's cells: one bucket's score
+        # matrix is alive at a time
+        for members in buckets:
+            if len(members) < 2:
+                continue
+            # scores do not depend on collect_list's member order
+            # (see _cosines), so ties rank alike at any partitioning
+            ids = np.asarray([m["sid"] for m in members], dtype=np.int64)
+            mat = _unit_rows([m["_v"] for m in members])
+            yield ids, ids, _cosines(mat, mat)
 
     def bucket_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cosine": []}
-            for members in pdf["_members"]:
-                if len(members) < 2:
-                    continue
-                # collect_list order depends on partitioning; a fixed
-                # member order fixes the GEMM's per-cell ulp noise, which
-                # decides cosine ties (identical vectors) below
-                members = sorted(members, key=lambda m: m["sid"])
-                ids = np.asarray([m["sid"] for m in members], dtype=np.int64)
-                mat = np.stack(
-                    [np.asarray(m["_v"], dtype=np.float64) for m in members]
-                )
-                mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-                sims = mat @ mat.T
-                for i in range(len(ids)):
-                    row = sims[i]
-                    cand = np.lexsort((ids, -row))
-                    taken = 0
-                    for j in cand:
-                        if ids[j] == ids[i]:
-                            continue
-                        out["query_id"].append(int(ids[i]))
-                        out["neighbor_id"].append(int(ids[j]))
-                        out["cosine"].append(float(row[j]))
-                        taken += 1
-                        if taken >= k:
-                            break
-            yield (
-                pd.DataFrame(out)
-                if out["query_id"]
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.array([], dtype="int64"),
-                        "neighbor_id": pd.array([], dtype="int64"),
-                        "cosine": pd.array([], dtype="float64"),
-                    }
-                )
-            )
+            yield _topk_frame(bucket_cells(pdf["_members"]), k, "cosine", np.float64)
 
-    per_bucket = packed.mapInPandas(bucket_topk, out_schema)
-    # a pair scored in several shared buckets yields float64 values that
-    # can differ in the last ulp (different GEMM shapes); max() picks one
-    # deterministically before the global merge
+    per_bucket = packed.mapInPandas(
+        bucket_topk, _topk_schema("cosine", DoubleType())
+    )
+    # a pair shared by several buckets arrives once per bucket, with
+    # the same score every time; one row per pair goes to the merge
     merged = per_bucket.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(merged, k, "cosine")
 
 
 def _kmeans(mat: np.ndarray, n_cells: int, iters: int = 10, seed: int = 17) -> np.ndarray:
@@ -618,102 +587,6 @@ def _kmeans(mat: np.ndarray, n_cells: int, iters: int = 10, seed: int = 17) -> n
                 if n > 0:
                     centroids[c] = v / n
     return centroids
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 17,
-    max_train: int = 65536,
-) -> DataFrame:
-    """IVF approximate top-k: k-means coarse quantizer → inverted cell
-    lists → probe the ``nprobe`` nearest cells per query → exact rescore.
-
-    Scale shape: the quantizer trains on a BOUNDED deterministic sample
-    (hash-ordered take of ``max_train`` rows — the standard IVF recipe;
-    the driver never sees more than that regardless of corpus size) and
-    only the ``n_cells × dim`` centroid matrix is broadcast. Cell
-    assignment is one narrow numpy pass; query↔candidate pairing is an
-    equi-join on small int cell ids (AQE-splittable — hot cells are the
-    skew case, nprobe spreads the probe side). Rescoring is fully
-    distributed (:func:`_rescore_pairs` — no corpus collect/broadcast).
-    """
-    # deterministic bounded training sample: per-partition top-N by
-    # md5(id) then a driver-side merge of at most max_train rows
-    # (TakeOrdered — no full sort, no full collect)
-    sample_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(max_train)
-        .collect()
-    )
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in sample_rows])
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    centroids = _kmeans(mat, n_cells, seed=seed)
-
-    sc = corpus.sparkSession.sparkContext
-    b_cent = sc.broadcast(centroids)
-
-    cell_schema = StructType(
-        [
-            StructField("sid", LongType(), False),
-            StructField("cell", IntegerType(), False),
-        ]
-    )
-
-    def assign_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent = b_cent.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cells = (m @ cent.T).argmax(axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {"sid": pdf[id_col].astype("int64"), "cell": cells}
-            )
-
-    inv = corpus.select(id_col, vec_col).mapInPandas(assign_cells, cell_schema)
-
-    probe_schema = StructType(
-        [
-            StructField("qid", LongType(), False),
-            StructField("cell", IntegerType(), False),
-        ]
-    )
-
-    def probe_cells(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cent = b_cent.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            order = np.argsort(-(m @ cent.T), axis=1)[:, :nprobe].astype(np.int32)
-            qids = pdf[id_col].astype("int64").to_numpy()
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, nprobe),
-                    "cell": order.reshape(-1),
-                }
-            )
-
-    probes = corpus.select(id_col, vec_col).mapInPandas(probe_cells, probe_schema)
-
-    cand = (
-        probes.join(inv, on="cell")
-        .filter(F.col("qid") != F.col("sid"))
-        .select(
-            F.col("qid").alias("query_id"), F.col("sid").alias("neighbor_id")
-        )
-        .dropDuplicates()
-    )
-    return _rescore_pairs(corpus, cand, k, id_col, vec_col)
 
 
 # centroid-coordinate quantization grid for the EXACT IVF assignment
@@ -823,28 +696,29 @@ def ivf_topk_exact(
     centroid_ints: list[list[int]] | None = None,
     grid: int = IVF_GRID,
 ) -> DataFrame:
-    """IVF approximate top-k with EXACT integer cell assignment — the
-    oracle-able twin of :func:`ivf_topk`.
+    """IVF approximate top-k with EXACT integer cell assignment: k-means
+    coarse quantizer → inverted cell lists → probe the ``nprobe``
+    nearest cells per query → exact rescore.
 
-    Training is unchanged (bounded hash-ordered sample → seeded float64
-    spherical k-means, :func:`ivf_centroid_ints`), but assignment and
-    probing run on the integer grid: each embedding quantizes to BIGINTs
-    via one codegen ``transform`` (``floor(x·2^20 + 0.5)``, exact), and
-    all ``n_cells`` centroid dots are computed in ONE zero-shuffle JVM
-    projection against literal integer arrays — no Python, no join, and
-    no float-summation-order ambiguity, so any SQL engine reproduces the
-    identical cells/probes bit-for-bit. The per-row L2 norm divides all
-    cells equally, so the integer-dot argmax equals cosine assignment
-    against the (quantized) unit-norm centroids; ties break to the lower
-    cell id.
+    Training takes a bounded hash-ordered sample (:func:`ivf_train_rows`
+    — the driver never sees more than ``max_train`` rows) through
+    seeded float64 spherical k-means (:func:`ivf_centroid_ints`), but
+    assignment and probing run on the integer grid: each embedding
+    quantizes to BIGINTs via one codegen ``transform``
+    (``floor(x·2^20 + 0.5)``, exact), and all ``n_cells`` centroid dots
+    are computed in ONE zero-shuffle JVM projection against literal
+    integer arrays — no Python, no join, and no float-summation-order
+    ambiguity, so any SQL engine reproduces the identical cells/probes
+    bit-for-bit. The per-row L2 norm divides all cells equally, so the
+    integer-dot argmax equals cosine assignment against the (quantized)
+    unit-norm centroids; ties break to the lower cell id.
 
-    Scale shape: the candidate equi-join and the exact rescore are the
-    same distributed pieces as :func:`ivf_topk` (AQE splits hot cells,
-    :func:`_rescore_pairs` never collects the corpus). The literal
-    centroid projection is sized for moderate ``n_cells`` (≤ a few
-    hundred — codegen cost grows linearly with cells × dim); for a
-    web-scale nlist (√N cells) keep the Arrow-batched assignment of
-    :func:`ivf_topk`, which this function intentionally does not replace.
+    Scale shape: query↔candidate pairing is an equi-join on small int
+    cell ids (AQE splits hot cells) and :func:`_rescore_pairs` never
+    collects the corpus. The literal centroid projection is sized for
+    moderate ``n_cells`` — at most a few hundred cells, since codegen
+    cost grows linearly with cells × dim; a web-scale nlist (√N cells)
+    is outside this function's envelope.
     """
     # ``grid`` must be the grid the centroid ints were snapped with —
     # when we train here the default threads straight through; a caller
@@ -1100,23 +974,15 @@ def ivfpq_topk(
         )
         .filter(F.col("_m")["sid"] != F.col("qid"))
         .select(
-            "qid",
-            F.col("_m")["sid"].alias("sid"),
+            F.col("qid").alias("query_id"),
+            F.col("_m")["sid"].alias("neighbor_id"),
             (-F.col("_m")["nadc"]).alias("adc"),
         )
     )
     # final merge over the <= nprobe*(k+1) survivors per query — a
     # vector's cell is unique, so no pair can arrive twice
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), F.col("sid"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("sid").alias("neighbor_id"),
-            "adc",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _rank_topk(local, k, "adc").withColumn(
+        "rank", F.col("rank").cast("long")
     )
 
 
@@ -1246,70 +1112,13 @@ def quantized_ip_topk(
     (|dot| ≤ 127² · dim < 2^53 through dim ~5·10^11), so ties and
     ranks are engine-reproducible and the gate can value-hash ``qdot``
     directly. Self-matches excluded; ties break on neighbor id."""
-    cq = quantize_embeddings(corpus, id_col, vec_col)
-    qq = quantize_embeddings(queries, id_col, vec_col)
-    cpacked = _pack_blocks(cq, n_blocks, id_col, "qvec", "cb", "cids", "cvecs")
-    qpacked = _pack_blocks(qq, n_blocks, id_col, "qvec", "qb", "qids", "qvecs")
-    joined = qpacked.crossJoin(cpacked)
-
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("qdot", LongType(), False),
-        ]
-    )
-
-    def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {"query_id": [], "neighbor_id": [], "qdot": []}
-            for _, row in pdf.iterrows():
-                qids = np.asarray(row["qids"], dtype=np.int64)
-                qmat = np.stack(
-                    [np.asarray(v, dtype=np.int64) for v in row["qvecs"]]
-                )
-                cids = np.asarray(row["cids"], dtype=np.int64)
-                cmat = np.stack(
-                    [np.asarray(v, dtype=np.int64) for v in row["cvecs"]]
-                )
-                dots = qmat @ cmat.T  # int64 GEMM: exact
-                for i, qid in enumerate(qids):
-                    srow = dots[i]
-                    cand = np.lexsort((cids, -srow))
-                    taken = 0
-                    for j in cand:
-                        if cids[j] == qid:
-                            continue
-                        taken += 1
-                        out["query_id"].append(int(qid))
-                        out["neighbor_id"].append(int(cids[j]))
-                        out["qdot"].append(int(srow[j]))
-                        if taken >= k:
-                            break
-            yield (
-                pd.DataFrame(out)
-                if out["query_id"]
-                else pd.DataFrame(
-                    {
-                        "query_id": pd.array([], dtype="int64"),
-                        "neighbor_id": pd.array([], dtype="int64"),
-                        "qdot": pd.array([], dtype="int64"),
-                    }
-                )
-            )
-
-    scored = joined.mapInPandas(block_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("neighbor_id")
-    )
-    # merge window is bounded: n_blocks * k candidate rows per query
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "qdot", F.col("rank").cast("long").alias("rank"))
-    )
+    return _blocked_topk(
+        quantize_embeddings(corpus, id_col, vec_col),
+        quantize_embeddings(queries, id_col, vec_col),
+        k, n_blocks, id_col, "qvec", "qdot", LongType(),
+        # int64 GEMM: exact
+        lambda qvecs, cvecs: _matrix(qvecs, np.int64) @ _matrix(cvecs, np.int64).T,
+    ).withColumn("rank", F.col("rank").cast("long"))
 
 
 # --------------------------------------------------------------------

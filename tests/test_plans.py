@@ -142,8 +142,8 @@ def test_ngram_jaccard_sizes_attach_to_pairs_not_broadcast(
 
 def test_similarity_no_unbounded_driver_collect():
     """No corpus-sized .collect() in similarity.py: the only allowed
-    call sites are the documented small-corpus BLAS fast path and IVF's
-    bounded (limit max_train) quantizer-training sample."""
+    call site is IVF's bounded (limit max_train) quantizer-training
+    sample."""
     import inspect
 
     from docling_translate_spark.operators import similarity
@@ -152,11 +152,8 @@ def test_similarity_no_unbounded_driver_collect():
     for chunk in src.split("def ")[1:]:
         name = chunk.split("(")[0]
         if ".collect()" in chunk:
-            assert name in (
-                "brute_force_topk_blas", "ivf_topk", "ivf_train_rows"
-            ), f"unexpected driver collect in {name}"
-            if name in ("ivf_topk", "ivf_train_rows"):
-                assert ".limit(max_train)" in chunk.split(".collect()")[0]
+            assert name == "ivf_train_rows", f"unexpected driver collect in {name}"
+            assert ".limit(max_train)" in chunk.split(".collect()")[0]
 
 
 def test_lsh_rescore_is_distributed_jvm(spark):

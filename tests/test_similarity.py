@@ -52,41 +52,101 @@ def test_brute_force_matches_numpy(spark, emb):
             assert math.isclose(got_cos, exp_cos, rel_tol=1e-9)
 
 
-def test_blas_topk_matches_jvm(spark, emb):
-    """The BLAS fast path must return exactly the JVM plan's results."""
-    from docling_translate_spark.operators.similarity import brute_force_topk_blas
-
-    sample = emb.limit(60).cache()
-    jvm = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in brute_force_topk(sample, sample, k=5).collect()
-    }
-    blas = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in brute_force_topk_blas(sample, sample, k=5).collect()
-    }
-    assert blas == jvm
+def _ranked(df):
+    return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
 
 
-def test_blocked_topk_matches_blas(spark, emb):
-    """Block-packing the corpus (no broadcast) must not change a single
-    neighbor or rank vs the broadcast BLAS plan — at any block count,
-    including blocks smaller than k."""
+def test_blocked_topk_matches_jvm(spark, emb):
+    """Block-packing both sides must not change a single neighbor or
+    rank vs the JVM brute-force plan — at any block count, including
+    blocks smaller than k."""
     from docling_translate_spark.operators.similarity import (
-        brute_force_topk_blas,
         brute_force_topk_blocked,
     )
 
-    blas = {
-        (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in brute_force_topk_blas(emb, emb, k=5).collect()
-    }
+    jvm = _ranked(brute_force_topk(emb, emb, k=5))
     for n_blocks in (1, 4, 64):
-        blocked = {
-            (r["query_id"], r["rank"]): r["neighbor_id"]
-            for r in brute_force_topk_blocked(emb, emb, k=5, n_blocks=n_blocks).collect()
-        }
-        assert blocked == blas, f"n_blocks={n_blocks}"
+        blocked = _ranked(brute_force_topk_blocked(emb, emb, k=5, n_blocks=n_blocks))
+        assert blocked == jvm, f"n_blocks={n_blocks}"
+
+
+def _per_row_topk(qids, cids, scores, k):
+    """The ranking rule one row at a time: score descending (NaN last),
+    ties on neighbor id, self skipped, first k kept."""
+    out = []
+    for i, qid in enumerate(qids):
+        for j in np.lexsort((cids, -scores[i])):
+            if cids[j] == qid:
+                continue
+            out.append((int(qid), int(cids[j]), scores[i, j]))
+            if sum(1 for o in out if o[0] == qid) == k:
+                break
+    return out
+
+
+@pytest.mark.parametrize("chunk", [1, 7, 1 << 18])
+def test_cell_topk_matches_per_row_rule(monkeypatch, chunk):
+    """The vectorised cell kernel keeps exactly the rows of the per-row
+    rule — heavy ties, NaN scores, integer scores, k >= the cell's
+    width, self inside and outside the cell — in any row chunking."""
+    from docling_translate_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_RANK_CHUNK", chunk)
+    rng = np.random.RandomState(3)
+    for trial in range(60):
+        n, m = rng.randint(1, 12), rng.randint(1, 15)
+        qids = rng.choice(20, n, replace=False).astype(np.int64)
+        cids = rng.choice(20, m, replace=False).astype(np.int64)
+        scores = rng.randint(-3, 4, (n, m))
+        if trial % 2:
+            scores = scores / 4.0
+            scores[rng.rand(n, m) < 0.15] = np.nan
+        k = rng.randint(1, m + 3)
+        got = [
+            (int(q), int(c), s)
+            for part in similarity._cell_topk(qids, cids, scores, k)
+            for q, c, s in zip(*part)
+        ]
+        want = _per_row_topk(qids, cids, scores, k)
+        # repr: NaN scores compare equal by spelling, not by value
+        assert sorted(map(repr, got)) == sorted(map(repr, want)), trial
+
+
+@pytest.fixture(scope="module")
+def tripled(spark):
+    """40 random 16-dim vectors, each stored three times: every query's
+    nearest neighbors are exact cosine ties, broken only by id."""
+    rng = np.random.RandomState(7)
+    base = rng.randn(40, 16)
+    rows = [(i, base[i % 40].tolist()) for i in range(120)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_tied_neighbors_rank_alike_in_every_cell(spark, tripled):
+    """Copies of one vector scored in differently shaped GEMM cells must
+    score bit-identically, so the neighbor-id tie-break decides their
+    order: blocked kNN equals the JVM plan at any block count and
+    partitioning, uncapped LSH finds the exact top-2 (the two copies),
+    and the integer-scored quantized top-k does not move."""
+    from docling_translate_spark.operators.similarity import (
+        brute_force_topk_blocked,
+        quantized_ip_topk,
+    )
+
+    exact = _ranked(brute_force_topk(tripled, tripled, k=4))
+    assert len(exact) == 480
+    top2 = {key: n for key, n in exact.items() if key[1] <= 2}
+    quantized = _ranked(quantized_ip_topk(tripled, tripled, k=4, n_blocks=1))
+    for parts in (1, 7):
+        emb = tripled.repartition(parts)
+        for n_blocks in (1, 4, 64):
+            where = f"repartition({parts}), n_blocks={n_blocks}"
+            blocked = brute_force_topk_blocked(emb, emb, k=4, n_blocks=n_blocks)
+            assert _ranked(blocked) == exact, where
+            q = quantized_ip_topk(emb, emb, k=4, n_blocks=n_blocks)
+            assert _ranked(q) == quantized, where
+        lsh = lsh_ann_topk(emb, dim=16, k=2, max_bucket=10**9)
+        assert _ranked(lsh) == top2, f"repartition({parts})"
 
 
 def test_exact_pairs_superset_of_lsh(spark, emb):
@@ -123,32 +183,15 @@ def test_lsh_ann_recall(spark, emb):
     assert recall > 0.8, f"top-1 recall too low: {recall}"
 
 
-def test_ivf_recall(spark, emb):
-    """IVF with nprobe=6 of 16 cells must recover most exact top-1s."""
-    from docling_translate_spark.operators.similarity import ivf_topk
-
-    exact = {
-        r["query_id"]: r["neighbor_id"]
-        for r in brute_force_topk(emb, emb, k=1).collect()
-    }
-    ivf = {
-        r["query_id"]: r["neighbor_id"]
-        for r in ivf_topk(emb, dim=DIM, k=1, n_cells=16, nprobe=6).collect()
-    }
-    hits = sum(1 for q, n in exact.items() if ivf.get(q) == n)
-    recall = hits / len(exact)
-    assert recall > 0.7, f"IVF top-1 recall too low: {recall}"
-
-
 def test_ivf_corpus_smaller_than_n_cells(spark):
     """r4 review: rng.choice(replace=False) crashed when the corpus had
     fewer rows than n_cells; it now degrades to one cell per row."""
-    from docling_translate_spark.operators.similarity import ivf_topk
+    from docling_translate_spark.operators.similarity import ivf_topk_exact
 
     rng = np.random.RandomState(3)
     rows = [(i, rng.randn(DIM).astype(float).tolist()) for i in range(6)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = ivf_topk(emb, dim=DIM, k=1, n_cells=16, nprobe=4).collect()
+    out = ivf_topk_exact(emb, k=1, n_cells=16, nprobe=4).collect()
     assert len(out) > 0
     assert all(r["query_id"] != r["neighbor_id"] for r in out)
 
@@ -176,8 +219,8 @@ def test_ivf_centroid_replay_parity(spark, emb):
 
 
 def test_ivf_exact_recall_and_no_python(spark, emb):
-    """The exact-assignment IVF variant keeps the float path's recall
-    and runs entirely JVM-side (quantize/assign/probe/rescore are all
+    """IVF with nprobe=6 of 16 cells recovers most exact top-1s and runs
+    entirely JVM-side (quantize/assign/probe/rescore are all
     codegen — no Arrow batches, no Python workers in the plan)."""
     import contextlib
     import io

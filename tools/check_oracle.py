@@ -14,11 +14,13 @@ import decimal
 import math
 import os
 import sys
+import time
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # optional comma-separated query-name filter for focused re-checks,
@@ -108,13 +110,16 @@ def main():
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
+        t0 = time.perf_counter()
         sdf = fn(spark, SF_DIR)
         srows = sdf.collect()
         scols = sdf.columns
+        secs = time.perf_counter() - t0
         if name not in oracles:
-            print(f"{name:28s} rows-only: {len(srows)} rows  [ok>={0}]")
+            print(f"{name:28s} rows-only: {len(srows)} rows  [ok>={0}] {secs:.1f}s")
             if len(srows) == 0:
                 failures.append((name, "0 rows"))
+            spark.catalog.clearCache()
             continue
         ddf = con.execute(oracles[name])
         dcols = [d[0] for d in ddf.description]
@@ -149,8 +154,14 @@ def main():
                 msgs.append("dtype-drift " + "; ".join(hard))
             elif warns:
                 msgs.append("WARN " + "; ".join(warns))
+        # the runner owns cached relations: operators .cache() what they
+        # read twice, and nothing a query cached may outlive it
+        spark.catalog.clearCache()
         status = "OK " if ok else "FAIL"
-        print(f"{name:28s} {status} spark={len(srows)} duck={len(drows)} {'; '.join(msgs)}")
+        print(
+            f"{name:28s} {status} spark={len(srows)} duck={len(drows)} "
+            f"{secs:.1f}s {'; '.join(msgs)}"
+        )
         if not ok:
             failures.append((name, "; ".join(msgs)))
 
