@@ -23,7 +23,6 @@ import pandas as pd
 
 MapEngine = Callable[[pd.Series], pd.Series]
 
-_WS_RUN_RE = re.compile(r"\s+")
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
 
@@ -34,11 +33,19 @@ def identity_map(texts: pd.Series) -> pd.Series:
 
 
 def normalize_map(texts: pd.Series) -> pd.Series:
-    """Whitespace-collapse + control-char strip + trim (vectorized)."""
-    s = texts.fillna("")
-    s = s.str.replace(_CTRL_RE, "", regex=True)
-    s = s.str.replace(_WS_RUN_RE, " ", regex=True)
-    return s.str.strip()
+    """Control-char strip, then whitespace-run collapse + trim; a missing
+    text maps to ``""``.
+
+    One pass per text: ``str.split()`` breaks on exactly the code points
+    that ``re``'s ``\\s`` and ``str.strip()`` treat as whitespace (all
+    three use ``Py_UNICODE_ISSPACE``), so ``" ".join(t.split())`` equals
+    ``re.sub(r"\\s+", " ", t).strip()`` and saves two pandas passes."""
+    sub = _CTRL_RE.sub
+    return pd.Series(
+        [" ".join(sub("", t).split()) if isinstance(t, str) else "" for t in texts],
+        index=texts.index,
+        dtype=object,
+    )
 
 
 def marker_map(texts: pd.Series) -> pd.Series:

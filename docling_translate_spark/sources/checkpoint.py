@@ -25,7 +25,8 @@ evenly; within a unit the extraction pipeline itself needs no salting
 
 from __future__ import annotations
 
-from typing import Iterable
+from contextlib import contextmanager
+from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -70,6 +71,19 @@ def read_lineage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     return spark.read.parquet(ckpt_dir)
 
 
+@contextmanager
+def _job_description(spark: SparkSession, text: str) -> Iterator[None]:
+    """Describe the jobs run inside the block, then restore the caller's
+    description (the job group is untouched)."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(caller)
+
+
 def run_extraction(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -86,6 +100,11 @@ def run_extraction(
     repeatedly: completed units are skipped via the checkpoint, and a
     torn unit (data written, checkpoint row missing) is overwritten
     in-place thanks to dynamic partition overwrite.
+
+    Each unit's two jobs are described ``checkpoint unit <u>: write`` and
+    ``checkpoint unit <u>: lineage append``, so an event log tells them
+    apart; the caller's job description comes back after each and its
+    job group is left alone.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = committed_units(spark, ckpt_dir, run_id)
@@ -109,7 +128,8 @@ def run_extraction(
             F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
         )
         # 1) data write (replaces any torn previous attempt of this unit)
-        out.write.partitionBy("unit").mode("overwrite").parquet(out_dir)
+        with _job_description(spark, f"checkpoint unit {u}: write"):
+            out.write.partitionBy("unit").mode("overwrite").parquet(out_dir)
         # 2) lineage/metrics commit — unit becomes durable only here
         m = obs.get
         row = (
@@ -121,9 +141,10 @@ def run_extraction(
             m["spans_emitted"] or 0,  # sum over an empty unit is null
             m["boilerplate_ratio"],
         )
-        spark.createDataFrame([row], _LINEAGE_COLS).withColumn(
-            "committed_ts", F.current_timestamp()
-        ).write.mode("append").parquet(ckpt_dir)
+        with _job_description(spark, f"checkpoint unit {u}: lineage append"):
+            spark.createDataFrame([row], _LINEAGE_COLS).withColumn(
+                "committed_ts", F.current_timestamp()
+            ).write.mode("append").parquet(ckpt_dir)
         processed.add(u)
     return processed
 

@@ -99,6 +99,32 @@ def test_lineage_observed_from_write(spark):
     assert empty >= n_units - 3
 
 
+def test_unit_jobs_are_described(spark, transcripts):
+    """Each unit's write and lineage append run under their own job
+    description; every other job keeps the caller's, and the caller's
+    group and description are in place after the call."""
+    sc = spark.sparkContext
+    group = "dts-ckpt-job-names"
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt-names-")
+    sc.setJobGroup(group, "caller")
+    try:
+        run_extraction(spark, transcripts, f"{tmp}/out", f"{tmp}/ckpt", "r1", n_units=2)
+        after = [sc.getLocalProperty(k) for k in ("spark.jobGroup.id", "spark.job.description")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert after == [group, "caller"]
+
+    def get(opt):
+        return opt.get() if opt.isDefined() else None
+
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # a Scala Seq
+    jobs = [jobs.apply(i) for i in range(jobs.size())]
+    descriptions = [get(j.description()) for j in jobs if get(j.jobGroup()) == group]
+    named = {f"checkpoint unit {u}: {step}" for u in (0, 1) for step in ("write", "lineage append")}
+    assert named <= set(descriptions) <= named | {"caller"}
+
+
 def test_rerun_noop(spark, transcripts):
     tmp = tempfile.mkdtemp(prefix="dts-ckpt2-")
     out_dir, ckpt_dir = f"{tmp}/out", f"{tmp}/ckpt"

@@ -208,3 +208,51 @@ def test_fused_invariant_to_batch_size_and_partitioning(spark):
                 assert r["boilerplate_ratio"] == 0.0, r
     small.unpersist()
     one.unpersist()
+
+
+@pytest.mark.parametrize("sentence_split", [False, True])
+def test_fused_matches_golden_with_large_var_types(spark, sentence_split):
+    """With ``useLargeVarTypes`` the kernel reads ``large_string`` text,
+    tool and caption columns (and large-string cells/headers) and its
+    output is still byte-identical to golden.extract_turn."""
+    rows = _rich_rows()
+    df = spark.createDataFrame(rows, RICH_TRANSCRIPT_SCHEMA)
+    cfg = ExtractConfig(engine="marker", sentence_split=sentence_split)
+
+    def input_types(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            yield pa.RecordBatch.from_pylist(
+                [{"name": f.name, "type": str(f.type)} for f in rb.schema]
+            )
+
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        types = dict(
+            df.select("text", "tool", "caption", "cells")
+            .limit(1)
+            .mapInArrow(input_types, "name string, type string")
+            .collect()
+        )
+        out = extract_turns_fused(df.repartition(3), cfg).collect()
+    finally:
+        spark.conf.set(conf, prev)
+    assert types["text"] == types["tool"] == types["caption"] == "large_string"
+    assert types["cells"] == "list<element: list<element: large_string>>"
+
+    golden = {
+        (cid, tix): extract_turn(
+            text,
+            tool,
+            engine=cfg.engine,
+            sentence_split=sentence_split,
+            caption=cap,
+            cells=cel,
+            headers=hdr,
+        )
+        for cid, tix, _, text, tool, _, cap, cel, hdr in rows
+    }
+    _assert_matches(out, golden, "large-var-types")
