@@ -23,12 +23,10 @@ The whole per-turn chain runs as ONE extraction plan,
 over Arrow batches (one vectorized Python crossing, no shuffle), so
 Catalyst still prunes columns and pushes filters into the scan beneath
 it. ``golden.extract_turn`` is its pure-Python twin.
+
+The package root imports nothing, PySpark least of all: every session's
+Python worker daemon, ``plans/pydaemon.py``, runs through it and must
+choose where PySpark is imported from before anything imports it.
 """
 
 __version__ = "0.1.0"
-
-from docling_translate_spark.schema import (  # noqa: F401
-    TRANSCRIPT_SCHEMA,
-    SPAN_SCHEMA,
-    EXTRACTED_SCHEMA,
-)

@@ -36,21 +36,11 @@ def main() -> None:
     ap.add_argument("--units", type=int, default=16)
     args = ap.parse_args()
 
-    import os
-
     from docling_translate_spark.operators.extract import ExtractConfig
     from docling_translate_spark.plans.session import build_session
     from docling_translate_spark.sources.checkpoint import (
         read_lineage,
         run_extraction,
-    )
-
-    # python workers inherit PYTHONPATH from the JVM env — make the
-    # package importable regardless of the caller's cwd (the spark-submit
-    # path ships a zip via --py-files instead, tools/submit.sh)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    os.environ["PYTHONPATH"] = (
-        repo_root + os.pathsep + os.environ.get("PYTHONPATH", "")
     )
 
     spark = build_session(master=f"local[{args.cores}]")

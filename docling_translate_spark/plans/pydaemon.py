@@ -1,22 +1,52 @@
-"""PySpark's worker daemon, minus a per-task re-read of every zip on ``sys.path``.
+"""PySpark's worker daemon, started from compiled PySpark and without a
+per-task re-read of every zip on ``sys.path``.
 
 ``build_session`` sets ``spark.python.daemon.module`` to this module, so every
 Python task of the engine runs in a worker forked from it: extraction,
 curation's ``mapInPandas`` stages, checkpoint units, gate queries and tests.
+It removes two fixed costs.
 
-The cost it removes: before each task, PySpark's ``setup_spark_files``
-calls ``importlib.invalidate_caches()``. A worker's ``sys.path`` holds
-``pyspark.zip`` (1,328 entries), ``py4j-*.zip`` and the spark-core jar
-(5,359 entries), which leaves 16 ``zipimporter`` objects in
+**Start-up: PySpark compiled from source in every session.** Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` and ``py4j-*-src.zip`` at the front
+of the workers' ``PYTHONPATH``. The zip ships 1,170 ``.py`` files and no
+``.pyc``, and zipimport writes no bytecode cache, so each session's daemon
+compiled the PySpark it imports from source before its first task could
+run. Measured on a 4-vCPU host (Python 3.11.7, PySpark 4.1.2), a fresh
+interpreter took 1.19-1.46 s (median 1.26 s of 5) to
+``import pyspark.daemon`` from the zip, and 0.18-0.26 s (median 0.23 s)
+from the installed ``pyspark`` in site-packages, which has its
+``__pycache__``. The two copies are the same code: every one of the 347
+modules they share, and all 9 py4j modules, is byte-identical. A rebuilt
+``local[2]`` session's first 2-row ``mapInArrow`` job fell from
+1.69-2.01 s to 0.79-1.07 s (6 sessions each).
+
+The fix: :func:`installed_first` moves Spark's zips behind the rest of
+``sys.path`` when, for each zip, the package the rest of the path would
+import holds the same code: every ``.py`` that the zip and the installed
+package share has the CRC32 the zip's central directory records, and
+``version.py`` is one of them. Otherwise ``sys.path`` stays exactly as
+Spark built it. The zips stay on the path, last, so a module only they
+hold (PySpark's tests) still resolves as before. The check reads only the
+zips' directories and the shared installed files, with the standard
+library, in about 32 ms per daemon start; the package lookup before it
+(about 47 ms, mostly the spark-core jar's directory) is cached in
+``sys.path_importer_cache`` and serves the imports that follow. The
+daemon imports nothing else
+ahead of its first fork: pre-importing pyarrow or pandas would not shorten
+the wait for that fork and would grow the daemon.
+
+**Per task: every zip re-read.** Before each task, PySpark's
+``setup_spark_files`` calls ``importlib.invalidate_caches()``. A worker's
+``sys.path`` holds ``pyspark.zip`` (1,328 entries), ``py4j-*.zip`` and the
+spark-core jar (5,359 entries), which leaves 16 ``zipimporter`` objects in
 ``sys.path_importer_cache``, 12 of them over ``pyspark.zip``. On CPython
 3.11, ``zipimporter.invalidate_caches()`` re-reads its archive's central
-directory eagerly, once per importer. Measured on a 4-vCPU host
-(``local[2]``, Python 3.11.7, PySpark 4.1.2), that call took 125-236 ms in
-the worker before every task, against under 0.05 ms in a plain
-interpreter. A 2-row ``mapInArrow`` job took 302 ms against 50 ms with no
-Python, and a 60k-turn pass-through 372 ms (medians of 9): the same fixed
-cost at both scales. Under this daemon the call takes 0.1-0.3 ms and the
-two jobs 146 and 217 ms.
+directory eagerly, once per importer. On the same host (``local[2]``) that
+call took 125-236 ms in the worker before every task, against under
+0.05 ms in a plain interpreter. A 2-row ``mapInArrow`` job took 302 ms
+against 50 ms with no Python, and a 60k-turn pass-through 372 ms (medians
+of 9): the same fixed cost at both scales. Under this daemon the call
+takes 0.1-0.3 ms and the two jobs 146 and 217 ms.
 
 The fix: :func:`invalidate_if_changed` replaces
 ``zipimport.zipimporter.invalidate_caches``. An importer re-reads its
@@ -36,25 +66,34 @@ There is no Python-version branch. CPython 3.12+ re-reads lazily, so
 there the check only skips work the stock method would defer.
 
 Run as ``python -m docling_translate_spark.plans.pydaemon``, the module
-installs the replacement and runs ``pyspark.daemon`` as ``__main__`` with
-the same arguments. It imports only the standard library; running it
-adds the package, its ``schema`` module and ``runpy`` to the daemon,
-once per session, since ``pyspark.daemon`` already loads ``pyspark.sql``.
-The package must be importable by the Python workers, as it already is
-for every kernel (``build_session`` puts its root on their path). The
-cluster entry ``tools/run_job.py`` does not build its session here and
-keeps the stock daemon, because a cluster daemon cannot import the
-package before its ``--py-files`` arrive.
+installs the replacement, reorders ``sys.path`` and runs ``pyspark.daemon``
+as ``__main__`` with the same arguments. It imports only the standard
+library, and so does the package root it runs through, so nothing has
+imported PySpark when the path is chosen. The package must be importable
+by the Python workers, as it already is for every kernel
+(``build_session`` puts its root on their path). The cluster entry
+``tools/run_job.py`` does not build its session here and keeps the stock
+daemon, because a cluster daemon cannot import the package before its
+``--py-files`` arrive.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import importlib
 import os
 import runpy
+import sys
+import zipfile
 import zipimport
+import zlib
+from importlib.machinery import PathFinder
 
 _stock_invalidate = zipimport.zipimporter.invalidate_caches
+
+# Spark's source zips on the workers' path (PythonUtils.sparkPythonPath),
+# with the package each one holds
+_SPARK_ZIPS = (("pyspark", "pyspark.zip"), ("py4j", "py4j-*-src.zip"))
 
 
 def _stamp(path: str) -> tuple[int, int] | None:
@@ -83,8 +122,58 @@ def install() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_if_changed
 
 
+def _matches_install(archive: str, package: str, path: list[str]) -> bool:
+    """Whether ``package``, as ``path`` would import it, holds the code of
+    its copy in ``archive``: every ``.py`` under ``package/`` that both
+    hold has the CRC32 the archive records, ``version.py`` among them.
+
+    Only a regular package in a directory counts as installed. A missing
+    package, a namespace package or an unreadable archive does not match.
+    """
+    spec = PathFinder.find_spec(package, path)
+    if spec is None or spec.origin is None or os.path.basename(spec.origin) != "__init__.py":
+        return False
+    root = os.path.dirname(os.path.dirname(spec.origin))
+    shared = set()
+    try:
+        with zipfile.ZipFile(archive) as z:
+            for info in z.infolist():
+                name = info.filename
+                if not (name.startswith(package + "/") and name.endswith(".py")):
+                    continue
+                try:
+                    with open(os.path.join(root, name), "rb") as f:
+                        data = f.read()
+                except FileNotFoundError:
+                    continue  # in the archive only
+                if zlib.crc32(data) != info.CRC:
+                    return False
+                shared.add(name)
+    except (OSError, zipfile.BadZipFile):
+        return False
+    return f"{package}/version.py" in shared
+
+
+def installed_first(path: list[str]) -> list[str]:
+    """``path`` with Spark's source zips moved behind every other entry,
+    when each of them matches its installed package; else ``path`` itself.
+    """
+    zips = {
+        entry: package
+        for entry in path
+        for package, pattern in _SPARK_ZIPS
+        if fnmatch.fnmatch(os.path.basename(entry), pattern)
+    }
+    rest = [entry for entry in path if entry not in zips]
+    if not zips or not all(_matches_install(z, p, rest) for z, p in zips.items()):
+        return path
+    return rest + [entry for entry in path if entry in zips]
+
+
 if __name__ == "__main__":
-    # install from the module under its package name, so a worker can tell
+    # work from the module under its package name, so a worker can tell
     # which method it runs, then hand the process to PySpark's daemon
-    importlib.import_module(__spec__.name).install()
+    daemon = importlib.import_module(__spec__.name)
+    daemon.install()
+    sys.path[:] = daemon.installed_first(sys.path)
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)

@@ -1,7 +1,9 @@
-"""The Python worker daemon (plans/pydaemon.py): a zip on ``sys.path`` is
-re-read by ``importlib.invalidate_caches()`` only when it changed, and
-the session's workers run under it."""
+"""The Python worker daemon (plans/pydaemon.py): PySpark is imported from
+the installed package when Spark's zips hold the same code, a zip on
+``sys.path`` is re-read by ``importlib.invalidate_caches()`` only when it
+changed, and the session's workers run under it."""
 
+import glob
 import importlib
 import os
 import subprocess
@@ -10,7 +12,11 @@ import zipfile
 import zipimport
 from pathlib import Path
 
+import pytest
+
 from docling_translate_spark.plans import pydaemon
+
+ROOT = str(Path(__file__).resolve().parents[1])
 
 
 def _write_zip(path, modules):
@@ -92,11 +98,10 @@ spark.stop()
 def test_workers_start_from_any_working_directory(tmp_path):
     """A session built outside the checkout, with no PYTHONPATH, still
     starts Python workers, although their daemon lives in the package."""
-    root = str(Path(__file__).resolve().parents[1])
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEM"] = "1g"
     done = subprocess.run(
-        [sys.executable, "-c", _FOREIGN_CWD_JOB.format(root=root)],
+        [sys.executable, "-c", _FOREIGN_CWD_JOB.format(root=ROOT)],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -105,3 +110,113 @@ def test_workers_start_from_any_working_directory(tmp_path):
     )
     assert done.returncode == 0, done.stderr[-3000:]
     assert done.stdout.split()[-1] == "3"
+
+
+# two packages laid out as Spark ships them: a source zip each, named as
+# Spark names it, holding every module the install holds plus a test
+_PACKAGES = {
+    "pyspark": {
+        "pyspark/__init__.py": "from pyspark.version import __version__\n",
+        "pyspark/version.py": '__version__ = "9.9.9"\n',
+        "pyspark/sql/__init__.py": "\n",
+        "pyspark/sql/types.py": "X = 1\n",
+    },
+    "py4j": {
+        "py4j/__init__.py": "\n",
+        "py4j/version.py": '__version__ = "0.0.1"\n',
+        "py4j/java_gateway.py": "Y = 2\n",
+    },
+}
+_ZIP_NAMES = {"pyspark": "pyspark.zip", "py4j": "py4j-0.0.1-src.zip"}
+_SHARED = [name for files in _PACKAGES.values() for name in files]
+
+
+def _spark_layout(tmp_path, zip_edit=None, install=True):
+    """``[pyspark.zip, py4j zip, other, site]`` in a worker's path order;
+    ``zip_edit(files)`` alters a zip's contents before it is written."""
+    lib, other, site = tmp_path / "lib", tmp_path / "other", tmp_path / "site"
+    for d in (lib, other, site):
+        d.mkdir()
+    zips = []
+    for package, files in _PACKAGES.items():
+        if install:
+            for name, source in files.items():
+                (site / name).parent.mkdir(parents=True, exist_ok=True)
+                (site / name).write_text(source)
+        in_zip = {**files, f"{package}/tests/test_zip_only.py": "Z = 3\n"}
+        if zip_edit:
+            zip_edit(in_zip)
+        archive = lib / _ZIP_NAMES[package]
+        with zipfile.ZipFile(archive, "w") as z:
+            for name, source in in_zip.items():
+                z.writestr(name, source)
+        zips.append(str(archive))
+    return zips + [str(other), str(site)]
+
+
+def test_identical_zips_move_behind_the_install(tmp_path):
+    path = _spark_layout(tmp_path)
+    assert pydaemon.installed_first(path) == path[2:] + path[:2]
+
+
+@pytest.mark.parametrize("name", _SHARED)
+def test_one_changed_byte_keeps_sparks_path(tmp_path, name):
+    def flip_last_byte(files):
+        if name in files:
+            files[name] = files[name][:-1] + chr(ord(files[name][-1]) ^ 1)
+
+    path = _spark_layout(tmp_path, zip_edit=flip_last_byte)
+    assert pydaemon.installed_first(path) == path
+
+
+def test_zip_without_version_keeps_sparks_path(tmp_path):
+    path = _spark_layout(tmp_path, zip_edit=lambda files: files.pop("py4j/version.py", None))
+    assert pydaemon.installed_first(path) == path
+
+
+def test_missing_install_keeps_sparks_path(tmp_path):
+    path = _spark_layout(tmp_path, install=False)
+    assert pydaemon.installed_first(path) == path
+
+
+def test_daemon_module_imports_no_pyspark(tmp_path):
+    """The daemon chooses where PySpark comes from before anything imports
+    it, so neither the module nor the package root it runs through may."""
+    probe = (
+        f"import sys; sys.path.insert(0, {ROOT!r}); "
+        "import docling_translate_spark.plans.pydaemon; "
+        "print(sorted(m for m in sys.modules if m.startswith(('pyspark', 'py4j'))))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env, capture_output=True, text=True
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.strip() == "[]"
+
+
+def test_session_workers_import_installed_pyspark(spark):
+    """On a host whose Spark zips hold the installed code, the workers
+    import ``pyspark`` and ``py4j`` from the install, not from a zip."""
+    lib = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib")
+    zips = glob.glob(os.path.join(lib, "pyspark.zip")) + glob.glob(
+        os.path.join(lib, "py4j-*-src.zip")
+    )
+    if len(zips) != 2:
+        pytest.skip(f"no pyspark.zip and py4j source zip under {lib!r}")
+    path = zips + [p for p in sys.path if p not in zips]
+    if pydaemon.installed_first(path) == path:
+        pytest.skip("this host's Spark zips differ from the installed pyspark/py4j")
+
+    def module_files(batches):
+        import py4j
+        import pyarrow as pa
+        import pyspark
+
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist([{"pyspark": pyspark.__file__, "py4j": py4j.__file__}])
+
+    schema = "pyspark string, py4j string"
+    [row] = spark.range(1, numPartitions=1).mapInArrow(module_files, schema).collect()
+    for package in ("pyspark", "py4j"):
+        assert os.path.isfile(row[package]) and ".zip" not in row[package], row[package]

@@ -6,8 +6,10 @@ import contextlib
 import io
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -735,7 +737,7 @@ Notes:
 - `ReadSchema` shows only conv_id/turn_idx/text/tool — role/ts pruned.
 - A filter above the extraction plan pushes to `PushedFilters` in the scan.
 """
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write(md)
     print("PLANS.md written")
     spark.stop()
