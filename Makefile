@@ -1,4 +1,4 @@
-.PHONY: test oracle bench plans smoke
+.PHONY: test oracle oracle-fast bench plans smoke
 
 # tier-1: the ROADMAP command (every test runs; Spark sized to the host)
 test:
@@ -11,15 +11,19 @@ oracle:
 oracle-fast:
 	python tools/check_oracle.py /root/testdata/sf0.001
 
+# the benchmark of record (BENCHMARK.json): both workloads, untraced, seed 1
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload extract_fused --seed 1 --seconds 15 --trace 0
+	python3 perfbench/run.py --workload extract_sentences --seed 1 --seconds 15 --trace 0
 
 plans:
 	python tools/gen_plans.py
 
+# Spark on half the host's cores (local[N] keeps about 2N threads runnable)
 smoke:
-	python -c "import sys; sys.path.insert(0,'.'); \
+	python -c "import os, sys; sys.path.insert(0,'.'); \
 	import __spark_entry__ as m; \
 	from docling_translate_spark.plans.session import build_session; \
-	s = build_session(master='local[8]'); s.sparkContext.setLogLevel('ERROR'); \
+	n = max(1, len(os.sched_getaffinity(0)) // 2); \
+	s = build_session(master=f'local[{n}]'); s.sparkContext.setLogLevel('ERROR'); \
 	print('entry rows:', len(m.entry(s).collect())); s.stop()"

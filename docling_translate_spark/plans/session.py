@@ -54,7 +54,6 @@ _PACKAGE_ROOT = str(Path(__file__).resolve().parents[2])
 def build_session(
     app_name: str = "docling-translate-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create (or fetch) a tuned session.
@@ -65,8 +64,9 @@ def build_session(
       engine's analog of the reference's 16-sentence inference chunk
       (``src/translation/engines/nllb.py:103-126``), sized much larger
       because the map is vectorized.
-    * shuffle partitions default to 4× cores locally; on a real cluster
-      pass an explicit value sized so partitions fit executor memory.
+    * shuffle partitions are 4× cores locally (at least 32); on a real
+      cluster set ``spark.sql.shuffle.partitions`` in ``extra_conf``,
+      sized so partitions fit executor memory.
     * Python workers fork from :data:`PYTHON_DAEMON_MODULE`, with the
       package root on their ``PYTHONPATH``. Cluster jobs submitted with
       ``--py-files`` go through ``tools/run_job.py``, which keeps
@@ -74,12 +74,10 @@ def build_session(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
-        except ValueError:
-            n = 32
-        shuffle_partitions = max(4 * n, 32)
+    try:
+        n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
+    except ValueError:
+        n = 32
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -87,7 +85,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(4 * n, 32)))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "128m")

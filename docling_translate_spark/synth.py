@@ -13,21 +13,13 @@ boilerplate-laden prose, LaTeX formulas, table-ish blocks, cross-turn
 duplicate sentences, and empty / whitespace / NUL-containing payloads.
 Conversation lengths are skewed (a few hot conversations are ~100× longer)
 to exercise salting + AQE.
-
-Generation is distributed: ``transcripts_df`` builds rows from
-``spark.range`` through one Arrow-batched ``mapInPandas`` — no driver-side
-row materialization, so the same generator scales to benchmark sizes.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import zlib
-from typing import Iterator, List, Tuple
-
-import pandas as pd
-
-from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
+from typing import List, Tuple
 
 _EPOCH = _dt.datetime(2024, 1, 1)
 
@@ -195,26 +187,3 @@ def gen_rows(n_convs: int, base_turns: int = 8) -> List[Tuple]:
             rows.append(gen_turn(cid, t))
     return rows
 
-
-def transcripts_df(spark, n_convs: int, base_turns: int = 8, skew: bool = True):
-    """Distributed deterministic generation via mapInPandas.
-
-    One input row per conversation (from ``spark.range``), fanned out to
-    its turns inside the Arrow batch — so a 10^6-conversation benchmark
-    never materializes rows on the driver.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("conv_id", "turn_idx", "role", "text", "tool", "ts")}
-            for i in pdf["id"]:
-                cid = f"conv-{int(i):06d}"
-                n = conv_length(cid, base_turns) if skew else base_turns
-                for t in range(n):
-                    row = gen_turn(cid, t)
-                    for k, v in zip(out, row):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    base = spark.range(n_convs).repartition(max(spark.sparkContext.defaultParallelism, 8))
-    return base.mapInPandas(gen, TRANSCRIPT_SCHEMA)

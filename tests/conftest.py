@@ -12,7 +12,11 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="dts-tests", master="local[4]", shuffle_partitions=8)
+    s = build_session(
+        app_name="dts-tests",
+        master="local[4]",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

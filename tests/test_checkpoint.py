@@ -66,6 +66,31 @@ def test_resume_after_crash(spark, transcripts, n_units, n_parts):
     assert all(r["run_id"] == "r1" for r in lin)
 
 
+@pytest.mark.parametrize("n_units", [3, 7])
+def test_torn_units_are_overwritten(spark, transcripts, n_units):
+    """A unit whose data was written but whose lineage row was not is
+    re-run in place: a second run with the same run_id into the same
+    output but a fresh checkpoint finds every unit torn, and must leave
+    one copy of each turn with lineage that counts exactly that output."""
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt-torn-")
+    out_dir = f"{tmp}/out"
+    run_extraction(spark, transcripts, out_dir, f"{tmp}/ckpt1", "r1", n_units=n_units)
+
+    ckpt_dir = f"{tmp}/ckpt2"
+    done = run_extraction(spark, transcripts, out_dir, ckpt_dir, "r1", n_units=n_units)
+    assert done == set(range(n_units))
+
+    out = read_output(spark, out_dir)
+    n = out.count()
+    assert out.select("conv_id", "turn_idx").distinct().count() == n
+    direct = extract_turns_fused(transcripts)
+    assert out.drop("unit").exceptAll(direct).count() == 0
+    assert direct.exceptAll(out.drop("unit")).count() == 0
+
+    lin = read_lineage(spark, ckpt_dir).collect()
+    assert sum(r["turns_processed"] for r in lin) == n
+
+
 def test_lineage_observed_from_write(spark):
     """More units than conversations: every unit commits, empty ones with
     zero counts, and each unit's observed counts equal its written rows."""

@@ -15,7 +15,7 @@ from docling_translate_spark.schema import (
     RICH_TRANSCRIPT_SCHEMA,
     TRANSCRIPT_SCHEMA,
 )
-from docling_translate_spark.synth import gen_rows, transcripts_df
+from docling_translate_spark.synth import gen_rows
 
 
 @pytest.fixture(scope="module")
@@ -114,16 +114,6 @@ def test_fused_sentence_split(spark, small_transcripts):
         ExtractConfig(engine="marker", sentence_split=True, ordered=True),
     ).collect()
     _assert_matches(out, golden, "fused-sentences")
-
-
-def test_distributed_generator_matches_local(spark):
-    """transcripts_df (mapInPandas) == gen_rows (driver-side) rows."""
-    got = {
-        (r["conv_id"], r["turn_idx"]): (r["role"], r["text"], r["tool"], r["ts"])
-        for r in transcripts_df(spark, 10, 4).collect()
-    }
-    exp = {(r[0], r[1]): (r[2], r[3], r[4], r[5]) for r in gen_rows(10, 4)}
-    assert got == exp
 
 
 def test_empty_and_binary_turns_survive(spark):

@@ -2,14 +2,21 @@
 
 Runs every ``queries()`` entry at sf0.01 on Spark, runs the matching
 ``oracle_sql()`` on DuckDB over the same parquet (tables pre-registered as
-views), and compares row count, column-name sets, and the order-insensitive
-multiset of values (columns sorted by name, like the driver's value-hash).
+views), and compares row count, column-name sets, the order-insensitive
+multiset of values (columns sorted by name, like the driver's value-hash)
+and the physical column types. Each side runs once: one Spark
+``toArrow()`` and one DuckDB Arrow fetch give both the values and the
+types.
+
+Spark runs on ``local[N]`` with N half the host's cores (at least 1):
+``local[N]`` keeps about 2N threads runnable.
 
 Usage: python tools/check_oracle.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import datetime
 import decimal
 import math
 import os
@@ -44,12 +51,17 @@ def norm(v):
         return round(v, 9)
     if isinstance(v, int):
         return v
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        # Spark's toArrow() zones TIMESTAMP values (session zone) where
+        # DuckDB's TIMESTAMP is naive: compare the UTC instant
+        v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return str(v)
 
 
-def row_multiset(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter(tuple(norm(r[i]) for i in order) for r in rows)
+def row_multiset(tbl):
+    order = sorted(range(tbl.num_columns), key=lambda i: tbl.column_names[i])
+    cols = [tbl.column(i).to_pylist() for i in order]
+    return Counter(tuple(norm(v) for v in row) for row in zip(*cols))
 
 
 def _arrow_type_map(tbl):
@@ -57,8 +69,8 @@ def _arrow_type_map(tbl):
 
     The driver's value-hash is type-sensitive (round 1: BIGINT vs
     HUGEINT, INT vs BIGINT, DECIMAL(28,2) vs DECIMAL(38,2) all produced
-    hash mismatches on bit-identical values), so surface physical-type
-    drift between the Spark and DuckDB results as warnings.
+    hash mismatches on bit-identical values), so physical-type drift
+    between the Spark and DuckDB results fails the query.
     """
     import pyarrow as pa
 
@@ -74,24 +86,21 @@ def _arrow_type_map(tbl):
     return out
 
 
-def dtype_warnings(sdf, duck_res):
-    try:
-        smap = _arrow_type_map(sdf.toArrow())
-        dmap = _arrow_type_map(duck_res.arrow())
-    except Exception as e:  # arrow conversion not available for some type
-        return [f"dtype-check skipped: {e}"]
-    warns = []
-    for col in sorted(set(smap) & set(dmap)):
-        if smap[col] != dmap[col]:
-            warns.append(f"dtype {col}: spark={smap[col]} duck={dmap[col]}")
-    return warns
+def dtype_drift(stbl, dtbl):
+    smap, dmap = _arrow_type_map(stbl), _arrow_type_map(dtbl)
+    return [
+        f"dtype {col}: spark={smap[col]} duck={dmap[col]}"
+        for col in sorted(set(smap) & set(dmap))
+        if smap[col] != dmap[col]
+    ]
 
 
 def main():
     import __spark_entry__ as entrymod
     from docling_translate_spark.plans.session import build_session
 
-    spark = build_session(app_name="oracle-check", master="local[8]")
+    cores = max(1, len(os.sched_getaffinity(0)) // 2)
+    spark = build_session(app_name="oracle-check", master=f"local[{cores}]")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -111,30 +120,27 @@ def main():
         if ONLY and name not in ONLY:
             continue
         t0 = time.perf_counter()
-        sdf = fn(spark, SF_DIR)
-        srows = sdf.collect()
-        scols = sdf.columns
+        stbl = fn(spark, SF_DIR).toArrow()
         secs = time.perf_counter() - t0
         if name not in oracles:
-            print(f"{name:28s} rows-only: {len(srows)} rows  [ok>={0}] {secs:.1f}s")
-            if len(srows) == 0:
+            print(f"{name:28s} rows-only: {stbl.num_rows} rows  [ok>={0}] {secs:.1f}s")
+            if stbl.num_rows == 0:
                 failures.append((name, "0 rows"))
             spark.catalog.clearCache()
             continue
-        ddf = con.execute(oracles[name])
-        dcols = [d[0] for d in ddf.description]
-        drows = ddf.fetchall()
+        dtbl = con.execute(oracles[name]).fetch_arrow_table()
+        scols, dcols = stbl.column_names, dtbl.column_names
         ok = True
         msgs = []
         if sorted(scols) != sorted(dcols):
             ok = False
             msgs.append(f"schema {sorted(scols)} != {sorted(dcols)}")
-        if len(srows) != len(drows):
+        if stbl.num_rows != dtbl.num_rows:
             ok = False
-            msgs.append(f"rowcount {len(srows)} != {len(drows)}")
+            msgs.append(f"rowcount {stbl.num_rows} != {dtbl.num_rows}")
         if ok:
-            sm = row_multiset([tuple(r) for r in srows], scols)
-            dm = row_multiset(drows, dcols)
+            sm = row_multiset(stbl)
+            dm = row_multiset(dtbl)
             if sm != dm:
                 ok = False
                 diff_s = list((sm - dm).items())[:3]
@@ -147,19 +153,16 @@ def main():
             # so physical dtype drift is a FAILURE here, not a warning.
             # Only the coarse timestamp tz/unit class stays normalized —
             # timestamp-emitting queries have passed every driver round.
-            warns = dtype_warnings(fn(spark, SF_DIR), con.execute(oracles[name]))
-            hard = [w for w in warns if not w.startswith("dtype-check skipped")]
-            if hard:
+            drift = dtype_drift(stbl, dtbl)
+            if drift:
                 ok = False
-                msgs.append("dtype-drift " + "; ".join(hard))
-            elif warns:
-                msgs.append("WARN " + "; ".join(warns))
+                msgs.append("dtype-drift " + "; ".join(drift))
         # the runner owns cached relations: operators .cache() what they
         # read twice, and nothing a query cached may outlive it
         spark.catalog.clearCache()
         status = "OK " if ok else "FAIL"
         print(
-            f"{name:28s} {status} spark={len(srows)} duck={len(drows)} "
+            f"{name:28s} {status} spark={stbl.num_rows} duck={dtbl.num_rows} "
             f"{secs:.1f}s {'; '.join(msgs)}"
         )
         if not ok:

@@ -5,9 +5,8 @@
 # Usage:
 #   tools/submit.sh <master-url> <transcripts-path> <out-dir> <ckpt-dir> [run-id]
 #
-# In-sandbox there is no multi-node master; the same command with
-# --master local[N] runs the identical artifact locally (bench.py uses
-# two such parallelism levels as the N vs 4N scaling evidence).
+# Without a multi-node master, the same command with --master local[N]
+# runs the identical artifact locally.
 set -euo pipefail
 
 MASTER="${1:?master url}"
