@@ -188,10 +188,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop). Word-salad corpus ⇒ 4-gram shingles + stop-shingle cap 20 +
     threshold 0.3, the dedup_ngram_jaccard gate convention (organic
     cross near-dups also flag — the oracle mirrors every decision).
-    Since r5 the query runs the COMMITTED-INDEX path (build_ingest_index
-    once, then the index-fed probe — the production shape at snapshot
-    scale); admission is pytest-pinned bit-identical to the recompute
-    path, so the NOT-EXISTS CTE oracle covers both."""
+    The query builds the committed index once (build_ingest_index),
+    then runs the index-fed probe — the operator's only path. The
+    NOT-EXISTS CTE oracle recomputes every stage from the raw snapshot,
+    the same recompute the pytest reference in
+    tests/test_dedup_incremental.py runs."""
     from docling_translate_spark.operators.dedup import (
         build_ingest_index,
         dedup_incremental,
@@ -221,9 +222,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     idx = build_ingest_index(seen, n=4, max_bucket=20)
-    out = dedup_incremental(
-        batch, seen_index=idx, n=4, threshold=0.3, max_bucket=20
-    )
+    out = dedup_incremental(batch, idx, threshold=0.3)
     return out.select("doc_id", F.md5("text").alias("fp"))
 
 
@@ -3692,6 +3691,8 @@ w AS MATERIALIZED (
     # estimate filter all reproduced in SQL — the a/b hash params are
     # inlined as literals above. Shared by `dedup_minhash_lsh` (the pair
     # list) and `dedup_components` (recursive closure over those pairs).
+    # `sig` is MATERIALIZED: DuckDB 1.0 inlines a plain CTE at each of
+    # its three references, recomputing every 64-hash signature per use.
     _minhash_pairs_sql = r"""
             WITH toks AS (
               SELECT doc_id,
@@ -3712,7 +3713,7 @@ w AS MATERIALIZED (
                          (('0x'||substr(md5(s),1,16))::UBIGINT
                           & 4294967295)::HUGEINT) AS hs
               FROM shng
-            ), sig AS (
+            ), sig AS MATERIALIZED (
               SELECT doc_id,
                      list_transform(range(0, 64), k ->
                          CAST(list_min(list_transform(hs,

@@ -4,8 +4,8 @@ Reference CLI: ``python main.py file.pdf --engine google --workers 8``
 (``main.py:40-65``). Engine analog::
 
     python -m docling_translate_spark --input transcripts.parquet \
-        --out out_dir --ckpt ckpt_dir --engine identity --cores 8 \
-        [--sentence-split] [--run-id r1] [--units 64]
+        --out out_dir --ckpt ckpt_dir --engine identity \
+        [--cores N] [--sentence-split] [--run-id r1] [--units 64]
 
 Runs the checkpointed, idempotently-resumable extraction job locally;
 on a cluster use ``tools/submit.sh`` (spark-submit --py-files).
@@ -14,6 +14,7 @@ on a cluster use ``tools/submit.sh`` (spark-submit --py-files).
 from __future__ import annotations
 
 import argparse
+import os
 
 from docling_translate_spark.extract_map import ENGINES
 
@@ -29,8 +30,9 @@ def main() -> None:
     )
     ap.add_argument("--sentence-split", action="store_true")
     ap.add_argument(
-        "--cores", type=int, default=8,
-        help="local parallelism (reference --workers analog)",
+        "--cores", type=int, default=max(1, len(os.sched_getaffinity(0)) // 2),
+        help="local parallelism (reference --workers analog; default half "
+        "the host's cores)",
     )
     ap.add_argument("--run-id", default="cli-run")
     ap.add_argument("--units", type=int, default=16)

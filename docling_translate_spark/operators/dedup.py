@@ -74,8 +74,8 @@ class IngestIndex(NamedTuple):
                      under the snapshot-only stop cap (docs whose every
                      shingle is capped carry no row)
     * ``n``, ``max_bucket`` — the shingle order and stop cap the tables
-      were built under; a probe with different parameters raises rather
-      than silently mixing semantics (the Bloom k-stamp discipline)
+      were built under; :func:`dedup_incremental` reads both from here,
+      so a probe cannot mix stop-cap semantics
 
     At cluster scale ``shingles``/``freq`` are stored bucketed by
     ``shingle`` so the batch-side probes co-locate, and ``hashes`` by
@@ -100,7 +100,7 @@ def build_ingest_index(
     """Build the committed ingest index from a raw snapshot — the
     bootstrap (or audit-rebuild) path; steady state maintains it with
     :func:`updated_ingest_index` instead. Every piece is the exact
-    aggregate :func:`dedup_incremental` used to recompute per ingest."""
+    seen-side aggregate of the three :func:`dedup_incremental` stages."""
     hashes = seen.select(F.md5(F.col(text_col)).alias("text_hash"))
     sh = shingle_df(seen, text_col, id_col, n)
     shingles = sh.select("sid", "shingle")
@@ -180,8 +180,8 @@ def updated_ingest_index(
 
 
 def _ingest_index_version(spark, path: str) -> int | None:
-    """Current committed version under ``path``, or None if nothing (or
-    only a legacy flat layout) is committed there."""
+    """Current committed version under ``path``, or None if no
+    ``latest`` marker is readable there."""
     try:
         return int(spark.read.parquet(f"{path}/latest").collect()[0]["v"])
     except Exception:
@@ -250,21 +250,18 @@ def save_ingest_index(index: IngestIndex, path: str) -> None:
 
 def load_ingest_index(spark, path: str) -> IngestIndex:
     v = _ingest_index_version(spark, path)
-    if v is None and _existing_snapshot_versions(spark, path):
-        # versioned snapshots exist but the marker is unreadable — a
-        # transient store error or a crash during the marker's own
-        # overwrite. Falling through to the legacy flat layout would
-        # fail confusingly (no {path}/meta) or, worse, read stale flat
-        # tables beside the real snapshots; fail loudly instead.
-        raise RuntimeError(
-            f"ingest index at {path} has v* snapshots but no readable "
-            f"latest marker — repair {path}/latest (a 1-row parquet "
-            "with column v) to the newest COMPLETE snapshot"
-        )
-    # legacy flat layout (pre-versioning saves): tables directly under
-    # ``path`` — readable, but a re-save to the same path always writes
-    # a versioned snapshot, never overwrites these in place
-    root = path if v is None else f"{path}/v{v}"
+    if v is None:
+        if _existing_snapshot_versions(spark, path):
+            # versioned snapshots exist but the marker is unreadable — a
+            # transient store error or a crash during the marker's own
+            # overwrite: fail loudly rather than guess a snapshot
+            raise RuntimeError(
+                f"ingest index at {path} has v* snapshots but no readable "
+                f"latest marker — repair {path}/latest (a 1-row parquet "
+                "with column v) to the newest COMPLETE snapshot"
+            )
+        raise FileNotFoundError(f"no ingest index committed at {path}")
+    root = f"{path}/v{v}"
     meta = spark.read.parquet(f"{root}/meta").collect()[0]
     return IngestIndex(
         spark.read.parquet(f"{root}/hashes"),
@@ -278,23 +275,24 @@ def load_ingest_index(spark, path: str) -> IngestIndex:
 
 def dedup_incremental(
     batch: DataFrame,
-    seen: DataFrame | None = None,
+    index: IngestIndex,
     text_col: str = "text",
     id_col: str = "doc_id",
     near_dup: bool = True,
-    n: int = 3,
     threshold: float = 0.8,
-    max_bucket: int = 1000,
-    seen_index: IngestIndex | None = None,
 ) -> DataFrame:
     """Incremental ingest dedup: admit only the rows of ``batch`` that
-    are new relative to a committed corpus snapshot ``seen`` — the step
-    a continuously-crawled training corpus runs on every ingest (each
+    are new relative to a committed corpus snapshot — the step a
+    continuously-crawled training corpus runs on every ingest (each
     crawl re-fetches most of the web; admitting blindly and re-running
     corpus-wide dedup from scratch is the 10^12-turn anti-pattern this
-    operator exists to avoid). Composes with ``sources/checkpoint.py``:
-    ``seen`` is the last committed snapshot, the admitted rows are what
-    the next snapshot appends.
+    operator exists to avoid). The snapshot arrives as its
+    :class:`IngestIndex` (built once with :func:`build_ingest_index`,
+    maintained per commit with :func:`updated_ingest_index`), so no
+    ingest re-scans the snapshot corpus; the shingle order and stop cap
+    are the index's own ``n`` and ``max_bucket``. Composes with
+    ``sources/checkpoint.py``: the admitted rows are what the next
+    snapshot appends.
 
     Three stages, each a join/agg shape that survives scale:
 
@@ -303,12 +301,9 @@ def dedup_incremental(
        map-side combine collapses a viral duplicate per task, never a
        hot-key window (see ``dedup_segments``).
     2. EXACT vs snapshot: a left-anti equi-join of batch fingerprints
-       against the snapshot's. The snapshot side is a single slim hash
-       column; an anti-join never fans out, so no ``distinct`` pass
-       over the corpus is needed. ``seen`` may carry the raw
-       ``text_col`` or a precomputed ``text_hash`` column (the
-       ``exact_dedup`` output convention) — at snapshot scale you store
-       the hashes, not the text.
+       against the committed ``hashes``. The snapshot side is a single
+       slim hash column; an anti-join never fans out, so no
+       ``distinct`` pass over the corpus is needed.
     3. NEAR-DUP vs snapshot (optional): cross-corpus n-gram Jaccard via
        the same inverted shingle index as ``ngram_jaccard_pairs``, with
        the stop-shingle cap computed over the COMBINED document
@@ -316,25 +311,15 @@ def dedup_incremental(
        shingles and identical docs still score 1.0. A batch doc with
        Jaccard ≥ ``threshold`` against ANY snapshot doc is rejected —
        no tie-break needed, so the result is deterministic at any
-       parallelism.
-
-    Pass ``seen_index`` (an :class:`IngestIndex`, built once with
-    :func:`build_ingest_index` and maintained per-commit with
-    :func:`updated_ingest_index`) to run all three stages against the
-    COMMITTED tables instead — the production path at snapshot scale,
-    where re-scanning the corpus per ingest is the exact anti-pattern
-    this operator exists to avoid. The index-fed stage 3 aggregates only
-    batch-scale relations: combined document frequencies probe the
-    committed ``freq`` on the batch's shingles alone, candidate pairs
-    probe the committed inverted ``shingles`` index, and seen-side
-    informative sizes come from the committed ``sizes`` minus a
-    flip-adjustment join (a snapshot shingle can only leave the
-    informative set when THIS batch pushes it over the stop cap, so the
-    adjustment set is bounded by the batch vocabulary). Admission is
-    bit-identical to the recompute path (pytest-pinned). With an index,
-    ``seen`` may be omitted entirely. The recompute fallback (pass
-    ``seen`` with text) keeps the sandbox self-contained with identical
-    join shapes.
+       parallelism. Only batch-scale relations aggregate: combined
+       document frequencies probe the committed ``freq`` on the batch's
+       shingles alone, candidate pairs probe the committed inverted
+       ``shingles`` index, and seen-side informative sizes come from
+       the committed ``sizes`` minus a flip-adjustment join (a snapshot
+       shingle can only leave the informative set when THIS batch
+       pushes it over the stop cap, so the adjustment set is bounded by
+       the batch vocabulary). Admission equals a from-scratch recompute
+       over the raw snapshot (pytest-pinned).
 
     Preconditions: ``id_col`` unique within ``batch``, and ``batch``
     must not carry a column named ``_fp`` (reserved; a ValueError is
@@ -350,44 +335,30 @@ def dedup_incremental(
             "batch must not carry the reserved temp column '_fp' "
             "(rename it before calling dedup_incremental)"
         )
-    if seen is None and seen_index is None:
-        raise ValueError("pass a snapshot (seen) or a committed seen_index")
-    if seen_index is not None and (
-        seen_index.n != n or seen_index.max_bucket != max_bucket
-    ):
-        raise ValueError(
-            f"seen_index was committed under (n={seen_index.n}, "
-            f"max_bucket={seen_index.max_bucket}); probing it with "
-            f"(n={n}, max_bucket={max_bucket}) would silently mix "
-            "stop-cap semantics"
-        )
-    fp = F.md5(F.col(text_col))
-    b = batch.withColumn("_fp", fp)
+    b = batch.withColumn("_fp", F.md5(F.col(text_col)))
 
     # stage 1: within-batch exact (arg-min groupBy, NOT a window)
     winners = b.groupBy("_fp").agg(F.min(id_col).alias(id_col))
     b = b.join(winners, ["_fp", id_col], "left_semi")
 
     # stage 2: exact vs snapshot (slim hash column, anti-join)
-    if seen_index is not None:
-        seen_fp = seen_index.hashes.select(F.col("text_hash").alias("_fp"))
-    elif "text_hash" in seen.columns and text_col not in seen.columns:
-        seen_fp = seen.select(F.col("text_hash").alias("_fp"))
-    else:
-        seen_fp = seen.select(fp.alias("_fp"))
+    seen_fp = index.hashes.select(F.col("text_hash").alias("_fp"))
     b = b.join(seen_fp, "_fp", "left_anti")
 
-    if near_dup and seen_index is not None:
-        # stage 3, index-fed: nothing snapshot-sized aggregates.
+    if near_dup:
+        # stage 3: nothing snapshot-sized aggregates. b feeds TWO
+        # consumers (shingle build + final anti-join probe): persist, or
+        # the upstream lineage runs once per consumer
+        max_bucket = index.max_bucket
         b = b.persist()
-        bs = shingle_df(b, text_col, id_col, n).cache()
+        bs = shingle_df(b, text_col, id_col, index.n).cache()
         batch_freq = bs.groupBy("shingle").agg(F.count("*").alias("bdf"))
         # combined document frequency for the batch's shingles only —
         # a shingle absent from the batch can neither form a candidate
         # pair nor flip over the cap, so the corpus-sized freq table is
         # probed (join), never re-aggregated
         jf = (
-            batch_freq.join(seen_index.freq, "shingle", "left")
+            batch_freq.join(index.freq, "shingle", "left")
             .select(
                 "shingle", "bdf", F.coalesce("df_", F.lit(0)).alias("sdf")
             )
@@ -402,9 +373,7 @@ def dedup_incremental(
         pairs = (
             rare_b.select(F.col("sid").alias("_bid"), "shingle")
             .join(
-                seen_index.shingles.select(
-                    F.col("sid").alias("_sid"), "shingle"
-                ),
+                index.shingles.select(F.col("sid").alias("_sid"), "shingle"),
                 "shingle",
             )
             .groupBy("_bid", "_sid")
@@ -417,58 +386,13 @@ def dedup_incremental(
             (F.col("sdf") <= max_bucket) & (F.col("tdf") > max_bucket)
         ).select("shingle")
         flip_counts = (
-            seen_index.shingles.join(flipped, "shingle")
+            index.shingles.join(flipped, "shingle")
             .groupBy("sid")
             .agg(F.count("*").alias("nflip"))
         )
-        ssz_df = seen_index.sizes.join(flip_counts, "sid", "left").select(
+        ssz_df = index.sizes.join(flip_counts, "sid", "left").select(
             "sid",
             (F.col("rsz") - F.coalesce("nflip", F.lit(0))).alias("rsz"),
-        )
-        flagged = (
-            pairs.join(
-                bsz.select(F.col("sid").alias("_bid"), F.col("rsz").alias("bsz")),
-                "_bid",
-            )
-            .join(
-                ssz_df.select(F.col("sid").alias("_sid"), F.col("rsz").alias("ssz")),
-                "_sid",
-            )
-            .filter(
-                F.col("nc") / (F.col("bsz") + F.col("ssz") - F.col("nc"))
-                >= threshold
-            )
-            .select(F.col("_bid").alias(id_col))
-        )
-        b = b.join(flagged, id_col, "left_anti")
-    elif near_dup:
-        # b feeds TWO consumers (shingle build + final anti-join probe):
-        # persist, or the upstream lineage runs once per consumer
-        b = b.persist()
-        bs = shingle_df(b, text_col, id_col, n).cache()
-        ss = shingle_df(seen, text_col, id_col, n).cache() if text_col in seen.columns else None
-        if ss is None:
-            raise ValueError(
-                "near_dup=True needs the snapshot text_col to build the "
-                "shingle index; pass near_dup=False for hash-only snapshots"
-            )
-        # combined document frequency -> one stop-shingle set for BOTH
-        # sides (consistent filtering, same argument as
-        # ngram_jaccard_pairs' docstring)
-        freq = (
-            bs.select("shingle")
-            .unionAll(ss.select("shingle"))
-            .groupBy("shingle")
-            .agg(F.count("*").alias("df_"))
-        )
-        ok = freq.filter(F.col("df_") <= max_bucket).select("shingle")
-        rare_b, bsz = informative_shingles(bs, ok)
-        rare_s, ssz = informative_shingles(ss, ok)
-        pairs = (
-            rare_b.select(F.col("sid").alias("_bid"), "shingle")
-            .join(rare_s.select(F.col("sid").alias("_sid"), "shingle"), "shingle")
-            .groupBy("_bid", "_sid")
-            .agg(F.count("*").alias("nc"))
         )
         # no dropDuplicates on the flag set: left_anti is
         # duplicate-insensitive, so deduping here would only add an
@@ -479,7 +403,7 @@ def dedup_incremental(
                 "_bid",
             )
             .join(
-                ssz.select(F.col("sid").alias("_sid"), F.col("rsz").alias("ssz")),
+                ssz_df.select(F.col("sid").alias("_sid"), F.col("rsz").alias("ssz")),
                 "_sid",
             )
             .filter(

@@ -8,24 +8,13 @@ reference has no search surface at all). Useful in a curation pipeline
 for exemplar mining: pull the corpus documents most similar to a
 hand-written probe query before seeding DSIR's target set.
 
-Scale shape — two paths sharing one scoring expression (bit-identical
-results, pinned by test_retrieval.py):
-
-* short queries (len(terms) ≤ 32, the default dispatch): per-term term
-  frequencies are row-local array reductions over the tokenized text —
-  NO explode, NO per-token shuffle. Corpus statistics (N, Σdl, per-term
-  document frequencies) reduce to ONE row via partial aggregation and
-  re-attach as a broadcast nested-loop join of that single row, so the
-  whole scoring plan is scan → project → tiny agg broadcast →
-  TakeOrdered: zero wide shuffles of corpus rows.
-* long queries (explode path, auto above 32 terms): tokens explode,
-  filter to the query vocabulary BEFORE the exchange (only query-term
-  hits shuffle — a vanishing fraction of the token stream), then
-  groupBy((doc, term)) with map-side combine; per-term df is a tiny agg
-  over the tf rows, broadcast back; doc length rides the tf rows (no
-  second corpus join); zero-score docs reattach via a slim (id)-keyed
-  left join. Per-row work is one array scan regardless of query size,
-  vs one scan per term on the row-local path.
+Scale shape: per-term term frequencies are row-local array reductions
+over the tokenized text — NO explode, NO per-token shuffle. Corpus
+statistics (N, Σdl, per-term document frequencies) reduce to ONE row
+via partial aggregation and re-attach as a broadcast nested-loop join
+of that single row, so the whole scoring plan is scan → project → tiny
+agg broadcast → TakeOrdered: zero wide shuffles of corpus rows. Per-row
+work is one array scan per distinct query term.
 
 Cross-engine FP stability (same discipline as ``dsir_weights``): each
 per-(doc, term) partial score is quantized to integer MICRO-units
@@ -45,10 +34,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-# row-local fast path bound: beyond this the per-row battery of
-# size(filter(...)) columns stops beating an explode + groupBy plan
-MAX_FAST_TERMS = 32
-
 
 def _tokenize(text_col: str):
     txt = F.trim(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
@@ -63,9 +48,8 @@ def _tf_of(term: str):
 
 
 def _micro_term(tf_int, dl_int, df_int, n_int, sdl_int, k1: float, b: float):
-    """Quantized per-(doc, term) BM25 partial score — ONE expression
-    tree shared by both physical paths so their outputs are
-    bit-identical, and mirrored verbatim in the DuckDB oracle."""
+    """Quantized per-(doc, term) BM25 partial score, mirrored verbatim
+    in the DuckDB oracle."""
     n = n_int.cast("double")
     # avgdl > 0 guard: an all-empty corpus keeps every tfnorm at 0
     avgdl = F.when(sdl_int > 0, sdl_int.cast("double") / n)
@@ -91,7 +75,6 @@ def bm25_topk(
     text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
-    exploded: bool | None = None,
 ) -> DataFrame:
     """Top-``k`` documents for ``query`` under BM25, deterministic total
     order (score DESC, id ASC — ties at the cut are engine-stable
@@ -102,30 +85,17 @@ def bm25_topk(
     matching no term score 0.0 and rank by id; an empty corpus or an
     all-empty corpus yields all-zero scores (no division by zero).
 
-    ``id_col`` must be UNIQUE (it is the document identity). Under
-    duplicate ids the paths legitimately diverge: the row-local path
-    scores each row independently, while the explode path merges term
-    frequencies per id and fans the merged score back — ranking over a
-    multiset of ids is ill-defined either way, so dedupe first.
-
-    ``exploded=None`` auto-dispatches: the zero-shuffle row-local path
-    up to ``MAX_FAST_TERMS`` query terms, the explode + groupBy path
-    beyond. On unique ids both produce bit-identical output (shared
-    scoring expression, pinned by pytest).
+    ``id_col`` must be UNIQUE (it is the document identity): ranking
+    over a multiset of ids is ill-defined, so dedupe first.
     """
     terms = sorted({t for t in query.lower().split() if t})
     if not terms:
         raise ValueError("bm25_topk needs at least one query term")
-    if exploded is None:
-        exploded = len(terms) > MAX_FAST_TERMS
-    if exploded:
-        scored = _bm25_scores_exploded(df, terms, id_col, text_col, k1, b)
-    else:
-        scored = _bm25_scores_local(df, terms, id_col, text_col, k1, b)
+    scored = _bm25_scores(df, terms, id_col, text_col, k1, b)
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
-def _bm25_scores_local(
+def _bm25_scores(
     df: DataFrame,
     terms: list[str],
     id_col: str,
@@ -133,8 +103,8 @@ def _bm25_scores_local(
     k1: float,
     b: float,
 ) -> DataFrame:
-    """Row-local path: one tf column per term, one broadcast stats row,
-    zero wide shuffles of corpus rows."""
+    """One tf column per term, one broadcast stats row, zero wide
+    shuffles of corpus rows."""
     # tokens materialize in their own projection: 1 + len(terms)
     # consumers follow, and Catalyst keeps a multiply-referenced
     # non-cheap alias in its own project instead of re-inlining the
@@ -184,71 +154,6 @@ def _bm25_scores_local(
         F.col("_id").alias(id_col),
         matched.alias("matched"),
         (score_micro.cast("double") / F.lit(1e6)).alias("score"),
-    )
-
-
-def _bm25_scores_exploded(
-    df: DataFrame,
-    terms: list[str],
-    id_col: str,
-    text_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    """Explode path for long queries: only query-term hits reach the
-    exchange (the isin filter sits under the explode's projection), tf
-    aggregates with map-side combine, doc length rides the tf rows so
-    there is no second corpus-wide join, and zero-score docs reattach
-    through a slim (id, dl) relation."""
-    tok = df.select(
-        F.col(id_col).alias("_id"), _tokenize(text_col).alias("_toks")
-    )
-    base = tok.select("_id", F.size("_toks").alias("_dl"), "_toks")
-    dls = base.select("_id", "_dl")
-
-    hits = (
-        base.select("_id", "_dl", F.explode("_toks").alias("_t"))
-        .filter(F.col("_t").isin(terms))
-    )
-    # _dl is functionally dependent on _id; keeping it a group key
-    # carries it through the one exchange instead of re-joining corpus.
-    # tf feeds TWO consumers (dfreq and the scoring join) — without the
-    # persist the whole tokenize → explode → filter → partial-agg
-    # lineage executes once per consumer (the two-consumer trap); the
-    # hit rows are slim (id, dl, term, tf). Same session-lifetime cache
-    # convention as dsir_weights' rc/tc.
-    tf = hits.groupBy("_id", "_dl", "_t").agg(F.count("*").alias("_tf")).persist()
-    dfreq = tf.groupBy("_t").agg(F.count("*").alias("_df"))  # ≤ |terms|
-    glob = base.agg(
-        F.count("*").alias("_N"),
-        F.coalesce(F.sum("_dl"), F.lit(0)).alias("_sdl"),
-    )
-
-    per_doc = (
-        tf.join(F.broadcast(dfreq), "_t")
-        .crossJoin(F.broadcast(glob))
-        .select(
-            "_id",
-            _micro_term(
-                F.col("_tf"),
-                F.col("_dl"),
-                F.col("_df"),
-                F.col("_N"),
-                F.col("_sdl"),
-                k1,
-                b,
-            ).alias("_s"),
-        )
-        .groupBy("_id")
-        .agg(F.count("*").alias("_m"), F.sum("_s").alias("_micro"))
-    )
-    return dls.join(per_doc, "_id", "left").select(
-        F.col("_id").alias(id_col),
-        F.coalesce(F.col("_m"), F.lit(0).cast("long")).alias("matched"),
-        (
-            F.coalesce(F.col("_micro"), F.lit(0).cast("long")).cast("double")
-            / F.lit(1e6)
-        ).alias("score"),
     )
 
 
@@ -332,8 +237,7 @@ def topk_per_group(
 # distinct-term count, never the corpus (the dup_spans bound). The tf
 # relation has two consumers (df + scoring); it is deliberately NOT
 # persisted — corpus-sized, and the narrow re-derivation is cheap (the
-# unigram_logprob rationale; BM25's persisted tf is query-filtered and
-# tiny, a different regime).
+# unigram_logprob rationale).
 #
 # Cross-engine FP stability: the idf is quantized to integer
 # micro-units (round(ln((N+1)/(df+1))·1e6) → BIGINT) and the score is

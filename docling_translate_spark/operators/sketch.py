@@ -56,7 +56,6 @@ __all__ = [
     "bloom_build",
     "bloom_merge",
     "bloom_probe",
-    "bloom_decontaminate",
     "cms_build",
     "cms_merge",
     "cms_estimate",
@@ -177,9 +176,8 @@ def hll_distinct(
 # the Bloom filter answers "have we (maybe) seen THIS one" in constant
 # space — the membership primitive a 10^12-turn pipeline needs wherever
 # the exact seen-set is too big to broadcast but a 128 KB bitmap is
-# not: eval-set n-gram decontamination (``bloom_decontaminate``),
-# crawl-frontier "URL already fetched", snapshot "fingerprint already
-# committed" prechecks ahead of the exact anti-join.
+# not: crawl-frontier "URL already fetched", snapshot "fingerprint
+# already committed" prechecks ahead of the exact anti-join.
 #
 # Same portability constraint as HLL: every position derives from md5
 # nibbles so any engine reproduces the filter bit-for-bit.
@@ -198,8 +196,7 @@ def hll_distinct(
 # - Mergeable: union + bit_or per word (``bloom_merge``) — the same
 #   committed-snapshot recipe as ``hll_merge``.
 # - NO false negatives (an inserted value always probes 1), so a bloom
-#   precheck ahead of an exact join is LOSSLESS for the exact result —
-#   that is the two-tier ``bloom_decontaminate`` contract.
+#   precheck ahead of an exact join is LOSSLESS for the exact result.
 # --------------------------------------------------------------------
 
 BLOOM_BITS = 1 << 20  # m (5 hex nibbles per position, read exactly)
@@ -362,53 +359,6 @@ def bloom_probe(
     drop = [f"_bw{i}" for i in range(k)] + [f"_bm{i}" for i in range(k)]
     drop += [f"_bfm{i}" for i in range(k)]
     return out.drop(*drop)
-
-
-def bloom_decontaminate(
-    df: DataFrame,
-    eval_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    eval_text_col: str = "text",
-    eval_id_col: str = "doc_id",
-    n: int = 8,
-    min_hits: int = 1,
-    k: int = BLOOM_K,
-) -> DataFrame:
-    """Two-tier benchmark decontamination: a Bloom precheck over the
-    eval set's n-gram shingles, then the EXACT
-    :func:`..dedup.decontaminate` inverted-index join over only the
-    candidate docs. Bit-identical output to the exact operator alone
-    (no false negatives ⇒ the precheck is lossless; pytest-pinned).
-
-    When it wins: the exact path's join build side is the eval shingle
-    set — fine while AQE can broadcast it, a real shuffle once the eval
-    suite is tens of GB. The bloom is 128 KB regardless, so tier one is
-    k broadcast joins the training corpus flows through MAP-SIDE ONLY;
-    the only corpus-wide exchange is the candidate-id semi-join on doc
-    ids, and tier two's shuffle carries candidate docs, not the corpus.
-    """
-    from .dedup import decontaminate, shingle_df
-
-    ev_shingles = shingle_df(eval_df, eval_text_col, eval_id_col, n).select(
-        "shingle"
-    )
-    # the probe's k broadcast exchanges each re-plan the filter lineage
-    # (their projections differ, so Spark cannot ReusedExchange them) —
-    # cache the ≤32k-row bitmap so the eval-shingle aggregation runs once
-    flt = bloom_build(ev_shingles, "shingle", (), k).cache()
-    train_shingles = shingle_df(df, text_col, id_col, n)
-    candidate_ids = (
-        bloom_probe(train_shingles, flt, "shingle", (), k)
-        .filter(F.col("bloom_maybe") == 1)
-        .select(F.col("sid").alias(id_col))
-        .distinct()
-    )
-    candidates = df.join(candidate_ids, id_col, "left_semi")
-    return decontaminate(
-        candidates, eval_df, text_col, id_col, eval_text_col, eval_id_col,
-        n=n, min_hits=min_hits,
-    )
 
 
 # --------------------------------------------------------------------

@@ -1,8 +1,7 @@
 """Portable Bloom filter: from-spec bit parity against a pure-Python
 replay of the md5-slice formula, the no-false-negatives contract,
 false-positive-rate envelope, merge = direct, NULL conventions, group
-keys, two-tier decontamination losslessness, and the zero-shuffle
-probe plan pin."""
+keys, and the zero-shuffle probe plan pin."""
 
 import contextlib
 import hashlib
@@ -17,7 +16,6 @@ from docling_translate_spark.operators.sketch import (
     BLOOM_K,
     BLOOM_WORD_BITS,
     bloom_build,
-    bloom_decontaminate,
     bloom_merge,
     bloom_probe,
 )
@@ -157,35 +155,6 @@ def test_k_mismatch_rejected_and_merge_guard(spark):
     with pytest.raises(ValueError, match="built with k=4"):
         bloom_probe(df, merged, "v", k=2)
     assert bloom_probe(df, merged, "v", k=4).count() == 2
-
-
-def test_bloom_decontaminate_equals_exact(spark):
-    from docling_translate_spark.operators.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"shared question {i % 7} with trailing words number {i} "
-                f"padding tokens so eight grams exist here today again")
-            for i in range(60)
-        ],
-        "doc_id long, text string",
-    )
-    ev = spark.createDataFrame(
-        [
-            (100 + j, f"shared question {j} with trailing words number {j} "
-                      f"padding tokens so eight grams exist here today again")
-            for j in range(3)
-        ],
-        "doc_id long, text string",
-    )
-    exact = sorted(
-        tuple(r) for r in decontaminate(docs, ev, n=8).collect()
-    )
-    two_tier = sorted(
-        tuple(r) for r in bloom_decontaminate(docs, ev, n=8).collect()
-    )
-    assert two_tier == exact
-    assert len(exact) > 0  # the fixture really contaminates
 
 
 def test_probe_plan_is_map_side_only(spark):

@@ -1,6 +1,7 @@
 """Incremental snapshot dedup: within-batch exact, exact-vs-snapshot,
-cross-corpus near-dup, hash-only snapshot path, committed-index path,
-determinism."""
+cross-corpus near-dup against a committed index, equality with a
+from-scratch recompute over the raw snapshot, index maintenance and
+persistence, determinism."""
 
 import pytest
 
@@ -9,8 +10,10 @@ from pyspark.sql import functions as F
 from docling_translate_spark.operators.dedup import (
     build_ingest_index,
     dedup_incremental,
+    informative_shingles,
     load_ingest_index,
     save_ingest_index,
+    shingle_df,
     updated_ingest_index,
 )
 
@@ -40,7 +43,10 @@ def corpora(spark):
 
 def test_three_stages(spark, corpora):
     batch, seen = corpora
-    got = {r["doc_id"] for r in dedup_incremental(batch, seen).collect()}
+    got = {
+        r["doc_id"]
+        for r in dedup_incremental(batch, build_ingest_index(seen)).collect()
+    }
     assert got == {10, 14}
 
 
@@ -48,7 +54,9 @@ def test_near_dup_off_keeps_near_dups(spark, corpora):
     batch, seen = corpora
     got = {
         r["doc_id"]
-        for r in dedup_incremental(batch, seen, near_dup=False).collect()
+        for r in dedup_incremental(
+            batch, build_ingest_index(seen), near_dup=False
+        ).collect()
     }
     assert got == {10, 13, 14}
 
@@ -58,21 +66,11 @@ def test_threshold_controls_near_dup(spark, corpora):
     # j(13 vs 1) = 6/7 ≈ 0.857: admitted above it, dropped below it
     got = {
         r["doc_id"]
-        for r in dedup_incremental(batch, seen, threshold=0.9).collect()
+        for r in dedup_incremental(
+            batch, build_ingest_index(seen), threshold=0.9
+        ).collect()
     }
     assert 13 in got
-
-
-def test_hash_only_snapshot(spark, corpora):
-    batch, seen = corpora
-    hashes = seen.select(F.md5("text").alias("text_hash"))
-    got = {
-        r["doc_id"]
-        for r in dedup_incremental(batch, hashes, near_dup=False).collect()
-    }
-    assert got == {10, 13, 14}
-    with pytest.raises(ValueError, match="hash-only"):
-        dedup_incremental(batch, hashes, near_dup=True)
 
 
 def test_null_text_rows_never_admitted(spark, corpora):
@@ -83,7 +81,10 @@ def test_null_text_rows_never_admitted(spark, corpora):
     batch = spark.createDataFrame(
         [(20, None), (21, FRESH_TXT)], "doc_id long, text string"
     )
-    got = {r["doc_id"] for r in dedup_incremental(batch, seen).collect()}
+    got = {
+        r["doc_id"]
+        for r in dedup_incremental(batch, build_ingest_index(seen)).collect()
+    }
     assert got == {21}
 
 
@@ -97,7 +98,7 @@ def test_plan_no_python_no_window(spark, corpora):
     batch, seen = corpora
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        dedup_incremental(batch, seen).explain("formatted")
+        dedup_incremental(batch, build_ingest_index(seen)).explain("formatted")
     plan = buf.getvalue()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Window" not in plan
@@ -106,7 +107,7 @@ def test_plan_no_python_no_window(spark, corpora):
 def _gate_shaped(spark):
     """The gate query's four-branch construction over real sf0.001 docs:
     word-salad corpus, 4-gram shingles, stop cap 20 — hot shingles exist,
-    so the cap (and its batch-induced flips) is actually exercised."""
+    so the cap is actually exercised (no shingle flips over it)."""
     d = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select("doc_id", "text")
@@ -130,75 +131,156 @@ def _gate_shaped(spark):
     return batch, seen
 
 
+def _recompute_admitted(batch, seen, n, max_bucket, threshold):
+    """Reference: the three stages recomputed from the raw snapshot
+    ``seen`` on every call (snapshot shingles, combined frequencies and
+    snapshot sizes aggregated afresh) — what the committed index saves
+    an ingest from doing."""
+    text_col, id_col = "text", "doc_id"
+    fp = F.md5(F.col(text_col))
+    b = batch.withColumn("_fp", fp)
+
+    # stage 1: within-batch exact (arg-min groupBy, NOT a window)
+    winners = b.groupBy("_fp").agg(F.min(id_col).alias(id_col))
+    b = b.join(winners, ["_fp", id_col], "left_semi")
+
+    # stage 2: exact vs snapshot (slim hash column, anti-join)
+    seen_fp = seen.select(fp.alias("_fp"))
+    b = b.join(seen_fp, "_fp", "left_anti")
+
+    # stage 3: b feeds TWO consumers (shingle build + final anti-join
+    # probe): persist, or the upstream lineage runs once per consumer
+    b = b.persist()
+    bs = shingle_df(b, text_col, id_col, n).cache()
+    ss = shingle_df(seen, text_col, id_col, n).cache()
+    # combined document frequency -> one stop-shingle set for BOTH
+    # sides (consistent filtering, same argument as
+    # ngram_jaccard_pairs' docstring)
+    freq = (
+        bs.select("shingle")
+        .unionAll(ss.select("shingle"))
+        .groupBy("shingle")
+        .agg(F.count("*").alias("df_"))
+    )
+    ok = freq.filter(F.col("df_") <= max_bucket).select("shingle")
+    rare_b, bsz = informative_shingles(bs, ok)
+    rare_s, ssz = informative_shingles(ss, ok)
+    pairs = (
+        rare_b.select(F.col("sid").alias("_bid"), "shingle")
+        .join(rare_s.select(F.col("sid").alias("_sid"), "shingle"), "shingle")
+        .groupBy("_bid", "_sid")
+        .agg(F.count("*").alias("nc"))
+    )
+    flagged = (
+        pairs.join(
+            bsz.select(F.col("sid").alias("_bid"), F.col("rsz").alias("bsz")),
+            "_bid",
+        )
+        .join(
+            ssz.select(F.col("sid").alias("_sid"), F.col("rsz").alias("ssz")),
+            "_sid",
+        )
+        .filter(
+            F.col("nc") / (F.col("bsz") + F.col("ssz") - F.col("nc"))
+            >= threshold
+        )
+        .select(F.col("_bid").alias(id_col))
+    )
+    b = b.join(flagged, id_col, "left_anti")
+    return b.drop("_fp")
+
+
+def _flip_shaped(spark):
+    """3-gram shingles, stop cap 2, threshold 0.6. Batch doc 11 pushes
+    'd e f' (snapshot df 2) over the cap, so snapshot doc 1's
+    informative size drops from 4 to 3 and batch doc 10 reaches
+    Jaccard 2/3 against it (1/2 without the flip): 10 is rejected,
+    11 admitted."""
+    seen = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "d e f g")], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [(10, "a b c d"), (11, "x d e f")], "doc_id long, text string"
+    )
+    return batch, seen
+
+
 def test_index_fed_equals_recompute(spark, corpora):
-    """The committed-index path must admit EXACTLY the rows the
-    recompute path admits — on the small fixture and on gate-shaped
-    real docs with a live stop cap (batch-induced cap flips included)."""
+    """The committed-index path must admit EXACTLY the rows a
+    from-scratch recompute over the raw snapshot admits — on the small
+    fixture, on gate-shaped real docs with a live stop cap, and on a
+    batch that flips a snapshot shingle over the cap."""
     batch, seen = corpora
-    idx = build_ingest_index(seen)
-    a = sorted(r["doc_id"] for r in dedup_incremental(batch, seen).collect())
+    a = sorted(
+        r["doc_id"]
+        for r in _recompute_admitted(batch, seen, 3, 1000, 0.8).collect()
+    )
     b = sorted(
         r["doc_id"]
-        for r in dedup_incremental(batch, seen_index=idx).collect()
+        for r in dedup_incremental(batch, build_ingest_index(seen)).collect()
     )
     assert a == b == [10, 14]
 
     gb, gs = _gate_shaped(spark)
     gidx = build_ingest_index(gs, n=4, max_bucket=20)
     ra = sorted(
-        r["doc_id"]
-        for r in dedup_incremental(
-            gb, gs, n=4, threshold=0.3, max_bucket=20
-        ).collect()
+        r["doc_id"] for r in _recompute_admitted(gb, gs, 4, 20, 0.3).collect()
     )
     rb = sorted(
         r["doc_id"]
-        for r in dedup_incremental(
-            gb, seen_index=gidx, n=4, threshold=0.3, max_bucket=20
-        ).collect()
+        for r in dedup_incremental(gb, gidx, threshold=0.3).collect()
     )
     assert ra == rb and len(ra) > 0
+
+    fb, fs = _flip_shaped(spark)
+    fa = sorted(
+        r["doc_id"] for r in _recompute_admitted(fb, fs, 3, 2, 0.6).collect()
+    )
+    fi = sorted(
+        r["doc_id"]
+        for r in dedup_incremental(
+            fb, build_ingest_index(fs, n=3, max_bucket=2), threshold=0.6
+        ).collect()
+    )
+    assert fa == fi == [11]
 
 
 def test_updated_index_equals_rebuild(spark):
     """updated_ingest_index(idx, admitted) ≡ build_ingest_index(seen ∪
     admitted) on every table — the per-commit maintenance recipe is
     exact, including sizes adjustments from commit-induced cap flips."""
-    gb, gs = _gate_shaped(spark)
-    idx = build_ingest_index(gs, n=4, max_bucket=20)
-    admitted = dedup_incremental(
-        gb, seen_index=idx, n=4, threshold=0.3, max_bucket=20
-    )
-    upd = updated_ingest_index(idx, admitted)
-    rebuilt = build_ingest_index(
-        gs.unionByName(admitted.select("doc_id", "text")),
-        n=4,
-        max_bucket=20,
-    )
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    assert rows(upd.hashes) == rows(rebuilt.hashes)
-    assert rows(upd.shingles) == rows(rebuilt.shingles)
-    assert rows(upd.freq) == rows(rebuilt.freq)
-    assert rows(upd.sizes) == rows(rebuilt.sizes)
+    for (gb, gs), n, cap, threshold in (
+        (_gate_shaped(spark), 4, 20, 0.3),
+        (_flip_shaped(spark), 3, 2, 0.6),
+    ):
+        idx = build_ingest_index(gs, n=n, max_bucket=cap)
+        admitted = dedup_incremental(gb, idx, threshold=threshold)
+        upd = updated_ingest_index(idx, admitted)
+        rebuilt = build_ingest_index(
+            gs.unionByName(admitted.select("doc_id", "text")),
+            n=n,
+            max_bucket=cap,
+        )
+        assert rows(upd.hashes) == rows(rebuilt.hashes)
+        assert rows(upd.shingles) == rows(rebuilt.shingles)
+        assert rows(upd.freq) == rows(rebuilt.freq)
+        assert rows(upd.sizes) == rows(rebuilt.sizes)
 
 
 def test_index_roundtrip_and_param_guard(spark, corpora, tmp_path):
+    """The shingle order and stop cap travel with the saved index — the
+    probe reads them from there, never from its caller."""
     batch, seen = corpora
     idx = build_ingest_index(seen, n=3, max_bucket=1000)
     save_ingest_index(idx, str(tmp_path / "idx"))
     loaded = load_ingest_index(spark, str(tmp_path / "idx"))
-    got = {
-        r["doc_id"]
-        for r in dedup_incremental(batch, seen_index=loaded).collect()
-    }
+    assert (loaded.n, loaded.max_bucket) == (3, 1000)
+    got = {r["doc_id"] for r in dedup_incremental(batch, loaded).collect()}
     assert got == {10, 14}
-    with pytest.raises(ValueError, match="committed under"):
-        dedup_incremental(batch, seen_index=loaded, n=4)
-    with pytest.raises(ValueError, match="snapshot"):
-        dedup_incremental(batch)
 
 
 def test_steady_state_commit_to_same_path(spark, corpora, tmp_path):
@@ -213,7 +295,7 @@ def test_steady_state_commit_to_same_path(spark, corpora, tmp_path):
     save_ingest_index(build_ingest_index(seen, n=3, max_bucket=1000), p)
 
     loaded = load_ingest_index(spark, p)
-    admitted = dedup_incremental(batch, seen_index=loaded)
+    admitted = dedup_incremental(batch, loaded)
     save_ingest_index(updated_ingest_index(loaded, admitted), p)
 
     reloaded = load_ingest_index(spark, p)
@@ -240,14 +322,17 @@ def test_lost_marker_never_clobbers_snapshots(spark, corpora, tmp_path):
     during the marker's own non-atomic overwrite, transient store
     error) must NOT make the next save restart at v0 and overwrite the
     oldest snapshot — the version comes from the directory scan. Load
-    refuses the legacy-flat fallback loudly in that state instead of
-    failing confusingly on a missing meta table."""
+    refuses loudly in that state rather than guess a snapshot, and a
+    path with no marker and no snapshots is reported as holding no
+    index."""
     import shutil
 
     import pytest
 
     _, seen = corpora
     p = str(tmp_path / "idx")
+    with pytest.raises(FileNotFoundError, match="no ingest index"):
+        load_ingest_index(spark, p)
     save_ingest_index(build_ingest_index(seen, n=3, max_bucket=1000), p)
     save_ingest_index(load_ingest_index(spark, p), p)  # v0 and v1
 
@@ -266,17 +351,18 @@ def test_lost_marker_never_clobbers_snapshots(spark, corpora, tmp_path):
 def test_columns_pass_through_and_deterministic(spark, corpora):
     batch, seen = corpora
     wide = batch.withColumn("extra", F.col("doc_id") * 2)
-    a = sorted(map(tuple, dedup_incremental(wide, seen).collect()))
+    idx = build_ingest_index(seen)
+    a = sorted(map(tuple, dedup_incremental(wide, idx).collect()))
     b = sorted(
         map(
             tuple,
             dedup_incremental(
-                wide.repartition(7), seen.repartition(3)
+                wide.repartition(7), build_ingest_index(seen.repartition(3))
             ).collect(),
         )
     )
     assert a == b
-    assert {c for c in dedup_incremental(wide, seen).columns} == {
+    assert {c for c in dedup_incremental(wide, idx).columns} == {
         "doc_id",
         "text",
         "extra",

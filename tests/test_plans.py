@@ -268,11 +268,11 @@ def test_unigram_logprob_stays_jvm_side(spark):
 
 
 def test_bm25_zero_shuffle_scoring(spark):
-    """BM25's short-query path: term frequencies are row-local array
-    reductions (no explode), corpus stats reduce to ONE broadcast row,
-    and the cut is a TakeOrdered — the only exchange in the whole plan
-    is the single-row stats aggregation. No shuffle joins, no Python,
-    no Window, no Generate (explode)."""
+    """BM25: term frequencies are row-local array reductions (no
+    explode), corpus stats reduce to ONE broadcast row, and the cut is
+    a TakeOrdered — the only exchange in the whole plan is the
+    single-row stats aggregation. No shuffle joins, no Python, no
+    Window, no Generate (explode)."""
     from docling_translate_spark.operators.retrieval import bm25_topk
 
     df = spark.createDataFrame(
@@ -290,42 +290,6 @@ def test_bm25_zero_shuffle_scoring(spark):
     # (Exchange SinglePartition); corpus rows are never repartitioned
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan
-
-
-def test_bm25_exploded_filters_before_exchange(spark):
-    """Long-query BM25: the vocabulary filter must sit BELOW the tf
-    exchange so only query-term hits shuffle (the token stream never
-    does), and the whole path stays JVM-side."""
-    from docling_translate_spark.operators.retrieval import bm25_topk
-
-    df = spark.createDataFrame(
-        [(i, f"spark window alpha {i}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    plan = _plan(bm25_topk(df, "spark window", 5, exploded=True))
-    assert "Generate" in plan  # the explode
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Window" not in plan
-    # map-side combine under the tf exchange
-    assert "partial_count" in plan, plan
-    # POSITIONAL check: formatted-mode node ids increase leaf → root,
-    # so the vocabulary Filter (condition `_t IN (...)`) sitting below
-    # the `_t`-keyed hashpartitioning Exchange means filter_id <
-    # exchange_id. If a refactor lifts the filter above the exchange,
-    # the whole token stream shuffles and this fails.
-    parts = re.split(r"\n\((\d+)\) ", plan)
-    vocab_filters, t_exchanges = [], []
-    for node_id, body in zip(parts[1::2], parts[2::2]):
-        head = body.split("\n", 1)[0]
-        if head.startswith("Filter") and "_t" in body and " IN " in body:
-            vocab_filters.append(int(node_id))
-        if head.startswith("Exchange") and "hashpartitioning" in body \
-                and "_t" in body:
-            t_exchanges.append(int(node_id))
-    assert vocab_filters and t_exchanges, plan
-    # the deepest `_t`-keyed exchange (the tf shuffle) must have a
-    # vocab filter below it; a lifted filter would number above it
-    assert min(vocab_filters) < min(t_exchanges), plan
 
 
 def test_dsir_ratio_broadcasts_and_stays_jvm(spark):

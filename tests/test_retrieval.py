@@ -109,21 +109,8 @@ def test_bm25_input_validation(spark):
         bm25_topk(_df(spark), "   ", 5)
 
 
-def test_bm25_exploded_path_bit_identical(spark):
-    q = "spark window hash stream quick"
-    fast = bm25_topk(_df(spark), q, 8, exploded=False).collect()
-    slow = bm25_topk(_df(spark), q, 8, exploded=True).collect()
-    assert [(r.doc_id, r.matched, r.score) for r in fast] == [
-        (r.doc_id, r.matched, r.score) for r in slow
-    ]
-    # both equal the from-spec reference too
-    assert [(r.doc_id, r.matched, r.score) for r in slow] == _ref_bm25(
-        ROWS, q, 8
-    )
-
-
-def test_bm25_long_query_auto_dispatches_exploded(spark):
-    # 33 distinct terms (> MAX_FAST_TERMS) — four real, the rest absent
+def test_bm25_long_query_matches_reference(spark):
+    # 33 distinct terms — four real, the rest absent
     q = "spark window hash stream " + " ".join(f"zz{i}" for i in range(29))
     got = bm25_topk(_df(spark), q, 8).collect()
     assert [(r.doc_id, r.matched, r.score) for r in got] == _ref_bm25(
@@ -131,10 +118,22 @@ def test_bm25_long_query_auto_dispatches_exploded(spark):
     )
 
 
-def test_bm25_exploded_all_empty_corpus(spark):
-    rows = [(1, ""), (2, None)]
-    got = bm25_topk(_df(spark, rows), "spark", 2, exploded=True).collect()
-    assert [(r.doc_id, r.matched, r.score) for r in got] == [
-        (1, 0, 0.0),
-        (2, 0, 0.0),
-    ]
+def test_bm25_same_rows_at_any_partitioning(spark):
+    # four texts, six docs each, ids interleaved so no partition holds
+    # an id-ordered run: every score is shared by six docs and k = 9
+    # cuts inside the second tie group, where only the id breaks ties
+    texts = ["spark window", "spark", "window hash", "hash"]
+    rows = [((i * 7) % 24, texts[i % 4]) for i in range(24)]
+    q, k = "spark window", 9
+    full = _ref_bm25(rows, q, len(rows))
+    assert full[k - 1][2] == full[k][2]  # the cut really splits a tie
+
+    df = _df(spark, rows)
+    got1, got7 = (
+        [
+            (r.doc_id, r.matched, r.score)
+            for r in bm25_topk(df.repartition(p), q, k).collect()
+        ]
+        for p in (1, 7)
+    )
+    assert got1 == got7 == full[:k]

@@ -148,7 +148,10 @@ def test_stream_ingest_dedup(spark, transcript_dir):
 
     from pyspark.sql import functions as F
 
-    from docling_translate_spark.operators.dedup import dedup_incremental
+    from docling_translate_spark.operators.dedup import (
+        build_ingest_index,
+        dedup_incremental,
+    )
     from docling_translate_spark.streaming.extract_stream import (
         stream_ingest_dedup,
     )
@@ -190,7 +193,9 @@ def test_stream_ingest_dedup(spark, transcript_dir):
     )
     batch_admitted = sorted(
         r["text"]
-        for r in dedup_incremental(b, seen, near_dup=False).collect()
+        for r in dedup_incremental(
+            b, build_ingest_index(seen), near_dup=False
+        ).collect()
     )
     assert batch_admitted == got
 

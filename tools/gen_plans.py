@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 import tempfile
 from pathlib import Path
@@ -18,7 +19,9 @@ def main() -> None:
     from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
     from docling_translate_spark.synth import gen_rows
 
-    spark = build_session(master="local[4]")
+    # half the host's cores: local[N] keeps about 2N threads runnable
+    n = max(1, len(os.sched_getaffinity(0)) // 2)
+    spark = build_session(master=f"local[{n}]")
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp()
     spark.createDataFrame(gen_rows(10, 4), TRANSCRIPT_SCHEMA).write.mode(
@@ -88,16 +91,19 @@ def main() -> None:
     dom = plan(dom_tokenize(docs.selectExpr("doc_id", "text")))
 
     from docling_translate_spark.operators.classifier import nb_classify
-    from docling_translate_spark.operators.dedup import dedup_incremental
+    from docling_translate_spark.operators.dedup import (
+        build_ingest_index,
+        dedup_incremental,
+    )
     from docling_translate_spark.operators.metrics import corpus_profile
 
     incr = plan(
         dedup_incremental(
             docs.filter(F.col("doc_id") % 3 != 0),
-            docs.filter(F.col("doc_id") % 3 == 0),
-            n=4,
+            build_ingest_index(
+                docs.filter(F.col("doc_id") % 3 == 0), n=4, max_bucket=20
+            ),
             threshold=0.3,
-            max_bucket=20,
         )
     )
 
@@ -395,9 +401,9 @@ any parallelism. No Python, no Window.
 
 ## BM25 top-k retrieval (`bm25_topk`)
 
-Short-query fast path: per-term frequencies are row-local array
-reductions inside one projection (no `Generate`, no per-token
-shuffle); the corpus statistics row (N, Σdl, per-term df) is the only
+Per-term frequencies are row-local array reductions inside one
+projection (no `Generate`, no per-token shuffle); the corpus
+statistics row (N, Σdl, per-term df) is the only
 exchange (`Exchange SinglePartition` under a partial aggregate) and
 re-attaches as a broadcast; the cut is `TakeOrderedAndProject` — each
 task keeps k rows. Corpus rows are never hash/range-repartitioned
@@ -441,13 +447,18 @@ parallelism = scan partitions. The flat view adds only a narrow
 The continuous-crawl ingest gate. Stage 1's within-batch exact dedup is
 the arg-min `groupBy + semi-join` (`partial_min` below the exchange —
 a viral duplicate collapses per map task, never a hot-key window);
-stage 2 is a left-anti equi-join against the snapshot's slim hash
-column (anti-joins never fan out, so no corpus-wide distinct); stage
-3's cross-corpus Jaccard reuses the inverted shingle index with the
-stop-shingle cap on the COMBINED document frequency, and every
-two-consumer intermediate (batch survivors, both shingle relations,
-both rare relations) reads an `InMemoryRelation` — at snapshot scale
-these are the committed index tables the same aggregates maintain.
+stage 2 is a left-anti equi-join against the committed index's slim
+hash column (anti-joins never fan out, so no corpus-wide distinct);
+stage 3's cross-corpus Jaccard probes the committed inverted shingle
+index with the stop-shingle cap on the COMBINED document frequency
+(the batch's shingles joined to the committed `freq`), and seen-side
+sizes are the committed `sizes` minus a flip-adjustment join. Only
+batch-scale relations aggregate; every two-consumer intermediate
+(batch survivors, batch shingles, combined frequencies, rare batch
+shingles) reads an `InMemoryRelation`. Here the index is built in the
+same plan from the `doc_id % 3 == 0` snapshot, so its build aggregates
+appear below the probe joins; a committed index reads them from
+parquet instead.
 
 ```
 {incr}
