@@ -12,8 +12,8 @@ re-expressed Spark-first over transcript tables:
   ``src/html_generator.py:20-45``),
 * sentence tokenization, exact dedup of unique texts
   (reference ``src/core.py:453-455``), a deterministic batched map
-  (the "translate" stage, reference ``src/translation/base.py``), and an
-  exact-text lookup back with identity fallback (reference
+  (the "translate" stage, reference ``src/translation/base.py``), and a
+  join back by each unique text's first-seen index (reference
   ``src/core.py:486``, ``src/html_generator.py:565-567``),
 * per-turn reassembly in stable ``(conv_id, turn_idx)`` reading order
   (reference ``src/core.py:422``).

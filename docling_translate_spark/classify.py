@@ -76,9 +76,10 @@ def is_boilerplate_line(line: str) -> bool:
 
 
 # every BOILERPLATE_LINE_REGEX alternative starts (after ^\s*) with one of
-# these characters — an exact necessary condition, so checking the first
-# non-whitespace character rejects ordinary prose without splitting lines
-# (this predicate runs once per segment in the fused kernel's hot loop)
+# these characters or a decimal digit (``\d`` matches exactly the 660 code
+# points where str.isdecimal() holds) — an exact necessary condition, so the
+# first non-whitespace character rejects ordinary prose without splitting
+# lines (this predicate runs once per segment in the fused kernel's hot loop)
 _BOILER_LEAD = frozenset("0123456789Pp-=_*©(CA")
 
 
@@ -87,7 +88,7 @@ def is_boilerplate_segment(text: str) -> bool:
     if not text:
         return False
     lead = text.lstrip()
-    if not lead or lead[0] not in _BOILER_LEAD:
+    if not lead or not (lead[0] in _BOILER_LEAD or lead[0].isdecimal()):
         return False
     for ln in text.split("\n"):
         if not ln.strip():

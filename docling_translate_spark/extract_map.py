@@ -8,57 +8,51 @@ batched path, chunking 16 sentences per inference call,
 ``src/translation/engines/nllb.py:103-200``).
 
 Here the map must be deterministic (no network, no models), so the engines
-are pure vectorized ``pd.Series -> pd.Series`` transforms. The pipeline
-applies the selected engine to the **deduplicated** unique-text set and
-broadcast-joins results back (reference ``src/core.py:453-486``) — the
-Arrow batch IS the reference's chunk.
+are pure list transforms: any iterable of texts in, a list of strings out,
+same length and order. The kernel maps each Arrow batch's **deduplicated**
+texts in one call and joins results back by first-seen index (reference
+``src/core.py:453-486``) — the Arrow batch IS the reference's chunk.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, Dict
+from typing import Callable, Dict, Sequence
 
-import pandas as pd
-
-MapEngine = Callable[[pd.Series], pd.Series]
+MapEngine = Callable[[Sequence[str | None]], list[str]]
 
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
 
-def identity_map(texts: pd.Series) -> pd.Series:
+def identity_map(texts: Sequence[str | None]) -> list[str]:
     """Pass-through — per-turn output text equals the source text, which is
     what makes fixtures byte-for-byte reproducible (north rule)."""
     return texts
 
 
-def normalize_map(texts: pd.Series) -> pd.Series:
+def normalize_map(texts: Sequence[str | None]) -> list[str]:
     """Control-char strip, then whitespace-run collapse + trim; a missing
     text maps to ``""``.
 
     One pass per text: ``str.split()`` breaks on exactly the code points
     that ``re``'s ``\\s`` and ``str.strip()`` treat as whitespace (all
     three use ``Py_UNICODE_ISSPACE``), so ``" ".join(t.split())`` equals
-    ``re.sub(r"\\s+", " ", t).strip()`` and saves two pandas passes."""
+    ``re.sub(r"\\s+", " ", t).strip()``."""
     sub = _CTRL_RE.sub
-    return pd.Series(
-        [" ".join(sub("", t).split()) if isinstance(t, str) else "" for t in texts],
-        index=texts.index,
-        dtype=object,
-    )
+    return [" ".join(sub("", t).split()) if isinstance(t, str) else "" for t in texts]
 
 
-def marker_map(texts: pd.Series) -> pd.Series:
+def marker_map(texts: Sequence[str | None]) -> list[str]:
     """Test engine: tags each unique text, so join-back multiplicity and
     ordering are observable in fixtures (maps s -> '<<s>>')."""
-    return "<<" + texts.fillna("") + ">>"
+    return [f"<<{t if isinstance(t, str) else ''}>>" for t in texts]
 
 
-def truncate512_map(texts: pd.Series) -> pd.Series:
+def truncate512_map(texts: Sequence[str | None]) -> list[str]:
     """Length-capped map — the reference's tokenizer truncation analog
     (``truncation=True, max_length=512``, engines/nllb.py:139), applied
     at the character level since this engine is model-free."""
-    return texts.fillna("").str.slice(0, 512)
+    return [t[:512] if isinstance(t, str) else "" for t in texts]
 
 
 ENGINES: Dict[str, MapEngine] = {

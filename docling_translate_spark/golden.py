@@ -26,8 +26,6 @@ from docling_translate_spark.extract_map import create_engine
 from docling_translate_spark.operators.extract import CONTENT_JOINER
 from docling_translate_spark.segmenters import segment_text
 
-import pandas as pd
-
 
 def classify_span(text: str, translatable: bool, seg_type: str) -> Tuple[str, bool]:
     """Final (segment_type, translatable) after formula/boilerplate rules."""
@@ -73,16 +71,13 @@ def extract_turn(
                     # sentence-level map + ' ' rejoin (ref core.py:428,
                     # html_generator.py:571-572)
                     content.append(
-                        " ".join(
-                            fn(pd.Series([s])).iloc[0]
-                            for s in split_sentences(seg_text)
-                        )
+                        " ".join(fn([s])[0] for s in split_sentences(seg_text))
                     )
                 else:
-                    content.append(fn(pd.Series([seg_text])).iloc[0])
+                    content.append(fn([seg_text])[0])
     for seg_type, aux_text in aux_span_texts(caption, cells, headers):
         spans.append((-1, -1, seg_type, True, -1))
-        content.append(fn(pd.Series([aux_text])).iloc[0])
+        content.append(fn([aux_text])[0])
     return {
         "extracted_text": CONTENT_JOINER.join(content),
         "spans": spans,

@@ -10,12 +10,13 @@ re-planned for Spark as ONE ``mapInArrow`` pass per Arrow batch:
                                         ``list(set(all_sentences))``,
                                         ``src/core.py:453-455`` — scoped
                                         per Arrow batch)
-4. apply the deterministic map engine  (one vectorized call per batch —
-                                        the "translate" stage,
+4. apply the deterministic map engine  (one list-in/list-out call per
+                                        batch — the "translate" stage,
                                         ``src/translation/base.py:38-97``)
-5. join results back by exact text with identity fallback
-   (``src/core.py:486``, ``src/html_generator.py:565-567``, ``:692``) —
-   an in-batch dict probe
+5. join results back by first-seen index (``src/core.py:486``,
+   ``src/html_generator.py:565-567``, ``:692``): every unique text is
+   mapped, so the reference's identity fallback cannot apply, and a short
+   engine result raises ``IndexError`` rather than emitting source text
 6. reassemble per turn in span order   (spans of a turn are born
                                         colocated, so nothing moves);
    empty/binary turns keep one output row with no spans, preserving
@@ -38,8 +39,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from typing import Iterator, Sequence
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -121,7 +120,9 @@ def extract_turns_fused(
             starts, ends, seg_types, trans, lines = [], [], [], [], []
             offsets = [0]
             n_spans, ratios, content_lists = [], [], []
-            uniq: dict[str, None] = {}
+            # unique content text -> first-seen index into the map input
+            uniq: dict[str, int] = {}
+            index_of = uniq.setdefault
             for text, tool, cap, cel, hdr in zip(
                 col("text"), col("tool"), col("caption"), col("cells"), col("headers")
             ):
@@ -146,12 +147,9 @@ def extract_turns_fused(
                             if sentence_split:
                                 # sentence-level map units (core.py:428)
                                 sents = split_sentences(seg_text)
-                                contents.append(sents)
-                                for sent in sents:
-                                    uniq[sent] = None
+                                contents.append([index_of(s, len(uniq)) for s in sents])
                             else:
-                                contents.append(seg_text)
-                                uniq[seg_text] = None
+                                contents.append(index_of(seg_text, len(uniq)))
                 # §2.8 UNION ALL of span sources: caption + table cells +
                 # headers, pooled WHOLE — no sentence split, no
                 # formula/boilerplate pass (src/core.py:429-448)
@@ -161,30 +159,28 @@ def extract_turns_fused(
                     seg_types.append(st)
                     trans.append(True)
                     lines.append(-1)
-                    contents.append([aux_text] if sentence_split else aux_text)
-                    uniq[aux_text] = None
+                    i = index_of(aux_text, len(uniq))
+                    contents.append([i] if sentence_split else i)
                 ns = len(starts) - offsets[-1]
                 offsets.append(len(starts))
                 n_spans.append(ns)
                 ratios.append(n_boiler / ns if ns else 0.0)
                 content_lists.append(contents)
 
-            # batch-scoped dedup + one vectorized map call (the reference's
+            # batch-scoped dedup + one map call (the reference's
             # unique-sentence translate pass, core.py:453-486)
-            keys = pd.Series(list(uniq), dtype="object")
-            mapped = fn(keys) if len(keys) else keys
-            lookup = dict(zip(keys, mapped))
+            mapped = fn(list(uniq))
 
             if sentence_split:
                 extracted = [
                     CONTENT_JOINER.join(
-                        " ".join(lookup.get(s, s) for s in sents) for sents in cl
+                        " ".join([mapped[i] for i in sents]) for sents in cl
                     )
                     for cl in content_lists
                 ]
             else:
                 extracted = [
-                    CONTENT_JOINER.join(lookup.get(c, c) for c in cl)
+                    CONTENT_JOINER.join([mapped[i] for i in cl])
                     for cl in content_lists
                 ]
             span_values = pa.StructArray.from_arrays(

@@ -34,6 +34,16 @@ session's first 2-row ``mapInArrow`` job fell from 1.69-2.01 s to
 PySpark's own ``SparkContext.stop()`` of the session before it: it took
 0.97-1.0 s, of which shutting down the accumulator server took
 0.84-0.96 s. That is PySpark's code, which the package does not control.
+
+Every Python job still pays a fixed cost. On ``local[2]`` (median of 30
+warm runs, two sessions) a 2-row ``mapInArrow`` job took 78-92 ms against
+25-35 ms with no Python, 41-42 ms of it the worker's wait for its first
+Arrow batch. ``spark.python.unix.domain.socket.enabled=true`` removed that
+wait (job 35-40 ms), but over 4 alternated session pairs it gave no
+consistent gain on the benchmark's jobs (``extract_fused`` 0.92-1.27x and
+``extract_sentences`` 0.95-0.99x TCP's job time), so the session keeps
+TCP. The cost lands on many-small-job flows (curation's ~40 jobs, the
+checkpoint job's 3.25 per unit), which no timed workload covers yet.
 """
 
 from __future__ import annotations

@@ -139,9 +139,9 @@ def test_boiler_lead_set_covers_every_alternative():
 
 
 def test_boiler_segment_equals_per_line_verdict():
-    """For any single-line text, the segment classifier (with its lead
-    precheck) must agree with the plain line regex — the precheck is an
-    optimization, never a semantic."""
+    """For any text, the segment classifier (with its lead precheck) must
+    agree with the plain line regex applied to each non-blank line — the
+    precheck is an optimization, never a semantic."""
     from docling_translate_spark.classify import (
         is_boilerplate_line,
         is_boilerplate_segment,
@@ -152,6 +152,10 @@ def test_boiler_segment_equals_per_line_verdict():
         " - ", "--", "---", "(c)", "(d) 2024", "c 2024",
         "CONFIDENTIAL", "Confidential", "All rights reserved!",
         "normal prose", "Copyrighted material is long",
+        # non-ASCII decimal digits: \d matches every Unicode Nd digit
+        "٣", "３", " ٣٤ ", "٣\n---",
     ]
     for s in probes:
-        assert is_boilerplate_segment(s) == bool(is_boilerplate_line(s)), s
+        lines = [ln for ln in s.split("\n") if ln.strip()]
+        verdict = bool(lines) and all(is_boilerplate_line(ln) for ln in lines)
+        assert is_boilerplate_segment(s) == verdict, s

@@ -2,11 +2,13 @@
 
 import random
 import re
+import subprocess
 import sys
+from pathlib import Path
 
 import pandas as pd
 
-from docling_translate_spark.extract_map import create_engine
+from docling_translate_spark.extract_map import ENGINES, create_engine
 
 # every code point str.isspace() accepts, the C0 controls, and a few others
 _SPACES = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
@@ -31,9 +33,46 @@ def test_normalize_equals_regex_formulation():
         "".join(rng.choice(_ALPHABET) for _ in range(rng.randrange(16)))
         for _ in range(20_000)
     ]
-    series = pd.Series(texts, index=range(5, 5 + len(texts)), dtype=object)
-    got = create_engine("normalize")(series)
-    want = _regex_normalize(series)
-    assert got.index.equals(series.index)
-    assert got.tolist() == want.tolist()
-    assert got[5] == ""  # None
+    got = create_engine("normalize")(texts)
+    want = _regex_normalize(pd.Series(texts, dtype=object))
+    assert got == want.tolist()
+    assert got[0] == ""  # None
+
+
+def test_marker_and_truncate512_keep_their_outputs():
+    """Pinned to the earlier pandas formulations, a missing text included."""
+    texts = [None, "", "a b", "é" * 600, "x" * 511 + "\U0001f600yz"]
+    series = pd.Series(texts, dtype=object)
+    marker = create_engine("marker")(texts)
+    assert marker == ("<<" + series.fillna("") + ">>").tolist()
+    assert marker[:3] == ["<<>>", "<<>>", "<<a b>>"]
+    trunc = create_engine("truncate512")(texts)
+    assert trunc == series.fillna("").str.slice(0, 512).tolist()
+    assert trunc[0] == "" and trunc[3] == "é" * 512 and trunc[4].endswith("\U0001f600")
+
+
+def test_engines_return_same_length_list_from_any_iterable():
+    texts = ["b", "a", None]
+    for name, fn in ENGINES.items():
+        got = fn(texts)
+        assert len(got) == 3, name
+        # a Series (the traced benchmark's input) maps element-wise too
+        assert list(fn(pd.Series(texts, dtype=object))) == list(got), name
+    assert create_engine("identity")(texts) is texts
+
+
+def test_extraction_path_imports_no_pandas():
+    """The extraction kernel, its golden twin and the map engines run on
+    plain lists: importing them must not pull pandas in."""
+    code = (
+        "import sys\n"
+        "import docling_translate_spark.operators.extract\n"
+        "import docling_translate_spark.golden\n"
+        "import docling_translate_spark.extract_map\n"
+        "assert 'pandas' not in sys.modules, 'pandas imported'\n"
+    )
+    root = Path(__file__).resolve().parents[1]
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True
+    )
+    assert res.returncode == 0, res.stderr

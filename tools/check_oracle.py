@@ -6,7 +6,9 @@ views), and compares row count, column-name sets, the order-insensitive
 multiset of values (columns sorted by name, like the driver's value-hash)
 and the physical column types. Each side runs once: one Spark
 ``toArrow()`` and one DuckDB Arrow fetch give both the values and the
-types.
+types. Each query line shows both row counts (``rows=<spark>/<duck>``)
+and both sides' wall seconds (``spark=<s> duck=<s>``), so a slow oracle
+shows up in a full run; the last line sums the seconds per side.
 
 Spark runs on ``local[N]`` with N half the host's cores (at least 1):
 ``local[N]`` keeps about 2N threads runnable.
@@ -116,19 +118,24 @@ def main():
     os.environ["SPARK_GRAFT_ORACLE_SF"] = SF_DIR
     oracles = entrymod.oracle_sql()
     failures = []
+    spark_total = duck_total = 0.0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
         t0 = time.perf_counter()
         stbl = fn(spark, SF_DIR).toArrow()
         secs = time.perf_counter() - t0
+        spark_total += secs
         if name not in oracles:
-            print(f"{name:28s} rows-only: {stbl.num_rows} rows  [ok>={0}] {secs:.1f}s")
+            print(f"{name:28s} rows-only: {stbl.num_rows} rows  [ok>={0}] spark={secs:.1f}s")
             if stbl.num_rows == 0:
                 failures.append((name, "0 rows"))
             spark.catalog.clearCache()
             continue
+        t0 = time.perf_counter()
         dtbl = con.execute(oracles[name]).fetch_arrow_table()
+        duck_secs = time.perf_counter() - t0
+        duck_total += duck_secs
         scols, dcols = stbl.column_names, dtbl.column_names
         ok = True
         msgs = []
@@ -162,13 +169,14 @@ def main():
         spark.catalog.clearCache()
         status = "OK " if ok else "FAIL"
         print(
-            f"{name:28s} {status} spark={stbl.num_rows} duck={dtbl.num_rows} "
-            f"{secs:.1f}s {'; '.join(msgs)}"
+            f"{name:28s} {status} rows={stbl.num_rows}/{dtbl.num_rows} "
+            f"spark={secs:.1f}s duck={duck_secs:.1f}s {'; '.join(msgs)}"
         )
         if not ok:
             failures.append((name, "; ".join(msgs)))
 
     spark.stop()
+    print(f"\ntotal spark={spark_total:.1f}s duck={duck_total:.1f}s")
     if failures:
         print("\nFAILURES:")
         for n, m in failures:
