@@ -25,6 +25,14 @@ from pyspark.sql.window import Window
 # (subset of classify.BOILERPLATE_LINE_REGEX that is regex-dialect neutral).
 _BOILER_SQL_RE = r"^\s*([Pp]age\s+\d+(\s+of\s+\d+)?|\d+|[-=_*]{3,})\s*$"
 _FORMULA_SQL_RE = r"\\[a-zA-Z]+|\^\{|_\{|&="
+# DuckDB twin of the dedup kernels' ``str(text or "").lower().split()``
+# token list: split on Python's ASCII whitespace and drop empty pieces.
+# trim() strips only spaces and RE2's \s misses \x0b and \x1c-\x1f, so
+# neither may stand in. Non-ASCII whitespace and lower() still differ.
+_PY_TOKENS_SQL = (
+    r"list_filter(string_split_regex(lower(coalesce(text, '')), "
+    r"'[\t-\r\x1c-\x1f ]+'), t -> t <> '')"
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -3072,9 +3080,7 @@ feat AS MATERIALIZED (
          md5(conv_id || ':' || CAST(turn_idx AS VARCHAR)) AS nid
   FROM gated WHERE fp_rank = 1
 ), mtoks AS MATERIALIZED (
-  SELECT nid,
-         CASE WHEN trim(lower(text)) = '' THEN []::VARCHAR[]
-              ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
+  SELECT nid, {_PY_TOKENS_SQL} AS ts
   FROM keyed
 ), mshng AS MATERIALIZED (
   SELECT nid,
@@ -3695,10 +3701,7 @@ w AS MATERIALIZED (
     # its three references, recomputing every 64-hash signature per use.
     _minhash_pairs_sql = r"""
             WITH toks AS (
-              SELECT doc_id,
-                     CASE WHEN trim(lower(text)) = '' THEN []::VARCHAR[]
-                          ELSE string_split_regex(trim(lower(text)), '\s+')
-                     END AS ts
+              SELECT doc_id, __PY_TOKENS__ AS ts
               FROM documents
             ), shng AS (
               SELECT doc_id,
@@ -3738,7 +3741,9 @@ w AS MATERIALIZED (
             JOIN sig sb ON sb.doc_id = id_b
             WHERE list_sum(list_transform(range(1, 65),
                   i -> CASE WHEN sa.sg[i] = sb.sg[i] THEN 1 ELSE 0 END)) >= 32
-    """.replace("__MINHASH_A__", _a_lit).replace("__MINHASH_B__", _b_lit)
+    """.replace("__MINHASH_A__", _a_lit).replace("__MINHASH_B__", _b_lit).replace(
+        "__PY_TOKENS__", _PY_TOKENS_SQL
+    )
 
     # sanitized-body twin (see _sanitized_body): extraction is
     # byte-identity on these turns, so the flagship query + its rollup
@@ -4257,12 +4262,9 @@ w AS MATERIALIZED (
         """,
         # full value oracle for the 64-bit SimHash: md5-prefix token hash
         # + per-bit majority vote, reproduced with DuckDB list lambdas
-        "dedup_simhash": r"""
+        "dedup_simhash": f"""
             WITH toks AS (
-              SELECT doc_id,
-                     CASE WHEN trim(lower(text)) = '' THEN []::VARCHAR[]
-                          ELSE string_split_regex(trim(lower(text)), '\s+')
-                     END AS ts
+              SELECT doc_id, {_PY_TOKENS_SQL} AS ts
               FROM documents
             ), hv AS (
               SELECT doc_id,

@@ -30,17 +30,9 @@ from __future__ import annotations
 from typing import Iterator, NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # --- exact dedup (A1 at scale) ---
 
@@ -597,7 +589,7 @@ def _hash_params(k: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _md5_hash64(strings) -> np.ndarray:
+def _md5_hash64(strings: list[str]) -> np.ndarray:
     """uint64 hash of each string: first 16 hex chars of md5.
 
     md5 is already avalanche-mixed AND portable — any SQL engine can
@@ -614,8 +606,53 @@ def _md5_hash64(strings) -> np.ndarray:
     return np.fromiter(
         (int.from_bytes(md5(s.encode()).digest()[:8], "big") for s in strings),
         dtype=np.uint64,
-        count=len(strings) if hasattr(strings, "__len__") else -1,
+        count=len(strings),
     )
+
+
+def _token_hashes(texts, n: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """uint64 hash of every item of every text, docs concatenated, and
+    each doc's item count. Items are the tokens ``str(text or "")
+    .lower().split()`` or, with ``n``, their word n-gram shingles (a doc
+    of fewer than n tokens has one: the joined tokens). Each distinct
+    item of the batch is interned in a first-seen dict and hashed once
+    (boilerplate-heavy corpora repeat shingles heavily across docs)."""
+    uniq: dict[str, int] = {}
+    index_of = uniq.setdefault
+    join = " ".join
+    occ: list[int] = []
+    counts: list[int] = []
+    for text in texts:
+        toks = str(text or "").lower().split()
+        if n is None:
+            items = toks
+        elif len(toks) >= n:
+            items = [join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+        else:
+            items = [join(toks)]
+        occ += [index_of(t, len(uniq)) for t in items]
+        counts.append(len(items))
+    hv = _md5_hash64(list(uniq))[np.asarray(occ, dtype=np.intp)]
+    return hv, np.asarray(counts, dtype=np.int64)
+
+
+# item budget of one doc run: both kernels' per-run matrix (k x items
+# products, items x 64 bit rows) stays ~128 MB regardless of batch size
+_RUN_BYTES = 128 << 20
+
+
+def _doc_runs(counts: np.ndarray, budget: int):
+    """Widest runs of whole docs whose items fit ``budget`` (a single
+    over-budget doc goes alone): (doc slice, item slice, each doc's
+    first item relative to the run)."""
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    d0 = 0
+    while d0 < len(counts):
+        d1 = max(int(np.searchsorted(ends, starts[d0] + budget, "right")), d0 + 1)
+        lo = int(starts[d0])
+        yield slice(d0, d1), slice(lo, int(ends[d1 - 1])), starts[d0:d1] - lo
+        d0 = d1
 
 
 def minhash_signatures(
@@ -626,87 +663,50 @@ def minhash_signatures(
     num_hashes: int = 128,
     seed: int = 7,
 ) -> DataFrame:
-    """MinHash signature per document (numpy-vectorized pandas batches).
+    """MinHash signature per document (numpy over Arrow batches).
 
-    Narrow: one mapInPandas pass, no shuffle. Signature length 128 gives
+    Narrow: one mapInArrow pass, no shuffle. Signature length 128 gives
     ±0.09 jaccard estimation error; band layout decides precision/recall.
 
-    Kernel shape (r3 verdict #4 — the per-shingle ``hashlib.md5`` Python
-    genexpr was the CPU floor under the LSH queries): shingles of the
-    whole Arrow batch are flattened, hashed ONCE per distinct string
-    (boilerplate-heavy corpora repeat shingles heavily across docs) via
-    the digest fast path, gathered back, and the k×|shingles| universal-
-    hash outer product + per-doc min runs as one numpy expression with
-    ``minimum.reduceat`` over doc boundaries. Per-doc duplicate shingles
-    are NOT pre-deduped — min() is multiplicity-blind, so signatures are
-    bit-identical to the set-based definition the oracles reproduce.
-    Sub-chunked so the k×chunk matrix stays ~128 MB regardless of Arrow
-    batch size.
+    Kernel shape: ``_token_hashes`` hashes every shingle occurrence of
+    the Arrow batch, then the k×|shingles| universal-hash outer product
+    + per-doc min runs as one numpy expression with ``minimum.reduceat``
+    over doc boundaries, one doc run at a time. Per-doc duplicate
+    shingles are NOT pre-deduped — min() is multiplicity-blind, so
+    signatures are bit-identical to the set-based definition the oracles
+    reproduce.
 
-    ``sid`` keeps the input id column's type (LONG doc ids and the
-    curation pipeline's full-md5 STRING keys both work)."""
+    ``sid`` is the input id column as is (LONG doc ids and the curation
+    pipeline's full-md5 STRING keys both work)."""
     a_params, b_params = _hash_params(num_hashes, seed)
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("sid", id_type, False),
-            StructField("signature", ArrayType(LongType()), False),
-        ]
-    )
-    # cap the flattened outer-product width: num_hashes * chunk * 8 B
-    chunk_shingles = max(1, (128 << 20) // (num_hashes * 8))
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"sid {id_type} not null, signature array<bigint> not null"
+    budget = max(1, _RUN_BYTES // (num_hashes * 8))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         mask32 = np.uint64(0xFFFFFFFF)
         p = np.uint64(_MINHASH_P)
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            flat: list[str] = []
-            counts: list[int] = []
-            for text in pdf[text_col]:
-                toks = str(text or "").lower().split()
-                if len(toks) >= n:
-                    join = " ".join
-                    flat.extend(
-                        join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                    )
-                    counts.append(len(toks) - n + 1)
-                else:
-                    flat.append(" ".join(toks))
-                    counts.append(1)
-            if not counts:
-                yield pd.DataFrame({"sid": [], "signature": []})
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            uniq, inv = np.unique(np.asarray(flat, dtype=object), return_inverse=True)
-            hv = (_md5_hash64(uniq) & mask32)[inv]
-            ends = np.cumsum(counts)
-            starts = ends - np.asarray(counts)
-            ndocs = len(counts)
-            sig_cols = []
-            d0 = 0
-            while d0 < ndocs:
-                # widest run of whole docs fitting the chunk budget (a
-                # single over-budget doc goes alone)
-                d1 = max(
-                    int(
-                        np.searchsorted(
-                            ends, starts[d0] + chunk_shingles, side="right"
-                        )
-                    ),
-                    d0 + 1,
+            hv, counts = _token_hashes(rb.column(1).to_numpy(zero_copy_only=False), n)
+            hv &= mask32
+            sigs = [
+                np.minimum.reduceat(
+                    (a_params[:, None] * hv[None, occ] + b_params[:, None]) % p,
+                    rel,
+                    axis=1,
                 )
-                lo, hi = int(starts[d0]), int(ends[d1 - 1])
-                m = (
-                    a_params[:, None] * hv[None, lo:hi] + b_params[:, None]
-                ) % p
-                sig_cols.append(
-                    np.minimum.reduceat(m, starts[d0:d1] - lo, axis=1)
-                )
-                d0 = d1
-            sigs = np.concatenate(sig_cols, axis=1).astype(np.int64)
-            yield pd.DataFrame({"sid": ids, "signature": list(sigs.T)})
+                for _, occ, rel in _doc_runs(counts, budget)
+            ]
+            flat = np.concatenate(sigs, axis=1).T.ravel().astype(np.int64)
+            offsets = np.arange(0, len(flat) + 1, num_hashes, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.ListArray.from_arrays(offsets, flat)],
+                names=["sid", "signature"],
+            )
 
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return df.select(id_col, text_col).mapInArrow(gen, out_schema)
 
 
 def minhash_lsh_pairs(
@@ -741,7 +741,12 @@ def minhash_lsh_pairs(
     is all-pairs (exact banding semantics — what the value oracles
     model); in the curation pipeline exact dedup runs FIRST, so
     byte-identical template copies are already collapsed before LSH.
+
+    ``bands`` must lie in [1, num_hashes]; each band takes
+    ``num_hashes // bands`` rows, so an uneven layout leaves the tail unbanded.
     """
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(f"bands must be in [1, {num_hashes}], got {bands}")
     rows = num_hashes // bands
     sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed).cache()
 
@@ -811,45 +816,38 @@ def minhash_lsh_pairs(
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """64-bit SimHash per document (token-hash bit voting, numpy)."""
-    out_schema = StructType(
-        [
-            StructField("sid", LongType(), False),
-            StructField("simhash", LongType(), False),
-        ]
-    )
+    """64-bit SimHash per document: per-token md5 bit majority vote.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_idx = np.arange(64, dtype=np.uint64)
-        for pdf in batches:
-            ids, hashes = [], []
-            for sid, text in zip(pdf[id_col], pdf[text_col]):
-                toks = str(text or "").lower().split()
-                if not toks:
-                    ids.append(int(sid))
-                    hashes.append(0)
-                    continue
-                # hash unique tokens only, weight votes by multiplicity —
-                # identical to hashing every token (md5 is deterministic)
-                uniq, cnt = np.unique(
-                    np.asarray(toks, dtype=object), return_counts=True
+    One mapInArrow pass. Bit b is set when more than half of the doc's
+    tokens have it set (no tokens: 0). Each doc run's token hashes are
+    unpacked into uint8 bit rows and summed per doc by one
+    ``add.reduceat``. ``sid`` is the id column cast to LONG."""
+    budget = _RUN_BYTES // 64
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            hv, counts = _token_hashes(rb.column(1).to_numpy(zero_copy_only=False))
+            hv = hv.astype("<u8", copy=False)
+            # empty docs hold no items, so they take no reduceat slot
+            nz = np.flatnonzero(counts)
+            votes = np.zeros((len(counts), 64), dtype=np.int64)
+            for docs, occ, rel in _doc_runs(counts[nz], budget):
+                # column b of a bit row is bit b of the hash
+                bits = np.unpackbits(hv[occ].view(np.uint8), bitorder="little")
+                votes[nz[docs]] = np.add.reduceat(
+                    bits.reshape(-1, 64), rel, axis=0, dtype=np.int64
                 )
-                hv = _md5_hash64(uniq)
-                bits = (hv[:, None] >> bit_idx[None, :]) & np.uint64(1)
-                # signed vote math: uint64 sum * 2 - n wraps negative
-                # margins to huge positives (NEP-50 keeps the uint64
-                # dtype), which silently sets every non-tied bit
-                votes = (
-                    (bits * cnt.astype(np.uint64)[:, None]).sum(axis=0)
-                ).astype(np.int64) * 2 - len(toks)
-                sh = int(((votes > 0).astype(np.uint64) << bit_idx).sum())
-                ids.append(int(sid))
-                hashes.append(sh - (1 << 64) if sh >= (1 << 63) else sh)
-            yield pd.DataFrame(
-                {"sid": ids, "simhash": pd.array(hashes, dtype="int64")}
+            sh = np.packbits(2 * votes > counts[:, None], axis=1, bitorder="little")
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(sh.view("<i8").ravel())],
+                names=["sid", "simhash"],
             )
 
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return df.select(F.col(id_col).cast("long"), text_col).mapInArrow(
+        gen, "sid bigint not null, simhash bigint not null"
+    )
 
 
 def simhash_pairs(

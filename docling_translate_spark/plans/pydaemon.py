@@ -3,7 +3,7 @@ per-task re-read of every zip on ``sys.path``.
 
 ``build_session`` sets ``spark.python.daemon.module`` to this module, so every
 Python task of the engine runs in a worker forked from it: extraction,
-curation's ``mapInPandas`` stages, checkpoint units, gate queries and tests.
+curation's ``mapInArrow`` stages, checkpoint units, gate queries and tests.
 It removes two fixed costs.
 
 **Start-up: PySpark compiled from source in every session.** Spark puts

@@ -1,10 +1,18 @@
 """Dedup operator fixtures: exact, n-gram Jaccard, MinHash LSH, SimHash."""
 
+import hashlib
+import sys
+from pathlib import Path
+
+import duckdb
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
 
 from docling_translate_spark.operators.dedup import (
+    _MINHASH_P,
+    _hash_params,
     exact_dedup,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -266,3 +274,135 @@ def test_connected_components_long_chain_pointer_jumping(spark):
     )
     got = {r["id"]: r["comp"] for r in connected_components(pairs).collect()}
     assert got == {i: 0 for i in range(n + 1)}
+
+
+# empty, missing, whitespace-only, fewer-than-3-token, repeated-shingle
+# (within a doc and across docs) and non-ASCII texts, then enough short
+# docs that a 7-row Arrow batch splits the fixture several times
+PIN_TEXTS = [
+    "",
+    None,
+    "   \t\n",
+    "\x0b\x1c\x1f",
+    "one",
+    "Two  words\n",
+    "a b c a b c a b c",
+    "x a b c y",
+    "a b c a b c a b c",
+    "Grüße aus Köln, Straße",
+    "İstanbul ΣΊΣΥΦΟΣ ǅemal",
+    "日本語 の テキスト 日本語 の テキスト",
+    "a\xa0b c\u3000d e",
+    BASE,
+    NEAR,
+    OTHER,
+    BASE,
+] + [" ".join(f"w{(i * j) % 11}" for j in range(i % 9)) for i in range(30)]
+
+
+def _md5_64(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:16], 16)
+
+
+def _ref_minhash(text, n=3, k=128) -> list[int]:
+    """From the spec: the set of word n-gram shingles (fewer than n
+    tokens: the joined tokens), then per hash the min of
+    (a*h + b) mod P in Python ints over the shingles' low 32 hash bits."""
+    toks = str(text or "").lower().split()
+    if len(toks) >= n:
+        shingles = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    else:
+        shingles = {" ".join(toks)}
+    hs = [_md5_64(s) & 0xFFFFFFFF for s in shingles]
+    a, b = _hash_params(k)
+    return [min((int(ai) * h + int(bi)) % _MINHASH_P for h in hs) for ai, bi in zip(a, b)]
+
+
+def _ref_simhash(text) -> int:
+    """From the spec: bit b is set when more than half of the tokens'
+    md5 hashes have it set; no tokens hash to 0; signed 64-bit."""
+    toks = str(text or "").lower().split()
+    hs = [_md5_64(t) for t in toks]
+    u = sum(1 << b for b in range(64) if 2 * sum((h >> b) & 1 for h in hs) > len(toks))
+    return u - (1 << 64) if u >= 1 << 63 else u
+
+
+@pytest.mark.parametrize("parts", [1, 7])
+@pytest.mark.parametrize("batch_rows", [7, 10000])
+def test_signature_kernels_equal_reference(spark, batch_rows, parts):
+    """Both kernels intern items in a batch-scoped dict: a token or
+    shingle id leaking across docs, batches or partitions would change
+    some signature at one of these layouts. Seven partitions are hashed
+    on three keys, so at least four are empty (a round-robin split of
+    this many rows fills all seven)."""
+    df = spark.createDataFrame(
+        list(enumerate(PIN_TEXTS)), "doc_id long, text string"
+    ).repartition(parts, F.col("doc_id") % 3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        mh = {r.sid: r.signature for r in minhash_signatures(df).collect()}
+        sh = {r.sid: r.simhash for r in simhash_signatures(df).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert mh == {i: _ref_minhash(t) for i, t in enumerate(PIN_TEXTS)}
+    assert sh == {i: _ref_simhash(t) for i, t in enumerate(PIN_TEXTS)}
+
+
+def test_simhash_oracle_tokenizes_like_the_kernel(spark):
+    """The ``dedup_simhash`` DuckDB oracle splits tokens as the kernel's
+    ``str.lower().split()`` does: leading and trailing tabs or newlines
+    add no empty token, and \\x0b and \\x1c-\\x1f separate tokens."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    import __spark_entry__ as entry
+
+    try:
+        battery = entry.oracle_sql()["hashsig_battery"]
+    except duckdb.IOException as e:  # ann_ivf literals replay the gate parquet
+        pytest.skip(f"oracle_sql() needs the gate's sf0.01 parquet: {e}")
+    probes = [
+        "\tfoo bar baz",
+        "foo bar baz\n",
+        "\r\nfoo\fbar\r\n",
+        "a\x0bb c",
+        "x\x1cy\x1dz\x1e\x1fw",
+        "  lead and trail  ",
+        "Mixed CASE words",
+        "",
+        " \t ",
+        None,
+    ]
+    docs = pa.table(
+        {
+            "doc_id": pa.array(range(len(probes)), pa.int64()),
+            "text": pa.array(probes, pa.string()),
+        }
+    )
+    con = duckdb.connect()
+    con.register("documents", docs)
+    # the battery's simhash branch is the dedup_simhash member oracle
+    sql = f"SELECT CAST(k AS BIGINT), v1 FROM ({battery}) WHERE branch = 'simhash'"
+    want = dict(con.execute(sql).fetchall())
+    df = spark.createDataFrame(list(enumerate(probes)), "doc_id long, text string")
+    got = {r.sid: r.simhash for r in simhash_signatures(df).collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("bands", [0, -2, 129])
+def test_minhash_lsh_pairs_rejects_bands_outside_num_hashes(docs, bands):
+    """bands > num_hashes gives 0-row bands (every pair a candidate);
+    bands < 1 divides by zero or slices backwards."""
+    with pytest.raises(ValueError, match="bands"):
+        minhash_lsh_pairs(docs, num_hashes=128, bands=bands)
+
+
+def test_minhash_lsh_pairs_uneven_layout(spark, docs):
+    """num_hashes % bands != 0 stays legal: bands take num_hashes //
+    bands rows each, the tail joins no band but counts in the estimate."""
+    pairs = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_pairs(docs, num_hashes=64, bands=30, threshold=0.5).collect()
+    }
+    assert (0, 1) in pairs and (0, 2) in pairs
+    assert not any({a, b} & {3, 4} for a, b in pairs)

@@ -7,6 +7,7 @@ import sys
 from pathlib import Path
 
 import pandas as pd
+import pytest
 
 from docling_translate_spark.extract_map import ENGINES, create_engine
 
@@ -61,16 +62,26 @@ def test_engines_return_same_length_list_from_any_iterable():
     assert create_engine("identity")(texts) is texts
 
 
-def test_extraction_path_imports_no_pandas():
-    """The extraction kernel, its golden twin and the map engines run on
-    plain lists: importing them must not pull pandas in."""
-    code = (
-        "import sys\n"
-        "import docling_translate_spark.operators.extract\n"
-        "import docling_translate_spark.golden\n"
-        "import docling_translate_spark.extract_map\n"
-        "assert 'pandas' not in sys.modules, 'pandas imported'\n"
-    )
+@pytest.mark.parametrize(
+    "modules",
+    [
+        pytest.param(
+            [
+                "docling_translate_spark.operators.extract",
+                "docling_translate_spark.golden",
+                "docling_translate_spark.extract_map",
+            ],
+            id="extraction",
+        ),
+        pytest.param(["docling_translate_spark.operators.dedup"], id="dedup"),
+    ],
+)
+def test_extraction_path_imports_no_pandas(modules):
+    """The extraction kernel, its golden twin, the map engines and the
+    dedup signature kernels run on plain lists and Arrow batches:
+    importing them must not pull pandas in."""
+    code = "".join(f"import {m}\n" for m in ["sys", *modules])
+    code += "assert 'pandas' not in sys.modules, 'pandas imported'\n"
     root = Path(__file__).resolve().parents[1]
     res = subprocess.run(
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True

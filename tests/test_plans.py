@@ -214,6 +214,8 @@ def test_minhash_band_join_exchange_is_slim(spark, transcript_path):
         assert "signature" not in blk, blk
     # the attach joins key on the pair ids (signature rides them only)
     assert "id_a" in plan and "id_b" in plan
+    # the signature kernel crosses the Python boundary as Arrow batches
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_dedup_segments_argmin_is_agg_not_window(spark):
