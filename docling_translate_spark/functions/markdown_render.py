@@ -25,18 +25,17 @@ images, raw inline HTML passthrough, and ordered-list ``start``
 numbering (the package ignores literal numbers too, but emits
 ``start`` in some versions).
 
-Spark-side the renderer is an Arrow-batched pandas UDF (string → string
-presentation kernels have no JVM equivalent; this is the sanctioned
-slow-path shape, one Python crossing per render stage).
+Spark-side the renderer is an Arrow UDF (string → string presentation
+kernels have no JVM equivalent; this is the sanctioned slow-path shape,
+one Python crossing per render stage).
 """
 
 from __future__ import annotations
 
 import html
 import re
-from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import StringType
@@ -216,10 +215,14 @@ def render_markdown(text: str) -> str:
 
 
 def render_markdown_col(col: Column | str) -> Column:
-    """Arrow-batched render over a markdown string column."""
+    """Arrow-batched render over a markdown string column; a null
+    payload stays null."""
 
-    @F.pandas_udf(StringType())
-    def _render(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: render_markdown(t) if t is not None else None)
+    @F.arrow_udf(StringType())
+    def _render(texts: pa.Array) -> pa.Array:
+        return pa.array(
+            [None if t is None else render_markdown(t) for t in texts.to_pylist()],
+            pa.string(),
+        )
 
     return _render(F.col(col) if isinstance(col, str) else col)

@@ -24,8 +24,9 @@ exact integers, so any SQL engine reproduces the values bit-for-bit —
   engines (Spark ``aggregate`` over the rank-sorted array, DuckDB
   ``list_reduce`` over ``list(... ORDER BY rank)``) — association
   matched, so the sums are bit-identical;
-- the margin is one division of identical doubles, rounded to 6
-  decimals for the gate hash (insurance, not correctness).
+- the margin is one division of identical doubles, emitted as the
+  BIGINT ``floor(margin * 1e6)`` — a floor, not a rounding, so every
+  engine emits the same integer.
 
 Scale shape: candidate generation is cell-scoped on the shared integer
 codebook (``ivf_ranked_cells``) — each side inverts at its argmax cell
@@ -181,7 +182,7 @@ def bitext_mine(
 
     # margin over the forward candidate pairs; best per src under
     # (margin DESC, tgt id) — margin compares identical doubles, so the
-    # argmax is engine-stable; round-6 only on the OUTPUT value
+    # argmax is engine-stable; only the OUTPUT is floor(margin * 1e6)
     m = (
         fwd.join(bg_x.withColumnRenamed("qid", "qid_x"), F.col("qid") == F.col("qid_x"))
         .join(bg_y.withColumnRenamed("qid", "qid_y"), F.col("nid") == F.col("qid_y"))

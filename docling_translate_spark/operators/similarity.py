@@ -17,6 +17,12 @@ descending, ties on neighbor id, self excluded, first k kept — once per
 GEMM cell in numpy (:func:`_cell_topk`) and once per query in Spark
 (:func:`_rank_topk`). Embedding-cosine near-duplicate detection reuses
 the same machinery with a similarity threshold instead of top-k.
+
+The four numpy kernels (blocked top-k, exact pairs, hyperplane
+signatures, LSH buckets) run in ``mapInArrow`` and share one contract:
+:func:`_block` reads ids and a ``list<number>`` column into a matrix,
+refusing nulls, ragged vectors and id/vector count mismatches, and
+:func:`_emit` writes their rows back as one typed Arrow batch.
 """
 
 from __future__ import annotations
@@ -24,16 +30,9 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 from pyspark.sql.window import Window
 
 
@@ -78,12 +77,27 @@ def _rank_topk(scored: DataFrame, k: int, score: str) -> DataFrame:
     )
 
 
-def _matrix(vecs, dtype) -> np.ndarray:
-    return np.stack([np.asarray(v, dtype=dtype) for v in vecs])
+def _block(ids: pa.Array, vecs: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """int64 ids and the ``(n, dim)`` ``dtype`` matrix of a
+    ``list<number>`` Arrow array: one ``flatten``, one ``reshape``. A
+    null id or vector, vectors of unequal length, or an id count that is
+    not the vector count raise ``ValueError`` — each would otherwise
+    score some vector under another vector's id."""
+    n, nulls = len(vecs), vecs.null_count + ids.null_count
+    if nulls or len(ids) != n:
+        raise ValueError(f"{len(ids)} ids for {n} vectors, {nulls} nulls")
+    lengths = np.diff(np.asarray(vecs.offsets))
+    dim = int(lengths[0]) if n else 0
+    if (lengths != dim).any():
+        raise ValueError(f"vector lengths {sorted(set(lengths.tolist()))} differ")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return (
+        ids.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
+        flat.astype(dtype, copy=False).reshape(n, dim),
+    )
 
 
-def _unit_rows(vecs) -> np.ndarray:
-    mat = _matrix(vecs, np.float64)
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
     return mat / np.linalg.norm(mat, axis=1, keepdims=True)
 
 
@@ -133,29 +147,38 @@ def _cell_topk(
         yield q[r[sel]], nbr[sel], sc[sel]
 
 
-def _topk_frame(cells, k: int, score: str, dtype) -> pd.DataFrame:
-    """``(query_id, neighbor_id, <score>)`` frame of the
-    :func:`_cell_topk` rows of every ``(qids, cids, scores)`` cell,
-    typed (int64 ids, ``dtype`` scores) even when there are none.
-    ``cells`` must be a generator, so each cell's score matrix is
-    ranked and dropped before the next one is scored."""
-    parts = [p for q, c, s in cells for p in _cell_topk(q, c, s, k)]
-    q, n, s = (
-        (np.concatenate(col) for col in zip(*parts))
-        if parts
-        else (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, dtype))
-    )
-    return pd.DataFrame({"query_id": q, "neighbor_id": n, score: s.astype(dtype)})
+_SQL_TYPES = {np.int32: "int", np.int64: "bigint", np.float64: "double"}
 
 
-def _topk_schema(score: str, score_type) -> StructType:
-    return StructType(
+def _ddl(fields) -> str:
+    """Spark schema of a kernel's ``(name, numpy dtype)`` output fields."""
+    return ", ".join(f"{name} {_SQL_TYPES[dt]} not null" for name, dt in fields)
+
+
+def _emit(parts, fields) -> pa.RecordBatch:
+    """One Arrow batch of ``fields`` from ``parts``, a list of per-cell
+    column tuples. Each column ends in an empty ``dtype`` chunk, so a
+    batch without parts is the typed empty batch of the same path."""
+    cols = list(zip(*parts)) or [()] * len(fields)
+    return pa.RecordBatch.from_arrays(
         [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField(score, score_type, False),
-        ]
+            pa.array(np.concatenate([*chunks, np.empty(0, dt)]))
+            for chunks, (_, dt) in zip(cols, fields)
+        ],
+        names=[name for name, _ in fields],
     )
+
+
+def _topk_fields(score: str, dtype) -> tuple:
+    return (("query_id", np.int64), ("neighbor_id", np.int64), (score, dtype))
+
+
+def _topk_batch(cells, k: int, fields) -> pa.RecordBatch:
+    """The :func:`_cell_topk` rows of every ``(qids, cids, scores)``
+    cell as one batch of ``fields``. ``cells`` must be a generator, so
+    each cell's score matrix is ranked and dropped before the next one
+    is scored."""
+    return _emit([p for q, c, s in cells for p in _cell_topk(q, c, s, k)], fields)
 
 
 def brute_force_topk(
@@ -200,7 +223,16 @@ def _pack_blocks(
     BOTH sides of a blocked GEMM must be packed: joining packed corpus
     blocks against per-row probes replicates each block once per probe
     ROW (measured: ~GBs through Arrow at 5k probes); packed × packed
-    replicates each side only ``n_blocks_other`` times."""
+    replicates each side only ``n_blocks_other`` times.
+
+    Rows with a null id or a null vector are dropped: neither has a
+    score, and ``collect_list`` skips nulls, so keeping them would pair
+    the two lists out of step. They are dropped inside the aggregate,
+    not by a ``filter``: the optimizer would push a filter below the
+    projection that computes ``vec_col`` and compute it twice (measured
+    on :func:`quantize_embeddings` output). A block left with no rows
+    is dropped too."""
+    keep = F.col("_pid").isNotNull() & F.col("_pvec").isNotNull()
     return (
         df.select(
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks))
@@ -211,10 +243,20 @@ def _pack_blocks(
         )
         .groupBy(key)
         .agg(
-            F.collect_list("_pid").alias(ids),
-            F.collect_list("_pvec").alias(vecs),
+            F.collect_list(F.when(keep, F.col("_pid"))).alias(ids),
+            F.collect_list(F.when(keep, F.col("_pvec"))).alias(vecs),
         )
+        .filter(F.size(ids) > 0)
     )
+
+
+def _packed_cells(rb: pa.RecordBatch, sides: str, dtype):
+    """Per row of a batch of cross-joined :func:`_pack_blocks` blocks,
+    the :func:`_block` ``(ids, matrix)`` of each side ``s`` in
+    ``sides`` (columns ``<s>ids`` and ``<s>vecs``), one row at a time."""
+    cols = [(rb.column(f"{s}ids"), rb.column(f"{s}vecs")) for s in sides]
+    for i in range(rb.num_rows):
+        yield [_block(ids[i].values, vecs[i].values, dtype) for ids, vecs in cols]
 
 
 def _blocked_topk(
@@ -225,36 +267,29 @@ def _blocked_topk(
     id_col: str,
     vec_col: str,
     score: str,
-    score_type,
+    dtype,
     cell_scores,
 ) -> DataFrame:
     """Pack both sides (:func:`_pack_blocks`), score each (query-group,
-    corpus-block) cell with ``cell_scores(qvecs, cvecs)`` (one GEMM),
-    keep its :func:`_cell_topk` rows, then merge per query — a bounded
-    window over at most ``n_blocks * k`` candidates."""
+    corpus-block) cell with ``cell_scores(qmat, cmat)`` (one GEMM over
+    ``dtype`` matrices, ``dtype`` scores), keep its :func:`_cell_topk`
+    rows, then merge per query — a bounded window over at most
+    ``n_blocks * k`` candidates."""
     cpacked = _pack_blocks(corpus, n_blocks, id_col, vec_col, "cb", "cids", "cvecs")
     qpacked = _pack_blocks(queries, n_blocks, id_col, vec_col, "qb", "qids", "qvecs")
-    dtype = np.int64 if isinstance(score_type, LongType) else np.float64
+    fields = _topk_fields(score, dtype)
 
-    def block_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def block_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             # cells must stream: a list would hold every cell's score
             # matrix at once, not one
             cells = (
-                (
-                    np.asarray(qids, dtype=np.int64),
-                    np.asarray(cids, dtype=np.int64),
-                    cell_scores(qvecs, cvecs),
-                )
-                for qids, qvecs, cids, cvecs in zip(
-                    pdf["qids"], pdf["qvecs"], pdf["cids"], pdf["cvecs"]
-                )
+                (qids, cids, cell_scores(qmat, cmat))
+                for (qids, qmat), (cids, cmat) in _packed_cells(rb, "qc", dtype)
             )
-            yield _topk_frame(cells, k, score, dtype)
+            yield _topk_batch(cells, k, fields)
 
-    scored = qpacked.crossJoin(cpacked).mapInPandas(
-        block_topk, _topk_schema(score, score_type)
-    )
+    scored = qpacked.crossJoin(cpacked).mapInArrow(block_topk, _ddl(fields))
     return _rank_topk(scored, k, score)
 
 
@@ -281,8 +316,8 @@ def brute_force_topk_blocked(
     tie-exact score (:func:`_cosines`) costs GEMM speed.
     """
     return _blocked_topk(
-        corpus, queries, k, n_blocks, id_col, vec_col, "cosine", DoubleType(),
-        lambda qvecs, cvecs: _cosines(_unit_rows(qvecs), _unit_rows(cvecs)),
+        corpus, queries, k, n_blocks, id_col, vec_col, "cosine", np.float64,
+        lambda qmat, cmat: _cosines(_unit_rows(qmat), _unit_rows(cmat)),
     )
 
 
@@ -300,8 +335,9 @@ def cosine_pairs_exact(
 
     All-pairs work is |corpus|²/2 dot products but distributed: both
     sides are block-packed and only the upper triangle of block cells is
-    joined; each cell does one GEMM and only pairs over threshold leave
-    the task. No broadcast, no driver collect.
+    joined; each cell does one GEMM and one ``np.nonzero`` of its
+    threshold mask, and only pairs over threshold leave the task. No
+    broadcast, no driver collect. Rows with a null vector are dropped.
     """
     apacked = _pack_blocks(corpus, n_blocks, id_col, vec_col, "ab", "aids", "avecs")
     bpacked = _pack_blocks(corpus, n_blocks, id_col, vec_col, "bb", "bids", "bvecs")
@@ -309,52 +345,30 @@ def cosine_pairs_exact(
     # below resolves orientation inside the diagonal cells)
     joined = apacked.crossJoin(bpacked).filter(F.col("ab") <= F.col("bb"))
 
-    out_schema = StructType(
-        [
-            StructField("id_a", LongType(), False),
-            StructField("id_b", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
+    fields = (("id_a", np.int64), ("id_b", np.int64), ("cosine", np.float64))
 
-    def block_pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {"id_a": [], "id_b": [], "cosine": []}
-            for _, row in pdf.iterrows():
-                aids = np.asarray(row["aids"], dtype=np.int64)
-                cids = np.asarray(row["bids"], dtype=np.int64)
-                sims = _cosines(_unit_rows(row["avecs"]), _unit_rows(row["bvecs"]))
-                if row["ab"] == row["bb"]:
-                    # diagonal cell: both sides are the same block — the
-                    # strict triangle picks each unordered pair once
-                    ai, bj = np.where(
-                        (sims >= threshold) & (aids[:, None] < cids[None, :])
-                    )
-                    a_out, b_out = aids[ai], cids[bj]
-                else:
-                    # off-diagonal cell: each unordered cross-block pair
-                    # appears exactly once (ab < bb kept one cell of the
-                    # two) in arbitrary id order — canonicalize to
-                    # (min, max); equal ids can't span two blocks
-                    ai, bj = np.where(sims >= threshold)
-                    a_out = np.minimum(aids[ai], cids[bj])
-                    b_out = np.maximum(aids[ai], cids[bj])
-                out["id_a"].extend(int(x) for x in a_out)
-                out["id_b"].extend(int(x) for x in b_out)
-                out["cosine"].extend(float(x) for x in sims[ai, bj])
-            yield pd.DataFrame(
-                out
-                if out["id_a"]
-                else {
-                    "id_a": pd.array([], dtype="int64"),
-                    "id_b": pd.array([], dtype="int64"),
-                    "cosine": pd.array([], dtype="float64"),
-                }
-            )
+    def block_pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            diag = rb.column("ab").to_numpy() == rb.column("bb").to_numpy()
+            parts = []
+            for on_diag, ((aids, amat), (bids, bmat)) in zip(
+                diag, _packed_cells(rb, "ab", np.float64)
+            ):
+                sims = _cosines(_unit_rows(amat), _unit_rows(bmat))
+                hit = sims >= threshold
+                if on_diag:
+                    # both sides are the same block: the strict triangle
+                    # picks each unordered pair once
+                    hit &= aids[:, None] < bids[None, :]
+                # an off-diagonal cell holds each cross-block pair once
+                # (ab < bb kept one cell of the two) in either id order;
+                # equal ids can't span two blocks
+                i, j = np.nonzero(hit)
+                a, b = aids[i], bids[j]
+                parts.append((np.minimum(a, b), np.maximum(a, b), sims[i, j]))
+            yield _emit(parts, fields)
 
-    return joined.mapInPandas(block_pairs, out_schema)
+    return joined.mapInArrow(block_pairs, _ddl(fields))
 
 
 # embedding quantization scale for LSH bucket assignment: bits come from
@@ -389,44 +403,27 @@ def hyperplane_signatures(
     independent tables union to 1-(1-p)^L. numpy matmul over the whole
     Arrow batch — thousands of vectors per BLAS call, no per-row Python.
     Planes and embeddings are integer-quantized (:data:`_LSH_QUANT`) so
-    bucket assignment is exact integer arithmetic.
+    bucket assignment is exact integer arithmetic. A null id or vector
+    raises ``ValueError`` (:func:`_block`).
     """
     planes = lsh_planes(dim, n_planes, n_tables, seed)
-    out_schema = StructType(
-        [
-            StructField("sid", LongType(), False),
-            StructField("table", IntegerType(), False),
-            StructField("bucket", LongType(), False),
-        ]
-    )
+    fields = (("sid", np.int64), ("table", np.int32), ("bucket", np.int64))
+    weights = 1 << np.arange(n_planes, dtype=np.int64)
+    tables = np.arange(n_tables, dtype=np.int32)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = 1 << np.arange(n_planes, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(
-                    {"sid": pd.array([], dtype="int64"),
-                     "table": pd.array([], dtype="int32"),
-                     "bucket": pd.array([], dtype="int64")}
-                )
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            sids, mat = _block(rb.column(0), rb.column(1), np.float64)
             q = np.floor(mat * _LSH_QUANT + 0.5).astype(np.int64)
             bits = (q @ planes) > 0  # (rows, planes*tables), exact int dots
-            bits = bits.reshape(len(pdf), n_tables, n_planes)
+            bits = bits.reshape(len(sids), n_tables, n_planes)
             buckets = (bits.astype(np.int64) * weights).sum(axis=2)  # (rows, tables)
-            sids = pdf[id_col].astype("int64").to_numpy()
-            yield pd.DataFrame(
-                {
-                    "sid": np.repeat(sids, n_tables),
-                    "table": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(pdf)
-                    ),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
+            cols = np.repeat(sids, n_tables), np.tile(tables, len(sids)), buckets.ravel()
+            yield _emit([cols], fields)
 
-    return df.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    return df.select(F.col(id_col).cast("long"), vec_col).mapInArrow(gen, _ddl(fields))
 
 
 def _rescore_pairs(
@@ -542,7 +539,9 @@ def lsh_ann_topk(
         .agg(F.collect_list(F.struct("sid", "_v")).alias("_members"))
     )
 
-    def bucket_cells(buckets):
+    fields = _topk_fields("cosine", np.float64)
+
+    def bucket_cells(buckets: pa.ListArray):
         # a generator, like _blocked_topk's cells: one bucket's score
         # matrix is alive at a time
         for members in buckets:
@@ -550,17 +549,15 @@ def lsh_ann_topk(
                 continue
             # scores do not depend on collect_list's member order
             # (see _cosines), so ties rank alike at any partitioning
-            ids = np.asarray([m["sid"] for m in members], dtype=np.int64)
-            mat = _unit_rows([m["_v"] for m in members])
+            ids, mat = _block(*members.values.flatten(), np.float64)
+            mat = _unit_rows(mat)
             yield ids, ids, _cosines(mat, mat)
 
-    def bucket_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _topk_frame(bucket_cells(pdf["_members"]), k, "cosine", np.float64)
+    def bucket_topk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            yield _topk_batch(bucket_cells(rb.column("_members")), k, fields)
 
-    per_bucket = packed.mapInPandas(
-        bucket_topk, _topk_schema("cosine", DoubleType())
-    )
+    per_bucket = packed.mapInArrow(bucket_topk, _ddl(fields))
     # a pair shared by several buckets arrives once per bucket, with
     # the same score every time; one row per pair goes to the merge
     merged = per_bucket.groupBy("query_id", "neighbor_id").agg(
@@ -1115,9 +1112,9 @@ def quantized_ip_topk(
     return _blocked_topk(
         quantize_embeddings(corpus, id_col, vec_col),
         quantize_embeddings(queries, id_col, vec_col),
-        k, n_blocks, id_col, "qvec", "qdot", LongType(),
+        k, n_blocks, id_col, "qvec", "qdot", np.int64,
         # int64 GEMM: exact
-        lambda qvecs, cvecs: _matrix(qvecs, np.int64) @ _matrix(cvecs, np.int64).T,
+        lambda qmat, cmat: qmat @ cmat.T,
     ).withColumn("rank", F.col("rank").cast("long"))
 
 

@@ -74,12 +74,24 @@ def test_engines_return_same_length_list_from_any_iterable():
             id="extraction",
         ),
         pytest.param(["docling_translate_spark.operators.dedup"], id="dedup"),
+        pytest.param(
+            [
+                "docling_translate_spark.operators.similarity",
+                "docling_translate_spark.operators.bitext",
+                "docling_translate_spark.operators.semdedup",
+            ],
+            id="similarity",
+        ),
+        pytest.param(
+            ["docling_translate_spark.functions.markdown_render"], id="render"
+        ),
     ],
 )
 def test_extraction_path_imports_no_pandas(modules):
-    """The extraction kernel, its golden twin, the map engines and the
-    dedup signature kernels run on plain lists and Arrow batches:
-    importing them must not pull pandas in."""
+    """The extraction kernel, its golden twin, the map engines, the
+    dedup signature kernels, the vector kernels and the markdown render
+    UDF run on plain lists and Arrow batches: importing them must not
+    pull pandas in."""
     code = "".join(f"import {m}\n" for m in ["sys", *modules])
     code += "assert 'pandas' not in sys.modules, 'pandas imported'\n"
     root = Path(__file__).resolve().parents[1]

@@ -107,6 +107,7 @@ def test_blocked_topk_shuffle_shape(spark, transcript_path):
     assert "collect_list" in plan
     # vector payloads must never be broadcast as a hash-join build side
     assert "BroadcastHashJoin" not in plan, plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_ngram_jaccard_sizes_attach_to_pairs_not_broadcast(
@@ -170,7 +171,8 @@ def test_lsh_rescore_is_distributed_jvm(spark):
     # Python crossings: the signature kernel (cached — its subtree
     # prints under both InMemoryTableScan sites) and the bucket GEMM;
     # rescoring itself must add none
-    assert plan.count("MapInPandas") == 3, plan
+    assert plan.count("MapInArrow") == 3, plan
+    assert "MapInPandas" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     for line in plan.splitlines():
         if "BroadcastExchange" in line:

@@ -169,6 +169,92 @@ def test_exact_pairs_superset_of_lsh(spark, emb):
     assert lsh <= set(exact), "LSH emitted a pair the exact scan rejects"
 
 
+@pytest.mark.parametrize("batch", [1, 10000])
+@pytest.mark.parametrize("n_blocks", [1, 4])
+def test_exact_pairs_match_numpy_reference(spark, batch, n_blocks):
+    """cosine_pairs_exact equals a plain numpy all-pairs scan over 40
+    vectors, whether each Arrow batch holds one block cell or all of
+    them."""
+    from docling_translate_spark.operators.similarity import cosine_pairs_exact
+
+    rng = np.random.RandomState(5)
+    mat = rng.randn(40, 8)
+    ids = np.arange(100, 140)
+    rows = [(int(i), v.tolist()) for i, v in zip(ids, mat)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    sims = unit @ unit.T
+    want = {
+        (int(ids[i]), int(ids[j])): sims[i, j]
+        for i in range(40)
+        for j in range(i + 1, 40)
+        if sims[i, j] >= 0.3
+    }
+    assert len(want) > 50
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        got = cosine_pairs_exact(emb, threshold=0.3, n_blocks=n_blocks).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == len(want)
+    assert {(r["id_a"], r["id_b"]) for r in got} == set(want)
+    for r in got:
+        assert abs(r["cosine"] - want[(r["id_a"], r["id_b"])]) <= 1e-12
+
+
+def test_null_vector_rows_are_dropped(spark):
+    """A null vector has no score: the blocked kNN, the quantized MIPS
+    and the exact pair scan over a corpus with null-vector rows equal
+    their output over the same corpus without those rows — the null
+    must not shift later vectors onto other ids in its block."""
+    from docling_translate_spark.operators.similarity import (
+        brute_force_topk_blocked,
+        cosine_pairs_exact,
+        quantized_ip_topk,
+    )
+
+    rng = np.random.RandomState(11)
+    rows = [(i, rng.randn(4).tolist()) for i in range(1, 21)]
+    with_null = rows[:1] + [(1000, None)] + rows[1:9] + [(1001, None)] + rows[9:]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(with_null, schema)
+    for n_blocks in (1, 4):
+        runs = {
+            "blocked": lambda df: brute_force_topk_blocked(df, df, k=3, n_blocks=n_blocks),
+            "quantized": lambda df: quantized_ip_topk(df, df, k=3, n_blocks=n_blocks),
+            "pairs": lambda df: cosine_pairs_exact(df, threshold=0.3, n_blocks=n_blocks),
+        }
+        for name, run in runs.items():
+            want = sorted(map(tuple, run(clean).collect()))
+            assert want, name
+            assert sorted(map(tuple, run(dirty).collect())) == want, (name, n_blocks)
+
+
+def test_block_reader_rejects_misaligned_input():
+    """The Arrow matrix reader fails loudly on a null vector, vectors of
+    unequal length and an id count that differs from the vector count,
+    and reads a sliced array at its own offset."""
+    import pyarrow as pa
+
+    from docling_translate_spark.operators.similarity import _block
+
+    vecs = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float32()))
+    ids, mat = _block(pa.array([7, 8], pa.int64()), vecs.slice(1), np.float64)
+    assert ids.tolist() == [7, 8] and mat.tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    bad = [
+        (pa.array([1, 2]), pa.array([[1.0], None])),
+        (pa.array([1, 2]), pa.array([[1.0], [1.0, 2.0]])),
+        (pa.array([1]), pa.array([[1.0], [2.0]])),
+        (pa.array([1, None]), pa.array([[1.0], [2.0]])),
+    ]
+    for b_ids, b_vecs in bad:
+        with pytest.raises(ValueError):
+            _block(b_ids, b_vecs, np.float64)
+
+
 def test_lsh_ann_recall(spark, emb):
     """ANN with few planes must recover most of the exact top-1s."""
     exact = {

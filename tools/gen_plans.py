@@ -290,7 +290,7 @@ Structured Streaming.
 
 Both sides hash-aggregate into packed matrix blocks (collect_list), the
 block cells form via a cartesian of the two tiny packed relations (never
-a vector broadcast), one GEMM per cell in `MapInPandas`, then a window
+a vector broadcast), one GEMM per cell in `MapInArrow`, then a window
 merge of per-block top-k. Corpus size never bounds worker memory.
 
 ```
@@ -320,8 +320,9 @@ single-task window runs over the tiny partials relation.
 
 ## LSH ANN (`lsh_ann_topk`) — per-bucket GEMM
 
-Signature kernel (one `MapInPandas`), bucket packing via
-`collect_list`, one numpy GEMM per (table, bucket) cell emitting only
+Signature kernel (one `MapInArrow`), bucket packing via
+`collect_list`, one numpy GEMM per (table, bucket) cell (a second
+`MapInArrow`) emitting only
 per-member top-k, then a max-dedup + window merge. Candidate PAIRS are
 never materialized or shuffled, and no vector is broadcast. Hot-bucket
 salt-split shard counts come from a groupBy over the slim ~24-byte
@@ -591,7 +592,7 @@ group spreads over salt_buckets tasks — the second on group over
 
 Quantization is a codegen Project below the block-pack aggregates;
 then the packed×packed GEMM shape of the float kNN (cartesian of two
-tiny packed relations, one `MapInPandas`), and the bounded
+tiny packed relations, one `MapInArrow`), and the bounded
 n_blocks·k-per-query merge window.
 
 ```
