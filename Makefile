@@ -1,4 +1,4 @@
-.PHONY: test oracle oracle-fast bench plans smoke
+.PHONY: test oracle oracle-fast oracle-extract bench plans smoke
 
 # tier-1: the ROADMAP command (every test runs; Spark sized to the host)
 test:
@@ -10,6 +10,11 @@ oracle:
 
 oracle-fast:
 	python tools/check_oracle.py /root/testdata/sf0.001
+
+# the gate queries that run the extraction kernel (toggles_battery's
+# `sent` branch runs sentence mode)
+oracle-extract:
+	SPARK_GRAFT_ONLY=extract_turns,toggles_battery,a6_extraction_rollup python tools/check_oracle.py
 
 # the benchmark of record (BENCHMARK.json): both workloads, untraced, seed 1
 bench:

@@ -34,10 +34,19 @@ def normalize_map(texts: Sequence[str | None]) -> list[str]:
     """Control-char strip, then whitespace-run collapse + trim; a missing
     text maps to ``""``.
 
-    One pass per text: ``str.split()`` breaks on exactly the code points
-    that ``re``'s ``\\s`` and ``str.strip()`` treat as whitespace (all
-    three use ``Py_UNICODE_ISSPACE``), so ``" ".join(t.split())`` equals
-    ``re.sub(r"\\s+", " ", t).strip()``."""
+    ``str.split()`` breaks on exactly the code points that ``re``'s
+    ``\\s`` and ``str.strip()`` treat as whitespace (all three use
+    ``Py_UNICODE_ISSPACE``), so ``" ".join(t.split())`` equals
+    ``re.sub(r"\\s+", " ", t).strip()``. One ``_CTRL_RE`` search runs
+    over the whole batch joined with ``" "`` (not in the class); only a
+    batch that holds a control character, or a missing text, pays the
+    per-text ``sub``."""
+    try:
+        clean = _CTRL_RE.search(" ".join(texts)) is None
+    except TypeError:  # a missing (non-str) text: strip per text
+        clean = False
+    if clean:
+        return [" ".join(t.split()) for t in texts]
     sub = _CTRL_RE.sub
     return [" ".join(sub("", t).split()) if isinstance(t, str) else "" for t in texts]
 

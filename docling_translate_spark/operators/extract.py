@@ -6,21 +6,27 @@ re-planned for Spark as ONE ``mapInArrow`` pass per Arrow batch:
 1. segment turns into spans            (``segmenters.segment_text``)
 2. classify formula / boilerplate      (the pure predicates in
                                         ``docling_translate_spark.classify``)
-3. dedup unique content texts          (the reference's
-                                        ``list(set(all_sentences))``,
-                                        ``src/core.py:453-455`` — scoped
-                                        per Arrow batch)
-4. apply the deterministic map engine  (one list-in/list-out call per
-                                        batch — the "translate" stage,
-                                        ``src/translation/base.py:38-97``)
+3. dedup content units by first-seen index, scoped per Arrow batch (the
+   reference's ``list(set(all_sentences))``, ``src/core.py:453-455``). A
+   unit is a body segment or an aux text (caption, cell, header). In
+   sentence mode each unique segment is split once
+   (``sentences.split_sentences``, the reference's ``src/core.py:428``)
+   and its sentences are deduped in turn; aux texts stay whole units,
+   never split, even when one equals a body segment
+4. apply the deterministic map engine in one list-in/list-out call per
+   batch, over the unique units (sentence mode: the unique sentences
+   and aux texts) — the "translate" stage,
+   ``src/translation/base.py:38-97``
 5. join results back by first-seen index (``src/core.py:486``,
    ``src/html_generator.py:565-567``, ``:692``): every unique text is
    mapped, so the reference's identity fallback cannot apply, and a short
-   engine result raises ``IndexError`` rather than emitting source text
-6. reassemble per turn in span order   (spans of a turn are born
-                                        colocated, so nothing moves);
-   empty/binary turns keep one output row with no spans, preserving
-   per-turn parity with the input
+   engine result raises ``IndexError`` rather than emitting source text.
+   In sentence mode each unique segment's ``" ".join`` of its mapped
+   sentences is built once
+6. reassemble each turn as ``CONTENT_JOINER`` over its units' outputs in
+   span order, one shape for both modes (spans of a turn are born
+   colocated, so nothing moves); empty/binary turns keep one output row
+   with no spans, preserving per-turn parity with the input
 
 Scale notes (100 TB / 10^12 turns):
 
@@ -75,7 +81,10 @@ def extract_turns_fused(
     Structured Streaming (no stateful ops). ``conv_id``/``turn_idx`` pass
     through as the input Arrow arrays, and ``spans`` is assembled once
     per batch from flat columns, so no pandas frame and no per-span dict
-    is built. Byte-equality with the pure-Python twin
+    is built. The module imports no pandas, but the worker still loads
+    it: pyarrow 16.1 imports pandas lazily inside ``pa.array`` of a
+    Python list and ``Array.to_numpy(zero_copy_only=False)``.
+    Byte-equality with the pure-Python twin
     (:func:`docling_translate_spark.golden.extract_turn`) is pinned in
     tests.
     """
@@ -120,9 +129,11 @@ def extract_turns_fused(
             starts, ends, seg_types, trans, lines = [], [], [], [], []
             offsets = [0]
             n_spans, ratios, content_lists = [], [], []
-            # unique content text -> first-seen index into the map input
-            uniq: dict[str, int] = {}
-            index_of = uniq.setdefault
+            # unique content unit -> first-seen index. In sentence mode an
+            # aux text's key is a 1-tuple, so it stays a whole unit apart
+            # from an equal body segment, which is split
+            units: dict = {}
+            unit_of = units.setdefault
             for text, tool, cap, cel, hdr in zip(
                 col("text"), col("tool"), col("caption"), col("cells"), col("headers")
             ):
@@ -144,12 +155,7 @@ def extract_turns_fused(
                         trans.append(tr)
                         lines.append(line)
                         if tr and seg_text.strip():
-                            if sentence_split:
-                                # sentence-level map units (core.py:428)
-                                sents = split_sentences(seg_text)
-                                contents.append([index_of(s, len(uniq)) for s in sents])
-                            else:
-                                contents.append(index_of(seg_text, len(uniq)))
+                            contents.append(unit_of(seg_text, len(units)))
                 # §2.8 UNION ALL of span sources: caption + table cells +
                 # headers, pooled WHOLE — no sentence split, no
                 # formula/boilerplate pass (src/core.py:429-448)
@@ -159,8 +165,8 @@ def extract_turns_fused(
                     seg_types.append(st)
                     trans.append(True)
                     lines.append(-1)
-                    i = index_of(aux_text, len(uniq))
-                    contents.append([i] if sentence_split else i)
+                    key = (aux_text,) if sentence_split else aux_text
+                    contents.append(unit_of(key, len(units)))
                 ns = len(starts) - offsets[-1]
                 offsets.append(len(starts))
                 n_spans.append(ns)
@@ -169,20 +175,26 @@ def extract_turns_fused(
 
             # batch-scoped dedup + one map call (the reference's
             # unique-sentence translate pass, core.py:453-486)
-            mapped = fn(list(uniq))
-
             if sentence_split:
-                extracted = [
-                    CONTENT_JOINER.join(
-                        " ".join([mapped[i] for i in sents]) for sents in cl
-                    )
-                    for cl in content_lists
+                # sentence-level map units (core.py:428): each unique
+                # segment is split once and rejoined with ' ' once; an
+                # aux unit's 1-tuple key is its own one-sentence list
+                sents: dict[str, int] = {}
+                sent_of = sents.setdefault
+                parts = [
+                    [
+                        sent_of(s, len(sents))
+                        for s in (u if type(u) is tuple else split_sentences(u))
+                    ]
+                    for u in units
                 ]
+                mapped = fn(list(sents))
+                unit_out = [" ".join([mapped[i] for i in p]) for p in parts]
             else:
-                extracted = [
-                    CONTENT_JOINER.join([mapped[i] for i in cl])
-                    for cl in content_lists
-                ]
+                unit_out = fn(list(units))
+            extracted = [
+                CONTENT_JOINER.join([unit_out[i] for i in cl]) for cl in content_lists
+            ]
             span_values = pa.StructArray.from_arrays(
                 [
                     pa.array(starts, pa.int32()),

@@ -22,7 +22,9 @@ The four numpy kernels (blocked top-k, exact pairs, hyperplane
 signatures, LSH buckets) run in ``mapInArrow`` and share one contract:
 :func:`_block` reads ids and a ``list<number>`` column into a matrix,
 refusing nulls, ragged vectors and id/vector count mismatches, and
-:func:`_emit` writes their rows back as one typed Arrow batch.
+:func:`_emit` writes their rows back as one typed Arrow batch. Each
+of the four drops rows with a null id or a null vector before
+:func:`_block`.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
@@ -403,8 +406,12 @@ def hyperplane_signatures(
     independent tables union to 1-(1-p)^L. numpy matmul over the whole
     Arrow batch — thousands of vectors per BLAS call, no per-row Python.
     Planes and embeddings are integer-quantized (:data:`_LSH_QUANT`) so
-    bucket assignment is exact integer arithmetic. A null id or vector
-    raises ``ValueError`` (:func:`_block`).
+    bucket assignment is exact integer arithmetic. Rows with a null id
+    or a null vector get no signature: the kernel drops them before
+    :func:`_block`, so :func:`lsh_ann_topk` and
+    :func:`cosine_near_dup_pairs` never pair them. They are dropped in
+    the kernel, not by a ``filter``, for the reason given in
+    :func:`_pack_blocks`.
     """
     planes = lsh_planes(dim, n_planes, n_tables, seed)
     fields = (("sid", np.int64), ("table", np.int32), ("bucket", np.int64))
@@ -413,6 +420,8 @@ def hyperplane_signatures(
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
+            if rb.column(0).null_count or rb.column(1).null_count:
+                rb = rb.filter(pc.and_(rb.column(0).is_valid(), rb.column(1).is_valid()))
             if not rb.num_rows:
                 continue
             sids, mat = _block(rb.column(0), rb.column(1), np.float64)
@@ -623,8 +632,11 @@ def ivf_centroid_ints(
     """Train spherical k-means on (id, vector) ``rows`` (already in the
     deterministic hash order) and snap each centroid coordinate onto the
     integer grid. Same rows + seed ⇒ bit-identical ints on any host, so
-    a SQL oracle can replay cell assignment from the emitted literal."""
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    a SQL oracle can replay cell assignment from the emitted literal.
+    Rows with a null id or a null vector are dropped: a null vector has
+    no direction to train on."""
+    vecs = [r[1] for r in rows if r[0] is not None and r[1] is not None]
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     cent = _kmeans(mat, n_cells, iters=iters, seed=seed)
     return [[int(np.floor(c * grid + 0.5)) for c in row] for row in cent]
@@ -731,13 +743,21 @@ def ivf_topk_exact(
 
     cells = ivf_ranked_cells(corpus, centroid_ints, grid, id_col, vec_col)
 
+    # a null vector quantizes to a null ``_qe``: it joins no cell and
+    # probes none, so it is dropped like in the other kernels (a null id
+    # fails the ``qid != sid`` filter below)
+    has_vec = F.col("_qe").isNotNull()
     inv = cells.select(
-        F.col("_vid").alias("sid"), F.col("_cells")[0]["cell"].alias("cell")
+        F.col("_vid").alias("sid"),
+        F.when(has_vec, F.col("_cells")[0]["cell"]).alias("cell"),
     )
     probes = cells.select(
         F.col("_vid").alias("qid"),
         F.explode(
-            F.transform(F.slice("_cells", 1, nprobe), lambda s: s["cell"])
+            F.when(
+                has_vec,
+                F.transform(F.slice("_cells", 1, nprobe), lambda s: s["cell"]),
+            )
         ).alias("cell"),
     )
     cand = (

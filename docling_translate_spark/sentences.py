@@ -98,15 +98,23 @@ _TAIL_WORD_RE = re.compile(r"([A-Za-z][A-Za-z.]*)$")
 
 
 def split_sentences(text: str) -> List[str]:
-    """Split one text item into sentences (deterministic rule set)."""
+    """Split one text item into sentences (deterministic rule set).
+
+    At each ``.`` boundary the abbreviation check reads the tail word,
+    the run of letters and dots that ends at the period. The word holds
+    no space, so it is searched for only after the last space before the
+    period. That finds the same leftmost match as a search of the whole
+    prefix since the last split, which rescanned the prefix at every
+    boundary."""
     if not text or not text.strip():
         return []
     out: List[str] = []
     start = 0
     for m in _BOUNDARY_RE.finditer(text):
         if m.group(1) == ".":
-            prefix = text[start : m.start(1)]
-            tail = _TAIL_WORD_RE.search(prefix)
+            pos = m.start(1)
+            lo = max(text.rfind(" ", start, pos) + 1, start)
+            tail = _TAIL_WORD_RE.search(text, lo, pos)
             if tail:
                 word = tail.group(1).rstrip(".").lower()
                 # suppress split after known abbreviations, single-letter

@@ -8,6 +8,7 @@ import pytest
 
 from docling_translate_spark.golden import extract_turn
 from docling_translate_spark.operators.extract import (
+    CONTENT_JOINER,
     ExtractConfig,
     extract_turns_fused,
 )
@@ -152,18 +153,44 @@ def _rich_rows():
         cap, cells, heads = _BLANK_AUX[i % 2]
         body = _BLANK_BODIES[i % len(_BLANK_BODIES)]
         rows.append(("blank", i, "user", body, None, None, cap, cells, heads))
+    rows += _overlap_rows()
     return rows
 
 
-def test_fused_invariant_to_batch_size_and_partitioning(spark):
+# paragraphs whose sentence split + " " rejoin differs from the whole text
+_PARA_A = "Alpha one is here. Beta two\nfollows it."
+_PARA_B = "Gamma three stands alone.  Delta four ends."
+_SENT_B = "Delta four ends."
+
+
+def _overlap_rows():
+    """Turns whose content units overlap: a paragraph repeated within a
+    turn and across turns, a caption or header equal to a body paragraph
+    (before and after that paragraph first appears), and a cell equal to
+    one sentence of another paragraph."""
+    body = f"{_PARA_A}\n\n{_PARA_B}\n\n{_PARA_A}"
+    return [
+        ("dup", 0, "user", "Intro line.", None, None, _PARA_B, None, None),
+        ("dup", 1, "user", body, None, None, None, [[_SENT_B, None]], None),
+        ("dup", 2, "user", _PARA_B, None, None, _PARA_A, None, [_PARA_B]),
+        ("dup", 3, "user", f"{_SENT_B} Echo five.", None, None, _SENT_B, [[_PARA_A]], None),
+        ("dup", 4, "user", body, None, None, None, None, None),
+    ]
+
+
+@pytest.mark.parametrize("sentence_split", [False, True])
+def test_fused_invariant_to_batch_size_and_partitioning(spark, sentence_split):
     """The fused output is the same bytes at 7-row Arrow batches over five
     partitions (one holding only blank turns, so whole batches carry no
     span and no map key) and at the default batch size over one
-    partition, and both equal golden.extract_turn turn by turn."""
+    partition, and both equal golden.extract_turn turn by turn. The
+    overlap turns make one batch hold a repeated paragraph, aux texts
+    equal to a body paragraph and a cell equal to one of its sentences:
+    in sentence mode the paragraph is split and the aux text is not."""
     rows = _rich_rows()
     df = spark.createDataFrame(rows, RICH_TRANSCRIPT_SCHEMA)
     blank = df["conv_id"] == "blank"
-    cfg = ExtractConfig(engine="marker")
+    cfg = ExtractConfig(engine="marker", sentence_split=sentence_split)
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(conf)
     spark.conf.set(conf, "7")
@@ -183,10 +210,18 @@ def test_fused_invariant_to_batch_size_and_partitioning(spark):
 
     golden = {
         (cid, tix): extract_turn(
-            text, tool, engine=cfg.engine, caption=cap, cells=cel, headers=hdr
+            text,
+            tool,
+            engine=cfg.engine,
+            sentence_split=sentence_split,
+            caption=cap,
+            cells=cel,
+            headers=hdr,
         )
         for cid, tix, _, text, tool, _, cap, cel, hdr in rows
     }
+    dup = golden[("dup", 2)]["extracted_text"].split(CONTENT_JOINER)
+    assert (dup[0] == dup[2]) != sentence_split  # body split, header whole
     for out in (small_rows, one_rows):
         assert len(out) == len(rows)
         _assert_matches(out, golden, "batch-size")

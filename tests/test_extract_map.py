@@ -40,6 +40,34 @@ def test_normalize_equals_regex_formulation():
     assert got[0] == ""  # None
 
 
+def test_normalize_batch_check_equals_per_text_strip():
+    """The one batch-wide control-char search picks the same output as
+    stripping every text on its own: batches with and without ``\\x0b``
+    and ``\\x1c``-``\\x1f`` (whitespace to ``str.split`` and control
+    characters to the strip), with and without a missing text, and the
+    empty batch."""
+    ctrl = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f]")
+
+    def per_text(texts):
+        return [" ".join(ctrl.sub("", t).split()) if isinstance(t, str) else "" for t in texts]
+
+    plain = [c for c in _ALPHABET if not ctrl.match(c)]
+    specials = ["\x0b", "\x1c", "\x1d", "\x1e", "\x1f", None]
+    normalize = create_engine("normalize")
+    rng = random.Random(11)
+    assert normalize([]) == []
+    for i in range(3_000):
+        batch = [
+            "".join(rng.choice(plain) for _ in range(rng.randrange(12)))
+            for _ in range(rng.randrange(1, 20))
+        ]
+        if i % 2:
+            s = rng.choice(specials)
+            j = rng.randrange(len(batch))
+            batch[j] = s if s is None else batch[j][:3] + s + batch[j][3:]
+        assert normalize(batch) == per_text(batch), batch
+
+
 def test_marker_and_truncate512_keep_their_outputs():
     """Pinned to the earlier pandas formulations, a missing text included."""
     texts = [None, "", "a b", "é" * 600, "x" * 511 + "\U0001f600yz"]
@@ -91,7 +119,10 @@ def test_extraction_path_imports_no_pandas(modules):
     """The extraction kernel, its golden twin, the map engines, the
     dedup signature kernels, the vector kernels and the markdown render
     UDF run on plain lists and Arrow batches: importing them must not
-    pull pandas in."""
+    pull pandas in. This checks the imports only. Running the kernels
+    still loads pandas in the worker, because pyarrow 16.1 imports it
+    lazily inside ``pa.array`` of a Python list and
+    ``Array.to_numpy(zero_copy_only=False)``."""
     code = "".join(f"import {m}\n" for m in ["sys", *modules])
     code += "assert 'pandas' not in sys.modules, 'pandas imported'\n"
     root = Path(__file__).resolve().parents[1]

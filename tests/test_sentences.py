@@ -1,7 +1,15 @@
 """Pinned fixtures for the deterministic sentence tokenizer (the engine's
 Punkt stand-in; reference calls nltk.sent_tokenize at core.py:428)."""
 
-from docling_translate_spark.sentences import split_sentences
+import random
+
+from docling_translate_spark.sentences import (
+    _BOUNDARY_RE,
+    _DOTTED_ABBR_RE,
+    _TAIL_WORD_RE,
+    ABBREVIATIONS,
+    split_sentences,
+)
 
 
 def test_basic_split():
@@ -137,3 +145,56 @@ def test_punkt_gap_fixtures_r5():
     diverging = [(t, split_sentences(t), want)
                  for t, want in cases if split_sentences(t) != want]
     assert not diverging, diverging
+
+
+def _split_whole_prefix(text):
+    """The splitter's earlier formulation, kept as the reference: the
+    tail word is searched over the whole prefix since the last split."""
+    if not text or not text.strip():
+        return []
+    out, start = [], 0
+    for m in _BOUNDARY_RE.finditer(text):
+        if m.group(1) == ".":
+            tail = _TAIL_WORD_RE.search(text[start : m.start(1)])
+            if tail:
+                word = tail.group(1).rstrip(".").lower()
+                if (
+                    word in ABBREVIATIONS
+                    or (len(word) == 1 and word.isalpha())
+                    or _DOTTED_ABBR_RE.match(word)
+                ):
+                    continue
+        sent = text[start : m.end(2)].strip()
+        if sent:
+            out.append(sent)
+        start = m.end(3)
+    if text[start:].strip():
+        out.append(text[start:].strip())
+    return out
+
+
+def test_tail_word_window_equals_whole_prefix_search():
+    """Searching for the tail word only after the last space before the
+    period splits exactly like searching the whole prefix, on seeded
+    strings of letters, terminators, closers/openers, digits, tabs and
+    newlines, non-ASCII letters and the abbreviations (bare, dotted and
+    title-cased)."""
+    abbr = sorted(ABBREVIATIONS)
+    pieces = (
+        list("abzXYZ.!?.\"'’”)]“‘([0129 \t\n éßΩ")
+        + ["  ", "\n\n", " . ", "U.S.", "e.g.", "Ph.D.", "config.yaml."]
+        + [a + "." for a in abbr]
+        + [a.title() + "." for a in abbr]
+    )
+    rng = random.Random(13)
+    texts = ["", " ", ".", "a. B", "x.\n. Y", "Dr.\tSmith. Ok"]
+    texts += [
+        "".join(rng.choice(pieces) for _ in range(rng.randrange(40)))
+        for _ in range(50_000)
+    ]
+    n_split = 0
+    for t in texts:
+        got = split_sentences(t)
+        assert got == _split_whole_prefix(t), repr(t)
+        n_split += len(got) > 1
+    assert n_split > 5_000  # the draw reaches real boundaries

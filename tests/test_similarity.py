@@ -205,13 +205,15 @@ def test_exact_pairs_match_numpy_reference(spark, batch, n_blocks):
 
 
 def test_null_vector_rows_are_dropped(spark):
-    """A null vector has no score: the blocked kNN, the quantized MIPS
-    and the exact pair scan over a corpus with null-vector rows equal
-    their output over the same corpus without those rows — the null
+    """A null vector has no score: the blocked kNN, the quantized MIPS,
+    the exact pair scan, LSH top-k, LSH near-dup pairs and IVF top-k
+    over a corpus with null-vector rows equal their output over the same
+    corpus without those rows, instead of failing the job — the null
     must not shift later vectors onto other ids in its block."""
     from docling_translate_spark.operators.similarity import (
         brute_force_topk_blocked,
         cosine_pairs_exact,
+        ivf_topk_exact,
         quantized_ip_topk,
     )
 
@@ -221,16 +223,21 @@ def test_null_vector_rows_are_dropped(spark):
     schema = "vec_id long, embedding array<double>"
     clean = spark.createDataFrame(rows, schema)
     dirty = spark.createDataFrame(with_null, schema)
-    for n_blocks in (1, 4):
-        runs = {
-            "blocked": lambda df: brute_force_topk_blocked(df, df, k=3, n_blocks=n_blocks),
-            "quantized": lambda df: quantized_ip_topk(df, df, k=3, n_blocks=n_blocks),
-            "pairs": lambda df: cosine_pairs_exact(df, threshold=0.3, n_blocks=n_blocks),
-        }
-        for name, run in runs.items():
-            want = sorted(map(tuple, run(clean).collect()))
-            assert want, name
-            assert sorted(map(tuple, run(dirty).collect())) == want, (name, n_blocks)
+    runs = {
+        "lsh": lambda df: lsh_ann_topk(df, dim=4, k=3, n_planes=2, n_tables=4),
+        "near_dup": lambda df: cosine_near_dup_pairs(
+            df, dim=4, threshold=0.3, n_planes=2, n_tables=4
+        ),
+        "ivf": lambda df: ivf_topk_exact(df, k=3, n_cells=3, nprobe=2),
+    }
+    for n in (1, 4):
+        runs[f"blocked/{n}"] = lambda df, n=n: brute_force_topk_blocked(df, df, k=3, n_blocks=n)
+        runs[f"quantized/{n}"] = lambda df, n=n: quantized_ip_topk(df, df, k=3, n_blocks=n)
+        runs[f"pairs/{n}"] = lambda df, n=n: cosine_pairs_exact(df, threshold=0.3, n_blocks=n)
+    for name, run in runs.items():
+        want = sorted(map(tuple, run(clean).collect()))
+        assert want, name
+        assert sorted(map(tuple, run(dirty).collect())) == want, name
 
 
 def test_block_reader_rejects_misaligned_input():
