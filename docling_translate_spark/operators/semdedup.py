@@ -93,7 +93,7 @@ def semdedup_exact(
 ) -> DataFrame:
     """Cluster-scoped semantic dedup: one row per corpus vector with its
     cell assignment, exact integer centroid dot, squared quantized norm,
-    and the keep/drop verdict.
+    and the keep/drop verdict. A null vector gets no row.
 
     ``thr_milli`` is the cosine threshold in thousandths (950 ⇒ 0.95 —
     the paper's regime for strict duplicates; lower values prune
@@ -115,7 +115,8 @@ def semdedup_exact(
     # projection (ivf_ranked_cells) feeds both operators, so the shared
     # centroid literal replays both and an assignment fix lands once
     cells = ivf_ranked_cells(corpus, centroid_ints, grid, id_col, vec_col)
-    asg = cells.select(
+    # a null vector has no cell and no verdict: it gets no output row
+    asg = cells.filter(F.col("_qe").isNotNull()).select(
         F.col("_vid").alias("vec_id"),
         "_qe",
         F.col("_cells")[0]["cell"].cast("long").alias("cell"),
@@ -214,7 +215,7 @@ def semantic_decontaminate(
     threshold test is the same no-float ``10^6·dot² ≥
     τ_milli²·|a|²·|b|²`` in DECIMAL(38,0); zero vectors never match.
 
-    Output: one row per CORPUS vector — ``vec_id``, ``cell`` (BIGINT),
+    Output: one row per non-null CORPUS vector — ``vec_id``, ``cell`` (BIGINT),
     ``n_hits`` (BIGINT, eval vectors at or over threshold), ``kept``
     (BOOLEAN, true iff no hit — the n-gram operator's flag polarity).
 
@@ -238,7 +239,8 @@ def semantic_decontaminate(
     nprobe = min(nprobe, len(centroid_ints))
 
     c_cells = ivf_ranked_cells(corpus, centroid_ints, grid, id_col, vec_col)
-    asg = c_cells.select(
+    # as in semdedup_exact, a null corpus vector gets no output row
+    asg = c_cells.filter(F.col("_qe").isNotNull()).select(
         F.col("_vid").alias("vec_id"),
         F.col("_qe").alias("c_qe"),
         F.col("_cells")[0]["cell"].cast("long").alias("cell"),

@@ -662,7 +662,11 @@ def ivf_ranked_cells(
     it, so a fix here (e.g. the a3c1923 grid-mismatch fix) reaches
     every consumer and the shared centroid literal keeps replaying all
     of them. ``grid`` must be the grid ``centroid_ints`` were snapped
-    with (see the caller notes in :func:`ivf_topk_exact`)."""
+    with (see the caller notes in :func:`ivf_topk_exact`).
+
+    A null vector quantizes to a null ``_qe`` and gets null ``_cells``:
+    no cell and no probes, so every consumer's cell join drops it like
+    the other vector kernels do."""
     quant = F.transform(
         F.col(vec_col),
         lambda x: F.floor(
@@ -690,7 +694,9 @@ def ivf_ranked_cells(
             ]
         )
     )
-    return base.select("_vid", "_qe", ranked.alias("_cells"))
+    return base.select(
+        "_vid", "_qe", F.when(F.col("_qe").isNotNull(), ranked).alias("_cells")
+    )
 
 
 def ivf_topk_exact(
@@ -743,21 +749,15 @@ def ivf_topk_exact(
 
     cells = ivf_ranked_cells(corpus, centroid_ints, grid, id_col, vec_col)
 
-    # a null vector quantizes to a null ``_qe``: it joins no cell and
-    # probes none, so it is dropped like in the other kernels (a null id
-    # fails the ``qid != sid`` filter below)
-    has_vec = F.col("_qe").isNotNull()
+    # a null vector has null ``_cells``: it joins no cell and probes none
+    # (a null id fails the ``qid != sid`` filter below)
     inv = cells.select(
-        F.col("_vid").alias("sid"),
-        F.when(has_vec, F.col("_cells")[0]["cell"]).alias("cell"),
+        F.col("_vid").alias("sid"), F.col("_cells")[0]["cell"].alias("cell")
     )
     probes = cells.select(
         F.col("_vid").alias("qid"),
         F.explode(
-            F.when(
-                has_vec,
-                F.transform(F.slice("_cells", 1, nprobe), lambda s: s["cell"]),
-            )
+            F.transform(F.slice("_cells", 1, nprobe), lambda s: s["cell"])
         ).alias("cell"),
     )
     cand = (
@@ -805,8 +805,10 @@ def pq_codebook_ints(
     subspace ``j``'s ``k``-th centroid as ``d/m`` BIGINTs. Same
     rows + seeds ⇒ bit-identical ints on any host, so a SQL oracle
     replays encoding and ADC scoring from the emitted literal — the
-    ``ivf_centroid_ints`` discipline, per subspace."""
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    ``ivf_centroid_ints`` discipline, per subspace, null rows dropped
+    alike."""
+    vecs = [r[1] for r in rows if r[0] is not None and r[1] is not None]
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
     dim = mat.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")

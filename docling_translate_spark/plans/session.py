@@ -30,10 +30,24 @@ PySpark and py4j from the install when a CRC32 check shows that the zips
 hold the same code, and otherwise keeps Spark's path (see
 :mod:`~docling_translate_spark.plans.pydaemon`). A rebuilt ``local[2]``
 session's first 2-row ``mapInArrow`` job fell from 1.69-2.01 s to
-0.79-1.07 s. Most of what is left of a rebuilt session's set-up is
-PySpark's own ``SparkContext.stop()`` of the session before it: it took
-0.97-1.0 s, of which shutting down the accumulator server took
-0.84-0.96 s. That is PySpark's code, which the package does not control.
+0.79-1.07 s.
+
+A rebuilt session also waited for the one before it to stop.
+``SparkContext.stop()`` took 0.97-1.0 s, 0.84-0.96 s of it in the
+accumulator server's ``shutdown()``. The server's one thread runs the
+handler of the JVM's accumulator connection, which the JVM opens at the
+first Python task and never closes; the handler polls it with
+``select(..., 1)`` and checks for shutdown only between polls. So
+:func:`build_session` hands its server to
+:func:`prompt_accumulator_shutdown`, whose ``shutdown()`` first closes
+that connection (``SHUT_RDWR``), so the poll returns at once, and then
+runs PySpark's own. ``stop()`` after a Python job now takes 0.01-0.07 s
+(``local[2]``). perfbench's ``setup_s`` (the median of a run's three
+set-ups, two of them on a rebuilt session) fell from a median 1.70 s to
+0.74 s on ``extract_fused`` (11 of 11 alternating pairs) and from
+1.72 s to 0.78 s on ``extract_sentences`` (10 of 10). A session that
+ran no Python task has no such connection; its stop still waits on
+``serve_forever``'s 0.5 s poll.
 
 Every Python job still pays a fixed cost. On ``local[2]`` (median of 30
 warm runs, two sessions) a 2-row ``mapInArrow`` job took 78-92 ms against
@@ -48,7 +62,11 @@ checkpoint job's 3.25 per unit), which no timed workload covers yet.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
+import socket
+import threading
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -81,6 +99,8 @@ def build_session(
       package root on their ``PYTHONPATH``. Cluster jobs submitted with
       ``--py-files`` go through ``tools/run_job.py``, which keeps
       PySpark's stock daemon.
+    * ``stop()`` does not wait out the accumulator handler's 1 s poll
+      (:func:`prompt_accumulator_shutdown`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -108,4 +128,64 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    return prompt_accumulator_shutdown(b.getOrCreate())
+
+
+class _PromptShutdown:
+    """Mixed into a PySpark accumulator server: ``shutdown()`` closes the
+    JVM's open connection first, so the handler's 1 s ``select`` poll
+    returns at once instead of running out."""
+
+    def finish_request(self, request, client_address):
+        self._open_requests.add(request)
+        self._serve_thread = threading.current_thread()
+        try:
+            super().finish_request(request, client_address)
+        finally:
+            self._open_requests.discard(request)
+
+    def shutdown(self):
+        # set before closing, so a handler that starts now exits at once
+        self.server_shutdown = True
+        for request in list(self._open_requests):
+            with contextlib.suppress(OSError):
+                request.shutdown(socket.SHUT_RDWR)
+        super().shutdown()
+        if self._serve_thread is not None:
+            self._serve_thread.join()
+
+    def handle_error(self, request, client_address):
+        # after shutdown the handler reads EOF from the closed connection
+        if not self.server_shutdown:
+            super().handle_error(request, client_address)
+
+    def service_actions(self):
+        # serve_forever calls this after each request. Once the handler has
+        # ended for shutdown, end the loop here: the handler can end before
+        # shutdown() flags the loop, which would then sit out another 0.5 s
+        # poll. The thread ends quietly (threading ignores SystemExit).
+        if self.server_shutdown:
+            raise SystemExit
+        super().service_actions()
+
+
+@functools.cache
+def _prompt_shutdown_class(server_class: type) -> type:
+    return type(f"Prompt{server_class.__name__}", (_PromptShutdown, server_class), {})
+
+
+def prompt_accumulator_shutdown(spark: SparkSession) -> SparkSession:
+    """Make ``spark.stop()`` shut this session's accumulator server down
+    without waiting out its handler's 1 s poll (see the module docstring).
+
+    Only this session's server instance changes class; PySpark's own
+    ``shutdown()`` still runs, so the listening socket is closed and the
+    serve thread has exited when ``stop()`` returns. Idempotent, since
+    ``getOrCreate`` can return a session that already went through here.
+    A connection accepted before the call keeps the stock wait."""
+    server = getattr(spark.sparkContext, "_accumulatorServer", None)
+    if server is not None and not isinstance(server, _PromptShutdown):
+        server._open_requests = set()
+        server._serve_thread = None
+        server.__class__ = _prompt_shutdown_class(type(server))
+    return spark

@@ -206,14 +206,22 @@ def test_exact_pairs_match_numpy_reference(spark, batch, n_blocks):
 
 def test_null_vector_rows_are_dropped(spark):
     """A null vector has no score: the blocked kNN, the quantized MIPS,
-    the exact pair scan, LSH top-k, LSH near-dup pairs and IVF top-k
+    the exact pair scan, LSH top-k, LSH near-dup pairs, IVF top-k,
+    IVF-PQ top-k, SemDeDup, semantic decontamination and bitext mining
     over a corpus with null-vector rows equal their output over the same
     corpus without those rows, instead of failing the job — the null
-    must not shift later vectors onto other ids in its block."""
+    must not shift later vectors onto other ids in its block, and gets
+    no cell, no probes and no verdict row."""
+    from docling_translate_spark.operators.bitext import bitext_mine
+    from docling_translate_spark.operators.semdedup import (
+        semantic_decontaminate,
+        semdedup_exact,
+    )
     from docling_translate_spark.operators.similarity import (
         brute_force_topk_blocked,
         cosine_pairs_exact,
         ivf_topk_exact,
+        ivfpq_topk,
         quantized_ip_topk,
     )
 
@@ -229,6 +237,12 @@ def test_null_vector_rows_are_dropped(spark):
             df, dim=4, threshold=0.3, n_planes=2, n_tables=4
         ),
         "ivf": lambda df: ivf_topk_exact(df, k=3, n_cells=3, nprobe=2),
+        "ivfpq": lambda df: ivfpq_topk(df, k=3, n_cells=3, nprobe=2, m=2, ks=4),
+        "semdedup": lambda df: semdedup_exact(df, thr_milli=400, n_cells=3),
+        "semantic_decontam": lambda df: semantic_decontaminate(
+            df, df, thr_milli=400, n_cells=3, nprobe=2
+        ),
+        "bitext": lambda df: bitext_mine(df, df, k=2, n_cells=3, nprobe=2),
     }
     for n in (1, 4):
         runs[f"blocked/{n}"] = lambda df, n=n: brute_force_topk_blocked(df, df, k=3, n_blocks=n)

@@ -22,10 +22,14 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("dts-extract").getOrCreate()
+    from docling_translate_spark.plans.session import prompt_accumulator_shutdown
     from docling_translate_spark.sources.checkpoint import (
         read_lineage,
         run_extraction,
     )
+
+    # the final stop() then skips the accumulator handler's 1 s poll
+    prompt_accumulator_shutdown(spark)
 
     transcripts = spark.read.parquet(args.input)
     done = run_extraction(
