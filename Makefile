@@ -1,4 +1,4 @@
-.PHONY: test oracle oracle-fast oracle-extract bench plans smoke
+.PHONY: test oracle oracle-fast oracle-extract bench bench-pairs plans smoke
 
 # tier-1: the ROADMAP command (every test runs; Spark sized to the host)
 test:
@@ -20,6 +20,12 @@ oracle-extract:
 bench:
 	python3 perfbench/run.py --workload extract_fused --seed 1 --seconds 15 --trace 0
 	python3 perfbench/run.py --workload extract_sentences --seed 1 --seconds 15 --trace 0
+
+# BASE against the working tree: alternating perfbench pairs per workload
+# on distinct seeds, in copies under a temp dir (or SCRATCH=dir)
+bench-pairs:
+	@test -n "$(BASE)" || { echo "usage: make bench-pairs BASE=<rev> [PAIRS=10] [SCRATCH=dir]"; exit 2; }
+	python3 tools/bench_pairs.py --base $(BASE) --pairs $(or $(PAIRS),10) $(if $(SCRATCH),--scratch $(SCRATCH))
 
 plans:
 	python tools/gen_plans.py

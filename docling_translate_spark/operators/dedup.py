@@ -34,6 +34,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from docling_translate_spark.arrow_io import primitive_array, read_strings
+
 # --- exact dedup (A1 at scale) ---
 
 
@@ -689,7 +691,7 @@ def minhash_signatures(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            hv, counts = _token_hashes(rb.column(1).to_numpy(zero_copy_only=False), n)
+            hv, counts = _token_hashes(read_strings(rb.column(1)), n)
             hv &= mask32
             sigs = [
                 np.minimum.reduceat(
@@ -702,7 +704,13 @@ def minhash_signatures(
             flat = np.concatenate(sigs, axis=1).T.ravel().astype(np.int64)
             offsets = np.arange(0, len(flat) + 1, num_hashes, dtype=np.int32)
             yield pa.RecordBatch.from_arrays(
-                [rb.column(0), pa.ListArray.from_arrays(offsets, flat)],
+                [
+                    rb.column(0),
+                    pa.ListArray.from_arrays(
+                        primitive_array(offsets, pa.int32()),
+                        primitive_array(flat, pa.int64()),
+                    ),
+                ],
                 names=["sid", "signature"],
             )
 
@@ -828,7 +836,7 @@ def simhash_signatures(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            hv, counts = _token_hashes(rb.column(1).to_numpy(zero_copy_only=False))
+            hv, counts = _token_hashes(read_strings(rb.column(1)))
             hv = hv.astype("<u8", copy=False)
             # empty docs hold no items, so they take no reduceat slot
             nz = np.flatnonzero(counts)
@@ -841,7 +849,7 @@ def simhash_signatures(
                 )
             sh = np.packbits(2 * votes > counts[:, None], axis=1, bitorder="little")
             yield pa.RecordBatch.from_arrays(
-                [rb.column(0), pa.array(sh.view("<i8").ravel())],
+                [rb.column(0), primitive_array(sh.view("<i8").ravel(), pa.int64())],
                 names=["sid", "simhash"],
             )
 

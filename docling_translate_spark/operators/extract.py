@@ -81,12 +81,12 @@ def extract_turns_fused(
     Structured Streaming (no stateful ops). ``conv_id``/``turn_idx`` pass
     through as the input Arrow arrays, and ``spans`` is assembled once
     per batch from flat columns, so no pandas frame and no per-span dict
-    is built. The module imports no pandas, but the worker still loads
-    it: pyarrow 16.1 imports pandas lazily inside ``pa.array`` of a
-    Python list and ``Array.to_numpy(zero_copy_only=False)``.
-    Byte-equality with the pure-Python twin
-    (:func:`docling_translate_spark.golden.extract_turn`) is pinned in
-    tests.
+    is built. Every column is read and written through its Arrow buffers
+    (:mod:`docling_translate_spark.arrow_io`), so the worker never loads
+    pandas, which pyarrow 16.1 imports lazily inside ``pa.array`` and
+    ``Array.to_numpy(zero_copy_only=False)``. Byte-equality with the
+    pure-Python twin (:func:`docling_translate_spark.golden.extract_turn`)
+    is pinned in tests.
     """
     cfg = config or ExtractConfig()
     fn = create_engine(cfg.engine)
@@ -96,6 +96,13 @@ def extract_turns_fused(
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from docling_translate_spark.arrow_io import (
+        bool_array,
+        float64_array,
+        int32_array,
+        read_strings,
+        string_array,
+    )
     from docling_translate_spark.classify import (
         has_nul_byte,
         is_boilerplate_segment,
@@ -116,14 +123,7 @@ def extract_turns_fused(
             names = rb.schema.names
 
             def col(name: str) -> Sequence:
-                if name not in names:
-                    return [None] * n
-                c = rb.column(name)
-                # flat (large_)string columns convert to str/None objects in
-                # C, about 12x faster than to_pylist; cells/headers stay lists
-                if pa.types.is_nested(c.type):
-                    return c.to_pylist()
-                return c.to_numpy(zero_copy_only=False)
+                return read_strings(rb.column(name)) if name in names else [None] * n
 
             # flat span columns + list offsets: one Arrow build per batch
             starts, ends, seg_types, trans, lines = [], [], [], [], []
@@ -197,11 +197,11 @@ def extract_turns_fused(
             ]
             span_values = pa.StructArray.from_arrays(
                 [
-                    pa.array(starts, pa.int32()),
-                    pa.array(ends, pa.int32()),
-                    pa.array(seg_types, pa.string()),
-                    pa.array(trans, pa.bool_()),
-                    pa.array(lines, pa.int32()),
+                    int32_array(starts),
+                    int32_array(ends),
+                    string_array(seg_types),
+                    bool_array(trans),
+                    int32_array(lines),
                 ],
                 fields=span_fields,
             )
@@ -209,12 +209,12 @@ def extract_turns_fused(
                 [
                     rb.column("conv_id"),
                     rb.column("turn_idx"),
-                    pa.array(extracted, pa.string()),
+                    string_array(extracted),
                     pa.ListArray.from_arrays(
-                        pa.array(offsets, pa.int32()), span_values, type=spans_type
+                        int32_array(offsets), span_values, type=spans_type
                     ),
-                    pa.array(n_spans, pa.int32()),
-                    pa.array(ratios, pa.float64()),
+                    int32_array(n_spans),
+                    float64_array(ratios),
                 ],
                 schema=out_schema,
             )

@@ -46,8 +46,10 @@ runs PySpark's own. ``stop()`` after a Python job now takes 0.01-0.07 s
 set-ups, two of them on a rebuilt session) fell from a median 1.70 s to
 0.74 s on ``extract_fused`` (11 of 11 alternating pairs) and from
 1.72 s to 0.78 s on ``extract_sentences`` (10 of 10). A session that
-ran no Python task has no such connection; its stop still waits on
-``serve_forever``'s 0.5 s poll.
+ran no Python task has no such connection, and its stop waited on
+``serve_forever``'s 0.5 s poll of the listening socket (0.17-0.42 s), so
+``shutdown()`` also connects to that socket once to wake the loop: such a
+stop now takes 0.01-0.03 s.
 
 Every Python job still pays a fixed cost. On ``local[2]`` (median of 30
 warm runs, two sessions) a 2-row ``mapInArrow`` job took 78-92 ms against
@@ -134,11 +136,11 @@ def build_session(
 class _PromptShutdown:
     """Mixed into a PySpark accumulator server: ``shutdown()`` closes the
     JVM's open connection first, so the handler's 1 s ``select`` poll
-    returns at once instead of running out."""
+    returns at once instead of running out, and wakes the serve loop's
+    0.5 s poll of the listening socket."""
 
     def finish_request(self, request, client_address):
         self._open_requests.add(request)
-        self._serve_thread = threading.current_thread()
         try:
             super().finish_request(request, client_address)
         finally:
@@ -147,9 +149,19 @@ class _PromptShutdown:
     def shutdown(self):
         # set before closing, so a handler that starts now exits at once
         self.server_shutdown = True
+        # serve_forever's own flag, which BaseServer.shutdown sets only after
+        # the wake-ups below: a loop woken before it would poll 0.5 s more
+        self._BaseServer__shutdown_request = True
         for request in list(self._open_requests):
             with contextlib.suppress(OSError):
                 request.shutdown(socket.SHUT_RDWR)
+        # a server that never served waits in the 0.5 s poll of its listening
+        # socket, which a connection ends
+        with contextlib.suppress(OSError), socket.socket(
+            self.address_family, self.socket_type
+        ) as wake:
+            wake.settimeout(1)
+            wake.connect(self.server_address)
         super().shutdown()
         if self._serve_thread is not None:
             self._serve_thread.join()
@@ -158,15 +170,6 @@ class _PromptShutdown:
         # after shutdown the handler reads EOF from the closed connection
         if not self.server_shutdown:
             super().handle_error(request, client_address)
-
-    def service_actions(self):
-        # serve_forever calls this after each request. Once the handler has
-        # ended for shutdown, end the loop here: the handler can end before
-        # shutdown() flags the loop, which would then sit out another 0.5 s
-        # poll. The thread ends quietly (threading ignores SystemExit).
-        if self.server_shutdown:
-            raise SystemExit
-        super().service_actions()
 
 
 @functools.cache
@@ -186,6 +189,14 @@ def prompt_accumulator_shutdown(spark: SparkSession) -> SparkSession:
     server = getattr(spark.sparkContext, "_accumulatorServer", None)
     if server is not None and not isinstance(server, _PromptShutdown):
         server._open_requests = set()
-        server._serve_thread = None
+        # PySpark starts serve_forever on a thread it keeps no handle to
+        server._serve_thread = next(
+            (
+                t
+                for t in threading.enumerate()
+                if getattr(t, "_target", None) == server.serve_forever
+            ),
+            None,
+        )
         server.__class__ = _prompt_shutdown_class(type(server))
     return spark

@@ -10,6 +10,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 ROOT = str(Path(__file__).resolve().parents[1])
 
 _STOP_JOB = """
@@ -49,11 +51,26 @@ out["rebuilt_sum"] = accumulated(rebuilt)
 t0 = time.perf_counter()
 rebuilt.stop()
 out["rebuilt_stop_s"] = time.perf_counter() - t0
+
+# a session whose jobs never start a Python worker, so the JVM never opens
+# an accumulator connection
+jvm_only = build_session(app_name="dts-stop", master="local[2]")
+out["jvm_only_count"] = jvm_only.range(10).count()
+server = jvm_only.sparkContext._accumulatorServer
+thread = server._serve_thread
+out["jvm_only_thread_found"] = thread is not None
+t0 = time.perf_counter()
+jvm_only.stop()
+out["jvm_only_stop_s"] = time.perf_counter() - t0
+out["jvm_only_thread_alive"] = thread is not None and thread.is_alive()
+out["jvm_only_fileno"] = server.socket.fileno()
+out["jvm_only_serve_threads_after"] = len(serve_threads())
 print(json.dumps(out))
 """
 
 
-def test_stop_skips_accumulator_poll_and_shuts_server_down():
+@pytest.fixture(scope="module")
+def stop_run():
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEM"] = "1g"
     done = subprocess.run(
@@ -64,7 +81,11 @@ def test_stop_skips_accumulator_poll_and_shuts_server_down():
         timeout=300,
     )
     assert done.returncode == 0, done.stderr[-3000:]
-    out = json.loads(done.stdout.splitlines()[-1])
+    return json.loads(done.stdout.splitlines()[-1]), done.stderr
+
+
+def test_stop_skips_accumulator_poll_and_shuts_server_down(stop_run):
+    out, stderr = stop_run
     assert out["sum"] == out["rebuilt_sum"] == sum(range(100))
     # getOrCreate hands back the same server, wrapped once
     assert out["same_server"] and out["server_class"] == "PromptAccumulatorTCPServer"
@@ -74,4 +95,17 @@ def test_stop_skips_accumulator_poll_and_shuts_server_down():
     # PySpark's postcondition: listening socket closed, serve thread gone
     assert out["serve_threads_before"] == 1
     assert out["fileno"] == -1 and out["serve_threads_after"] == 0
-    assert "Exception occurred during processing of request" not in done.stderr
+    assert "Exception occurred during processing of request" not in stderr
+
+
+def test_stop_without_python_tasks_skips_listener_poll(stop_run):
+    """With no accumulator connection to close, the stock stop waits on
+    ``serve_forever``'s 0.5 s poll of the listening socket; a wake-up
+    connection ends it, and the serve thread is joined before ``stop()``
+    returns."""
+    out, stderr = stop_run
+    assert out["jvm_only_count"] == 10
+    assert out["jvm_only_stop_s"] < 0.2, out
+    assert out["jvm_only_thread_found"] and not out["jvm_only_thread_alive"]
+    assert out["jvm_only_fileno"] == -1 and out["jvm_only_serve_threads_after"] == 0
+    assert "Exception occurred during processing of request" not in stderr
