@@ -1,10 +1,12 @@
-"""PySpark's worker daemon, started from compiled PySpark and without a
-per-task re-read of every zip on ``sys.path``.
+"""PySpark's worker daemon, started from compiled PySpark, without a
+per-task re-read of every zip on ``sys.path``, and with one GC threshold
+for every worker.
 
 ``build_session`` sets ``spark.python.daemon.module`` to this module, so every
 Python task of the engine runs in a worker forked from it: extraction,
 curation's ``mapInArrow`` stages, checkpoint units, gate queries and tests.
-It removes two fixed costs.
+It removes two fixed costs and sets the workers' garbage-collection
+policy.
 
 **Start-up: PySpark compiled from source in every session.** Spark puts
 ``$SPARK_HOME/python/lib/pyspark.zip`` and ``py4j-*-src.zip`` at the front
@@ -65,21 +67,45 @@ unchanged:
 There is no Python-version branch. CPython 3.12+ re-reads lazily, so
 there the check only skips work the stock method would defer.
 
+**Garbage collection: one policy for every worker.** The kernels allocate
+container objects per turn and per span (content lists, segment tuples,
+sentence lists). Reference counting frees them, and CPython's cyclic
+collector also traverses the young generation every 700 net container
+allocations (the default threshold), live objects included. The daemon
+sets :data:`GC_THRESHOLD` (10,000 for the youngest generation)
+before it forks, so every worker inherits it, and the collector stays
+on. PySpark's daemon still runs a full ``gc.collect()`` after each task
+of a reused worker, so cyclic garbage does not outlive its task.
+Measured on a 4-vCPU host (Python 3.11.7), kernel alone on one thread
+(median of 9, identical output): the default-mode kernel over 60,000
+turns took 0.340 s against 0.367 s, and the sentence-mode kernel over
+40,000 turns 0.393 s against 0.422 s. End to end, against the same code
+without the threshold, in two runs of 10 alternating perfbench pairs on
+``local[2]``: ``turns_per_s`` rose 1.2 % and 1.0 % on
+``extract_sentences`` (8 of 10 pairs each) and 0.75 % and 2.1 % on
+``extract_fused`` (7 and 9 of 10). That is 16 of 20 pairs on each
+workload, below the nine in ten a claimed gain needs, so the threshold's
+own end-to-end gain is not claimed. Output and worker peak RSS
+(93-102 MB) did not change. The cluster entry ``tools/run_job.py``
+keeps PySpark's stock daemon (below), so its workers run at CPython's
+default threshold.
+
 Run as ``python -m docling_translate_spark.plans.pydaemon``, the module
-installs the replacement, reorders ``sys.path`` and runs ``pyspark.daemon``
-as ``__main__`` with the same arguments. It imports only the standard
-library, and so does the package root it runs through, so nothing has
-imported PySpark when the path is chosen. The package must be importable
-by the Python workers, as it already is for every kernel
-(``build_session`` puts its root on their path). The cluster entry
-``tools/run_job.py`` does not build its session here and keeps the stock
-daemon, because a cluster daemon cannot import the package before its
-``--py-files`` arrive.
+installs the replacement, reorders ``sys.path``, sets the GC threshold
+and runs ``pyspark.daemon`` as ``__main__`` with the same arguments. It
+imports only the standard library, and so does the package root it runs
+through, so nothing has imported PySpark when the path is chosen. The
+package must be importable by the Python workers, as it already is for
+every kernel (``build_session`` puts its root on their path). The cluster
+entry ``tools/run_job.py`` does not build its session here and keeps the
+stock daemon, because a cluster daemon cannot import the package before
+its ``--py-files`` arrive.
 """
 
 from __future__ import annotations
 
 import fnmatch
+import gc
 import importlib
 import os
 import runpy
@@ -90,6 +116,10 @@ import zlib
 from importlib.machinery import PathFinder
 
 _stock_invalidate = zipimport.zipimporter.invalidate_caches
+
+# the workers' cyclic-GC thresholds (see the module docstring); CPython's
+# default is (700, 10, 10)
+GC_THRESHOLD = (10_000, 10, 10)
 
 # Spark's source zips on the workers' path (PythonUtils.sparkPythonPath),
 # with the package each one holds
@@ -175,5 +205,6 @@ if __name__ == "__main__":
     # which method it runs, then hand the process to PySpark's daemon
     daemon = importlib.import_module(__spec__.name)
     daemon.install()
+    gc.set_threshold(*daemon.GC_THRESHOLD)
     sys.path[:] = daemon.installed_first(sys.path)
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)

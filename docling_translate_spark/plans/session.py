@@ -54,12 +54,22 @@ stop now takes 0.01-0.03 s.
 Every Python job still pays a fixed cost. On ``local[2]`` (median of 30
 warm runs, two sessions) a 2-row ``mapInArrow`` job took 78-92 ms against
 25-35 ms with no Python, 41-42 ms of it the worker's wait for its first
-Arrow batch. ``spark.python.unix.domain.socket.enabled=true`` removed that
-wait (job 35-40 ms), but over 4 alternated session pairs it gave no
-consistent gain on the benchmark's jobs (``extract_fused`` 0.92-1.27x and
-``extract_sentences`` 0.95-0.99x TCP's job time), so the session keeps
-TCP. The cost lands on many-small-job flows (curation's ~40 jobs, the
-checkpoint job's 3.25 per unit), which no timed workload covers yet.
+Arrow batch. That wait is TCP's delayed acknowledgement: timing each
+read of the worker's socket, the worker reads the task's command (about
+5.4 KB) and then waits a median 41.6 ms for the next message, 452 bytes,
+Linux's 40 ms minimum delayed-ACK timeout. This fits Nagle's algorithm
+on the JVM's side holding that small message until the worker's kernel,
+which delays its ACK, acknowledges the command. Setting ``TCP_NODELAY`` on
+the worker's socket left the 2-row job at 80.4 ms (median of 30, against
+80.5 ms), as it would if the held message is the JVM's. Setting
+``TCP_QUICKACK`` on it at the start of each task removed the wait
+(0.0 ms; job median 37.1 ms). ``spark.python.unix.domain.socket.enabled``
+also removed that wait (job 35-40 ms), but over 4 alternated session
+pairs it gave no consistent gain on the benchmark's jobs
+(``extract_fused`` 0.92-1.27x and ``extract_sentences`` 0.95-0.99x TCP's
+job time), so the session keeps TCP and sets neither option. The cost
+lands on many-small-job flows (curation's ~40 jobs, the checkpoint job's
+3.25 per unit), which no timed workload covers yet.
 """
 
 from __future__ import annotations

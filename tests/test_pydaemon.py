@@ -81,6 +81,25 @@ def test_session_workers_run_the_daemon(spark):
     assert [r["module"] for r in rows] == ["docling_translate_spark.plans.pydaemon"]
 
 
+def test_session_workers_keep_the_daemons_gc_policy(spark):
+    """The daemon's GC thresholds reach its forked workers, and their
+    collector stays on."""
+
+    def gc_state(batches):
+        import gc
+
+        import pyarrow as pa
+
+        for _ in batches:
+            threshold = list(gc.get_threshold())
+            yield pa.RecordBatch.from_pylist([{"threshold": threshold, "enabled": gc.isenabled()}])
+
+    schema = "threshold array<bigint>, enabled boolean"
+    [row] = spark.range(1, numPartitions=1).mapInArrow(gc_state, schema).collect()
+    assert tuple(row["threshold"]) == pydaemon.GC_THRESHOLD != (700, 10, 10)
+    assert row["enabled"] is True
+
+
 _FOREIGN_CWD_JOB = """
 import sys
 sys.path.insert(0, {root!r})

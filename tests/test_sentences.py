@@ -3,6 +3,7 @@ Punkt stand-in; reference calls nltk.sent_tokenize at core.py:428)."""
 
 import random
 
+from docling_translate_spark import sentences
 from docling_translate_spark.sentences import (
     _BOUNDARY_RE,
     _DOTTED_ABBR_RE,
@@ -173,28 +174,53 @@ def _split_whole_prefix(text):
     return out
 
 
-def test_tail_word_window_equals_whole_prefix_search():
+class _CountingSearch:
+    """``_TAIL_WORD_RE`` with a count of its searches: the splitter's
+    regex branch."""
+
+    def __init__(self, pattern):
+        self.pattern = pattern
+        self.calls = 0
+
+    def search(self, *args):
+        self.calls += 1
+        return self.pattern.search(*args)
+
+
+def test_tail_word_window_equals_whole_prefix_search(monkeypatch):
     """Searching for the tail word only after the last space before the
-    period splits exactly like searching the whole prefix, on seeded
-    strings of letters, terminators, closers/openers, digits, tabs and
-    newlines, non-ASCII letters and the abbreviations (bare, dotted and
-    title-cased)."""
+    period, and taking a plain ASCII-letter window as the word without a
+    search, splits exactly like searching the whole prefix. The seeded
+    strings mix letters, terminators, closers/openers, digits, tabs and
+    newlines, non-ASCII letters (``é.``, ``naïve.``), a newline before
+    the period (where ``$`` matches before it), digits and dots inside
+    the window, empty windows at a sentence start, and the abbreviations
+    (bare, dotted and title-cased). Both branches run often."""
     abbr = sorted(ABBREVIATIONS)
     pieces = (
         list("abzXYZ.!?.\"'’”)]“‘([0129 \t\n éßΩ")
         + ["  ", "\n\n", " . ", "U.S.", "e.g.", "Ph.D.", "config.yaml."]
+        + [" Word.", " ok.", " The end.", " Fig.", " vs.", " J.", "é.", "naïve.", "café.", "\n.", "a\n.", "v2.", "3.14.", "x1y."]
+        + [". A", "? . B", "! .\tC", "a.b.", "I.B.M."]
         + [a + "." for a in abbr]
         + [a.title() + "." for a in abbr]
     )
     rng = random.Random(13)
-    texts = ["", " ", ".", "a. B", "x.\n. Y", "Dr.\tSmith. Ok"]
+    texts = ["", " ", ".", "a. B", "x.\n. Y", "Dr.\tSmith. Ok", ". A", "Go! . B"]
+    texts += ["é. B", "naïve. B", "a\n. B", "v2.0. B", "1.2. C", "abc. D"]
     texts += [
         "".join(rng.choice(pieces) for _ in range(rng.randrange(40)))
         for _ in range(50_000)
     ]
-    n_split = 0
+    counting = _CountingSearch(_TAIL_WORD_RE)
+    monkeypatch.setattr(sentences, "_TAIL_WORD_RE", counting)
+    n_split = n_dot = 0
     for t in texts:
         got = split_sentences(t)
         assert got == _split_whole_prefix(t), repr(t)
         n_split += len(got) > 1
+        # every boundary match is visited; a "." one takes one branch
+        n_dot += sum(m.group(1) == "." for m in _BOUNDARY_RE.finditer(t))
     assert n_split > 5_000  # the draw reaches real boundaries
+    assert counting.calls >= 1_000  # regex branch
+    assert n_dot - counting.calls >= 1_000  # plain-word branch
