@@ -1,4 +1,4 @@
-.PHONY: test oracle oracle-fast oracle-extract bench bench-pairs plans smoke
+.PHONY: test oracle oracle-fast oracle-extract bench bench-pairs smoke
 
 # tier-1: the ROADMAP command (every test runs; Spark sized to the host)
 test:
@@ -26,9 +26,6 @@ bench:
 bench-pairs:
 	@test -n "$(BASE)" || { echo "usage: make bench-pairs BASE=<rev> [PAIRS=10] [SCRATCH=dir]"; exit 2; }
 	python3 tools/bench_pairs.py --base $(BASE) --pairs $(or $(PAIRS),10) $(if $(SCRATCH),--scratch $(SCRATCH))
-
-plans:
-	python tools/gen_plans.py
 
 # Spark on half the host's cores (local[N] keeps about 2N threads runnable)
 smoke:

@@ -8,10 +8,14 @@ batched path, chunking 16 sentences per inference call,
 ``src/translation/engines/nllb.py:103-200``).
 
 Here the map must be deterministic (no network, no models), so the engines
-are pure list transforms: any iterable of texts in, a list of strings out,
-same length and order. The kernel maps each Arrow batch's **deduplicated**
-texts in one call and joins results back by first-seen index (reference
-``src/core.py:453-486``) — the Arrow batch IS the reference's chunk.
+are pure list transforms: a sequence of texts in (the kernel passes a
+list, perfbench's ledger a pandas Series), a list of strings out, same
+length and order; ``identity`` returns its input object itself. A
+one-pass iterator is not a sequence: ``normalize`` reads its input twice
+and would return ``[]`` for one. The kernel maps each Arrow batch's
+**deduplicated** texts in one call and joins results back by first-seen
+index (reference ``src/core.py:453-486``) — the Arrow batch IS the
+reference's chunk.
 """
 
 from __future__ import annotations
@@ -28,7 +32,8 @@ _CTRL_BYTES = bytes(c for c in range(0x20) if _CTRL_RE.match(chr(c)))
 
 def identity_map(texts: Sequence[str | None]) -> list[str]:
     """Pass-through — per-turn output text equals the source text, which is
-    what makes fixtures byte-for-byte reproducible (north rule)."""
+    what makes fixtures byte-for-byte reproducible (north rule). Returns
+    its input object, not a list copy."""
     return texts
 
 

@@ -12,7 +12,8 @@ trainers actually run it at scale:
    exact BIGINT pair counts.
 3. The merge candidates are the top-k pairs under the total order
    (count DESC, left ASC, right ASC) — a bounded sort-limit
-   (TakeOrdered), never a global sort.
+   (TakeOrdered), never a global sort; the rank window runs over the
+   ``top_k`` cut rows only.
 
 Alphabet note: words are ``[A-Za-z]+`` runs extracted FIRST and
 lowercased AFTER (the classic Sennrich setup trains on a

@@ -28,8 +28,9 @@ reconstruct offsets by prefix sum (whitespace between text tokens is
 the only dropped content).
 
 Scale shape: the whole lexer — extract-all, per-token classification
-via ``transform``, byte lengths — is one codegen projection of
-higher-order column expressions: zero exchanges, zero Python,
+via ``transform``, byte lengths — is one projection of higher-order
+column expressions (interpreted: lambda functions run outside
+whole-stage codegen): zero exchanges, zero Python,
 parallelism = scan partitions (same shape as
 ``html_boiler.extract_main_content``). Both the leftmost-first
 alternation and every classifier comparison are engine-portable

@@ -21,10 +21,12 @@ short, link-dense, tag-dense. The classifier here:
 4. reassembles surviving blocks (tags stripped, entities unescaped,
    whitespace normalized) in document order.
 
-Scale shape: ONE projection of higher-order column expressions
-(split / transform / filter / aggregate) — JVM-side, whole-stage
-codegen, zero shuffle, trivially parallel at any corpus size, and
+Scale shape: projections of higher-order column expressions
+(split / transform / filter / aggregate) — JVM-side, no Python, zero
+shuffle, parallelism = scan partitions, and
 DuckDB-expressible so the driver gate value-checks it end to end.
+Spark interprets the lambda functions, so these projections run
+outside whole-stage codegen.
 """
 
 from __future__ import annotations

@@ -201,6 +201,12 @@ def conversation_shape(df: DataFrame, roles=ROLE_AXIS) -> DataFrame:
       TIMESTAMP reaches a value hash (the w_window_agg convention)
 
     All outputs are BIGINT/STRING — hash-exact across engines.
+
+    Scale shape: one exchange. The lag window partitions on ``conv_id``
+    over slim projected rows (folded role, length, tool and epoch-second
+    columns, never the text), and the per-conversation aggregate after
+    it reuses that partitioning; every aggregate is algebraic, so none
+    collects a conversation's rows.
     """
     role = F.coalesce(F.col("role"), F.lit(""))
     slim = df.filter(
@@ -349,8 +355,12 @@ def quality_audit(df: DataFrame, rules) -> DataFrame:
       not TRUE (a NULL result is a violation: an invariant that cannot
       be evaluated is not satisfied)
 
-    Pure aggregation: deterministic at any partitioning, one job, no
-    shuffle wider than one row per partition.
+    Pure aggregation, deterministic at any partitioning: every rule is
+    a conditional-sum column of one aggregate, and a one-row ``Generate``
+    unpivots the result. Only a ``unique`` rule shuffles rows: its
+    ``count_distinct`` hash-partitions the distinct values of its column
+    before the single-row exchange; every other rule sends one partial
+    row per partition.
     """
     exprs = []
     seen = set()
@@ -440,7 +450,9 @@ def snapshot_diff(
     """``(id_col, status)`` per id appearing in either snapshot:
     ``added`` (new only), ``removed`` (old only), ``changed`` (both,
     content digests differ), ``unchanged``. NULL content participates
-    via the injective encoding (NULL == NULL ⇒ unchanged)."""
+    via the injective encoding (NULL == NULL ⇒ unchanged). Each side
+    projects to (id, digest) before the full-outer join, so the join's
+    exchanges never carry the content columns."""
     cols = list(content_cols)
     o = old.select(F.col(id_col).alias("_id"), _content_digest(cols).alias("_oh"))
     n = new.select(F.col(id_col).alias("_id"), _content_digest(cols).alias("_nh"))

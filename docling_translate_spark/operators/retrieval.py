@@ -234,7 +234,9 @@ def topk_per_group(
 # agg OVER the tf relation (one row per (doc, term), so df = count(*)
 # per term with map-side combine), N rides a 1-row broadcast. The
 # final ranking window partitions on ONE document — bounded by its
-# distinct-term count, never the corpus (the dup_spans bound). The tf
+# distinct-term count, never the corpus (the dup_spans bound); Spark
+# plans its rank <= k filter as a WindowGroupLimit on both sides of the
+# exchange, so each map task ships at most k rows per document. The tf
 # relation has two consumers (df + scoring); it is deliberately NOT
 # persisted — corpus-sized, and the narrow re-derivation is cheap (the
 # unigram_logprob rationale).

@@ -556,9 +556,9 @@ def chunk_tokens(
 # ties break on the id — a total, engine-exact order.
 #
 # Scale shape: one zero-shuffle projection, then TakeOrdered(n) —
-# never a global sort. Rows with NULL or non-positive weight are
-# excluded (a weight of 0 means "never sample"; negative weights are
-# meaningless in A-ES).
+# never a global sort; the rank window runs over the n cut rows only.
+# Rows with NULL or non-positive weight are excluded (a weight of 0
+# means "never sample"; negative weights are meaningless in A-ES).
 # --------------------------------------------------------------------
 
 _AES_DENOM = float(1 << 60)  # exact power of two in IEEE double

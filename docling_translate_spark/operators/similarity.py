@@ -5,8 +5,8 @@ One implementation per kNN contract:
 * exact cosine top-k — :func:`brute_force_topk` (JVM-side
   ``F.zip_with``/``F.aggregate`` dots against a broadcast query set,
   the exactness baseline) and :func:`brute_force_topk_blocked` (both
-  sides packed into matrix blocks, one GEMM per block pair — the scale
-  path, no broadcast, no driver collect);
+  sides packed into matrix blocks, one ``np.einsum`` product per block
+  pair — the scale path, no broadcast hint, no driver collect);
 * LSH-bucketed ANN — integer random-hyperplane signatures, one GEMM per
   bucket, exact cosines inside buckets;
 * IVF ANN — :func:`ivf_topk_exact`, integer-grid cell assignment that
@@ -306,11 +306,14 @@ def brute_force_topk_blocked(
 ) -> DataFrame:
     """Exact cosine top-k for corpora too big to broadcast: block-pack
     both sides (executor-side), cross-join query groups × corpus blocks,
-    one GEMM per cell, then a window merge of per-cell top-k.
+    score each cell with one ``np.einsum`` product (:func:`_cosines`),
+    then a window merge of per-cell top-k.
 
     Same neighbors and ranks as :func:`brute_force_topk` (ties break on
     neighbor id, at any ``n_blocks`` and partitioning — see
-    :func:`_cosines`) with no driver collect / broadcast. Data movement
+    :func:`_cosines`) with no driver collect and no broadcast hint (the
+    planner may still broadcast a small packed side into the cross
+    join, as it does at sf0.001). Data movement
     is (|Q| + |C|) × n_blocks vectors into the n_blocks² GEMM cells plus
     |Q| × n_blocks × k candidate rows into the merge — each side
     replicated n_blocks times, never per-row. This is the exact-kNN
@@ -490,9 +493,10 @@ def lsh_ann_topk(
     """Approximate top-k neighbors via per-bucket GEMM: each (table,
     bucket) packs its members once (``collect_list`` — one shuffle, one
     vector copy per table membership), scores all within-bucket pairs in
-    a single numpy GEMM, and emits only per-member top-k rows; a cheap
-    global merge (max-dedup + window) finishes. No driver collect, no
-    corpus broadcast, and — critically — candidate PAIRS are never
+    one :func:`_cosines` (``np.einsum``) product, and emits only
+    per-member top-k rows; a cheap global merge (max-dedup + window)
+    finishes. No driver collect, no broadcast hint, and — critically —
+    candidate PAIRS are never
     materialized or shuffled: on a dense corpus the bucket self-join
     form shuffles O(Σ bucket²) pair rows, which measured 4-5x slower.
 
@@ -511,7 +515,10 @@ def lsh_ann_topk(
     argument LSH already rests on. The split is content-keyed (md5 of
     the id), so results are reproducible at any cluster size. Buckets
     are scored one at a time, with the tie-exact but slower-than-BLAS
-    :func:`_cosines`.
+    :func:`_cosines`. Bucket sizes come from a groupBy over the slim
+    (table, bucket) signature rows before the vectors attach, so the
+    only partitions that carry vectors are the (table, bucket, shard)
+    packs, each capped at ``max_bucket`` members.
     """
     # cached: sizes + the pack both read it, and the signature kernel
     # must run once (see dedup.py's module-level caching note)
@@ -1127,7 +1134,7 @@ def quantized_ip_topk(
     (maximum-inner-product search over the compressed corpus; for
     cosine semantics feed pre-normalized vectors). Same blocked
     packed×packed GEMM shape as :func:`brute_force_topk_blocked` — no
-    broadcast, no driver collect — but the scores are exact BIGINTs
+    broadcast hint, no driver collect — but the scores are exact BIGINTs
     (|dot| ≤ 127² · dim < 2^53 through dim ~5·10^11), so ties and
     ranks are engine-reproducible and the gate can value-hash ``qdot``
     directly. Self-matches excluded; ties break on neighbor id."""
@@ -1159,7 +1166,12 @@ def quantized_ip_topk(
 #
 # Scale shape: one narrow posexplode (corpus×dim rows, never
 # persisted), one agg-shaped shuffle, then everything downstream is
-# groups×dim-sized (the a<b join is a broadcast-sized self-join).
+# groups×dim-sized (the a<b join is a broadcast-sized self-join). The
+# per-group sums are not cached either: the plan as built reads the
+# embeddings once per consumer (six scans in the gate query's plan).
+# At run time AQE reuses the exchanges that come out identical, so the
+# scan runs once, but the counts branch, pruned to a count-only
+# aggregate, re-runs the posexplode and its shuffle.
 # --------------------------------------------------------------------
 
 

@@ -119,13 +119,16 @@ def test_marker_and_truncate512_keep_their_outputs():
     assert trunc[0] == "" and trunc[3] == "é" * 512 and trunc[4].endswith("\U0001f600")
 
 
-def test_engines_return_same_length_list_from_any_iterable():
+def test_engines_return_same_length_output_from_any_sequence():
     texts = ["b", "a", None]
     for name, fn in ENGINES.items():
         got = fn(texts)
         assert len(got) == 3, name
-        # a Series (the traced benchmark's input) maps element-wise too
+        # a tuple and a Series (the traced benchmark's input) map
+        # element-wise too
+        assert list(fn(tuple(texts))) == list(got), name
         assert list(fn(pd.Series(texts, dtype=object))) == list(got), name
+    # identity hands back its input object
     assert create_engine("identity")(texts) is texts
 
 

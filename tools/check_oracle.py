@@ -8,7 +8,12 @@ and the physical column types. Each side runs once: one Spark
 ``toArrow()`` and one DuckDB Arrow fetch give both the values and the
 types. Each query line shows both row counts (``rows=<spark>/<duck>``)
 and both sides' wall seconds (``spark=<s> duck=<s>``), so a slow oracle
-shows up in a full run; the last line sums the seconds per side.
+shows up in a full run; the last line sums the seconds per side. After
+the seconds each line carries the query's plan facts
+(:func:`docling_translate_spark.plans.facts.plan_facts`), read from the
+session that checks its values, before the query runs. They are
+information only: ``tests/test_plan_facts.py`` checks them, in the
+suite's session.
 
 Spark runs on ``local[N]`` with N half the host's cores (at least 1):
 ``local[N]`` keeps about 2N threads runnable.
@@ -99,6 +104,7 @@ def dtype_drift(stbl, dtbl):
 
 def main():
     import __spark_entry__ as entrymod
+    from docling_translate_spark.plans.facts import plan_facts
     from docling_translate_spark.plans.session import build_session
 
     cores = max(1, len(os.sched_getaffinity(0)) // 2)
@@ -123,15 +129,14 @@ def main():
         if ONLY and name not in ONLY:
             continue
         t0 = time.perf_counter()
-        stbl = fn(spark, SF_DIR).toArrow()
+        df = fn(spark, SF_DIR)
         secs = time.perf_counter() - t0
+        # before the run: AQE rewrites the plan that explain prints
+        facts = plan_facts(df)
+        t0 = time.perf_counter()
+        stbl = df.toArrow()
+        secs += time.perf_counter() - t0
         spark_total += secs
-        if name not in oracles:
-            print(f"{name:28s} rows-only: {stbl.num_rows} rows  [ok>={0}] spark={secs:.1f}s")
-            if stbl.num_rows == 0:
-                failures.append((name, "0 rows"))
-            spark.catalog.clearCache()
-            continue
         t0 = time.perf_counter()
         dtbl = con.execute(oracles[name]).fetch_arrow_table()
         duck_secs = time.perf_counter() - t0
@@ -170,7 +175,8 @@ def main():
         status = "OK " if ok else "FAIL"
         print(
             f"{name:28s} {status} rows={stbl.num_rows}/{dtbl.num_rows} "
-            f"spark={secs:.1f}s duck={duck_secs:.1f}s {'; '.join(msgs)}"
+            f"spark={secs:.1f}s duck={duck_secs:.1f}s | {facts}"
+            + "".join(f" | {m}" for m in msgs)
         )
         if not ok:
             failures.append((name, "; ".join(msgs)))
