@@ -413,9 +413,9 @@ def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     build_toks = (
         toks.filter(F.col("doc_id") % 3 == 0).select("tok").distinct()
     )
-    # five consumers (words branch + k probe broadcasts): cache the
-    # ≤32k-row bitmap so the token aggregation lineage runs once
-    flt = bloom_build(build_toks, "tok").cache()
+    # five consumers (words branch + k probe broadcasts) of the
+    # ≤32k-row bitmap; the probes share one reused broadcast of it
+    flt = bloom_build(build_toks, "tok")
     words = flt.select(
         F.lit("w").alias("part"),
         "word",
@@ -489,9 +489,9 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_translate_spark.operators.sampling import shard_manifest
 
     d = _docs(spark, sf_dir)
-    # assignments feed two consumers (rollup + final decoration):
-    # persist so the two-phase rank runs once
-    asg = shard_manifest(d, shard_size=64).persist()
+    # assignments feed two consumers (rollup + final decoration); AQE
+    # runs the two-phase rank's exchanges once for both
+    asg = shard_manifest(d, shard_size=64)
     lens = d.select(
         "doc_id", F.coalesce(F.length("text"), F.lit(0)).alias("_len")
     )

@@ -83,11 +83,11 @@ def nb_train(
     pos_rows = gram_buckets(pos_df, id_col, text_col, m_buckets)
     neg_rows = gram_buckets(neg_df, id_col, text_col, m_buckets)
 
-    # per-class bucket counts: ≤ m_buckets rows each, persisted because
-    # each feeds TWO consumers (its class total and the weight join) —
-    # without it the corpus-wide explode upstream re-runs per consumer
-    pc = pos_rows.groupBy("_b").agg(F.count("*").alias("_pc")).persist()
-    nc = neg_rows.groupBy("_b").agg(F.count("*").alias("_nc")).persist()
+    # per-class bucket counts: ≤ m_buckets rows each; each feeds its
+    # class total and the weight join, and AQE runs the shared
+    # aggregate's exchange once for both
+    pc = pos_rows.groupBy("_b").agg(F.count("*").alias("_pc"))
+    nc = neg_rows.groupBy("_b").agg(F.count("*").alias("_nc"))
     p_tot = pc.groupBy().agg(F.coalesce(F.sum("_pc"), F.lit(0)).alias("_P"))
     n_tot = nc.groupBy().agg(F.coalesce(F.sum("_nc"), F.lit(0)).alias("_N"))
 

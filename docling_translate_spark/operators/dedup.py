@@ -18,11 +18,22 @@ candidate generation is joins on small keys so AQE can split skewed
 buckets (a hot shingle/bucket is the classic skew case — capped via
 ``max_bucket`` salting guard).
 
-Caching note: operators that consume an intermediate twice
-(``ngram_jaccard_pairs``'s shingle index, ``minhash_lsh_pairs``'s
-signatures) ``.cache()`` it; the cache stays materialized for the
-session's lifetime because the returned DataFrame is lazy. Long-lived
-drivers should ``spark.catalog.clearCache()`` between invocations.
+Caching rule (the whole package follows it): cache only a narrow
+fan-out — a projection, an explode or a Python kernel, which no
+exchange sits above (``ngram_jaccard_pairs``'s shingle index,
+``minhash_lsh_pairs``'s signatures) — or a relation that a later job
+reads again. A fan-out at an aggregate, ``distinct``, join or window
+output is served once by AQE's exchange reuse: every consumer holds the
+same exchange and all but the first read its shuffle files
+(``ReusedExchange``), so it is not cached. Reuse does not cover the
+operators above the exchange; where each consumer re-running them
+measured more jobs or CPU than a cache (``informative_shingles``,
+``dedup_incremental``'s combined frequencies, ``cms_heavy_hitters``'
+sketch), the cache stays and says so. A caller that runs two actions
+on one result caches that result itself. A cache stays materialized
+for the session's lifetime because the returned DataFrame is lazy;
+long-lived drivers should ``spark.catalog.clearCache()`` between
+invocations.
 """
 
 from __future__ import annotations
@@ -134,7 +145,9 @@ def updated_ingest_index(
             F.coalesce("df_", F.lit(0)).alias("sdf"),
         )
         .withColumn("tdf", F.col("adf") + F.col("sdf"))
-        .cache()  # feeds the merged freq, the new-doc cap and the flip set
+        # feeds the merged freq, the new-doc cap and the flip set, which
+        # save_ingest_index writes in two jobs: a later job reads it again
+        .cache()
     )
     freq_new = index.freq.join(adm_freq, "shingle", "left_anti").unionByName(
         jf.select("shingle", F.col("tdf").alias("df_"))
@@ -357,7 +370,10 @@ def dedup_incremental(
                 "shingle", "bdf", F.coalesce("df_", F.lit(0)).alias("sdf")
             )
             .withColumn("tdf", F.col("bdf") + F.col("sdf"))
-            .cache()  # feeds the batch stop set AND the flip set
+            # feeds the batch stop set AND the flip set; re-running the
+            # join from its reused exchanges measured 2 more jobs and
+            # more CPU than the cache (sf0.01)
+            .cache()
         )
         ok_b = jf.filter(F.col("tdf") <= max_bucket).select("shingle")
         rare_b, bsz = informative_shingles(bs, ok_b)
@@ -449,9 +465,10 @@ def informative_shingles(
     """Apply a stop-shingle keep-set to an exploded shingle relation.
 
     Returns ``(rare, sizes)``: the surviving shingle rows (cached — they
-    feed both the candidate-pair join and the size aggregate, and an
-    unpersisted two-consumer relation re-executes its upstream per
-    consumer) and the per-doc INFORMATIVE set size measured POST-filter.
+    feed both the candidate-pair join and the size aggregate; re-deriving
+    the join from its reused exchanges measured more jobs and more CPU
+    than the cache) and the per-doc INFORMATIVE set size measured
+    POST-filter.
     Consistent filtering on both numerator and denominator is what keeps
     identical docs at Jaccard 1.0 regardless of stop-shingle mass — the
     single definition shared by :func:`ngram_jaccard_pairs` and
@@ -1170,8 +1187,9 @@ def duplicate_spans(
         lambda i: F.array_join(F.slice("_tk", i + 1, k), " "),
     )
     # pos feeds THREE consumers (the stop-cap aggregate and both sides
-    # of the self-join) — cache per the module's two-consumer discipline
-    # or the split+transform+posexplode stage executes once per consumer
+    # of the self-join) — a narrow fan-out, cached per the module's
+    # caching rule, or the split+transform+posexplode stage executes
+    # once per consumer
     pos = (
         base.filter(F.size("_tk") >= k)
         .select("sid", F.posexplode(grams).alias("pos", "shingle"))

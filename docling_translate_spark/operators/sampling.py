@@ -333,10 +333,17 @@ def _dsir_gram_buckets(
             " i -> concat(_toks[i - 1], ' ', _toks[i]))"
         ),
     ).otherwise(F.expr("array()").cast("array<string>"))
+    # a gram is never NULL, so neither is its bucket; the coalesce only
+    # tells the planner so. Otherwise a join infers an isnotnull(_b)
+    # filter below one consumer of the bucket counts and not below the
+    # other, and AQE cannot reuse their exchange.
     return d.select(
         "_did", F.explode(F.concat(F.col("_toks"), bigrams)).alias("_g")
     ).select(
-        "_did", F.pmod(md5_prefix60(F.col("_g")), F.lit(m_buckets)).alias("_b")
+        "_did",
+        F.coalesce(
+            F.pmod(md5_prefix60(F.col("_g")), F.lit(m_buckets)), F.lit(0)
+        ).alias("_b"),
     )
 
 
@@ -391,13 +398,10 @@ def dsir_weights(
     raw_rows = _dsir_gram_buckets(raw_df, id_col, text_col, m_buckets)
     tgt_rows = _dsir_gram_buckets(target_df, id_col, text_col, m_buckets)
 
-    # ≤ m_buckets rows each — persisted because each feeds TWO consumers
-    # (its total and the ratio join); unpersisted, Spark would re-run
-    # the corpus-wide explode+agg upstream once per consumer (the
-    # two-consumer trap). Like winnow_overlap_pairs' index cache, the
-    # persist lives until session clearCache().
-    rc = raw_rows.groupBy("_b").agg(F.count("*").alias("_rc")).persist()
-    tc = tgt_rows.groupBy("_b").agg(F.count("*").alias("_tc")).persist()
+    # ≤ m_buckets rows each; each feeds its total and the ratio join,
+    # and AQE runs the shared aggregate's exchange once for both
+    rc = raw_rows.groupBy("_b").agg(F.count("*").alias("_rc"))
+    tc = tgt_rows.groupBy("_b").agg(F.count("*").alias("_tc"))
     # totals derive from the tiny bucket tables, not a second corpus pass
     r_tot = rc.groupBy().agg(F.coalesce(F.sum("_rc"), F.lit(0)).alias("_R"))
     t_tot = tc.groupBy().agg(F.coalesce(F.sum("_tc"), F.lit(0)).alias("_T"))

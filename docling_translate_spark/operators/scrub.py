@@ -146,12 +146,13 @@ def filter_blocked_domains(
         ]
     )
     # keyed feeds TWO consumers (the flag build side and the anti-join
-    # probe); without a persist the whole upstream lineage — in the
-    # curation pipeline that is the fused extraction kernel — executes
-    # once per consumer (measured 2x MapInPandas, ~18 s of the composed
-    # query at sf0.1). At cluster scale this is where you'd stage the
-    # post-extraction set to a table; persist is the single-job
-    # equivalent (lazy, session-lifetime — same contract as dedup.py).
+    # probe). It is a projection, a narrow fan-out with no exchange
+    # for AQE to reuse, so without a persist the whole upstream lineage
+    # — in the curation pipeline that is the fused extraction kernel —
+    # executes once per consumer (its MapInArrow runs twice). At cluster
+    # scale this is where you'd stage the post-extraction set to a
+    # table; persist is the single-job equivalent (the package caching
+    # rule, dedup.py module docstring).
     keyed = (
         extract_domains(df, text_col)
         .withColumn("_rid", F.md5(row_repr))

@@ -1212,9 +1212,11 @@ def group_centroid_dots(
         F.expr("CAST(_s * 1000 div _n AS BIGINT)").alias("_m"),
         "_n",
     )
-    counts = means.groupBy("_g").agg(F.max("_n").cast("long").alias("_cnt"))
-    self_dots = means.groupBy("_g").agg(
-        F.sum(F.col("_m") * F.col("_m")).cast("long").alias("_dself")
+    # one stats aggregate reads the full means, so its exchange is the
+    # one the dot branches hold and the posexplode runs once
+    stats = means.groupBy("_g").agg(
+        F.max("_n").cast("long").alias("_cnt"),
+        F.sum(F.col("_m") * F.col("_m")).cast("long").alias("_dself"),
     )
     a = means.select(
         F.col("_g").alias("source_a"), "_d", F.col("_m").alias("_ma")
@@ -1228,19 +1230,19 @@ def group_centroid_dots(
         .groupBy("source_a", "source_b")
         .agg(F.sum(F.col("_ma") * F.col("_mb")).cast("long").alias("dot_ab"))
     )
-    ca = counts.select(F.col("_g").alias("source_a"), F.col("_cnt").alias("n_a"))
-    cb = counts.select(F.col("_g").alias("source_b"), F.col("_cnt").alias("n_b"))
-    da = self_dots.select(
-        F.col("_g").alias("source_a"), F.col("_dself").alias("dot_aa")
+    sa = stats.select(
+        F.col("_g").alias("source_a"),
+        F.col("_cnt").alias("n_a"),
+        F.col("_dself").alias("dot_aa"),
     )
-    db = self_dots.select(
-        F.col("_g").alias("source_b"), F.col("_dself").alias("dot_bb")
+    sb = stats.select(
+        F.col("_g").alias("source_b"),
+        F.col("_cnt").alias("n_b"),
+        F.col("_dself").alias("dot_bb"),
     )
     return (
-        dots.join(F.broadcast(ca), "source_a")
-        .join(F.broadcast(cb), "source_b")
-        .join(F.broadcast(da), "source_a")
-        .join(F.broadcast(db), "source_b")
+        dots.join(F.broadcast(sa), "source_a")
+        .join(F.broadcast(sb), "source_b")
         .select(
             "source_a", "source_b", "n_a", "n_b", "dot_ab", "dot_aa", "dot_bb"
         )

@@ -541,6 +541,8 @@ def cms_heavy_hitters(
     only DISTINCT values via broadcast joins — the full corpus is never
     shuffled on the value key at width; a direct groupBy-count would
     move every (value, count) pair to one exchange."""
+    # each of the d cell joins would re-run the sketch's final aggregate
+    # from the reused exchange: that measured more CPU than the cache
     sketch = cms_build(df, value_col, group_cols, d=d).cache()
     cand = df.select(*group_cols, value_col).distinct()
     est = cms_estimate(cand, sketch, value_col, group_cols, d=d)

@@ -394,15 +394,11 @@ def winnow_overlap_pairs(
     Same scale profile as the shingle index (`dedup.py`): join keys are
     small ints, hot fingerprints (> ``max_bucket`` docs — boilerplate
     spans) are dropped as stop-fingerprints before the quadratic
-    bucket join.
-
-    Note: the internal ``.cache()`` stays materialized for the session's
-    lifetime (the returned DataFrame is lazy, so eager unpersist would
-    force recompute); long-lived drivers should clear it via
-    ``spark.catalog.clearCache()`` between invocations."""
+    bucket join. The distinct fingerprint relation feeds the hot-bucket
+    count and the anti-join; AQE runs its exchange once for both."""
     fps = winnowing_fingerprints(df, text_col, id_col, k, window).select(
         "sid", "fp"
-    ).distinct().cache()
+    ).distinct()
     hot = fps.groupBy("fp").agg(F.count("*").alias("df_")).filter(
         F.col("df_") > max_bucket
     )
@@ -537,21 +533,17 @@ def bigram_lm_train(df: DataFrame, text_col: str = "text") -> dict:
     "totals": 1 row (n_tokens, n_vocab)}`` — all BIGINT, all pure
     aggregation (map-side combined), mergeable by summing counts.
 
-    The vocab table is persisted: it is model-sized (≪ corpus) and has
-    three consumers (the scorer's w1 prejoin, the w2 backoff join, and
-    ``totals``) — without it each consumer re-runs the corpus-wide
-    token aggregation. ``totals`` derives FROM the vocab table
-    (N = Σ c_uni, V = count(*)), so training scans the corpus exactly
-    twice (unigram agg + bigram agg), never a third time. The internal
-    persist stays materialized for the session (the model DataFrames
-    are lazy, so eager unpersist would re-trigger the scan — the
-    winnow_overlap_pairs note)."""
+    The vocab table is model-sized (≪ corpus) and has three consumers
+    (the scorer's w1 prejoin, the w2 backoff join, and ``totals``);
+    AQE runs its aggregate's exchange once for all three. ``totals``
+    derives FROM the vocab table (N = Σ c_uni, V = count(*)), so
+    training aggregates the corpus exactly twice (unigram agg + bigram
+    agg), never a third time."""
     toks = _lm_token_array(text_col)
     uni = (
         df.select(F.explode(toks).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c_uni"))
-        .persist()
     )
     big = (
         df.select(F.explode(_lm_pair_array(toks)).alias("p"))
@@ -692,11 +684,8 @@ def vocab_divergence(
 
     ca = counts(df_a, "c_a")
     cb = counts(df_b, "c_b")
-    # merged is the real multi-consumer point: totals aggregates it AND
-    # the scoring projection re-derives from it (and kl/top-k fan out
-    # again) — without the persist the per-corpus count+join pipeline
-    # re-runs once per consumer. Vocab-sized, so the cache is cheap;
-    # it stays materialized for the session (winnow_overlap_pairs note).
+    # merged feeds totals AND the scoring projection (and kl/top-k fan
+    # out again); AQE runs each per-corpus count exchange once for all
     merged = (
         ca.join(cb, "term", "full_outer")
         .select(
@@ -704,7 +693,6 @@ def vocab_divergence(
             F.coalesce(F.col("c_a"), F.lit(0)).cast("long").alias("c_a"),
             F.coalesce(F.col("c_b"), F.lit(0)).cast("long").alias("c_b"),
         )
-        .persist()
     )
     totals = merged.agg(
         F.coalesce(F.sum("c_a"), F.lit(0)).cast("long").alias("_na"),
@@ -799,25 +787,20 @@ def source_overlap(
         .filter(F.col("_s").isNotNull() & (F.col("_s") != ""))
         .distinct()
     )
-    # three consumers (per-source totals, the per-shingle cap counts,
-    # and the pair join) of the distinct relation — without the persist
-    # each re-runs the explode + distinct SHUFFLE, so the cache trades
-    # disk for three corpus-wide exchanges. The cached rows are two
-    # short columns (no document text), but their count is the distinct
-    # shingle-source cardinality — corpus-scale; at the 100 TB design
-    # point run this operator over a hash sample (hash_sample composes)
-    # or a per-source shingle sketch rather than the raw corpus.
-    pairs = pairs.persist()
+    # the distinct relation feeds the per-shingle cap counts and the
+    # cap join; AQE runs its explode + distinct exchange once for both.
+    # Its rows are two short columns (no document text), but their count
+    # is the distinct shingle-source cardinality — corpus-scale; at the
+    # 100 TB design point run this operator over a hash sample
+    # (hash_sample composes) or a per-source shingle sketch rather than
+    # the raw corpus.
     src_count = pairs.groupBy("_s").agg(F.count("*").alias("_k"))
     kept = pairs.join(
         src_count.filter(F.col("_k") <= max_sources).select("_s"), "_s"
     )
     # kept feeds three consumers (totals + both sides of the pair
-    # join) and totals MUST come post-cap (consistent filtering); it is
-    # deliberately NOT persisted — each consumer re-derives it as one
-    # join over the CACHED pairs relation, which measured cheaper than
-    # materializing a second corpus-sized cache (9.5 s vs 6.5 s at
-    # sf0.1)
+    # join) and totals MUST come post-cap (consistent filtering); the
+    # cap join's exchanges are shared by all three
     per_src = kept.groupBy("_g").agg(F.count("*").alias("_n"))
     a = kept.select(F.col("_s"), F.col("_g").alias("source_a"))
     b = kept.select(F.col("_s"), F.col("_g").alias("source_b"))

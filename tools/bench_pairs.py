@@ -5,7 +5,10 @@
 
 Exports ``REV`` (``git archive``) and the working tree (tracked and
 untracked, non-ignored files, as they are on disk) to two directories
-under ``--scratch`` (default: a new temporary directory), then runs
+under ``--scratch`` (default: a new temporary directory), both written
+by one function, so the two copies differ only in file content (an
+A/A run once read the worse side as the one whose files had other
+modes and mtimes), then runs
 ``perfbench/run.py --trace 0`` in each, for every workload of
 ``BENCHMARK.json`` and its ``run_seconds``. Pair ``i`` of a workload runs
 both sides on seed ``seed0 + i``; even pairs run the base first, odd
@@ -27,12 +30,14 @@ outlives the script.
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
 import signal
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 from pathlib import Path
 
@@ -41,12 +46,21 @@ ROOT = Path(__file__).resolve().parents[1]
 TIMEOUT_S = 900
 
 
+def write_file(dest: Path, rel: str, data: bytes) -> None:
+    """Both copies are written here, so their files differ in content
+    only: default mode, fresh mtime, whichever side they came from."""
+    (dest / rel).parent.mkdir(parents=True, exist_ok=True)
+    (dest / rel).write_bytes(data)
+
+
 def export_base(rev: str, dest: Path) -> None:
-    dest.mkdir(parents=True)
     archive = subprocess.run(
         ["git", "archive", rev], cwd=ROOT, check=True, capture_output=True
     ).stdout
-    subprocess.run(["tar", "-x", "-C", str(dest)], input=archive, check=True)
+    with tarfile.open(fileobj=io.BytesIO(archive)) as tar:
+        for member in tar:
+            if member.isfile():
+                write_file(dest, member.name, tar.extractfile(member).read())
 
 
 def export_worktree(dest: Path) -> None:
@@ -59,8 +73,7 @@ def export_worktree(dest: Path) -> None:
     for rel in filter(None, listed.decode().split("\0")):
         src = ROOT / rel
         if src.is_file():  # a tracked file deleted on disk is not exported
-            (dest / rel).parent.mkdir(parents=True, exist_ok=True)
-            (dest / rel).write_bytes(src.read_bytes())
+            write_file(dest, rel, src.read_bytes())
 
 
 def run_one(tree: Path, workload: str, seed: int, seconds: float, log) -> dict:
@@ -147,8 +160,9 @@ def main(argv=None) -> int:
     trees = {"base": scratch / "base", "change": scratch / "change"}
     if any(t.exists() for t in trees.values()):
         ap.error(f"{scratch} already holds a base/ or change/ copy")
+    for tree in trees.values():
+        tree.mkdir(parents=True)
     export_base(args.base, trees["base"])
-    trees["change"].mkdir(parents=True)
     export_worktree(trees["change"])
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     end_to_end, seconds = bench["end_to_end"], bench["run_seconds"]

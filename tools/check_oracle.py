@@ -169,8 +169,10 @@ def main():
             if drift:
                 ok = False
                 msgs.append("dtype-drift " + "; ".join(drift))
-        # the runner owns cached relations: operators .cache() what they
-        # read twice, and nothing a query cached may outlive it
+        # the runner owns cached relations: operators cache only a
+        # narrow fan-out or a relation a later job reads again (the
+        # caching rule, operators/dedup.py), and nothing a query cached
+        # may outlive it
         spark.catalog.clearCache()
         status = "OK " if ok else "FAIL"
         print(
