@@ -16,7 +16,7 @@ import functools
 import os
 from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -1747,13 +1747,12 @@ def q_s8_embed_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_t8_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8 sentence tokenization per doc (rows-only: rule-based splitter
     pinned by pytest fixtures, ref core.py:428)."""
-    from pyspark.sql.types import IntegerType
-
+    from docling_translate_spark.arrow_io import int32_array, read_strings
     from docling_translate_spark.sentences import split_sentences
 
-    @F.pandas_udf(IntegerType())
-    def n_sents(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: len(split_sentences(t or "")))
+    @F.arrow_udf("int")
+    def n_sents(texts: pa.Array) -> pa.Array:
+        return int32_array(len(split_sentences(t or "")) for t in read_strings(texts))
 
     return _docs(spark, sf_dir).select(
         "doc_id", n_sents("text").alias("n_sentences")

@@ -11,8 +11,10 @@ CPython, writers wrap ``array.array``, ``bytes`` or ndarray memory with
 ``pa.Array.from_buffers``. They call no ``pyarrow.compute`` either, whose
 import costs a worker about 20 ms.
 
-Readers take flat arrays at any slice offset. Writers build arrays with
-no nulls, which is all the kernels emit.
+Readers take flat arrays at any slice offset; :func:`read_matrix` takes
+a ``list<number>`` array of equal-length vectors. Writers build arrays
+with no nulls, which is all the kernels emit. Every Python kernel of the
+package crosses the Arrow boundary through this module only.
 """
 
 from __future__ import annotations
@@ -30,6 +32,54 @@ def _null_positions(arr: pa.Array) -> list[int]:
         return []
     bits = np.unpackbits(np.frombuffer(arr.buffers()[0], np.uint8), bitorder="little")
     return np.flatnonzero(bits[arr.offset : arr.offset + len(arr)] == 0).tolist()
+
+
+def valid_rows(*arrays: pa.Array) -> np.ndarray:
+    """A bool mask, true where every one of the equal-length ``arrays``
+    holds a value, from their validity bitmaps."""
+    keep = np.ones(len(arrays[0]), np.bool_)
+    for arr in arrays:
+        keep[_null_positions(arr)] = False
+    return keep
+
+
+def read_numbers(arr: pa.Array) -> np.ndarray:
+    """A read-only numpy view of a flat integer or floating-point array's
+    values buffer, at the array's offset. Null slots hold whatever the
+    buffer holds there."""
+    t = arr.type
+    kind = "f" if pa.types.is_floating(t) else "i" if pa.types.is_signed_integer(t) else "u"
+    dtype = np.dtype(f"{kind}{t.bit_width // 8}")
+    if not len(arr):
+        return np.empty(0, dtype)
+    return np.frombuffer(arr.buffers()[1], dtype, len(arr), arr.offset * dtype.itemsize)
+
+
+def read_matrix(ids: pa.Array, vecs: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """int64 ids and the ``(n, dim)`` ``dtype`` matrix of a
+    ``list<number>`` array, read from its offsets and values buffers. A
+    null id or vector, vectors of unequal length, or an id count that is
+    not the vector count raise ``ValueError``: each would score some
+    vector under another vector's id. A null element reads as NaN."""
+    n, nulls = len(vecs), vecs.null_count + ids.null_count
+    if nulls or len(ids) != n:
+        raise ValueError(f"{len(ids)} ids for {n} vectors, {nulls} nulls")
+    if not n:
+        return np.empty(0, np.int64), np.empty((0, 0), dtype)
+    odt = np.dtype(np.int64 if pa.types.is_large_list(vecs.type) else np.int32)
+    lengths = np.diff(np.frombuffer(vecs.buffers()[1], odt, n + 1, vecs.offset * odt.itemsize))
+    dim = int(lengths[0])
+    if (lengths != dim).any():
+        raise ValueError(f"vector lengths {sorted(set(lengths.tolist()))} differ")
+    values = vecs.flatten()
+    flat = read_numbers(values)
+    if values.null_count:
+        flat = flat.astype(np.float64)
+        flat[_null_positions(values)] = np.nan
+    return (
+        read_numbers(ids).astype(np.int64, copy=False),
+        flat.astype(dtype, copy=False).reshape(n, dim),
+    )
 
 
 def read_strings(arr: pa.Array) -> list:

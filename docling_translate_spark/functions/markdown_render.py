@@ -40,6 +40,8 @@ import pyarrow as pa
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import StringType
 
+from docling_translate_spark.arrow_io import read_strings, string_array
+
 try:  # the reference's exact renderer, if the environment provides it
     import markdown as _markdown_pkg  # type: ignore
 except ImportError:  # this container: deterministic subset below
@@ -216,13 +218,12 @@ def render_markdown(text: str) -> str:
 
 def render_markdown_col(col: Column | str) -> Column:
     """Arrow-batched render over a markdown string column; a null
-    payload stays null."""
+    payload stays null (the kernel renders it as ``""``, the ``when``
+    restores the null)."""
 
     @F.arrow_udf(StringType())
     def _render(texts: pa.Array) -> pa.Array:
-        return pa.array(
-            [None if t is None else render_markdown(t) for t in texts.to_pylist()],
-            pa.string(),
-        )
+        return string_array([render_markdown(t) for t in read_strings(texts)])
 
-    return _render(F.col(col) if isinstance(col, str) else col)
+    col = F.col(col) if isinstance(col, str) else col
+    return F.when(col.isNotNull(), _render(col))

@@ -928,6 +928,15 @@ def simhash_pairs(
 # --- connected components over near-dup pair edges ---
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of ``df``, a frame fresh from ``localCheckpoint``.
+    Spark never drops them on its own: they survive ``clearCache()``,
+    the frame's garbage collection and later jobs. Reading ``df``
+    afterwards fails, so an iteration releases a round only once the
+    next round has been materialized."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -956,8 +965,10 @@ def connected_components(
     Each round moves slim ``(id, label)`` rows through two equi-joins +
     a min-aggregate — no payloads — and iteration state is
     ``localCheckpoint``-ed so the plan stays flat instead of nesting one
-    join per round. The fixpoint is iteration-order independent, so
-    results are deterministic at any cluster size / partitioning.
+    join per round; each round's checkpoint is released once the next
+    one is materialized, so a call leaves only its result's checkpoint.
+    The fixpoint is iteration-order independent, so results are
+    deterministic at any cluster size / partitioning.
 
     Job-count discipline (this loop's cost at small scale is fixed
     per-job overhead, not data): the input pair selection is persisted
@@ -984,6 +995,7 @@ def connected_components(
         .localCheckpoint()
     )
     p.unpersist()
+    checkpoint = labels
     changed = 1
     for _ in range(max_iter):
         nbr_min = (
@@ -1036,7 +1048,8 @@ def connected_components(
         # full count, not filter().limit(1): the action must scan every
         # partition to double as the checkpoint materializer
         changed = new_labels.filter(F.col("_chg")).count()
-        labels = new_labels.drop("_chg")
+        release_checkpoint(checkpoint)
+        checkpoint, labels = new_labels, new_labels.drop("_chg")
         if changed == 0:
             break
     e.unpersist()

@@ -58,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from docling_translate_spark.operators.dedup import release_checkpoint
+
 __all__ = [
     "PR_SCALE",
     "PR_DAMP_NUM",
@@ -145,7 +147,7 @@ def pagerank(
             .agg(F.coalesce(F.sum("rank_units"), F.lit(0)).alias("_dang"))
             .select(F.expr(f"_dang div {n_verts}").alias("_share"))
         )
-        ranks = (
+        prev, ranks = ranks, (
             verts.join(gathered, verts["vertex"] == gathered["dst"], "left")
             .crossJoin(F.broadcast(dang))
             .select(
@@ -163,6 +165,7 @@ def pagerank(
             )
             .localCheckpoint()  # flat plan: one join chain per round max
         )
+        release_checkpoint(prev)  # the eager checkpoint above read it
 
     e.unpersist()
     outdeg.unpersist()

@@ -20,11 +20,12 @@ the same machinery with a similarity threshold instead of top-k.
 
 The four numpy kernels (blocked top-k, exact pairs, hyperplane
 signatures, LSH buckets) run in ``mapInArrow`` and share one contract:
-:func:`_block` reads ids and a ``list<number>`` column into a matrix,
-refusing nulls, ragged vectors and id/vector count mismatches, and
-:func:`_emit` writes their rows back as one typed Arrow batch. Each
-of the four drops rows with a null id or a null vector before
-:func:`_block`.
+``arrow_io.read_matrix`` reads ids and a ``list<number>`` column into a
+matrix from the Arrow buffers, refusing nulls, ragged vectors and
+id/vector count mismatches, and :func:`_emit` writes their rows back
+as one typed Arrow batch through ``arrow_io.primitive_array``. Each of
+the four drops rows with a null id or a null vector before
+``read_matrix``.
 """
 
 from __future__ import annotations
@@ -33,10 +34,17 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from docling_translate_spark.arrow_io import (
+    bool_array,
+    primitive_array,
+    read_matrix,
+    read_numbers,
+    valid_rows,
+)
 
 
 def _dot(a, b) -> F.Column:
@@ -77,26 +85,6 @@ def _rank_topk(scored: DataFrame, k: int, score: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", score, "rank")
-    )
-
-
-def _block(ids: pa.Array, vecs: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
-    """int64 ids and the ``(n, dim)`` ``dtype`` matrix of a
-    ``list<number>`` Arrow array: one ``flatten``, one ``reshape``. A
-    null id or vector, vectors of unequal length, or an id count that is
-    not the vector count raise ``ValueError`` — each would otherwise
-    score some vector under another vector's id."""
-    n, nulls = len(vecs), vecs.null_count + ids.null_count
-    if nulls or len(ids) != n:
-        raise ValueError(f"{len(ids)} ids for {n} vectors, {nulls} nulls")
-    lengths = np.diff(np.asarray(vecs.offsets))
-    dim = int(lengths[0]) if n else 0
-    if (lengths != dim).any():
-        raise ValueError(f"vector lengths {sorted(set(lengths.tolist()))} differ")
-    flat = vecs.flatten().to_numpy(zero_copy_only=False)
-    return (
-        ids.to_numpy(zero_copy_only=False).astype(np.int64, copy=False),
-        flat.astype(dtype, copy=False).reshape(n, dim),
     )
 
 
@@ -165,7 +153,10 @@ def _emit(parts, fields) -> pa.RecordBatch:
     cols = list(zip(*parts)) or [()] * len(fields)
     return pa.RecordBatch.from_arrays(
         [
-            pa.array(np.concatenate([*chunks, np.empty(0, dt)]))
+            primitive_array(
+                np.concatenate([*chunks, np.empty(0, dt)], dtype=dt),
+                pa.from_numpy_dtype(dt),
+            )
             for chunks, (_, dt) in zip(cols, fields)
         ],
         names=[name for name, _ in fields],
@@ -255,11 +246,11 @@ def _pack_blocks(
 
 def _packed_cells(rb: pa.RecordBatch, sides: str, dtype):
     """Per row of a batch of cross-joined :func:`_pack_blocks` blocks,
-    the :func:`_block` ``(ids, matrix)`` of each side ``s`` in
+    the ``read_matrix`` ``(ids, matrix)`` of each side ``s`` in
     ``sides`` (columns ``<s>ids`` and ``<s>vecs``), one row at a time."""
     cols = [(rb.column(f"{s}ids"), rb.column(f"{s}vecs")) for s in sides]
     for i in range(rb.num_rows):
-        yield [_block(ids[i].values, vecs[i].values, dtype) for ids, vecs in cols]
+        yield [read_matrix(ids[i].values, vecs[i].values, dtype) for ids, vecs in cols]
 
 
 def _blocked_topk(
@@ -355,7 +346,7 @@ def cosine_pairs_exact(
 
     def block_pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            diag = rb.column("ab").to_numpy() == rb.column("bb").to_numpy()
+            diag = read_numbers(rb.column("ab")) == read_numbers(rb.column("bb"))
             parts = []
             for on_diag, ((aids, amat), (bids, bmat)) in zip(
                 diag, _packed_cells(rb, "ab", np.float64)
@@ -411,7 +402,7 @@ def hyperplane_signatures(
     Planes and embeddings are integer-quantized (:data:`_LSH_QUANT`) so
     bucket assignment is exact integer arithmetic. Rows with a null id
     or a null vector get no signature: the kernel drops them before
-    :func:`_block`, so :func:`lsh_ann_topk` and
+    ``read_matrix``, so :func:`lsh_ann_topk` and
     :func:`cosine_near_dup_pairs` never pair them. They are dropped in
     the kernel, not by a ``filter``, for the reason given in
     :func:`_pack_blocks`.
@@ -424,10 +415,10 @@ def hyperplane_signatures(
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             if rb.column(0).null_count or rb.column(1).null_count:
-                rb = rb.filter(pc.and_(rb.column(0).is_valid(), rb.column(1).is_valid()))
+                rb = rb.filter(bool_array(valid_rows(rb.column(0), rb.column(1))))
             if not rb.num_rows:
                 continue
-            sids, mat = _block(rb.column(0), rb.column(1), np.float64)
+            sids, mat = read_matrix(rb.column(0), rb.column(1), np.float64)
             q = np.floor(mat * _LSH_QUANT + 0.5).astype(np.int64)
             bits = (q @ planes) > 0  # (rows, planes*tables), exact int dots
             bits = bits.reshape(len(sids), n_tables, n_planes)
@@ -565,7 +556,7 @@ def lsh_ann_topk(
                 continue
             # scores do not depend on collect_list's member order
             # (see _cosines), so ties rank alike at any partitioning
-            ids, mat = _block(*members.values.flatten(), np.float64)
+            ids, mat = read_matrix(*members.values.flatten(), np.float64)
             mat = _unit_rows(mat)
             yield ids, ids, _cosines(mat, mat)
 

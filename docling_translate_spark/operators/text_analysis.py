@@ -298,25 +298,14 @@ def winnowing_fingerprints(
     (doc, fingerprint, pos) rows ready for an inverted-index join —
     the plagiarism/near-dup detection shape at corpus scale.
     """
+    from array import array
     from typing import Iterator
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from docling_translate_spark.arrow_io import int32_array, primitive_array, read_strings
 
-    out_schema = StructType(
-        [
-            StructField("sid", LongType(), False),
-            StructField("fp", LongType(), False),
-            StructField("pos", IntegerType(), False),
-        ]
-    )
     base, mod = _RH_BASE, _RH_MOD
     # the masking arithmetic below needs a power-of-two modulus
     assert mod & (mod - 1) == 0, "_RH_MOD must be a power of two"
@@ -334,10 +323,10 @@ def winnowing_fingerprints(
         [pow(base, k - 1 - i, mod) for i in range(k)], dtype=np.int64
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
             sids, fps, poss = [], [], []
-            for sid, text in zip(pdf[id_col], pdf[text_col]):
+            for sid, text in zip(rb.column(0).to_pylist(), read_strings(rb.column(1))):
                 s = " ".join(str(text or "").lower().split())
                 # C-speed codepoint extraction (ord() per char is the
                 # other half of the old per-character floor)
@@ -363,19 +352,21 @@ def winnowing_fingerprints(
                     keep = np.ones(len(sel), dtype=bool)
                     keep[1:] = sel[1:] != sel[:-1]
                     idx = sel[keep].tolist()
-                for p in idx:
-                    sids.append(int(sid))
-                    fps.append(int(h[p]))
-                    poss.append(int(p))
-            yield pd.DataFrame(
-                {
-                    "sid": pd.array(sids, dtype="int64"),
-                    "fp": pd.array(fps, dtype="int64"),
-                    "pos": pd.array(poss, dtype="int32"),
-                }
+                sids += [int(sid)] * len(idx)
+                fps += h[idx].tolist()
+                poss += idx
+            yield pa.RecordBatch.from_arrays(
+                [
+                    primitive_array(array("q", sids), pa.int64()),
+                    primitive_array(array("q", fps), pa.int64()),
+                    int32_array(poss),
+                ],
+                names=["sid", "fp", "pos"],
             )
 
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return df.select(id_col, text_col).mapInArrow(
+        gen, "sid bigint not null, fp bigint not null, pos int not null"
+    )
 
 
 def winnow_overlap_pairs(

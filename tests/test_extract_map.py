@@ -155,15 +155,22 @@ def test_engines_return_same_length_output_from_any_sequence():
         pytest.param(
             ["docling_translate_spark.functions.markdown_render"], id="render"
         ),
+        pytest.param(
+            [
+                "docling_translate_spark.operators.text_analysis",
+                "docling_translate_spark.operators.multimodal",
+            ],
+            id="winnow-media",
+        ),
     ],
 )
 def test_extraction_path_imports_no_pandas(modules):
     """The extraction kernel, its golden twin, the map engines, the
-    dedup signature kernels, the vector kernels and the markdown render
-    UDF run on plain lists and Arrow batches: importing them must not
-    pull pandas in. This checks the imports only;
-    ``test_fused_kernel_runs_without_pandas`` runs the extraction and
-    MinHash kernels."""
+    dedup signature kernels, the vector kernels, winnowing, the media
+    kernels and the markdown render UDF run on plain lists and Arrow
+    batches: importing them must not pull pandas in. This checks the
+    imports only; ``test_fused_kernel_runs_without_pandas`` and
+    ``test_python_kernels_run_without_pandas`` run the kernels."""
     code = "".join(f"import {m}\n" for m in ["sys", *modules])
     code += "assert 'pandas' not in sys.modules, 'pandas imported'\n"
     root = Path(__file__).resolve().parents[1]
@@ -318,3 +325,176 @@ def test_fused_kernel_runs_without_pandas(tmp_path):
             assert got["n_spans"] == want["n_spans"], key
             assert got["boilerplate_ratio"] == want["boilerplate_ratio"], key
     assert not report["pandas"], "the kernels loaded pandas"
+
+
+_OPERATOR_JOB = """
+import json, pickle, sys
+import pyarrow.ipc as ipc
+
+with open(f"{sys.argv[1]}/kernels.pkl", "rb") as f:
+    kernels = pickle.load(f)
+loaded_by = "unpickling" if "pandas" in sys.modules else None
+for name, kernel in kernels.items():
+    batches = ipc.open_stream(f"{sys.argv[1]}/{name}.in").read_all().to_batches()
+    if name == "render":
+        out = [type(batches[0]).from_arrays([kernel(batches[0].column(0))], ["html"])]
+    else:
+        out = list(kernel(iter(batches)))
+    with ipc.new_stream(f"{sys.argv[1]}/{name}.out", out[0].schema) as w:
+        for rb in out:
+            w.write_batch(rb)
+    if loaded_by is None and "pandas" in sys.modules:
+        loaded_by = name
+print(json.dumps({"loaded_by": loaded_by}))
+"""
+
+
+def _planned_kernels(spark, monkeypatch) -> dict:
+    """The Python kernel of each ported operator, by name, as its
+    operator plans it (the real plans are built but never run)."""
+    from pyspark.sql import functions as F
+
+    from docling_translate_spark.functions.markdown_render import render_markdown_col
+    from docling_translate_spark.operators.multimodal import (
+        extract_media_features,
+        resize_images,
+    )
+    from docling_translate_spark.operators.similarity import (
+        brute_force_topk_blocked,
+        cosine_pairs_exact,
+        hyperplane_signatures,
+        lsh_ann_topk,
+    )
+    from docling_translate_spark.operators.text_analysis import winnowing_fingerprints
+
+    kernels = []
+    frame = type(spark.range(1))
+    map_in_arrow, arrow_udf = frame.mapInArrow, F.arrow_udf
+
+    def capture_map(self, func, *args, **kwargs):
+        kernels.append(func)
+        return map_in_arrow(self, func, *args, **kwargs)
+
+    def capture_udf(*args, **kwargs):
+        wrap = arrow_udf(*args, **kwargs)
+        return lambda func: kernels.append(func) or wrap(func)
+
+    monkeypatch.setattr(frame, "mapInArrow", capture_map)
+    monkeypatch.setattr(F, "arrow_udf", capture_udf)
+    vecs = spark.range(0).selectExpr("id AS vec_id", "array(0D) AS embedding")
+    media = spark.range(0).selectExpr("id AS media_id", "'image' AS kind", "X'00' AS payload")
+    brute_force_topk_blocked(vecs, vecs, k=2, n_blocks=1)
+    cosine_pairs_exact(vecs, threshold=-1.0, n_blocks=1)
+    hyperplane_signatures(vecs, dim=4, n_tables=3)
+    lsh_ann_topk(vecs, dim=4, k=2)  # its own signature kernel, then the buckets
+    winnowing_fingerprints(spark.range(0).selectExpr("id AS doc_id", "'' AS text"))
+    extract_media_features(media)
+    resize_images(media)
+    render_markdown_col("text")
+    monkeypatch.undo()
+    spark.catalog.clearCache()  # lsh_ann_topk registered its signatures' cache
+    names = ["topk", "pairs", "signatures", "-", "buckets", "winnow", "features",
+             "resize", "render"]
+    assert len(kernels) == len(names)
+    return {name: k for name, k in zip(names, kernels) if name != "-"}
+
+
+def _operator_inputs():
+    """One small Arrow batch per kernel, shaped like the rows Spark
+    hands it: packed blocks, vectors with a null id and a null vector,
+    LSH bucket packs (one too small to score), texts, media rows and
+    markdown with a null."""
+    vec = pa.list_(pa.float64())
+    ids, mat = pa.array([[1, 2, 3]]), pa.array([[[1.0, 0.0], [0.9, 0.1], [0.0, 1.0]]])
+
+    def packed(a, b):
+        one = pa.array([0], pa.int32())
+        return pa.RecordBatch.from_arrays(
+            [one, ids, mat, one, ids, mat], [f"{a}b", f"{a}ids", f"{a}vecs",
+                                             f"{b}b", f"{b}ids", f"{b}vecs"]
+        )
+
+    member = pa.struct([("sid", pa.int64()), ("_v", vec)])
+    members = pa.array(
+        [[{"sid": 1, "_v": [1.0, 0.0]}, {"sid": 2, "_v": [0.9, 0.1]},
+          {"sid": 3, "_v": [0.0, 1.0]}], [{"sid": 4, "_v": [1.0, 1.0]}]],
+        pa.list_(member),
+    )
+    payloads = [bytes(range(40)), b"", bytes(range(7, 70))]
+    return {
+        "topk": packed("q", "c"),
+        "pairs": packed("a", "b"),
+        "signatures": pa.RecordBatch.from_arrays(
+            [pa.array([1, 2, None, 4], pa.int64()),
+             pa.array([[0.1, 0.2, 0.3, 0.4], None, [1.0, 0, 0, 0], [0, 1.0, 0, 0]], vec)],
+            ["vec_id", "embedding"],
+        ),
+        "buckets": pa.RecordBatch.from_arrays([members], ["_members"]),
+        "winnow": pa.RecordBatch.from_arrays(
+            [pa.array([7, 8, 9]),
+             pa.array(["The quick brown fox jumps over the lazy dog", None, "ünïcödé 😀 text"])],
+            ["doc_id", "text"],
+        ),
+        "features": pa.RecordBatch.from_arrays(
+            [pa.array([1, 2, 3]), pa.array(["image", "audio", "video"]),
+             pa.array([40, 0, 63], pa.int32()), pa.array(["x", "y", "z"]),
+             pa.array(payloads, pa.binary())],
+            ["media_id", "kind", "n_bytes", "hex_sha256", "payload"],
+        ),
+        "resize": pa.RecordBatch.from_arrays(
+            [pa.array([1, 3]), pa.array(payloads[::2], pa.binary())], ["media_id", "payload"]
+        ),
+        "render": pa.RecordBatch.from_arrays(
+            [pa.array(["# Title\n\n**bold** `code`", None, ""])], ["text"]
+        ),
+    }
+
+
+def test_python_kernels_run_without_pandas(spark, tmp_path, monkeypatch):
+    """The blocked top-k, exact-pairs, hyperplane-signature and LSH
+    bucket kernels, winnowing, the media feature and resize kernels and
+    the markdown render UDF, planned by their operators and shipped as a
+    worker gets them (cloudpickled), run in a fresh interpreter over
+    small Arrow batches, emit the expected rows and never load pandas."""
+    import pyarrow.ipc as ipc
+    from pyspark import cloudpickle
+
+    from docling_translate_spark.functions.markdown_render import render_markdown
+
+    kernels = _planned_kernels(spark, monkeypatch)
+    (tmp_path / "kernels.pkl").write_bytes(cloudpickle.dumps(kernels))
+    inputs = _operator_inputs()
+    for name, rb in inputs.items():
+        with ipc.new_stream(tmp_path / f"{name}.in", rb.schema) as w:
+            w.write_batch(rb)
+    root = Path(__file__).resolve().parents[1]
+    res = subprocess.run(
+        [sys.executable, "-c", _OPERATOR_JOB, str(tmp_path)],
+        cwd=root,
+        capture_output=True,
+        text=True,
+    )
+    assert res.returncode == 0, res.stderr
+    report = json.loads(res.stdout.splitlines()[-1])
+    out = {
+        name: ipc.open_stream(tmp_path / f"{name}.out").read_all().to_pylist()
+        for name in inputs
+    }
+
+    assert sorted((r["query_id"], r["neighbor_id"]) for r in out["topk"]) == [
+        (1, 2), (1, 3), (2, 1), (2, 3), (3, 1), (3, 2)
+    ]
+    assert sorted((r["id_a"], r["id_b"]) for r in out["pairs"]) == [(1, 2), (1, 3), (2, 3)]
+    assert sorted({r["sid"] for r in out["signatures"]}) == [1, 4]
+    assert len(out["signatures"]) == 2 * 3
+    assert sorted((r["query_id"], r["neighbor_id"]) for r in out["buckets"]) == sorted(
+        (r["query_id"], r["neighbor_id"]) for r in out["topk"]
+    )
+    assert {r["sid"] for r in out["winnow"]} == {7, 9}
+    assert [r["media_id"] for r in out["features"]] == [1, 2, 3]
+    assert [len(r["features"]) for r in out["features"]] == [4, 4, 4]
+    assert out["features"][1]["features"] == [0.0] * 4
+    assert [(r["media_id"], len(r["pixels"])) for r in out["resize"]] == [(1, 16), (3, 16)]
+    texts = inputs["render"].column(0).to_pylist()
+    assert [r["html"] for r in out["render"]] == [render_markdown(t) for t in texts]
+    assert report["loaded_by"] is None, f"{report['loaded_by']} loaded pandas"

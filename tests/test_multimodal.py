@@ -82,7 +82,8 @@ def test_frame_sample_plan(spark, media):
 
 def test_resize_images(spark, media):
     """Resize kernel: image rows only, target grid shape, pooled values
-    match a driver-side recompute of the same fake decode."""
+    match a driver-side recompute of the same fake decode; a batch
+    without images yields no rows."""
     import numpy as np
 
     from docling_translate_spark.operators.multimodal import (
@@ -101,3 +102,4 @@ def test_resize_images(spark, media):
         px = decode_image(payload, fake=True).astype(np.float64)
         expected = px.reshape(4, 2, 4, 2).mean(axis=(1, 3)).reshape(-1)
         assert np.allclose(r["pixels"], expected), mid
+    assert resize_images(media.filter("kind <> 'image'")).collect() == []

@@ -260,10 +260,10 @@ def test_block_reader_rejects_misaligned_input():
     and reads a sliced array at its own offset."""
     import pyarrow as pa
 
-    from docling_translate_spark.operators.similarity import _block
+    from docling_translate_spark.arrow_io import read_matrix
 
     vecs = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float32()))
-    ids, mat = _block(pa.array([7, 8], pa.int64()), vecs.slice(1), np.float64)
+    ids, mat = read_matrix(pa.array([7, 8], pa.int64()), vecs.slice(1), np.float64)
     assert ids.tolist() == [7, 8] and mat.tolist() == [[3.0, 4.0], [5.0, 6.0]]
     bad = [
         (pa.array([1, 2]), pa.array([[1.0], None])),
@@ -273,7 +273,7 @@ def test_block_reader_rejects_misaligned_input():
     ]
     for b_ids, b_vecs in bad:
         with pytest.raises(ValueError):
-            _block(b_ids, b_vecs, np.float64)
+            read_matrix(b_ids, b_vecs, np.float64)
 
 
 def test_lsh_ann_recall(spark, emb):
